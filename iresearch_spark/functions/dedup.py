@@ -160,7 +160,7 @@ def _seed_chain(seed: int):
     return xxhash64_long(np.array([seed], dtype=np.int64), 42).astype(np.uint64)[0]
 
 
-def _tokenize_hash_batch(texts, hash_fn: str, chain_seed, null_as_empty: bool):
+def _tokenize_hash_batch(texts, hash_fn: str, chain_seed):
     """One Arrow batch: lowercase+tokenize (C regex, same token stream as
     `_tokens`) and hash each UNIQUE token once (factorize), bit-exactly
     matching the JVM expression the operators previously evaluated
@@ -172,12 +172,7 @@ def _tokenize_hash_batch(texts, hash_fn: str, chain_seed, null_as_empty: bool):
     from iresearch_spark.functions.hashing import xxhash64_bytes
 
     tokrx = re.compile(_TOKRX)
-    tok_lists = [
-        tokrx.findall(x.lower())
-        if isinstance(x, str)
-        else ([] if null_as_empty or x is None else [])
-        for x in texts
-    ]
+    tok_lists = [tokrx.findall(x.lower()) if isinstance(x, str) else [] for x in texts]
     n = len(tok_lists)
     lens = np.fromiter((len(l) for l in tok_lists), np.int64, count=n)
     total = int(lens.sum())
@@ -240,7 +235,7 @@ def minhash_signatures(
             ids = pdf["_id"].to_numpy()
             # NULL text coalesces to '' (tokenless) — the old path's
             # F.coalesce kept NULL docs' signatures deterministic
-            th, lens = _tokenize_hash_batch(pdf["_t"], "xxhash64", chain_seed, True)
+            th, lens = _tokenize_hash_batch(pdf["_t"], "xxhash64", chain_seed)
             bounds = np.concatenate(([0], np.cumsum(lens)))
             total = int(bounds[-1])
             # full-window grams: chain xxhash64 over each s-token window
@@ -567,7 +562,7 @@ def simhash(
             if n == 0:
                 continue
             ids = pdf["_id"].to_numpy()
-            th, lens = _tokenize_hash_batch(pdf["_t"], hash_fn, chain_seed, False)
+            th, lens = _tokenize_hash_batch(pdf["_t"], hash_fn, chain_seed)
             ne = np.flatnonzero(lens > 0)
             if ne.size == 0:
                 continue

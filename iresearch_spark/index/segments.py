@@ -191,6 +191,23 @@ class IndexStore:
     def seg_path(self, seg: str, table: str) -> str:
         return os.path.join(self.root, "segments", seg, table)
 
+    @staticmethod
+    def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+        """spark.read.parquet with the schema Spark wrote into the first
+        file's footer: Spark's own schema inference runs one job per read
+        (an engine open reads four tables), the footer read is local."""
+        import glob
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
+        js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if js is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(StructType.fromJson(json.loads(js))).parquet(path)
+
     def read(self, spark: SparkSession, seg: str, table: str) -> DataFrame:
         # doclen is a projection of docmap (which carries `len`) — one less
         # table to write per segment; docs with no emitted tokens are
@@ -198,11 +215,11 @@ class IndexStore:
         # doclen directory for segments written by older builds.
         if table == "doclen" and not os.path.exists(self.seg_path(seg, "doclen")):
             return (
-                spark.read.parquet(self.seg_path(seg, "docmap"))
+                self.read_parquet(spark, self.seg_path(seg, "docmap"))
                 .select("doc_id", "len")
                 .where(F.col("len") > 0)
             )
-        return spark.read.parquet(self.seg_path(seg, table))
+        return self.read_parquet(spark, self.seg_path(seg, table))
 
     def table_columns(self, spark: SparkSession, seg: str, table: str) -> list[str]:
         """Column names of a committed segment table from the parquet
@@ -243,7 +260,7 @@ class IndexStore:
         m = self.current()
         if m.deletes_gen is None:
             return None
-        return spark.read.parquet(self.deletes_path(m.deletes_gen))
+        return self.read_parquet(spark, self.deletes_path(m.deletes_gen))
 
     def remove(self, spark: SparkSession, condemned: DataFrame) -> Manifest:
         """Queue live deletes: `condemned` = (segment, doc_id) rows. Merged
@@ -276,7 +293,7 @@ class IndexStore:
         (the merge applied them physically). Mutates `manifest` in place —
         call AFTER bumping manifest.gen, BEFORE commit()."""
         existing = (
-            spark.read.parquet(self.deletes_path(manifest.deletes_gen))
+            self.read_parquet(spark, self.deletes_path(manifest.deletes_gen))
             if manifest.deletes_gen is not None
             else None
         )

@@ -1,23 +1,35 @@
-"""Query execution: filter tree -> Spark jobs over packed segment tables.
+"""Query execution: filter tree -> packed-postings kernels, on Spark or on
+the driver.
 
-Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2)
-in Spark terms:
+Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
 
   prepare   = tiny driver-side lookups on the (small) term_stats table to
               expand multiterm leaves and compute per-term scoring
               constants (the reference's per-query "stats blob",
-              core/search/bm25.cpp:366-410);
-  execute   = one job: parquet scan of packed posting blocks with `term IN`
-              pushdown -> (for multi-leg queries) ONE repartition of the
-              packed blocks by (segment, chunk) -> an Arrow mapInPandas
-              kernel that unpacks delta+varint blocks, scores them, and
-              reduces per-doc sums LOCALLY (a doc's postings for every
-              query term live in the same chunk group, so no downstream
-              groupBy shuffle exists at all);
-  collect   = global `ORDER BY score DESC, gdoc ASC LIMIT k` over the
-              per-partition top-k survivors (TakeOrderedAndProject — the
-              distributed analogue of the reference's caller-side min-heap,
-              utils/index-search.cpp:687-786).
+              core/search/bm25.cpp:366-410), then ONE scan plan: the
+              kernel closure plus the terms and columns it reads
+              (`_sums_plan` / `_phrase_plan`);
+  execute   = the plan runs at one of two sites, same kernel either way:
+              - driver-local (`topk` only): when the query is a single scan
+                (term, vocab-cached multiterm, flat And/Or/min-match, or a
+                phrase leaf), the tombstones ride in the kernel, and the
+                scanned terms' summed doc_freq is at most
+                `SearchEngine.LOCAL_MAX_POSTINGS`, pyarrow reads just those
+                terms' row groups from each segment's term-sorted postings
+                parquet and the kernel runs in-process — zero Spark jobs,
+                the reference's in-process mmap walk (PAPER.md §0);
+              - Spark (everything else): parquet scan with `term IN`
+                pushdown -> (for multi-leg queries) ONE repartition of the
+                packed blocks by (segment, chunk) -> an Arrow mapInPandas
+                kernel that unpacks delta+varint blocks, scores them, and
+                reduces per-doc sums LOCALLY (a doc's postings for every
+                query term live in the same chunk group, so no downstream
+                groupBy shuffle exists at all);
+  collect   = `ORDER BY score DESC, gdoc ASC LIMIT k` over the kernel's
+              top-k survivors: np.lexsort locally, TakeOrderedAndProject on
+              Spark (the reference's caller-side min-heap,
+              utils/index-search.cpp:687-786). `topk` records the site it
+              chose in `SearchEngine.last_run`.
 
 Scale shape (the 100-TB argument): the only shuffle in the hot path moves
 PACKED blocks of the matching terms (~1 byte/posting), not exploded
@@ -46,7 +58,8 @@ the global sort all see the same values the comparator will.
 
 from __future__ import annotations
 
-from typing import Iterator
+import logging
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -142,8 +155,24 @@ MAX_BCAST_TOMBSTONES = int(_os.environ.get("IR_MAX_BCAST_TOMBSTONES", "50000000"
 # block-max pruning is disabled above this many scored legs: a sum-merge
 # bound over W legs includes the other W-1 legs' whole-list upper bounds,
 # so its selectivity decays to zero with width while its per-block cost
-# grows — measured net-negative from a few hundred legs (see _hits_scan)
+# grows — measured net-negative from a few hundred legs (see _sums_plan)
 WAND_MAX_LEGS = int(_os.environ.get("IR_WAND_MAX_LEGS", "64"))
+
+_log = logging.getLogger(__name__)
+
+
+class _ScanPlan(NamedTuple):
+    """One planned postings scan, runnable at either execution site: the
+    kernel closure, the terms and columns it reads, whether its rows must
+    arrive (segment, chunk)-grouped, its output schema and whether
+    block-max pruning is on."""
+
+    kernel: Callable
+    terms: list
+    cols: tuple
+    grouped: bool
+    schema: StructType
+    prune: bool = False
 
 
 def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
@@ -972,6 +1001,8 @@ class SearchEngine:
         self._vocab_series: pd.Series | None = None
         # proxy_filter cache: normalized child (+boost) -> persisted hits
         self._proxy_cache: dict = {}
+        self._arrow_postings: list | None = None  # driver-local site, lazy
+        self.last_run: dict | None = None  # the last topk's site choice
         # live-delete mask (reference index_writer Remove(),
         # index_writer.hpp:381-416): deletes stay visible as a query-time
         # tombstone mask until a merge physically drops them
@@ -981,13 +1012,21 @@ class SearchEngine:
         self._tomb_gdocs: DataFrame | None = None
         self._deleted_inline = True
         if self.tombstones is not None:
-            base_map = self._base_map()
-            tg = self.tombstones.select(
-                (F.col("doc_id") + base_map[F.col("segment")]).alias("gdoc")
+            # no Spark job on open: the row count comes from the parquet
+            # footers, the kernel-resident tiers read (segment, doc_id)
+            # with pyarrow and map to gdocs in numpy
+            import pyarrow.dataset as pads
+
+            dels = pads.dataset(
+                store.deletes_path(self.manifest.deletes_gen), format="parquet"
             )
-            n_del = tg.count()
+            n_del = dels.count_rows()
             if n_del <= MAX_BCAST_TOMBSTONES:
-                arr = np.sort(tg.toPandas()["gdoc"].to_numpy(np.int64))
+                t = dels.to_table(columns=["segment", "doc_id"]).to_pandas()
+                arr = np.sort(
+                    t["doc_id"].to_numpy(np.int64)
+                    + t["segment"].map(self.seg_base).to_numpy(np.int64)
+                )
                 if n_del <= MAX_INLINE_TOMBSTONES:
                     self._deleted_arr = arr
                 else:
@@ -995,10 +1034,12 @@ class SearchEngine:
                     # pooling and WAND pruning keep working; _mask paths
                     # that bypass the kernels anti-join distributedly
                     self._deleted_bcast = spark.sparkContext.broadcast(arr)
-                    self._tomb_gdocs = tg
             else:
                 self._deleted_inline = False
-                self._tomb_gdocs = tg
+            if self._deleted_arr is None:
+                self._tomb_gdocs = self.tombstones.select(
+                    (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc")
+                )
 
     @property
     def _kernel_deleted(self):
@@ -1020,20 +1061,28 @@ class SearchEngine:
         )
         return self._mask(u)
 
+    def _tombstone_tier(self) -> str:
+        if self.tombstones is None:
+            return "none"
+        if not self._deleted_inline:
+            return "antijoin"
+        return "inline" if self._deleted_arr is not None else "broadcast"
+
     def _mask(self, hits: DataFrame) -> DataFrame:
         """Tombstone mask for paths that did not inline it in the kernel."""
-        if self.tombstones is None:
-            return hits
-        if self._deleted_arr is not None:
+        if self._tomb_gdocs is None and self._deleted_arr is not None:
             if not self._deleted_arr.size:
                 return hits
-            dels = self.spark.createDataFrame(
-                [(int(g),) for g in self._deleted_arr], "gdoc long"
+            # inline tier: the broadcast side is built once per engine,
+            # from the sorted array through Arrow
+            self._tomb_gdocs = F.broadcast(
+                self.spark.createDataFrame(
+                    pd.DataFrame({"gdoc": self._deleted_arr}), "gdoc long"
+                )
             )
-            return hits.join(F.broadcast(dels), "gdoc", "left_anti")
-        if self._tomb_gdocs is not None:  # mid tier + anti-join fallback
-            return hits.join(self._tomb_gdocs, "gdoc", "left_anti")
-        return hits
+        if self._tomb_gdocs is None:
+            return hits
+        return hits.join(self._tomb_gdocs, "gdoc", "left_anti")
 
     VOCAB_CACHE_MAX = 1_000_000
 
@@ -1376,7 +1425,14 @@ class SearchEngine:
         tdf = self.spark.createDataFrame([(t,) for t in sorted(terms)], "term string")
         return df.join(F.broadcast(tdf), "term", "left_semi")
 
-    def _hits_scan(
+    # beyond this many scanned postings (summed doc_freq of the scan's
+    # terms) `topk` leaves the driver-local site for Spark; 0 sends every
+    # query that scans anything to Spark (instance-overridable for tests).
+    # From scripts/local_budget_sweep.py on 4 cores: one Term's local wall
+    # is below Spark's up to 500k postings and above it at 1M
+    LOCAL_MAX_POSTINGS = 500_000
+
+    def _sums_plan(
         self,
         scorers: dict[str, TermScorer],
         *,
@@ -1387,10 +1443,9 @@ class SearchEngine:
         prune: bool = False,
         mode: str | None = None,
         tail_sel=None,
-    ) -> DataFrame:
-        """One job: packed blocks of the given terms -> per-doc summed hits
-        (gdoc, score, n_terms). No shuffle for single-term queries; ONE
-        block-level (segment, chunk) repartition otherwise.
+    ) -> _ScanPlan:
+        """Scan plan for the per-doc sums kernel: bounds, pruning and
+        grouping decided once for both execution sites.
 
         tail_sel (no-vocab multiterm regime): a Column predicate over `term`
         or a DataFrame of matched terms selecting ALL matched blocks (scored
@@ -1398,18 +1453,7 @@ class SearchEngine:
         `term LIKE 'pre%'` push into parquet; a term-DataFrame becomes a
         semi-join. Blocks whose term is outside `scorers` score ZERO via a
         shared default scorer in the kernel; no tail term ever reaches the
-        driver."""
-        # explicit projection: mapInPandas does not push column pruning into
-        # the scan, and pos_bin (the largest column) is not needed to score
-        if tail_sel is None:
-            blocks = self._term_filtered(self.postings, list(scorers.keys()))
-        elif isinstance(tail_sel, DataFrame):
-            blocks = self.postings.join(
-                tail_sel.select("term"), "term", "left_semi"
-            )
-        else:
-            blocks = self.postings.where(tail_sel)
-        blocks = blocks.select(*self.SCAN_COLS)
+        driver. Such a plan runs on Spark only."""
         mode = mode or self.leaf_mode
         if prune and not all(
             getattr(sc, "monotone_dl", True) for sc in scorers.values()
@@ -1456,19 +1500,6 @@ class SearchEngine:
             if prune and tail_sel is not None:
                 prune = False  # min with unknown tail legs: no safe bound
         grouped = len(scorers) > 1 or min_match > 1 or tail_sel is not None
-        if grouped:
-            n_part = self.spark.sparkContext.defaultParallelism
-            blocks = (
-                blocks.withColumn(
-                    "chunkid", F.shiftright("first_doc", self.chunk_bits)
-                )
-                .repartition(n_part, "segment", "chunkid")
-                .sortWithinPartitions("segment", "chunkid")
-            )
-        # (r3: the r2 single-term sortWithinPartitions(max_tf desc) that
-        # tried to tighten the threshold early cost more than it saved —
-        # the pool fills after the first 128-doc block anyway, and the sort
-        # added a stage; measured wand > nowand on HighTerm because of it)
         kernel = _topk_sums_kernel(
             scorers,
             other_ub,
@@ -1488,10 +1519,82 @@ class SearchEngine:
             ),
             other_ub_default=other_ub_default,
         )
-        hits = blocks.mapInPandas(kernel, HITS_SCHEMA)
+        return _ScanPlan(kernel, list(scorers), self.SCAN_COLS, grouped, HITS_SCHEMA, prune)
+
+    def _spark_hits(self, plan: _ScanPlan, tail_sel=None) -> DataFrame:
+        """Spark site: parquet scan (`term IN` pushdown, or the no-vocab
+        tail selector) -> (segment, chunk) repartition when the kernel
+        needs grouped rows -> the plan's kernel in mapInPandas."""
+        # explicit projection: mapInPandas does not push column pruning into
+        # the scan, and pos_bin (the largest column) is not needed to score
+        if tail_sel is None:
+            blocks = self._term_filtered(self.postings, plan.terms)
+        elif isinstance(tail_sel, DataFrame):
+            blocks = self.postings.join(
+                tail_sel.select("term"), "term", "left_semi"
+            )
+        else:
+            blocks = self.postings.where(tail_sel)
+        blocks = blocks.select(*plan.cols)
+        if plan.grouped:
+            n_part = self.spark.sparkContext.defaultParallelism
+            blocks = (
+                blocks.withColumn(
+                    "chunkid", F.shiftright("first_doc", self.chunk_bits)
+                )
+                .repartition(n_part, "segment", "chunkid")
+                .sortWithinPartitions("segment", "chunkid")
+            )
+        # (r3: the r2 single-term sortWithinPartitions(max_tf desc) that
+        # tried to tighten the threshold early cost more than it saved —
+        # the pool fills after the first 128-doc block anyway, and the sort
+        # added a stage; measured wand > nowand on HighTerm because of it)
+        hits = blocks.mapInPandas(plan.kernel, plan.schema)
         if not self._deleted_inline:
             hits = self._mask(hits)
         return hits
+
+    def _local_blocks(self, plan: _ScanPlan) -> pd.DataFrame:
+        """Driver-local site input: only the plan's terms' row groups from
+        each segment's term-sorted postings parquet (pyarrow `term IN`
+        filter, the plan's columns only), in (segment, chunk, term,
+        first_doc) order — the grouping the Spark site's repartition and
+        sort provide, with a deterministic order inside each group."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
+        if self._arrow_postings is None:
+            self._arrow_postings = [
+                (s.name, pads.dataset(self.store.seg_path(s.name, "postings"), format="parquet"))
+                for s in self.manifest.segments
+            ]
+        cols = [c for c in plan.cols if c != "segment"]
+        flt = pc.field("term").isin(plan.terms)
+        parts = []
+        for name, dset in self._arrow_postings:
+            pdf = dset.to_table(columns=cols, filter=flt).to_pandas()
+            parts.append(pdf.assign(segment=name))
+        blocks = pd.concat(parts, ignore_index=True)
+        blocks["chunkid"] = blocks["first_doc"].to_numpy(np.int64) >> self.chunk_bits
+        return blocks.sort_values(
+            ["segment", "chunkid", "term", "first_doc"], kind="stable", ignore_index=True
+        )
+
+    def _local_topk(self, plan: _ScanPlan | None, k: int, post: str | None) -> DataFrame:
+        """Driver-local site: the plan's kernel over `_local_blocks`, the
+        top k by (score desc, gdoc asc), returned as a local DataFrame whose
+        collect() launches no Spark job. `post` is the final-score
+        transform for kernels that score in leaf mode (phrase)."""
+        out = list(plan.kernel(iter([self._local_blocks(plan)]))) if plan else []
+        if not out:
+            return self._empty_hits()
+        hits = pd.concat(out)
+        gd = hits["gdoc"].to_numpy(np.int64)
+        sc = hits["score"].to_numpy(np.float64)
+        if post is not None:
+            sc = _transform_arr(post, sc)
+        top = np.lexsort((gd, -sc))[:k]
+        return self._local_frame(pd.DataFrame({"gdoc": gd[top], "score": sc[top]}))
 
     def _leaf_scorers(
         self, expansion: list[tuple[str, int]], boost: float
@@ -1575,22 +1678,24 @@ class SearchEngine:
             return scorers, need, const, node.merge, None
         return None
 
-    def _leaf_hits(self, leaf: Node, boost: float) -> DataFrame:
-        """One scoring leaf -> DataFrame(gdoc, score). Distinct gdoc."""
-        if isinstance(leaf, (Phrase, SamePosition, VarPhrase)):
-            return self._phrase_hits(leaf, boost)
-        spec = self._query_spec(leaf, boost)
-        assert spec is not None
-        scorers, min_match, _, merge, tail_sel = spec
+    def _spec_plan(self, spec: tuple, **kw) -> _ScanPlan | None:
+        """Sums scan plan of a `_query_spec` result; None matches nothing:
+        an empty head AND no distributed tail (with a tail predicate the
+        scan must still run — scored_terms_limit 0 in the no-vocab regime
+        surfaces every matched doc at score 0, identical to the vocab path,
+        r6 review)."""
+        scorers, min_match, const, merge, tail_sel = spec
         if not scorers and tail_sel is None:
-            # empty head AND no distributed tail -> truly no matches; with
-            # a tail predicate the scan must still run (scored_terms_limit
-            # 0 in the no-vocab regime: every matched doc surfaces at
-            # score 0, identical to the vocab path — r6 review)
+            return None
+        return self._sums_plan(
+            scorers, min_match=min_match, const_add=const, merge=merge, tail_sel=tail_sel, **kw
+        )
+
+    def _plan_hits(self, plan: _ScanPlan | None, tail_sel=None) -> DataFrame:
+        """Spark-site DataFrame(gdoc, score) of a plan. Distinct gdoc."""
+        if plan is None:
             return self._empty_hits()
-        return self._hits_scan(
-            scorers, min_match=min_match, merge=merge, tail_sel=tail_sel
-        ).select(
+        return self._spark_hits(plan, tail_sel).select(
             "gdoc", F.col("score").cast(self._score_t).alias("score")
         )
 
@@ -1610,16 +1715,22 @@ class SearchEngine:
             return [[t] for t in terms], list(leaf.offsets)
         return [[t] for t in terms], list(range(len(terms)))
 
-    def _phrase_hits(self, leaf: Node, boost: float) -> DataFrame:
+    PHRASE_COLS = ("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
+
+    def _phrase_plan(self, leaf: Node, boost: float) -> _ScanPlan | None:
+        """Scan plan for a phrase-family leaf (None: matches nothing). A
+        single one-term slot is a term query and plans as one."""
         if not self.has_positions:
             raise ValueError("index built without positions; phrase queries unavailable")
         slot_terms, offsets = self._phrase_slots(leaf)
         if len(slot_terms) == 1 and len(slot_terms[0]) == 1:
-            return self._leaf_hits(Term(slot_terms[0][0], boost=leaf.boost), boost)
+            stats = self._stats_for(slot_terms[0])
+            scorers = self._leaf_scorers(list(stats.items()), boost * leaf.boost)
+            return self._sums_plan(scorers) if scorers else None
         all_terms = sorted({t for ts in slot_terms for t in ts})
         stats = self._stats_for(all_terms)
         if any(all(t not in stats for t in ts) for ts in slot_terms):
-            return self._empty_hits()  # a slot with no indexed term matches nothing
+            return None  # a slot with no indexed term matches nothing
         slot_terms = [[t for t in ts if t in stats] for ts in slot_terms]
         # phrase idf = sum of matched member idfs (pinned semantics, shared
         # with tests/oracle.py and plans/parity.py phrase_topk)
@@ -1633,16 +1744,6 @@ class SearchEngine:
                 )
             )
         shim = _phrase_term_scorer(self.scorer, self.field, idf_sum, boost * leaf.boost)
-        n_part = self.spark.sparkContext.defaultParallelism
-        blocks = (
-            self._term_filtered(
-                self.postings, list({t for ts in slot_terms for t in ts})
-            )
-            .select("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
-            .withColumn("chunkid", F.shiftright("first_doc", self.chunk_bits))
-            .repartition(n_part, "segment", "chunkid")
-            .sortWithinPartitions("segment", "chunkid")
-        )
         kernel = _phrase_sums_kernel(
             slot_terms,
             offsets,
@@ -1652,13 +1753,16 @@ class SearchEngine:
             mode=self.leaf_mode,
             deleted=self._kernel_deleted if self._deleted_inline else None,
         )
-        hits = blocks.mapInPandas(kernel, PHRASE_SCHEMA)
-        if not self._deleted_inline:
-            hits = self._mask(hits)
-        return hits.select("gdoc", F.col("score").cast(self._score_t).alias("score"))
+        return _ScanPlan(kernel, sorted(stats), self.PHRASE_COLS, True, PHRASE_SCHEMA)
 
     def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame([], f"gdoc long, score {self._score_t}")
+        # limit(0) of a one-row local relation folds to an empty local
+        # relation: no Spark job on collect (an empty pandas frame or list
+        # becomes an RDD scan, one job)
+        return self._local_frame(pd.DataFrame({"gdoc": [0], "score": [0.0]})).limit(0)
+
+    def _local_frame(self, pdf: pd.DataFrame) -> DataFrame:
+        return self.spark.createDataFrame(pdf, f"gdoc long, score {self._score_t}")
 
     # ------------------------------------------------------------- boolean
 
@@ -1672,11 +1776,8 @@ class SearchEngine:
             return self.doc_universe().withColumn(
                 "score", F.lit(lit).cast(self._score_t)
             )
-        if isinstance(
-            node,
-            (Term, Terms, Prefix, Wildcard, Fuzzy, Range, Phrase, SamePosition, VarPhrase),
-        ):
-            return self._leaf_hits(node, boost)
+        if isinstance(node, (Phrase, SamePosition, VarPhrase)):
+            return self._plan_hits(self._phrase_plan(node, boost))
         if isinstance(node, Proxy):
             # cached filter (proxy_filter.cpp): compute the child's scored
             # hits ONCE per engine, persist, reuse for every equal Proxy
@@ -1719,16 +1820,7 @@ class SearchEngine:
             return out
         spec = self._query_spec(node, boost)
         if spec is not None:
-            scorers, min_match, const, merge, tail_sel = spec
-            if not scorers and tail_sel is None:
-                return self._empty_hits()
-            return self._hits_scan(
-                scorers,
-                min_match=min_match,
-                const_add=const,
-                merge=merge,
-                tail_sel=tail_sel,
-            ).select("gdoc", F.col("score").cast(self._score_t).alias("score"))
+            return self._plan_hits(self._spec_plan(spec), spec[4])
         if isinstance(node, (And, Or)):
             poss = list(node.children)
             legs = [self._eval(c, boost * node.boost) for c in poss]
@@ -1756,7 +1848,7 @@ class SearchEngine:
 
     def execute(self, node: Node) -> DataFrame:
         """All hits with scores (unordered)."""
-        return self._mask(self._eval(node))
+        return self._eval(node)
 
     def _final_score(self, col):
         """The comparator-visible score: float32 (product) or the gate
@@ -1788,7 +1880,7 @@ class SearchEngine:
         parent key per child, so the block join IS a hierarchical
         aggregation — child hits join their parent key and reduce. Output:
         (parent, n_children, score) by (score desc, parent asc) limit k."""
-        hits = self._mask(self._eval(normalize(child_node)))
+        hits = self._eval(normalize(child_node))
         parents = self.store.read_union(self.spark, "docmap").select(
             (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc"),
             F.col(parent_col).alias("parent"),
@@ -1987,41 +2079,50 @@ class SearchEngine:
     def topk(self, node: Node, k: int = 10, wand: bool = True) -> DataFrame:
         """Top-k by (score desc, gdoc asc). Single-scan queries (term /
         multiterm / flat boolean / min-match) run the block-max WAND kernel
-        (reference wanderator + block_disjunction); other shapes fall back
-        to the general evaluator + global TakeOrdered."""
+        (reference wanderator + block_disjunction), phrase-family leaves
+        the phrase kernel; other shapes fall back to the general evaluator
+        + global TakeOrdered. A single scan with kernel-resident tombstones
+        and at most LOCAL_MAX_POSTINGS scanned postings runs on the driver
+        (zero Spark jobs); the choice is recorded in `last_run`."""
         n = normalize(node)
-        spec = (
-            self._query_spec(n)
-            if not isinstance(n, (Phrase, SamePosition, VarPhrase))
-            else None
+        plan, post, tail_sel, single = None, None, None, True
+        if isinstance(n, (Phrase, SamePosition, VarPhrase)):
+            plan, post = self._phrase_plan(n, 1.0), self.final_mode
+        elif (spec := self._query_spec(n)) is not None:
+            tail_sel = spec[4]
+            plan = self._spec_plan(
+                spec,
+                # per-partition pools/caps count docs the kernel can't see
+                # as deleted when the tombstone set exceeds even the
+                # broadcast cap — the post-kernel anti-join mask could then
+                # strip survivors below k while live docs were already
+                # discarded. No kernel top-k in that regime (r6 review); up
+                # to MAX_BCAST_TOMBSTONES the mask rides a Spark broadcast
+                # and pooling + WAND stay on (r7, VERDICT r6 next-1)
+                k=k if self._deleted_inline else None,
+                prune=wand and self._deleted_inline,
+                mode=self.final_mode,
+            )
+        else:
+            single = False
+        est = None
+        if single and tail_sel is None and isinstance(self._vocab, tuple):
+            est = sum(self._stats_for(plan.terms).values()) if plan else 0
+        local = (
+            est is not None and self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
         )
-        if spec is not None:
-            scorers, min_match, const, merge, tail_sel = spec
-            if not scorers and tail_sel is None:
-                hits = self._empty_hits()
-            else:
-                prune = wand and self._deleted_inline
-                hits = self._hits_scan(
-                    scorers,
-                    min_match=min_match,
-                    const_add=const,
-                    merge=merge,
-                    # per-partition pools/caps count docs the kernel can't
-                    # see as deleted when the tombstone set exceeds even
-                    # the broadcast cap — the post-kernel anti-join mask
-                    # could then strip survivors below k while live docs
-                    # were already discarded. No kernel top-k in that
-                    # regime (r6 review); up to MAX_BCAST_TOMBSTONES the
-                    # mask now rides a Spark broadcast and pooling + WAND
-                    # stay on (r7, VERDICT r6 next-1)
-                    k=k if self._deleted_inline else None,
-                    prune=prune,
-                    mode=self.final_mode,
-                    tail_sel=tail_sel,
-                ).select("gdoc", F.col("score").cast(self._score_t).alias("score"))
-            return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k)
-        hits = self._mask(self._eval(n))
-        hits = hits.select("gdoc", self._final_score("score").alias("score"))
+        self.last_run = {
+            "path": "local" if local else "spark",
+            "postings_est": est,
+            "tombstone_tier": self._tombstone_tier(),
+            "wand": bool(plan and plan.prune),
+        }
+        _log.debug("topk %s", self.last_run)
+        if local:
+            return self._local_topk(plan, k, post)
+        hits = self._plan_hits(plan, tail_sel) if single else self._eval(n)
+        if post or not single:
+            hits = hits.select("gdoc", self._final_score("score").alias("score"))
         return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k)
 
     def topk_batch(self, queries: dict[str, Node], k: int = 10) -> DataFrame:
@@ -2080,16 +2181,6 @@ class SearchEngine:
                     term_qmap.setdefault(t, []).append((qid, sc))
             all_terms = list(term_qmap)
             if all_terms:
-                n_part = self.spark.sparkContext.defaultParallelism
-                blocks = (
-                    self._term_filtered(self.postings, all_terms)
-                    .select(*self.SCAN_COLS)
-                    .withColumn(
-                        "chunkid", F.shiftright("first_doc", self.chunk_bits)
-                    )
-                    .repartition(n_part, "segment", "chunkid")
-                    .sortWithinPartitions("segment", "chunkid")
-                )
                 kernel = _batch_topk_kernel(
                     term_qmap,
                     np.asarray(mm, dtype=np.int64),
@@ -2103,9 +2194,9 @@ class SearchEngine:
                     mode=self.final_mode,
                     deleted=self._kernel_deleted if self._deleted_inline else None,
                 )
-                hits = blocks.mapInPandas(kernel, BATCH_HITS_SCHEMA)
-                if not self._deleted_inline:
-                    hits = self._mask(hits)
+                hits = self._spark_hits(
+                    _ScanPlan(kernel, all_terms, self.SCAN_COLS, True, BATCH_HITS_SCHEMA)
+                )
                 from pyspark.sql.window import Window
 
                 w = Window.partitionBy("qid").orderBy(

@@ -120,7 +120,7 @@ class MultiFieldEngine:
             eng = self.engines.get(node.field)
             if eng is None:
                 raise KeyError(f"no index for field {node.field!r}")
-            return eng._mask(eng._eval(normalize(node.node), boost * node.boost))
+            return eng._eval(normalize(node.node), boost * node.boost)
         if isinstance(node, Not):
             # lone NOT = all docs (ANY field's universe — shared docmap)
             # minus child, constant score (boolean_filter.cpp:83-87)

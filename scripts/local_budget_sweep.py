@@ -1,0 +1,90 @@
+"""Sweep for `SearchEngine.LOCAL_MAX_POSTINGS`: wall time of one `Term`
+top-10 at the driver-local site vs the Spark site, across doc_freq.
+
+    python scripts/local_budget_sweep.py [--docs 1000000] [--reps 5]
+
+Builds one segment of `--docs` short synthetic docs in which term `pM`
+occurs in M of every 1000 docs (doc_freq = docs * M / 1000), deletes 1%
+of the docs (inline tombstone tier), then times
+`topk(Term(t), 10).collect()` at both sites with the budget forced (a huge
+budget vs 0). Prints one row per
+term: doc_freq, median local ms, median Spark ms, and whether the rows
+matched. The default budget is the largest doc_freq at which the local
+site is still no slower than Spark.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import statistics
+import sys
+import tempfile
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+PERMILLE = (1000, 500, 400, 300, 250, 100, 10, 1)
+
+
+def main() -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--docs", type=int, default=1_000_000)
+    p.add_argument("--reps", type=int, default=5)
+    p.add_argument("--cores", type=int, default=os.cpu_count() or 4)
+    a = p.parse_args()
+
+    from pyspark.sql import functions as F
+
+    from iresearch_spark.index.segments import IndexStore, build_segment
+    from iresearch_spark.search import SearchEngine, Term
+    from iresearch_spark.session import get_spark
+
+    spark = get_spark("local-budget-sweep", cores=a.cores)
+    spark.sparkContext.setLogLevel("ERROR")
+    words = [F.when(F.col("doc_id") % 1000 < m, F.lit(f"p{m}")) for m in PERMILLE]
+    docs = spark.range(1, a.docs + 1).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            *words,
+            F.concat(F.lit("f"), (F.col("id") % 1000).cast("string")),
+            F.concat(F.lit("g"), (F.col("id") % 37).cast("string")),
+        ).alias("content"),
+    )
+    with tempfile.TemporaryDirectory(prefix="sweep_ix_") as root:
+        store = IndexStore(root)
+        t0 = time.perf_counter()
+        build_segment(spark, store, docs, "s0", key_cols=["doc_id"], doc_id_col="doc_id")
+        print(f"built {a.docs} docs in {time.perf_counter() - t0:.1f} s")
+        store.remove(
+            spark,
+            spark.range(1, a.docs + 1, 100).select(
+                F.lit("s0").alias("segment"), F.col("id").alias("doc_id")
+            ),
+        )
+        eng = SearchEngine(spark, store)
+        eng.prepare_dictionary()
+        print(f"{'term':>6} {'doc_freq':>9} {'local_ms':>9} {'spark_ms':>9} same")
+        for m in reversed(PERMILLE):
+            term = f"p{m}"
+            walls: dict[int, list[float]] = {}
+            rows: dict[int, list] = {}
+            for budget in (10**12, 0):
+                eng.LOCAL_MAX_POSTINGS = budget
+                eng.topk(Term(term), 10).collect()  # warm
+                walls[budget] = []
+                for _ in range(a.reps):
+                    t0 = time.perf_counter()
+                    rows[budget] = [tuple(r) for r in eng.topk(Term(term), 10).collect()]
+                    walls[budget].append((time.perf_counter() - t0) * 1e3)
+            df = eng._stats_for([term])[term]
+            print(
+                f"{term:>6} {df:>9} {statistics.median(walls[10**12]):>9.1f} "
+                f"{statistics.median(walls[0]):>9.1f} {rows[10**12] == rows[0]}"
+            )
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

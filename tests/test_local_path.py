@@ -1,0 +1,323 @@
+"""Driver-local top-k site: SearchEngine.topk runs a small single-scan
+query's kernel in-process over pyarrow-read postings instead of launching
+Spark jobs. Pinned here on a 2-segment store with deletes:
+
+- the local rows equal the Spark rows (forced with LOCAL_MAX_POSTINGS = 0
+  vs a large budget) and both equal tests/oracle.py, in the inline and the
+  broadcast tombstone tiers, for BM25, TFIDF and PreciseBM25 engines;
+- a local query launches zero Spark jobs (statusTracker, job group);
+- the no-vocab regime, the anti-join tombstone tier, the general evaluator
+  and queries over the budget stay on Spark;
+- every `_eval` output is tombstone-free in all three tiers, so callers
+  need no second mask.
+"""
+
+from __future__ import annotations
+
+import logging
+import math
+import re
+
+import numpy as np
+import pytest
+
+import iresearch_spark.search.executor as X
+from iresearch_spark.analysis.analyzers import DEFAULT_STOPWORDS
+from iresearch_spark.corpus import generate_corpus
+from iresearch_spark.index.segments import IndexStore, build_segment
+from iresearch_spark.search import (
+    All,
+    And,
+    Fuzzy,
+    Not,
+    Or,
+    Phrase,
+    PreciseBM25,
+    Prefix,
+    Proxy,
+    SearchEngine,
+    Term,
+    Terms,
+    VarPhrase,
+    Wildcard,
+    get_scorer,
+)
+from tests import oracle
+
+STOPS = frozenset(DEFAULT_STOPWORDS)
+F32 = np.float32
+K = 10
+BIG = 10**12
+
+
+@pytest.fixture(scope="module")
+def ix(spark, tmp_path_factory):
+    """Two segments, ~1/11 of the docs deleted; the oracle index holds
+    every doc (the engine keeps deleted docs in idf/avgdl until a merge)."""
+    store = IndexStore(str(tmp_path_factory.mktemp("local_ix")))
+    docs: list[tuple[int, str]] = []
+    victims: list[tuple[str, int]] = []
+    for name, seed, n in (("s0", 41, 220), ("s1", 42, 180)):
+        corpus = generate_corpus(spark, n, seed=seed).persist()
+        build_segment(spark, store, corpus, name)
+        rows = corpus.select("repo", "path", "commit", "content").collect()
+        corpus.unpersist()
+        rows.sort(key=lambda r: (r["repo"], r["path"], r["commit"]))
+        base = {s.name: s.base_doc for s in store.current().segments}[name]
+        docs += [(base + i + 1, r["content"]) for i, r in enumerate(rows)]
+        victims += [(name, i + 1) for i in range(n) if (base + i + 1) % 11 == 3]
+    store.remove(spark, spark.createDataFrame(victims, "segment string, doc_id long"))
+    base = {s.name: s.base_doc for s in store.current().segments}
+    deleted = {base[s] + d for s, d in victims}
+    idx = oracle.build_index(docs, STOPS)
+    by_df = sorted(idx.postings, key=lambda t: (-idx.doc_freq(t), t))
+    hi, med, low = by_df[0], by_df[len(by_df) // 8], by_df[len(by_df) // 2]
+    toks = oracle.tokenize(docs[0][1], STOPS)
+    bigram = next((a, b) for (p, a), (q, b) in zip(toks, toks[1:]) if q == p + 1)
+    return store, idx, deleted, (hi, med, low, bigram)
+
+
+def _rows(df) -> list[tuple[int, float]]:
+    return [(r["gdoc"], r["score"]) for r in df.collect()]
+
+
+def _top(scores: dict, deleted: set[int]) -> list[tuple[int, float]]:
+    return oracle.topk({d: s for d, s in scores.items() if d not in deleted}, K)
+
+
+def _sum_legs(legs, min_match: int = 1, merge: str = "sum") -> dict:
+    if merge == "sum":
+        return oracle.merge_sum(legs, min_match)
+    got: dict[int, list] = {}
+    for leg in legs:
+        for d, s in leg.items():
+            got.setdefault(d, []).append(s)
+    fn = max if merge == "max" else min
+    return {d: F32(fn(ss)) for d, ss in got.items() if len(ss) >= min_match}
+
+
+def _multiterm(idx, matched: list[str], limit: int) -> dict:
+    """Scored head = top `limit` matched terms by (df desc, term asc);
+    every other matched term surfaces its docs at score 0."""
+    head = sorted(matched, key=lambda t: (-idx.doc_freq(t), t))
+    out = _sum_legs([oracle.score_term(idx, t) for t in head[:limit]])
+    for t in head[limit:]:
+        for d, _tf, _ps in idx.postings[t]:
+            out.setdefault(d, F32(0.0))
+    return out
+
+
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _cases(ix) -> list[tuple[str, object, dict]]:
+    """(label, query, oracle scores) — every point_query category plus
+    boosted Terms, a kmax merge and a VarPhrase."""
+    _, idx, _, (hi, med, low, bigram) = ix
+    st = lambda t, b=1.0: oracle.score_term(idx, t, boost=b)  # noqa: E731
+    vocab = sorted(idx.postings)
+    pre = hi[:3]
+    wc = f"{hi[0]}*{hi[-1]}"
+    wrx = re.compile(re.escape(hi[0]) + ".*" + re.escape(hi[-1]), re.DOTALL)
+    fz = hi[:-1] + ("x" if hi[-1] != "x" else "y")
+    slot2 = sorted({bigram[1], low})
+    return [
+        ("HighTerm", Term(hi), st(hi)),
+        ("MedTerm", Term(med), st(med)),
+        ("LowTerm", Term(low), st(low)),
+        ("AndHighMed", And((Term(hi), Term(med))), oracle.score_and(idx, [hi, med])),
+        ("OrHighMed", Or((Term(hi), Term(med))), oracle.score_or(idx, [hi, med])),
+        (
+            "MinMatch2of3",
+            Or((Term(hi), Term(med), Term(low)), min_match=2),
+            oracle.score_or(idx, [hi, med, low], min_match=2),
+        ),
+        ("Phrase", Phrase(bigram), oracle.score_phrase(idx, list(bigram))),
+        ("Prefix3", Prefix(pre), _multiterm(idx, [t for t in vocab if t.startswith(pre)], 1024)),
+        ("Wildcard", Wildcard(wc), _multiterm(idx, [t for t in vocab if wrx.fullmatch(t)], 1024)),
+        ("Fuzzy1", Fuzzy(fz, distance=1), _multiterm(idx, [t for t in vocab if _lev(t, fz) <= 1], 50)),
+        (
+            "TermsBoosted",
+            Terms((hi, med), boosts=(2.0, 0.5)),
+            _sum_legs([st(hi, 2.0), st(med, 0.5)]),
+        ),
+        (
+            "OrMax",
+            Or((Term(hi), Term(med)), merge="max"),
+            _sum_legs([st(hi), st(med)], merge="max"),
+        ),
+        (
+            "VarPhrase",
+            VarPhrase((Term(bigram[0]), Terms(tuple(slot2)))),
+            oracle.score_varphrase(idx, [[bigram[0]], slot2]),
+        ),
+        ("Absent", Term("zzqqxxnotaterm"), {}),
+    ]
+
+
+def _engine(spark, store, scorer=None, **patch) -> SearchEngine:
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in patch.items():
+            mp.setattr(X, name, value)
+        eng = SearchEngine(spark, store, scorer=scorer)
+    eng.prepare_dictionary()
+    return eng
+
+
+def _both(eng: SearchEngine, node, k: int = K):
+    eng.LOCAL_MAX_POSTINGS = BIG
+    local = _rows(eng.topk(node, k))
+    assert eng.last_run["path"] == "local", eng.last_run
+    eng.LOCAL_MAX_POSTINGS = 0
+    spark_rows = _rows(eng.topk(node, k))
+    # a query that scans nothing (postings_est 0) is within any budget
+    assert eng.last_run["path"] == "spark" or not eng.last_run["postings_est"]
+    del eng.LOCAL_MAX_POSTINGS
+    return local, spark_rows
+
+
+@pytest.mark.parametrize("tier", ["inline", "broadcast"])
+def test_local_equals_spark_equals_oracle(spark, ix, tier):
+    store, _idx, deleted, _ = ix
+    patch = {"MAX_INLINE_TOMBSTONES": 0} if tier == "broadcast" else {}
+    eng = _engine(spark, store, **patch)
+    assert eng._tombstone_tier() == tier
+    for label, node, scores in _cases(ix):
+        local, spark_rows = _both(eng, node)
+        assert local == spark_rows, label
+        assert local == _top(scores, deleted), label
+        if label != "Absent":
+            assert local, label
+        assert eng.last_run["tombstone_tier"] == tier
+
+
+def test_local_scorers_tfidf_and_precise(spark, ix):
+    store, idx, deleted, (hi, med, low, bigram) = ix
+    tfidf = _engine(spark, store, scorer=get_scorer("tfidf"))
+    idf = oracle.tfidf_idf(idx.n_docs, idx.doc_freq(hi))
+    exp = {
+        d: oracle.tfidf_score(tf, idx.doclen[d], idf) for d, tf, _ in idx.postings[hi]
+    }
+    local, spark_rows = _both(tfidf, Term(hi))
+    assert local == spark_rows == _top(exp, deleted)
+    for node in (Or((Term(hi), Term(med))), Phrase(bigram)):
+        local, spark_rows = _both(tfidf, node)
+        assert local == spark_rows and local
+
+    precise = _engine(spark, store, scorer=PreciseBM25())
+    k1, b = 1.2, 0.75
+    n = idx.doc_freq(med)
+    pidf = math.log1p((idx.n_docs - n + 0.5) / (n + 0.5))
+    exp = {}
+    for d, tf, _ in idx.postings[med]:
+        s = pidf * ((k1 + 1.0) * tf) / (k1 * ((1.0 - b) + b * idx.doclen[d] / idx.avg_dl) + tf)
+        exp[d] = math.floor(s * 1e6 + 0.5) / 1e6
+    want = sorted(((d, s) for d, s in exp.items() if d not in deleted), key=lambda t: (-t[1], t[0]))[:K]
+    local, spark_rows = _both(precise, Term(med))
+    assert local == spark_rows == want
+    for node in (And((Term(hi), Term(med))), Phrase(bigram), Prefix(hi[:2])):
+        local, spark_rows = _both(precise, node)
+        assert local == spark_rows and local
+
+
+def test_local_topk_launches_no_job(spark, ix):
+    store, *_ = ix
+    eng = _engine(spark, store)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for i, (label, node, _) in enumerate(_cases(ix)):
+        group = f"local-path-{i}"
+        sc.setJobGroup(group, label)
+        try:
+            eng.topk(node, K).collect()
+        finally:
+            sc.setJobGroup("local-path-idle", "")
+        assert eng.last_run["path"] == "local", label
+        assert tracker.getJobIdsForGroup(group) == [], label
+
+
+def test_budget_novocab_antijoin_and_general_stay_on_spark(spark, ix, caplog):
+    store, _idx, deleted, (hi, med, low, bigram) = ix
+    eng = _engine(spark, store)
+    node = Or((Term(hi), Term(med)))
+    exp = _rows(eng.topk(node, K))
+    est = eng.last_run["postings_est"]
+    assert eng.last_run["path"] == "local" and est == eng._stats_for([hi])[hi] + eng._stats_for([med])[med]
+    eng.LOCAL_MAX_POSTINGS = est - 1  # one posting over budget
+    assert _rows(eng.topk(node, K)) == exp
+    assert eng.last_run["path"] == "spark"
+    del eng.LOCAL_MAX_POSTINGS
+
+    # general evaluator shapes (Not, nesting) never run locally
+    for shape in (And((Term(hi), Not(Term(med)))), Or((And((Term(hi), Term(med))), Term(low)))):
+        got = _rows(eng.topk(shape, K))
+        assert eng.last_run["path"] == "spark" and eng.last_run["postings_est"] is None
+        assert got and not {d for d, _ in got} & deleted
+
+    novocab = SearchEngine(spark, store)
+    novocab.VOCAB_CACHE_MAX = -1
+    for q in (Term(hi), Prefix(hi[:2], scored_terms_limit=2)):
+        ref = _rows(eng.topk(q, K))
+        assert _rows(novocab.topk(q, K)) == ref
+        assert novocab.last_run["path"] == "spark"
+
+    antijoin = _engine(spark, store, MAX_BCAST_TOMBSTONES=0)
+    for q in (node, Phrase(bigram)):
+        ref = _rows(eng.topk(q, K))
+        assert _rows(antijoin.topk(q, K)) == ref
+        run = antijoin.last_run
+        assert run["path"] == "spark" and run["tombstone_tier"] == "antijoin"
+        assert run["wand"] is False
+
+    # one DEBUG record per topk, nothing at the default level
+    caplog.clear()
+    eng.topk(node, K)
+    assert not [r for r in caplog.records if r.name == X.__name__]
+    with caplog.at_level(logging.DEBUG, logger=X.__name__):
+        eng.topk(node, K)
+    assert len(caplog.records) == 1 and "local" in caplog.records[0].getMessage()
+
+
+@pytest.mark.parametrize("tier", ["inline", "broadcast", "antijoin"])
+def test_eval_outputs_are_tombstone_free(spark, ix, tier):
+    """Every `_eval` shape masks deletes itself (kernels in-kernel, the
+    anti-join tier after the kernel, doc_universe by join), so execute,
+    topk's general path, nested_topk and multi-field evaluation need no
+    second mask."""
+    store, idx, deleted, (hi, med, low, bigram) = ix
+    patch = {
+        "inline": {},
+        "broadcast": {"MAX_INLINE_TOMBSTONES": 0},
+        "antijoin": {"MAX_BCAST_TOMBSTONES": 0},
+    }[tier]
+    eng = _engine(spark, store, **patch)
+    assert eng._tombstone_tier() == tier
+    live = set(idx.doclen) - deleted
+    shapes = [
+        Term(hi),
+        Phrase(bigram),
+        Prefix(hi[:2]),
+        Not(Term(med)),
+        And((Term(hi), Not(Term(med)))),
+        Or((And((Term(hi), Term(med))), Term(low))),
+        Proxy(Term(med)),
+        All(),
+    ]
+    for node in shapes:
+        got = {r["gdoc"] for r in eng.execute(node).collect()}
+        assert got and got <= live, node
+    assert {r["gdoc"] for r in eng.execute(All()).collect()} == live
+    assert {r["gdoc"] for r in eng.execute(Term(hi)).collect()} == {
+        d for d, _, _ in idx.postings[hi]
+    } - deleted
+    # the general topk path agrees with the oracle under every tier
+    shape = Or((And((Term(hi), Term(med))), Term(low)))
+    exp = _sum_legs([oracle.score_and(idx, [hi, med]), oracle.score_term(idx, low)])
+    assert _rows(eng.topk(shape, K)) == _top(exp, deleted)

@@ -230,9 +230,12 @@ def test_precise_mode_matches_double_oracle(spark, tmp_path_factory):
 # ---------------------------------------------------------------------------
 
 
-def test_gate_term_query_scans_packed_postings(spark):
+def test_gate_term_query_scans_packed_postings(spark, monkeypatch):
     import __spark_entry__ as E
+    from iresearch_spark.search import SearchEngine
 
+    # the Spark plan, not the driver-local site
+    monkeypatch.setattr(SearchEngine, "LOCAL_MAX_POSTINGS", 0)
     df = E.queries()["term_high"](spark, "/root/testdata/sf0.001")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -83,7 +83,11 @@ def test_single_term_topk_has_no_shuffle(engine):
     one block per (term, doc), so per-doc sums need no co-location."""
     from iresearch_spark.search import Term
 
-    assert _count_exchanges(engine.topk(Term("def"), 10)) == 0
+    engine.LOCAL_MAX_POSTINGS = 0  # the Spark plan, not the driver-local site
+    try:
+        assert _count_exchanges(engine.topk(Term("def"), 10)) == 0
+    finally:
+        del engine.LOCAL_MAX_POSTINGS
 
 
 def test_flat_boolean_topk_has_one_block_shuffle(engine):
@@ -92,9 +96,13 @@ def test_flat_boolean_topk_has_one_block_shuffle(engine):
     the 100-TB-critical plan property."""
     from iresearch_spark.search import And, Or, Term
 
-    for node in (Or((Term("def"), Term("return"))), And((Term("def"), Term("return")))):
-        df = engine.topk(node, 10)
-        assert _count_exchanges(df) == 1, _plan_of(df)
-        plan = _plan_of(df)
-        # the exchange is hashpartitioning on (segment, chunkid)
-        assert "chunkid" in plan, plan
+    engine.LOCAL_MAX_POSTINGS = 0  # the Spark plan, not the driver-local site
+    try:
+        for node in (Or((Term("def"), Term("return"))), And((Term("def"), Term("return")))):
+            df = engine.topk(node, 10)
+            assert _count_exchanges(df) == 1, _plan_of(df)
+            plan = _plan_of(df)
+            # the exchange is hashpartitioning on (segment, chunkid)
+            assert "chunkid" in plan, plan
+    finally:
+        del engine.LOCAL_MAX_POSTINGS

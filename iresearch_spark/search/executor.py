@@ -10,14 +10,17 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
               kernel closure plus the terms and columns it reads
               (`_sums_plan` / `_phrase_plan`);
   execute   = the plan runs at one of two sites, same kernel either way:
-              - driver-local (`topk` only): when the query is a single scan
-                (term, vocab-cached multiterm, flat And/Or/min-match, or a
-                phrase leaf), the tombstones ride in the kernel, and the
-                scanned terms' summed doc_freq is at most
-                `SearchEngine.LOCAL_MAX_POSTINGS`, pyarrow reads just those
-                terms' row groups from each segment's term-sorted postings
-                parquet and the kernel runs in-process — zero Spark jobs,
-                the reference's in-process mmap walk (PAPER.md §0);
+              - driver-local: when the plan is one scan (a term,
+                vocab-cached multiterm, flat And/Or/min-match or phrase
+                leaf — or `topk_batch`'s shared scan of many such
+                queries), the tombstones ride in the kernel, and the
+                fan-out-weighted scan estimate (sum over the scanned terms
+                of doc_freq x the queries subscribed to the term) is at
+                most `SearchEngine.LOCAL_MAX_POSTINGS`, pyarrow reads just
+                those terms' row groups from each segment's term-sorted
+                postings parquet and the kernel runs in-process as one
+                partition — zero Spark jobs, the reference's in-process
+                mmap walk (PAPER.md §0);
               - Spark (everything else): parquet scan with `term IN`
                 pushdown -> (for multi-leg queries) ONE repartition of the
                 packed blocks by (segment, chunk) -> an Arrow mapInPandas
@@ -26,10 +29,15 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 query term live in the same chunk group, so no downstream
                 groupBy shuffle exists at all);
   collect   = `ORDER BY score DESC, gdoc ASC LIMIT k` over the kernel's
-              top-k survivors: np.lexsort locally, TakeOrderedAndProject on
-              Spark (the reference's caller-side min-heap,
-              utils/index-search.cpp:687-786). `topk` records the site it
-              chose in `SearchEngine.last_run`.
+              top-k survivors: np.lexsort / the kernel's per-query pools
+              locally, TakeOrderedAndProject or a window on Spark (the
+              reference's caller-side min-heap,
+              utils/index-search.cpp:687-786). `topk` and `topk_batch`
+              record the site they chose in `SearchEngine.last_run`.
+
+The term dictionary ((term, doc_freq), sorted) is read from the segments'
+term_stats parquet with pyarrow when it fits `VOCAB_CACHE_MAX`, so an
+engine open plus a small query launches no Spark job at all.
 
 Scale shape (the 100-TB argument): the only shuffle in the hot path moves
 PACKED blocks of the matching terms (~1 byte/posting), not exploded
@@ -981,14 +989,17 @@ class SearchEngine:
         self.seg_base = {s.name: s.base_doc for s in self.manifest.segments}
         self.chunk_bits = getattr(self.manifest, "chunk_bits", DEFAULT_CHUNK_BITS)
         self.postings = store.read_union(spark, "postings")
-        self.has_positions = "pos_bin" in self.postings.columns
+        # phrase kernels need pos_bin in EVERY segment: read_union
+        # null-fills a plain segment's column, which no kernel can decode
+        self._streams_missing: dict[str, list[str]] = {}
+        self.has_positions = not self._segments_without("pos_bin")
         # index-wide term stats (reference prepare() walks all segments);
-        # cached — this is the term dictionary, hit by every query's prepare
+        # persisted only when the dictionary is too large for the driver
+        # cache (see _vocab_pairs) — then every expansion queries it
         self.term_stats = (
             store.read_union(spark, "term_stats")
             .groupBy("term")
             .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
-            .persist()
         )
         self._docmap = store.read_union(spark, "docmap").select("segment", "doc_id")
         # driver-side term dictionary (lazy): for vocabularies up to
@@ -1002,7 +1013,7 @@ class SearchEngine:
         # proxy_filter cache: normalized child (+boost) -> persisted hits
         self._proxy_cache: dict = {}
         self._arrow_postings: list | None = None  # driver-local site, lazy
-        self.last_run: dict | None = None  # the last topk's site choice
+        self.last_run: dict | None = None  # the last topk(_batch)'s site choice
         # live-delete mask (reference index_writer Remove(),
         # index_writer.hpp:381-416): deletes stay visible as a query-time
         # tombstone mask until a merge physically drops them
@@ -1090,20 +1101,39 @@ class SearchEngine:
         """(terms sorted asc, doc_freqs aligned) — or None when the
         dictionary is too large to hold on the driver."""
         if self._vocab is False:
-            # ONE job (r7): pull cap+1 sorted rows — the extra row answers
-            # the "too large?" question the old separate count() job asked
-            rows = (
-                self.term_stats.orderBy("term")
-                .limit(self.VOCAB_CACHE_MAX + 1)
-                .collect()
-            )
-            if len(rows) > self.VOCAB_CACHE_MAX:
+            import pyarrow as pa
+            import pyarrow.dataset as pads
+
+            segs = [
+                pads.dataset(self.store.seg_path(s.name, "term_stats"), format="parquet")
+                for s in self.manifest.segments
+            ]
+            if sum(d.count_rows() for d in segs) <= self.VOCAB_CACHE_MAX:
+                # the footers' row sum bounds the distinct terms: no Spark
+                # job — pyarrow reads (term, doc_freq), sums per term and
+                # sorts by UTF-8 bytes (the order of Spark's orderBy and of
+                # Python's str comparison, which bisect relies on)
+                t = pa.concat_tables(d.to_table(columns=["term", "doc_freq"]) for d in segs)
+                t = t.group_by("term").aggregate([("doc_freq", "sum")]).sort_by("term")
+                terms, dfs = t["term"].to_pylist(), t["doc_freq_sum"].to_pylist()
+            else:
+                # ONE job (r7): pull cap+1 sorted rows — the extra row
+                # answers "too large?"; the pull materializes the cache the
+                # no-vocab regime's expansions then query
+                self.term_stats = self.term_stats.persist()
+                rows = (
+                    self.term_stats.orderBy("term")
+                    .limit(self.VOCAB_CACHE_MAX + 1)
+                    .collect()
+                )
+                terms = [r["term"] for r in rows]
+                dfs = [r["doc_freq"] for r in rows]
+                if len(rows) <= self.VOCAB_CACHE_MAX:
+                    self.term_stats.unpersist()
+            if len(terms) > self.VOCAB_CACHE_MAX:
                 self._vocab = None
             else:
-                self._vocab = (
-                    [r["term"] for r in rows],
-                    [r["doc_freq"] for r in rows],
-                )
+                self._vocab = (terms, dfs)
                 # cached once for vectorized (C-level) wildcard matching —
                 # rebuilt only when the vocab itself is
                 self._vocab_series = pd.Series(self._vocab[0], dtype="object")
@@ -1580,21 +1610,38 @@ class SearchEngine:
             ["segment", "chunkid", "term", "first_doc"], kind="stable", ignore_index=True
         )
 
-    def _local_topk(self, plan: _ScanPlan | None, k: int, post: str | None) -> DataFrame:
-        """Driver-local site: the plan's kernel over `_local_blocks`, the
-        top k by (score desc, gdoc asc), returned as a local DataFrame whose
-        collect() launches no Spark job. `post` is the final-score
-        transform for kernels that score in leaf mode (phrase)."""
+    def _site(self, subs: dict[str, int] | None) -> tuple[int | None, bool]:
+        """Execution-site decision shared by `topk` and `topk_batch`:
+        (scan estimate, run on the driver?). `subs` maps each scanned term
+        to the number of queries subscribed to it, or is None for a plan
+        that is not one driver-readable scan. The estimate, Σ doc_freq(t) x
+        subs[t], exists only while the dictionary is cached; the driver
+        runs the scan when the tombstones ride in the kernel and the
+        estimate is at most LOCAL_MAX_POSTINGS."""
+        if subs is None or not isinstance(self._vocab, tuple):
+            return None, False
+        est = sum(df * subs[t] for t, df in self._stats_for(list(subs)).items())
+        return est, self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
+
+    def _local_run(self, plan: _ScanPlan | None) -> pd.DataFrame | None:
+        """Driver-local site: the plan's kernel over `_local_blocks` as one
+        in-process partition; None when nothing matched."""
         out = list(plan.kernel(iter([self._local_blocks(plan)]))) if plan else []
-        if not out:
-            return self._empty_hits()
-        hits = pd.concat(out)
+        return pd.concat(out, ignore_index=True) if out else None
+
+    def _local_topk(self, plan: _ScanPlan | None, k: int, post: str | None) -> pd.DataFrame:
+        """Driver-local top k of a single query by (score desc, gdoc asc),
+        as a pandas (gdoc, score) frame. `post` is the final-score
+        transform for kernels that score in leaf mode (phrase)."""
+        hits = self._local_run(plan)
+        if hits is None:
+            return pd.DataFrame({"gdoc": np.empty(0, np.int64), "score": np.empty(0)})
         gd = hits["gdoc"].to_numpy(np.int64)
         sc = hits["score"].to_numpy(np.float64)
         if post is not None:
             sc = _transform_arr(post, sc)
         top = np.lexsort((gd, -sc))[:k]
-        return self._local_frame(pd.DataFrame({"gdoc": gd[top], "score": sc[top]}))
+        return pd.DataFrame({"gdoc": gd[top], "score": sc[top]})
 
     def _leaf_scorers(
         self, expansion: list[tuple[str, int]], boost: float
@@ -1720,8 +1767,7 @@ class SearchEngine:
     def _phrase_plan(self, leaf: Node, boost: float) -> _ScanPlan | None:
         """Scan plan for a phrase-family leaf (None: matches nothing). A
         single one-term slot is a term query and plans as one."""
-        if not self.has_positions:
-            raise ValueError("index built without positions; phrase queries unavailable")
+        self._require_stream("pos_bin", "with_positions=True")
         slot_terms, offsets = self._phrase_slots(leaf)
         if len(slot_terms) == 1 and len(slot_terms[0]) == 1:
             stats = self._stats_for(slot_terms[0])
@@ -1756,13 +1802,22 @@ class SearchEngine:
         return _ScanPlan(kernel, sorted(stats), self.PHRASE_COLS, True, PHRASE_SCHEMA)
 
     def _empty_hits(self) -> DataFrame:
-        # limit(0) of a one-row local relation folds to an empty local
-        # relation: no Spark job on collect (an empty pandas frame or list
-        # becomes an RDD scan, one job)
-        return self._local_frame(pd.DataFrame({"gdoc": [0], "score": [0.0]})).limit(0)
+        return self._local_frame(pd.DataFrame({"gdoc": [], "score": []}))
 
     def _local_frame(self, pdf: pd.DataFrame) -> DataFrame:
-        return self.spark.createDataFrame(pdf, f"gdoc long, score {self._score_t}")
+        """Local relation of a pandas ([query,] gdoc, score) frame, in that
+        column order: its collect() launches no Spark job."""
+        schema = f"gdoc long, score {self._score_t}"
+        if "query" in pdf:
+            schema = "query string, " + schema
+        if pdf.empty:
+            # limit(0) of a one-row local relation folds to an empty local
+            # relation (an empty pandas frame or list becomes an RDD scan,
+            # one job)
+            row = {"query": "", "gdoc": 0, "score": 0.0}
+            pdf = pd.DataFrame({c: [row[c]] for c in pdf.columns})
+            return self.spark.createDataFrame(pdf, schema).limit(0)
+        return self.spark.createDataFrame(pdf, schema)
 
     # ------------------------------------------------------------- boolean
 
@@ -1927,15 +1982,22 @@ class SearchEngine:
         self.postings.count()  # materialize eagerly, off the query path
         return self
 
+    def _segments_without(self, col: str) -> list[str]:
+        """Committed segments whose postings parquet footer lacks `col`
+        (read once per engine and stream)."""
+        if col not in self._streams_missing:
+            self._streams_missing[col] = [
+                s.name
+                for s in self.manifest.segments
+                if col not in self.store.table_columns(self.spark, s.name, "postings")
+            ]
+        return self._streams_missing[col]
+
     def _require_stream(self, col: str, hint: str) -> None:
         """EVERY committed segment must carry the stream — a mixed store is
         openable for scoring (read_union null-fills), but a stream consumer
         would silently omit the plain segments' docs. Fail loudly instead."""
-        missing = [
-            s.name
-            for s in self.manifest.segments
-            if col not in self.store.read(self.spark, s.name, "postings").columns
-        ]
+        missing = self._segments_without(col)
         if missing:
             raise ValueError(
                 f"segments {missing} lack the {col} stream (build with {hint}); "
@@ -2084,6 +2146,15 @@ class SearchEngine:
         + global TakeOrdered. A single scan with kernel-resident tombstones
         and at most LOCAL_MAX_POSTINGS scanned postings runs on the driver
         (zero Spark jobs); the choice is recorded in `last_run`."""
+        hits, self.last_run = self._topk(node, k, wand)
+        _log.debug("topk %s", self.last_run)
+        return self._local_frame(hits) if isinstance(hits, pd.DataFrame) else hits
+
+    def _topk(
+        self, node: Node, k: int, wand: bool
+    ) -> tuple[pd.DataFrame | DataFrame, dict]:
+        """(top k, run record) of one query: a pandas (gdoc, score) frame
+        when it ran on the driver, a Spark DataFrame otherwise."""
         n = normalize(node)
         plan, post, tail_sel, single = None, None, None, True
         if isinstance(n, (Phrase, SamePosition, VarPhrase)):
@@ -2105,25 +2176,20 @@ class SearchEngine:
             )
         else:
             single = False
-        est = None
-        if single and tail_sel is None and isinstance(self._vocab, tuple):
-            est = sum(self._stats_for(plan.terms).values()) if plan else 0
-        local = (
-            est is not None and self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
-        )
-        self.last_run = {
+        one_scan = single and tail_sel is None
+        est, local = self._site(dict.fromkeys(plan.terms if plan else (), 1) if one_scan else None)
+        run = {
             "path": "local" if local else "spark",
             "postings_est": est,
             "tombstone_tier": self._tombstone_tier(),
             "wand": bool(plan and plan.prune),
         }
-        _log.debug("topk %s", self.last_run)
         if local:
-            return self._local_topk(plan, k, post)
+            return self._local_topk(plan, k, post), run
         hits = self._plan_hits(plan, tail_sel) if single else self._eval(n)
         if post or not single:
             hits = hits.select("gdoc", self._final_score("score").alias("score"))
-        return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k)
+        return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k), run
 
     def topk_batch(self, queries: dict[str, Node], k: int = 10) -> DataFrame:
         """Evaluate MANY queries against ONE shared postings scan.
@@ -2133,29 +2199,36 @@ class SearchEngine:
         `topk(node, k)` per query — pinned by test_round6.
 
         The 100-TB serving shape: a search tier never runs one query at a
-        time — it drains a batch. Per-query execution costs one full
-        postings scan + job each; here the batch costs ONE scan filtered
-        by the UNION of all expansions (still `term IN` pushdown /
-        broadcast semi-join), one (segment, chunk) repartition of packed
-        blocks, and one kernel pass that decodes each matched block once
-        and scores it for every subscribed query (term -> [qid] fan-out,
-        per-query top-k pools). Only ~k rows per query per partition leave
-        the kernel; a single window ranks them. The reference has no batch
-        API (its per-query cost is a mmap'd in-process walk, ~free); on
-        Spark the scan dominates, so amortizing it IS the idiomatic
+        time — it drains a batch. The batch costs ONE scan filtered by the
+        UNION of all expansions and one kernel pass that decodes each
+        matched block once and scores it for every subscribed query
+        (term -> [qid] fan-out, per-query top-k pools). The reference has
+        no batch API (its per-query cost is a mmap'd in-process walk,
+        ~free); where a scan dominates, amortizing it IS the idiomatic
         restatement.
+
+        The shared scan takes `topk`'s site decision (`_site`) with a
+        fan-out-weighted estimate (a term's doc_freq counts once per
+        subscribed query). On the driver, pyarrow reads the union terms'
+        row groups and the kernel runs as one in-process partition, whose
+        per-query pools already are the final top k. On Spark it is a
+        `term IN` pushdown / broadcast semi-join scan, one (segment,
+        chunk) repartition of packed blocks, the kernel, and one window
+        ranking the ~k pool survivors per query per partition.
 
         Any single-scan shape joins the shared scan (term / multiterm /
         flat And/Or incl. min_match, per-term boosts, kmax/kmin merges).
         Other shapes (phrase, Not, nesting, no-vocab distributed-tail
-        multiterm) fall back to per-query `topk` and union in — correct,
-        just not amortized.
+        multiterm) fall back to per-query `topk` — each at its own site —
+        and union in: correct, just not amortized. When every part ran on
+        the driver the result is one local relation (zero Spark jobs on
+        collect); `last_run` records {path, postings_est, tombstone_tier,
+        n_batched, n_fallback}.
         """
-        names = list(queries)
         batched: list[tuple[str, tuple]] = []
         fallback: list[str] = []
-        for name in names:
-            n = normalize(queries[name])
+        for name, node in queries.items():
+            n = normalize(node)
             spec = (
                 self._query_spec(n)
                 if not isinstance(n, (Phrase, SamePosition, VarPhrase))
@@ -2165,22 +2238,22 @@ class SearchEngine:
                 fallback.append(name)
             else:
                 batched.append((name, spec))
-        parts: list[DataFrame] = []
+        local_parts: list[pd.DataFrame] = []
+        spark_parts: list[DataFrame] = []
+        est = None
         if batched:
             merge_code = {m: i for i, (m, _) in enumerate(_MERGE_REDUCERS)}
             term_qmap: dict[str, list[tuple[int, TermScorer]]] = {}
-            mm, ca, mc, qnames = [], [], [], []
-            for qid, (name, (scorers, min_match, const, merge, _)) in enumerate(
-                batched
-            ):
-                qnames.append(name)
+            mm, ca, mc = [], [], []
+            qnames = np.array([name for name, _ in batched], dtype=object)
+            for qid, (_, (scorers, min_match, const, merge, _)) in enumerate(batched):
                 mm.append(min_match)
                 ca.append(const)
                 mc.append(merge_code[merge])
                 for t, sc in scorers.items():
                     term_qmap.setdefault(t, []).append((qid, sc))
-            all_terms = list(term_qmap)
-            if all_terms:
+            plan = None
+            if term_qmap:
                 kernel = _batch_topk_kernel(
                     term_qmap,
                     np.asarray(mm, dtype=np.int64),
@@ -2194,23 +2267,30 @@ class SearchEngine:
                     mode=self.final_mode,
                     deleted=self._kernel_deleted if self._deleted_inline else None,
                 )
-                hits = self._spark_hits(
-                    _ScanPlan(kernel, all_terms, self.SCAN_COLS, True, BATCH_HITS_SCHEMA)
-                )
+                plan = _ScanPlan(kernel, list(term_qmap), self.SCAN_COLS, True, BATCH_HITS_SCHEMA)
+            est, local = self._site({t: len(subs) for t, subs in term_qmap.items()})
+            if local:
+                hits = self._local_run(plan)
+                if hits is not None:
+                    local_parts.append(
+                        pd.DataFrame(
+                            {
+                                "query": qnames[hits["qid"].to_numpy()],
+                                "gdoc": hits["gdoc"],
+                                "score": hits["score"],
+                            }
+                        )
+                    )
+            elif plan is not None:
                 from pyspark.sql.window import Window
 
-                w = Window.partitionBy("qid").orderBy(
-                    F.desc("score"), F.asc("gdoc")
-                )
+                w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("gdoc"))
                 name_map = F.create_map(
-                    *[
-                        F.lit(x)
-                        for qid, name in enumerate(qnames)
-                        for x in (qid, name)
-                    ]
+                    *[F.lit(x) for qid, name in enumerate(qnames) for x in (qid, name)]
                 )
-                parts.append(
-                    hits.withColumn("_rn", F.row_number().over(w))
+                spark_parts.append(
+                    self._spark_hits(plan)
+                    .withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") <= k)
                     .select(
                         name_map[F.col("qid")].alias("query"),
@@ -2219,17 +2299,31 @@ class SearchEngine:
                     )
                 )
         for name in fallback:
-            parts.append(
-                self.topk(queries[name], k).select(
-                    F.lit(name).alias("query"), "gdoc", "score"
-                )
+            hits, _run = self._topk(queries[name], k, True)
+            if isinstance(hits, pd.DataFrame):
+                local_parts.append(hits.assign(query=name)[["query", "gdoc", "score"]])
+            else:
+                spark_parts.append(hits.select(F.lit(name).alias("query"), "gdoc", "score"))
+        self.last_run = {
+            "path": "spark" if spark_parts else "local",
+            "postings_est": est,
+            "tombstone_tier": self._tombstone_tier(),
+            "n_batched": len(batched),
+            "n_fallback": len(fallback),
+        }
+        _log.debug("topk_batch %s", self.last_run)
+        pdf = (
+            pd.concat(local_parts, ignore_index=True)
+            if local_parts
+            else pd.DataFrame({"query": [], "gdoc": [], "score": []})
+        )
+        if not spark_parts:
+            pdf = pdf.sort_values(
+                ["query", "score", "gdoc"], ascending=[True, False, True], ignore_index=True
             )
-        if not parts:
-            return self._empty_hits().select(
-                F.lit("").alias("query"), "gdoc", "score"
-            )
-        out = parts[0]
-        for p in parts[1:]:
+            return self._local_frame(pdf)
+        out = self._local_frame(pdf) if local_parts else spark_parts.pop()
+        for p in spark_parts:
             out = out.unionByName(p)
         return out.orderBy("query", F.desc("score"), F.asc("gdoc"))
 

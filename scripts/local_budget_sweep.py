@@ -1,16 +1,22 @@
 """Sweep for `SearchEngine.LOCAL_MAX_POSTINGS`: wall time of one `Term`
-top-10 at the driver-local site vs the Spark site, across doc_freq.
+top-10 (or, with `--batch`, of one 24-query `topk_batch`) at the
+driver-local site vs the Spark site, across doc_freq.
 
-    python scripts/local_budget_sweep.py [--docs 1000000] [--reps 5]
+    python scripts/local_budget_sweep.py [--docs 1000000] [--reps 5] [--batch]
 
 Builds one segment of `--docs` short synthetic docs in which term `pM`
-occurs in M of every 1000 docs (doc_freq = docs * M / 1000), deletes 1%
-of the docs (inline tombstone tier), then times
-`topk(Term(t), 10).collect()` at both sites with the budget forced (a huge
-budget vs 0). Prints one row per
-term: doc_freq, median local ms, median Spark ms, and whether the rows
-matched. The default budget is the largest doc_freq at which the local
-site is still no slower than Spark.
+occurs in M of every 1000 docs (doc_freq = docs * M / 1000) and term `fI`
+in doc I mod 1000, deletes 1% of the docs (inline tombstone tier), then
+times `topk(Term(t), 10).collect()` at both sites with the budget forced
+(a huge budget vs 0). Prints one row per term: doc_freq, median local ms,
+median Spark ms, and whether the rows matched. The default budget is the
+largest doc_freq at which the local site is still no slower than Spark.
+
+`--batch` times `topk_batch(...).collect()` of 24 queries that all
+subscribe to one band term `pM` (M <= 100): six each of Term(pM),
+And(pM, fI), Or(pM, fI) and Or(pM, fI, fJ, min_match=2), with distinct
+fI. Each row also prints the batch's fan-out-weighted scan estimate
+(`last_run["postings_est"]`, the number the budget is compared with).
 """
 
 from __future__ import annotations
@@ -24,7 +30,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-PERMILLE = (1000, 500, 400, 300, 250, 100, 10, 1)
+PERMILLE = (1000, 500, 400, 300, 250, 100, 50, 20, 15, 10, 1)
+BATCH = 24
+
+
+def batch_of(term: str) -> dict:
+    """BATCH queries subscribed to `term`, in four shapes over distinct
+    `fI` partners."""
+    from iresearch_spark.search import And, Or, Term
+
+    t, out = Term(term), {}
+    for i in range(BATCH):
+        f1, f2 = Term(f"f{2 * i}"), Term(f"f{2 * i + 1}")
+        shapes = (t, And((t, f1)), Or((t, f1)), Or((t, f1, f2), min_match=2))
+        out[f"q{i:02d}"] = shapes[i % 4]
+    return out
 
 
 def main() -> None:
@@ -32,6 +52,7 @@ def main() -> None:
     p.add_argument("--docs", type=int, default=1_000_000)
     p.add_argument("--reps", type=int, default=5)
     p.add_argument("--cores", type=int, default=os.cpu_count() or 4)
+    p.add_argument("--batch", action="store_true", help="time a 24-query topk_batch")
     a = p.parse_args()
 
     from pyspark.sql import functions as F
@@ -65,22 +86,30 @@ def main() -> None:
         )
         eng = SearchEngine(spark, store)
         eng.prepare_dictionary()
-        print(f"{'term':>6} {'doc_freq':>9} {'local_ms':>9} {'spark_ms':>9} same")
+        print(f"{'term':>6} {'doc_freq':>9} {'est':>9} {'local_ms':>9} {'spark_ms':>9} same")
         for m in reversed(PERMILLE):
+            if a.batch and m > 100:
+                break
             term = f"p{m}"
+            if a.batch:
+                queries = batch_of(term)
+                run = lambda: eng.topk_batch(queries, 10)  # noqa: E731
+            else:
+                run = lambda: eng.topk(Term(term), 10)  # noqa: E731
             walls: dict[int, list[float]] = {}
             rows: dict[int, list] = {}
             for budget in (10**12, 0):
                 eng.LOCAL_MAX_POSTINGS = budget
-                eng.topk(Term(term), 10).collect()  # warm
+                run().collect()  # warm
                 walls[budget] = []
                 for _ in range(a.reps):
                     t0 = time.perf_counter()
-                    rows[budget] = [tuple(r) for r in eng.topk(Term(term), 10).collect()]
+                    rows[budget] = [tuple(r) for r in run().collect()]
                     walls[budget].append((time.perf_counter() - t0) * 1e3)
+                est = eng.last_run["postings_est"]
             df = eng._stats_for([term])[term]
             print(
-                f"{term:>6} {df:>9} {statistics.median(walls[10**12]):>9.1f} "
+                f"{term:>6} {df:>9} {est:>9} {statistics.median(walls[10**12]):>9.1f} "
                 f"{statistics.median(walls[0]):>9.1f} {rows[10**12] == rows[0]}"
             )
     spark.stop()

@@ -1,13 +1,17 @@
 """Driver-local top-k site: SearchEngine.topk runs a small single-scan
 query's kernel in-process over pyarrow-read postings instead of launching
-Spark jobs. Pinned here on a 2-segment store with deletes:
+Spark jobs, and topk_batch runs its shared scan the same way. Pinned here
+on a 2-segment store with deletes:
 
 - the local rows equal the Spark rows (forced with LOCAL_MAX_POSTINGS = 0
   vs a large budget) and both equal tests/oracle.py, in the inline and the
-  broadcast tombstone tiers, for BM25, TFIDF and PreciseBM25 engines;
-- a local query launches zero Spark jobs (statusTracker, job group);
+  broadcast tombstone tiers, for BM25, TFIDF and PreciseBM25 engines, for
+  single queries and for batches;
+- a local query or batch launches zero Spark jobs (statusTracker, job
+  group), and so does opening an engine and pulling its dictionary, which
+  equals the Spark groupBy twin;
 - the no-vocab regime, the anti-join tombstone tier, the general evaluator
-  and queries over the budget stay on Spark;
+  and queries or batches over the budget stay on Spark;
 - every `_eval` output is tombstone-free in all three tiers, so callers
   need no second mask.
 """
@@ -19,6 +23,7 @@ import math
 import re
 
 import numpy as np
+import pyarrow.dataset as pads
 import pytest
 
 import iresearch_spark.search.executor as X
@@ -42,6 +47,7 @@ from iresearch_spark.search import (
     Wildcard,
     get_scorer,
 )
+from iresearch_spark.search.query import normalize
 from tests import oracle
 
 STOPS = frozenset(DEFAULT_STOPWORDS)
@@ -321,3 +327,192 @@ def test_eval_outputs_are_tombstone_free(spark, ix, tier):
     shape = Or((And((Term(hi), Term(med))), Term(low)))
     exp = _sum_legs([oracle.score_and(idx, [hi, med]), oracle.score_term(idx, low)])
     assert _rows(eng.topk(shape, K)) == _top(exp, deleted)
+
+
+# ------------------------------------------------------------------ batches
+
+BATCH_LABELS = (
+    "HighTerm",
+    "MedTerm",
+    "AndHighMed",
+    "OrHighMed",
+    "MinMatch2of3",
+    "OrMax",
+    "TermsBoosted",
+    "Prefix3",
+    "Phrase",  # fallback: per-query topk, at its own site
+    "Absent",
+)
+
+
+def _batch_cases(ix, labels=BATCH_LABELS) -> dict[str, tuple[object, dict]]:
+    return {label: (node, scores) for label, node, scores in _cases(ix) if label in labels}
+
+
+def _batch_rows(df) -> list[tuple[str, int, float]]:
+    return [(r["query"], r["gdoc"], r["score"]) for r in df.collect()]
+
+
+def _batch_oracle(cases: dict, deleted: set[int]) -> list[tuple[str, int, float]]:
+    return [
+        (name, d, s) for name in sorted(cases) for d, s in _top(cases[name][1], deleted)
+    ]
+
+
+def _batch_both(eng: SearchEngine, queries: dict):
+    eng.LOCAL_MAX_POSTINGS = BIG
+    local = _batch_rows(eng.topk_batch(queries, K))
+    local_run = eng.last_run
+    assert local_run["path"] == "local", local_run
+    eng.LOCAL_MAX_POSTINGS = 0
+    spark_rows = _batch_rows(eng.topk_batch(queries, K))
+    assert eng.last_run["path"] == "spark", eng.last_run
+    del eng.LOCAL_MAX_POSTINGS
+    return local, spark_rows, local_run
+
+
+@pytest.mark.parametrize("tier", ["inline", "broadcast"])
+def test_batch_local_equals_spark_equals_oracle(spark, ix, tier):
+    store, _idx, deleted, _ = ix
+    patch = {"MAX_INLINE_TOMBSTONES": 0} if tier == "broadcast" else {}
+    eng = _engine(spark, store, **patch)
+    cases = _batch_cases(ix)
+    queries = {name: node for name, (node, _) in cases.items()}
+    local, spark_rows, run = _batch_both(eng, queries)
+    assert local == spark_rows == _batch_oracle(cases, deleted)
+    assert {q for q, _, _ in local} == set(cases) - {"Absent"}
+    assert run["tombstone_tier"] == tier
+    assert (run["n_batched"], run["n_fallback"]) == (len(cases) - 1, 1)
+    # the fan-out-weighted estimate: a term's doc_freq once per subscriber
+    subs: dict[str, int] = {}
+    for name, node in queries.items():
+        if name != "Phrase":
+            for t in eng._query_spec(normalize(node))[0]:
+                subs[t] = subs.get(t, 0) + 1
+    stats = eng._stats_for(list(subs))
+    assert run["postings_est"] == sum(stats[t] * n for t, n in subs.items())
+
+    # an all-fallback batch (no shared scan) takes the same site choice
+    fb = _batch_cases(ix, ("Phrase", "VarPhrase"))
+    local, spark_rows, run = _batch_both(eng, {n: q for n, (q, _) in fb.items()})
+    assert local == spark_rows == _batch_oracle(fb, deleted) and local
+    assert (run["n_batched"], run["n_fallback"], run["postings_est"]) == (0, 2, None)
+
+
+def test_batch_local_launches_no_job(spark, ix):
+    store, *_ = ix
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("local-batch-open", "open + dictionary + one query")
+    try:
+        eng = SearchEngine(spark, store)
+        eng.prepare_dictionary()
+        eng.topk(_cases(ix)[0][1], K).collect()
+        assert eng.last_run["path"] == "local"
+        queries = {name: node for name, (node, _) in _batch_cases(ix).items()}
+        eng.topk_batch(queries, K).collect()
+        assert eng.last_run["path"] == "local"
+        empty = eng.topk_batch({"a": Term("zzqqxxnotaterm")}, K).collect()
+        assert empty == [] and eng.last_run["path"] == "local"
+    finally:
+        sc.setJobGroup("local-path-idle", "")
+    assert tracker.getJobIdsForGroup("local-batch-open") == []
+
+
+def test_batch_budget_novocab_antijoin_and_nested_stay_on_spark(spark, ix, caplog):
+    store, _idx, deleted, (hi, med, low, bigram) = ix
+    eng = _engine(spark, store)
+    cases = _batch_cases(ix)
+    queries = {name: node for name, (node, _) in cases.items()}
+    exp = _batch_oracle(cases, deleted)
+    assert _batch_rows(eng.topk_batch(queries, K)) == exp
+    est = eng.last_run["postings_est"]
+    assert eng.last_run["path"] == "local"
+    eng.LOCAL_MAX_POSTINGS = est - 1  # one posting over budget
+    assert _batch_rows(eng.topk_batch(queries, K)) == exp
+    assert eng.last_run["path"] == "spark" and eng.last_run["postings_est"] == est
+    del eng.LOCAL_MAX_POSTINGS
+
+    antijoin = _engine(spark, store, MAX_BCAST_TOMBSTONES=0)
+    assert _batch_rows(antijoin.topk_batch(queries, K)) == exp
+    run = antijoin.last_run
+    assert run["path"] == "spark" and run["tombstone_tier"] == "antijoin"
+
+    novocab = SearchEngine(spark, store)
+    novocab.VOCAB_CACHE_MAX = -1
+    assert _batch_rows(novocab.topk_batch(queries, K)) == exp
+    assert novocab.last_run["path"] == "spark" and novocab.last_run["postings_est"] is None
+
+    # Not / nested fallbacks run the general evaluator on Spark; the
+    # shared scan beside them still runs locally and unions in
+    nested = {
+        "not": And((Term(hi), Not(Term(med)))),
+        "nest": Or((And((Term(hi), Term(med))), Term(low))),
+        "t": Term(hi),
+    }
+    got = _batch_rows(eng.topk_batch(nested, K))
+    run = eng.last_run
+    assert run["path"] == "spark" and (run["n_batched"], run["n_fallback"]) == (1, 2)
+    want = sorted(
+        ((n, r["gdoc"], r["score"]) for n, q in nested.items() for r in eng.topk(q, K).collect()),
+        key=lambda r: (r[0], -r[2], r[1]),
+    )
+    assert got == want and not {d for _, d, _ in got} & deleted
+
+    # one DEBUG record per topk_batch, nothing at the default level
+    caplog.clear()
+    eng.topk_batch(queries, K)
+    assert not [r for r in caplog.records if r.name == X.__name__]
+    with caplog.at_level(logging.DEBUG, logger=X.__name__):
+        eng.topk_batch(queries, K)
+    assert len(caplog.records) == 1 and "n_fallback" in caplog.records[0].getMessage()
+
+
+# --------------------------------------------------------------- dictionary
+
+
+def test_dictionary_read_without_spark_equals_groupby_twin(spark, ix):
+    """The pyarrow dictionary of a 2-segment store with overlapping terms
+    equals the Spark groupBy twin (summed doc_freq, sorted terms), and the
+    table is persisted only in the no-vocab regime."""
+    store, idx, _deleted, (hi, *_rest) = ix
+    eng = _engine(spark, store)
+    twin = eng.term_stats.orderBy("term").collect()
+    terms, dfs = eng._vocab
+    assert terms == [r["term"] for r in twin] == sorted(idx.postings)
+    assert dfs == [r["doc_freq"] for r in twin]
+    assert dfs[terms.index(hi)] == idx.doc_freq(hi)
+    footer_rows = sum(
+        pads.dataset(store.seg_path(s, "term_stats"), format="parquet").count_rows()
+        for s in ("s0", "s1")
+    )
+    assert footer_rows > len(terms)  # the segments share terms
+    assert not eng.term_stats.is_cached
+
+    novocab = SearchEngine(spark, store)
+    novocab.VOCAB_CACHE_MAX = -1
+    novocab.prepare_dictionary()
+    assert novocab._vocab is None and novocab.term_stats.is_cached
+    novocab.term_stats.unpersist()
+
+
+def test_dictionary_over_footer_cap_takes_the_job_path(spark, ix):
+    """A cap below the footers' row sum (but above the distinct-term count)
+    pulls the dictionary with the one-job Spark path; the result and the
+    queries are unchanged."""
+    store, *_ = ix
+    ref = _engine(spark, store)
+    n_terms = len(ref._vocab[0])
+    eng = SearchEngine(spark, store)
+    eng.VOCAB_CACHE_MAX = n_terms
+    sc = spark.sparkContext
+    sc.setJobGroup("vocab-job-path", "")
+    try:
+        eng.prepare_dictionary()
+    finally:
+        sc.setJobGroup("local-path-idle", "")
+    assert sc.statusTracker().getJobIdsForGroup("vocab-job-path")
+    assert eng._vocab == ref._vocab and not eng.term_stats.is_cached
+    for _label, node, _ in _cases(ix):
+        assert _rows(eng.topk(node, K)) == _rows(ref.topk(node, K))
+        assert eng.last_run["path"] == "local"

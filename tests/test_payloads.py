@@ -146,6 +146,34 @@ def test_mixed_positions_merge_refused(spark, tmp_path):
         merge_segments(spark, store, ["s1", "s2"], "bad")
 
 
+def test_phrase_refused_on_positions_mixed_store(spark, tmp_path):
+    """A store mixing with_positions and positions-less segments opens for
+    scoring, but a phrase must refuse loudly at both execution sites,
+    naming the plain segments, instead of dying in the kernel on the
+    null-filled position stream."""
+    from iresearch_spark.search import Phrase
+
+    store = IndexStore(str(tmp_path / "posmix"))
+    schema = "repo string, path string, commit string, lang string, content string"
+    rows = _rows(TEXTS)
+    build_segment(spark, store, spark.createDataFrame(rows[:3], schema), "s1")
+    build_segment(
+        spark, store, spark.createDataFrame(rows[3:], schema), "s2", with_positions=False
+    )
+    eng = SearchEngine(spark, store)
+    eng.prepare_dictionary()
+    assert not eng.has_positions
+    phrase = Phrase(("spark", "engine"))
+    for budget in (10**12, 0):
+        eng.LOCAL_MAX_POSTINGS = budget
+        with pytest.raises(ValueError, match=r"\['s2'\] lack the pos_bin"):
+            eng.topk(phrase, 5).collect()
+        with pytest.raises(ValueError, match=r"\['s2'\] lack the pos_bin"):
+            eng.topk_batch({"p": phrase, "t": Term("spark")}, 5).collect()
+        # scoring still reads both segments
+        assert {r["gdoc"] for r in eng.topk(Term("spark"), 10).collect()} == {1, 2, 4, 5}
+
+
 def test_merge_foreign_segment_tombstones_ignored(spark, tmp_path):
     """Review finding r4: caller-supplied tombstones covering segments
     OUTSIDE the merge set are ignored (the r3 anti-join semantics), not a

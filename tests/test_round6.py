@@ -423,8 +423,8 @@ def test_topk_batch_matches_individual(spark, store800):
     """topk_batch must reproduce topk(node, k) row-for-row for every query
     in the batch — across term/boolean/min-match/multiterm/fuzzy shapes on
     the shared-scan path AND fallback shapes (phrase), with an
-    absent-term query contributing zero rows. Also pinned in the no-vocab
-    regime (expansion predicates instead of cached dictionaries)."""
+    absent-term query contributing zero rows, at both execution sites
+    (driver-local and Spark)."""
     from iresearch_spark.search import And, Or, Phrase, Term, Terms
 
     batch = {
@@ -440,13 +440,17 @@ def test_topk_batch_matches_individual(spark, store800):
         "phrase": Phrase(("key", "order")),  # fallback (positional kernel)
         "absent": Term("zzz_not_a_term"),
     }
-    for engine_fn in (lambda: SearchEngine(spark, store800),):
-        eng = engine_fn()
-        eng.prepare_dictionary()
+    eng = SearchEngine(spark, store800)
+    eng.prepare_dictionary()
+    # both execution sites, on both sides: a huge budget runs the batch and
+    # every per-query topk on the driver, a zero budget runs them on Spark
+    for budget in (10**12, 0):
+        eng.LOCAL_MAX_POSTINGS = budget
         got = sorted(
             (r["query"], r["gdoc"], round(r["score"], 5))
             for r in eng.topk_batch(batch, 10).collect()
         )
+        assert eng.last_run["path"] == ("local" if budget else "spark")
         exp = []
         for name, node in batch.items():
             exp += [

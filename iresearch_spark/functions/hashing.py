@@ -138,14 +138,17 @@ def _hash_bytes_rows(mat: np.ndarray, L: int, seed) -> np.ndarray:
 
 def xxhash64_bytes(tokens, seed=DEFAULT_SEED) -> np.ndarray:
     """XXH64 of each python string's UTF-8 bytes (Spark StringType
-    semantics), length-grouped for vectorization. Returns int64 aligned
-    with the input sequence."""
+    semantics), length-grouped for vectorization. `seed` may be a scalar
+    or an array aligned with `tokens` (chained hashing:
+    `F.xxhash64(a, b)` = `xxhash64_bytes(b, xxhash64_bytes(a))`).
+    Returns int64 aligned with the input sequence."""
     old = np.seterr(over="ignore")
     try:
         n = len(tokens)
         out = np.empty(n, dtype=np.int64)
         if n == 0:
             return out
+        seeds = None if np.ndim(seed) == 0 else _seed_arr(seed, n)
         enc = [t.encode("utf-8") for t in tokens]
         lens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=n)
         for L in np.unique(lens):
@@ -154,7 +157,8 @@ def xxhash64_bytes(tokens, seed=DEFAULT_SEED) -> np.ndarray:
             pad = (-L) % 8
             buf = b"".join(enc[i] + b"\x00" * pad for i in idx)
             mat = np.frombuffer(buf, dtype=np.uint8).reshape(idx.size, L + pad)
-            out[idx] = _hash_bytes_rows(mat, L, seed).astype(np.int64)
+            s = seed if seeds is None else seeds[idx]
+            out[idx] = _hash_bytes_rows(mat, L, s).astype(np.int64)
         return out
     finally:
         np.seterr(**old)

@@ -146,6 +146,13 @@ def _make_chunk_packer(block_size: int):
 # Deterministic docID assignment
 # ---------------------------------------------------------------------------
 
+def null_key_error(keys: list[str]) -> ValueError:
+    return ValueError(
+        f"assign_doc_ids: NULL in key columns {keys}; ids require "
+        "non-null keys (filter or fill before building)"
+    )
+
+
 def assign_doc_ids(
     df: DataFrame,
     key_cols: list[str],
@@ -205,10 +212,7 @@ def assign_doc_ids(
             # pandas sort_values — the assigned ids would no longer equal
             # the documented global row_number() rank. Fail fast instead of
             # silently diverging (r3 ADVICE).
-            raise ValueError(
-                f"assign_doc_ids: NULL in key columns {keys}; ids require "
-                "non-null keys (filter or fill before building)"
-            )
+            raise null_key_error(keys)
         # pandas str comparison is code-point order == Spark's UTF8 binary
         # order, so ranks match the SQL ORDER BY exactly
         pdf = pdf.sort_values(keys, kind="mergesort").reset_index(drop=True)
@@ -1162,6 +1166,21 @@ def packed_schema(
     return StructType(out_fields)
 
 
+def decode_doclen(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids int64, lens int32) of a frame of the doc packer's doclen
+    side-channel rows, in row order (each row's docs ascending)."""
+    ids = varint_decode(b"".join(pdf["docs_bin"]))
+    # segmented delta-decode across rows
+    n_docs = pdf["n_docs"].to_numpy().astype(np.int64)
+    ends = np.cumsum(n_docs)
+    starts = ends - n_docs
+    cs = np.cumsum(ids.astype(np.int64))
+    base = cs[starts] - ids[starts].astype(np.int64)
+    doc_ids = cs - base[np.repeat(np.arange(len(pdf)), n_docs)]
+    lens = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int32)
+    return doc_ids, lens
+
+
 def doclen_from_partials(partials: DataFrame) -> DataFrame:
     """(doc_id, len) for every input doc (len 0 included) from the doclen
     side-channel rows the doc packer emitted."""
@@ -1170,16 +1189,8 @@ def doclen_from_partials(partials: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = varint_decode(b"".join(pdf["docs_bin"]))
-            # segmented delta-decode across rows
-            n_docs = pdf["n_docs"].to_numpy().astype(np.int64)
-            ends = np.cumsum(n_docs)
-            starts = ends - n_docs
-            cs = np.cumsum(ids.astype(np.int64))
-            base = cs[starts] - ids[starts].astype(np.int64)
-            doc_ids = cs - base[np.repeat(np.arange(len(pdf)), n_docs)]
-            lens = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
-            yield pd.DataFrame({"doc_id": doc_ids, "len": lens.astype(np.int32)})
+            doc_ids, lens = decode_doclen(pdf)
+            yield pd.DataFrame({"doc_id": doc_ids, "len": lens})
 
     return partials.where(F.col("term").isNull()).mapInPandas(
         fn,

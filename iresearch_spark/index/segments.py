@@ -24,30 +24,56 @@ Each manifest segment entry: {name, docs_count, sum_len, base_doc, bytes}
 where base_doc is the segment's global docID offset (contiguous base
 assignment exactly like merge_writer's doc_id_map base offsets,
 core/index/merge_writer.cpp:1527-1571).
+
+build_segment (the flush) runs at one of two sites with the same kernels
+and the same tables: a small input of known size (`input_bytes` at most
+LOCAL_BUILD_MAX_BYTES) is built on the driver from one collect and
+written with pyarrow; anything larger or of unknown size runs as Spark
+jobs.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from iresearch_spark.analysis.analyzers import Analyzer, TextAnalyzer
+from iresearch_spark.functions.hashing import xxhash64_bytes
 from iresearch_spark.index.build import (
+    DEFAULT_CHUNK_BITS,
+    _make_doc_packer,
+    _make_partial_merger,
     assign_doc_ids,
+    decode_doclen,
     doclen_from_partials,
+    null_key_error,
     pack_docs_combined,
     pack_tokens,
+    packed_schema,
     term_stats_from_packed,
     text_py_spec,
     tokenize_stream,
 )
+from iresearch_spark.index.codec import BLOCK_SIZE
 
 TABLES = ("postings", "doclen", "term_stats", "docmap", "lineage")
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -237,9 +263,11 @@ class IndexStore:
         return self.read(spark, seg, table).columns
 
     def read_union(self, spark: SparkSession, table: str, segments=None) -> DataFrame:
-        """Union of a table across segments with a `segment` column."""
-        m = self.current()
-        segs = segments or [s.name for s in m.segments]
+        """Union of a table across segments (default: the current
+        manifest's) with a `segment` column."""
+        segs = segments if segments is not None else [s.name for s in self.current().segments]
+        if not segs:
+            raise ValueError(f"no segments to read '{table}' from: the index snapshot is empty")
         dfs = [
             self.read(spark, s, table).withColumn("segment", F.lit(s)) for s in segs
         ]
@@ -322,6 +350,17 @@ class IndexStore:
 
 LINEAGE_PARTS = 64  # logical lineage partitioning (stable, not physical)
 
+# Largest input (`input_bytes`, bytes) that build_segment builds on the
+# driver instead of through Spark jobs. From `scripts/local_budget_sweep.py
+# --build` on a 4-core VM (local[4]), for cached and parquet inputs: the
+# local site's wall time is 5-8x lower at 1.3 MB, about 2x at 10-11 MB,
+# even near 21 MB and higher at 42 MB; 8 MiB keeps it clearly ahead.
+LOCAL_BUILD_MAX_BYTES = 8 << 20
+
+
+def _lineage_key(key_cols: list[str]):
+    return F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
+
 
 def _lineage(docs: DataFrame, key_cols: list[str], text_col: str = "content") -> DataFrame:
     """Per-logical-partition lineage rows: (part, doc_count, bytes,
@@ -329,7 +368,7 @@ def _lineage(docs: DataFrame, key_cols: list[str], text_col: str = "content") ->
     stable across cluster sizes; input_hash is an order-free XOR of row
     hashes — recomputable for resume verification (north rule: per-partition
     lineage with sha256-of-inputs)."""
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
+    key = _lineage_key(key_cols)
     part = F.pmod(F.xxhash64(key), F.lit(LINEAGE_PARTS))
     row_hash = F.xxhash64(key, F.col("content_sha256")) if "content_sha256" in docs.columns else F.xxhash64(key)
     sz = F.sum(F.length(text_col)).alias("bytes")
@@ -363,6 +402,76 @@ def _sized_for_write(df: DataFrame, n_rows: int | None) -> DataFrame:
     return df.repartition(max(1, -(-n_rows // per_file)))
 
 
+def plan_bytes(df: DataFrame) -> int:
+    """Spark's size estimate for `df`: the optimized plan's
+    stats().sizeInBytes, the statistic behind broadcast decisions. Reading
+    it launches no job; with no estimate (e.g. an RDD-backed frame) it is
+    spark.sql.defaultSizeInBytes (Long.MaxValue)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def input_bytes(df: DataFrame, limit: int) -> int | None:
+    """Bytes of input behind `df`, summed over its optimized plan's leaves
+    from figures that track real sizes, or None when a leaf has none.
+    Launches no job.
+
+    - A cached relation whose batches are built: their in-memory size.
+    - A parquet relation on the local filesystem: the uncompressed
+      row-group sizes in its files' footers (Spark's estimate is the
+      compressed bytes on disk, 2-3x fewer). Footers are read only while
+      the running total plus the bytes on disk stays within `limit`;
+      past it that sum is returned, since it already exceeds `limit`.
+    - An empty local relation: 0.
+
+    Anything else gives None: an uncached generated frame (Spark's
+    estimate counts about 20 bytes per string), an RDD-backed frame, a
+    cache not built yet, other formats and filesystems. Filters, limits
+    and partition pruning above a leaf are not credited, so the figure
+    bounds the input from above."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "InMemoryRelation":
+            # not leaf.stats(): a plan optimized before the cache was built
+            # keeps the estimate of the uncached plan
+            cache = leaf.cacheBuilder()
+            if not cache.isCachedColumnBuffersLoaded():
+                return None
+            total += int(cache.sizeInBytesStats().value())
+        elif kind == "LocalRelation" and leaf.data().isEmpty():
+            continue
+        elif kind == "LogicalRelation" and _is_parquet(leaf.relation()):
+            rel = leaf.relation()
+            if total + int(rel.sizeInBytes()) > limit:
+                return total + int(rel.sizeInBytes())
+            for f in rel.location().inputFiles():
+                url = urlparse(f)
+                if url.scheme != "file":
+                    return None
+                md = pq.read_metadata(unquote(url.path))
+                total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
+        else:
+            return None
+    return total
+
+
+def _is_parquet(rel) -> bool:
+    return rel.getClass().getSimpleName() == "HadoopFsRelation" and (
+        rel.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+    )
+
+
+def _ident_cols(docs: DataFrame) -> list[str]:
+    """Source-identity columns of `docs` that the docmap carries."""
+    return [c for c in docs.columns if c in ("repo", "path", "commit", "lang", "content_sha256", "source")]
+
+
 def build_segment(
     spark: SparkSession,
     store: IndexStore,
@@ -386,10 +495,68 @@ def build_segment(
     highlighting stream; payload_fn stores caller-supplied per-occurrence
     payload bytes (the generic half of the reference .pay stream,
     formats_10.cpp:166-267) — a batch-vectorized callable
-    (tokens, starts, lens) -> sequence of bytes. Both combiner-path only."""
+    (tokens, starts, lens) -> sequence of bytes. Both combiner-path only.
+
+    Two sites, the same kernels and the same tables. When the analyzer
+    runs on the combiner path (`text_py_spec`) and `input_bytes(docs)`
+    (a materialized cache's size, or parquet footers' uncompressed size;
+    read without a job) is at most LOCAL_BUILD_MAX_BYTES, the segment is
+    built on the driver (`_build_local`): one `toArrow()` collect is the
+    only Spark job, and the tables are written with pyarrow — the
+    reference's in-process flush (PAPER.md §0). Everything else (larger
+    inputs, inputs with no such size such as uncached generated or
+    RDD-backed frames, Catalyst-only analyzers) runs the Spark plan
+    (`_build_spark`). The site, `input_bytes` and Spark's plan estimate
+    go to one DEBUG log line."""
     analyzer = analyzer or TextAnalyzer()
     key_cols = key_cols or ["repo", "path", "commit"]
+    spec = text_py_spec(analyzer)
+    # the local lineage hashes content_sha256 as a string (as sha2 writes it)
+    sha_ok = "content_sha256" not in docs.columns or isinstance(
+        docs.schema["content_sha256"].dataType, StringType
+    )
+    size = input_bytes(docs, LOCAL_BUILD_MAX_BYTES) if spec is not None and sha_ok else None
+    local = size is not None and size <= LOCAL_BUILD_MAX_BYTES
+    if _log.isEnabledFor(logging.DEBUG):
+        _log.debug(
+            "build_segment %s: site=%s input_bytes=%s plan_bytes=%s",
+            seg_name, "local" if local else "spark", size, plan_bytes(docs),
+        )
+    if local:
+        agg = _build_local(
+            spark, store, docs, seg_name, text_col, key_cols, doc_id_col, spec,
+            with_positions, with_offsets, payload_fn,
+        )
+    else:
+        agg = _build_spark(
+            spark, store, docs, seg_name, text_col, key_cols, doc_id_col, analyzer,
+            with_positions, with_offsets, payload_fn,
+        )
+    meta = SegmentMeta(
+        name=seg_name,
+        docs_count=agg["n"],
+        sum_len=agg["s"],
+        bytes=store.dir_bytes(seg_name),
+        created_at=time.time(),
+        docs_total=agg["total"],
+        min_doc=agg["lo"],
+        max_doc=agg["hi"],
+        max_dl=agg["mx"],
+    )
+    if commit:
+        m = store.current()
+        m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
+        m.gen += 1
+        m.analyzer = analyzer.name
+        store.commit(m)
+    return meta
 
+
+def _build_spark(
+    spark, store, docs, seg_name, text_col, key_cols, doc_id_col, analyzer,
+    with_positions, with_offsets, payload_fn,
+) -> dict:
+    """build_segment's Spark site; returns the docmap aggregates."""
     inner_cache = None
     n_docs_known: int | None = None
     if doc_id_col is None:
@@ -447,7 +614,7 @@ def build_segment(
     # combiner path the lengths come from the cached partials' doclen
     # side-channel rows (zero extra tokenize passes); fallback path
     # tokenizes once more via the analyzer expression.
-    ident_cols = [c for c in docs.columns if c in ("repo", "path", "commit", "lang", "content_sha256", "source")]
+    ident_cols = _ident_cols(docs)
     if partials is not None:
         dl_df = doclen_from_partials(partials)
         # the doclen side is (doc_id, len) — 16 B/doc; when the doc count
@@ -506,26 +673,178 @@ def build_segment(
         )
         .collect()[0]
     )
-    meta = SegmentMeta(
-        name=seg_name,
-        docs_count=int(agg["n"]),
-        sum_len=int(agg["s"]),
-        bytes=store.dir_bytes(seg_name),
-        created_at=time.time(),
-        docs_total=int(agg["total"]),
-        min_doc=int(agg["lo"]),
-        max_doc=int(agg["hi"]),
-        max_dl=int(agg["mx"]),
-    )
     docs.unpersist()
+    return {k: int(agg[k]) for k in ("total", "n", "s", "lo", "hi", "mx")}
 
-    if commit:
-        m = store.current()
-        m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
-        m.gen += 1
-        m.analyzer = analyzer.name
-        store.commit(m)
-    return meta
+
+def _write_table(path: str, tbl, schema: StructType) -> None:
+    """Write a segment table as one parquet file the way a Spark overwrite
+    leaves it readable: the directory cleared first, zstd at level 3
+    (parquet-mr's level for the session codec), no dictionary pages, and
+    the Spark schema in the footer, so IndexStore.read_parquet takes its
+    no-inference path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    # Spark writes every column nullable
+    schema = StructType([StructField(f.name, f.dataType, True, f.metadata) for f in schema])
+    arrow = to_arrow_schema(schema)
+    tbl = tbl.select(arrow.names).cast(arrow).replace_schema_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    )
+    pq.write_table(
+        tbl,
+        os.path.join(path, "part-00000.zstd.parquet"),
+        compression="zstd",
+        compression_level=3,
+        use_dictionary=False,
+    )
+
+
+def _local_lineage(tbl, text_col: str):
+    """`_lineage`'s rows from the collected input (`_lkey` = the lineage
+    key string Spark built in the collect): the same xxhash64 values,
+    computed with functions/hashing.py."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    if not n:
+        return pa.table({c: pa.array([], pa.int64()) for c in ("part", "doc_count", "bytes", "input_hash")})
+    key_hash = xxhash64_bytes(tbl["_lkey"].to_pylist())
+    row_hash = key_hash
+    if "content_sha256" in tbl.column_names:
+        # xxhash64(key, sha) chains the key hash in as the sha's seed; a
+        # NULL sha leaves the row hash at the key hash, as in Spark
+        sha = tbl["content_sha256"]
+        ok = np.flatnonzero(pc.is_valid(sha).to_numpy(zero_copy_only=False))
+        row_hash = key_hash.copy()
+        row_hash[ok] = xxhash64_bytes(pc.take(sha, ok).to_pylist(), key_hash[ok])
+    text = tbl[text_col]
+    chars = pc.utf8_length(text).fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
+    has_text = pc.is_valid(text).to_numpy(zero_copy_only=False)
+    part = np.mod(key_hash, LINEAGE_PARTS)
+    order = np.argsort(part, kind="stable")
+    p = part[order]
+    starts = np.flatnonzero(np.r_[True, p[1:] != p[:-1]])
+    return pa.table(
+        {
+            "part": p[starts],
+            "doc_count": np.diff(np.r_[starts, n]),
+            # sum(length(text)) is NULL for a part whose texts are all NULL
+            "bytes": pa.array(
+                np.add.reduceat(chars[order], starts),
+                mask=~np.logical_or.reduceat(has_text[order], starts),
+            ),
+            "input_hash": np.bitwise_xor.reduceat(row_hash[order], starts),
+        }
+    )
+
+
+def _build_local(
+    spark, store, docs, seg_name, text_col, key_cols, doc_id_col, spec,
+    with_positions, with_offsets, payload_fn,
+) -> dict:
+    """build_segment's driver-local site: the Spark site's steps on one
+    in-process partition, with one Spark job (the input collect).
+
+    Doc ids as `assign_doc_ids` gives them (a stable sort on key_cols,
+    ids from 1); the unchanged doc packer over slices of
+    `arrow.maxRecordsPerBatch` rows (the batches the Spark site's kernel
+    sees); the unchanged partial merger over all partials sorted by
+    (term, _chunk, first_doc). term_stats, docmap (len decoded from the
+    packer's doclen rows), lineage (the `_lineage` hashes, in numpy) and
+    the docmap aggregates follow in pyarrow/numpy."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    assign = doc_id_col is None
+    if not assign and doc_id_col != "doc_id":
+        docs = docs.withColumnRenamed(doc_id_col, "doc_id")
+    lkey = key_cols if all(c in docs.columns for c in key_cols) else ["doc_id"]
+    ident = _ident_cols(docs)
+    cols = list(dict.fromkeys([*(key_cols if assign else ["doc_id"]), text_col, *ident]))
+    tbl = docs.select(*cols, _lineage_key(lkey).alias("_lkey")).toArrow()
+    n = tbl.num_rows
+    if assign:
+        if any(tbl[c].null_count for c in key_cols):
+            raise null_key_error(key_cols)
+        tbl = tbl.take(pc.sort_indices(tbl, [(c, "ascending") for c in key_cols]))
+        tbl = tbl.append_column("doc_id", pa.array(np.arange(1, n + 1, dtype=np.int64)))
+        id_type = LongType()
+    else:
+        tbl = tbl.sort_by("doc_id")
+        id_type = docs.schema["doc_id"].dataType
+
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    step = step if step > 0 else max(n, 1)
+    pdf = tbl.select(["doc_id", text_col]).to_pandas()
+    packer = _make_doc_packer(
+        spec, text_col, DEFAULT_CHUNK_BITS, with_positions, with_offsets, payload_fn
+    )
+    parts = list(packer(pdf.iloc[i : i + step] for i in range(0, n, step)))
+    with_payloads = payload_fn is not None
+    schema = packed_schema(with_positions, with_offsets, with_payloads)
+    lens, blocks = np.zeros(0, dtype=np.int32), []
+    if parts:
+        partials = pd.concat(parts, ignore_index=True)
+        is_dl = partials["term"].isna().to_numpy()
+        # slices are id-sorted and each doclen row lists its slice's ids in
+        # stable order, so the lens line up with tbl's rows
+        lens = decode_doclen(partials[is_dl])[1]
+        post = partials[~is_dl].sort_values(
+            ["term", "_chunk", "first_doc"], kind="mergesort", ignore_index=True
+        )
+        merger = _make_partial_merger(
+            BLOCK_SIZE, DEFAULT_CHUNK_BITS, with_positions, with_offsets, with_payloads
+        )
+        blocks = list(merger(iter([post])))
+    # merger output runs in (term, _chunk, intra) order == (term, block_id)
+    postings = (
+        pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), preserve_index=False)
+        if blocks
+        else to_arrow_schema(schema).empty_table()
+    )
+    ts = postings.group_by("term").aggregate([("doc_count", "sum"), ("sum_tf", "sum")]).sort_by("term")
+    longs = lambda *names: [StructField(c, LongType()) for c in names]  # noqa: E731
+    tables = {
+        "postings": (postings, schema),
+        "term_stats": (
+            pa.table([ts["term"], ts["doc_count_sum"], ts["sum_tf_sum"]], ["term", "doc_freq", "total_tf"]),
+            StructType([StructField("term", StringType()), *longs("doc_freq", "total_tf")]),
+        ),
+        "docmap": (
+            pa.table({"doc_id": tbl["doc_id"], "len": lens, **{c: tbl[c] for c in ident}}),
+            StructType(
+                [
+                    StructField("doc_id", id_type),
+                    StructField("len", IntegerType()),
+                    *[docs.schema[c] for c in ident],
+                ]
+            ),
+        ),
+        "lineage": (
+            _local_lineage(tbl, text_col),
+            StructType(longs("part", "doc_count", "bytes", "input_hash")),
+        ),
+    }
+    for table, (t, sch) in tables.items():
+        _write_table(store.seg_path(seg_name, table), t, sch)
+    ids = tbl["doc_id"].to_numpy()
+    return {
+        "total": n,
+        "n": int((lens > 0).sum()),
+        "s": int(lens.sum()),
+        "lo": int(ids.min()) if n else 0,
+        "hi": int(ids.max()) if n else -1,
+        "mx": int(lens.max()) if n else 0,
+    }
 
 
 def build_segment_from_tokens(

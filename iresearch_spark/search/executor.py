@@ -67,6 +67,7 @@ the global sort all see the same values the comparator will.
 from __future__ import annotations
 
 import logging
+from functools import cached_property
 from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
@@ -988,20 +989,10 @@ class SearchEngine:
         )
         self.seg_base = {s.name: s.base_doc for s in self.manifest.segments}
         self.chunk_bits = getattr(self.manifest, "chunk_bits", DEFAULT_CHUNK_BITS)
-        self.postings = store.read_union(spark, "postings")
         # phrase kernels need pos_bin in EVERY segment: read_union
         # null-fills a plain segment's column, which no kernel can decode
         self._streams_missing: dict[str, list[str]] = {}
         self.has_positions = not self._segments_without("pos_bin")
-        # index-wide term stats (reference prepare() walks all segments);
-        # persisted only when the dictionary is too large for the driver
-        # cache (see _vocab_pairs) — then every expansion queries it
-        self.term_stats = (
-            store.read_union(spark, "term_stats")
-            .groupBy("term")
-            .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
-        )
-        self._docmap = store.read_union(spark, "docmap").select("segment", "doc_id")
         # driver-side term dictionary (lazy): for vocabularies up to
         # VOCAB_CACHE_MAX the whole (term, doc_freq) table is pulled to the
         # driver once, so Term/Prefix/Wildcard/Range expansion is a local
@@ -1017,12 +1008,11 @@ class SearchEngine:
         # live-delete mask (reference index_writer Remove(),
         # index_writer.hpp:381-416): deletes stay visible as a query-time
         # tombstone mask until a merge physically drops them
-        self.tombstones = store.read_deletes(spark)
         self._deleted_arr: np.ndarray | None = None
         self._deleted_bcast = None  # pyspark Broadcast of the sorted gdocs
-        self._tomb_gdocs: DataFrame | None = None
+        self._tomb_gdocs: DataFrame | None = None  # _mask's anti-join side, lazy
         self._deleted_inline = True
-        if self.tombstones is not None:
+        if self.manifest.deletes_gen is not None:
             # no Spark job on open: the row count comes from the parquet
             # footers, the kernel-resident tiers read (segment, doc_id)
             # with pyarrow and map to gdocs in numpy
@@ -1047,10 +1037,38 @@ class SearchEngine:
                     self._deleted_bcast = spark.sparkContext.broadcast(arr)
             else:
                 self._deleted_inline = False
-            if self._deleted_arr is None:
-                self._tomb_gdocs = self.tombstones.select(
-                    (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc")
-                )
+
+    # Spark relations over the engine's manifest snapshot, built on first
+    # use: the driver-local site never touches them, so an engine open
+    # creates none (each is a parquet datasource resolution in the JVM)
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.store.read_union(self.spark, "postings", list(self.seg_base))
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        """Index-wide term stats (reference prepare() walks all segments);
+        persisted only when the dictionary is too large for the driver
+        cache (see _vocab_pairs) — then every expansion queries it."""
+        return (
+            self.store.read_union(self.spark, "term_stats", list(self.seg_base))
+            .groupBy("term")
+            .agg(F.sum("doc_freq").alias("doc_freq"), F.sum("total_tf").alias("total_tf"))
+        )
+
+    @cached_property
+    def _docmap(self) -> DataFrame:
+        return self.store.read_union(self.spark, "docmap", list(self.seg_base)).select(
+            "segment", "doc_id"
+        )
+
+    @cached_property
+    def tombstones(self) -> DataFrame | None:
+        gen = self.manifest.deletes_gen
+        if gen is None:
+            return None
+        return self.store.read_parquet(self.spark, self.store.deletes_path(gen))
 
     @property
     def _kernel_deleted(self):
@@ -1073,7 +1091,7 @@ class SearchEngine:
         return self._mask(u)
 
     def _tombstone_tier(self) -> str:
-        if self.tombstones is None:
+        if self.manifest.deletes_gen is None:
             return "none"
         if not self._deleted_inline:
             return "antijoin"
@@ -1081,18 +1099,23 @@ class SearchEngine:
 
     def _mask(self, hits: DataFrame) -> DataFrame:
         """Tombstone mask for paths that did not inline it in the kernel."""
-        if self._tomb_gdocs is None and self._deleted_arr is not None:
-            if not self._deleted_arr.size:
-                return hits
-            # inline tier: the broadcast side is built once per engine,
-            # from the sorted array through Arrow
-            self._tomb_gdocs = F.broadcast(
-                self.spark.createDataFrame(
-                    pd.DataFrame({"gdoc": self._deleted_arr}), "gdoc long"
-                )
-            )
         if self._tomb_gdocs is None:
-            return hits
+            if self.manifest.deletes_gen is None or (
+                self._deleted_arr is not None and not self._deleted_arr.size
+            ):
+                return hits
+            if self._deleted_arr is not None:
+                # inline tier: the broadcast side is built once per engine,
+                # from the sorted array through Arrow
+                self._tomb_gdocs = F.broadcast(
+                    self.spark.createDataFrame(
+                        pd.DataFrame({"gdoc": self._deleted_arr}), "gdoc long"
+                    )
+                )
+            else:
+                self._tomb_gdocs = self.tombstones.select(
+                    (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc")
+                )
         return hits.join(self._tomb_gdocs, "gdoc", "left_anti")
 
     VOCAB_CACHE_MAX = 1_000_000
@@ -1936,7 +1959,7 @@ class SearchEngine:
         aggregation — child hits join their parent key and reduce. Output:
         (parent, n_children, score) by (score desc, parent asc) limit k."""
         hits = self._eval(normalize(child_node))
-        parents = self.store.read_union(self.spark, "docmap").select(
+        parents = self.store.read_union(self.spark, "docmap", list(self.seg_base)).select(
             (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc"),
             F.col(parent_col).alias("parent"),
         )

@@ -1,8 +1,12 @@
 """Sweep for `SearchEngine.LOCAL_MAX_POSTINGS`: wall time of one `Term`
 top-10 (or, with `--batch`, of one 24-query `topk_batch`) at the
-driver-local site vs the Spark site, across doc_freq.
+driver-local site vs the Spark site, across doc_freq. With `--build`,
+the sweep for `segments.LOCAL_BUILD_MAX_BYTES` instead: `build_segment`
+at both sites across input sizes.
 
     python scripts/local_budget_sweep.py [--docs 1000000] [--reps 5] [--batch]
+    python scripts/local_budget_sweep.py --build [--sizes 1500,6000,...] [--reps 2]
+        [--inputs cached,parquet,uncached]
 
 Builds one segment of `--docs` short synthetic docs in which term `pM`
 occurs in M of every 1000 docs (doc_freq = docs * M / 1000) and term `fI`
@@ -17,6 +21,16 @@ subscribe to one band term `pM` (M <= 100): six each of Term(pM),
 And(pM, fI), Or(pM, fI) and Or(pM, fI, fJ, min_match=2), with distinct
 fI. Each row also prints the batch's fan-out-weighted scan estimate
 (`last_run["postings_est"]`, the number the budget is compared with).
+
+`--build` generates each size of synthetic corpus (`generate_corpus`)
+as each input kind callers pass: cached and counted, written to parquet
+and read back, or left uncached. It builds each `--reps` times at each
+site (forced) after one warm-up build per site. Each row prints Spark's
+plan estimate, `segments.input_bytes` (the number the cap is compared
+with; "-" when the input has no trusted size), the best wall time and
+the CPU of that run (driver + JVM + Python workers) per site, the site
+the cap picks, and whether the four tables the two sites wrote hold the
+same rows with the same schemas.
 """
 
 from __future__ import annotations
@@ -47,12 +61,95 @@ def batch_of(term: str) -> dict:
     return out
 
 
+def same_tables(spark, store_a, store_b, seg: str) -> bool:
+    """The segment's four built tables hold the same rows with the same
+    schemas in both stores."""
+    for t in ("postings", "term_stats", "docmap", "lineage"):
+        a, b = store_a.read(spark, seg, t), store_b.read(spark, seg, t)
+        if a.schema != b.schema or a.exceptAll(b).count() or b.exceptAll(a).count():
+            return False
+    return True
+
+
+def build_sweep(spark, a) -> None:
+    from perfbench.acct import cpu_split
+
+    from iresearch_spark.corpus import generate_corpus
+    from iresearch_spark.index import segments
+
+    jvm = spark.sparkContext._gateway.proc.pid
+    measure = segments.input_bytes
+    # force a site whatever the input kind: the size the choice reads
+    forced = {"spark": lambda df, limit: None, "local": lambda df, limit: 0}
+
+    def build(docs, root: str, site: str) -> tuple[float, float]:
+        segments.input_bytes = forced[site]
+        try:
+            c0, t0 = cpu_split(jvm), time.perf_counter()
+            segments.build_segment(spark, segments.IndexStore(root), docs, "s0")
+            wall, c = time.perf_counter() - t0, cpu_split(jvm) - c0
+        finally:
+            segments.input_bytes = measure
+        return wall, c.driver + c.jvm + c.workers + c.jit
+
+    def frame(kind: str, n: int, tmp: str):
+        docs = generate_corpus(spark, n, seed=n)
+        if kind == "cached":
+            docs = docs.persist()
+            docs.count()
+        elif kind == "parquet":
+            path = os.path.join(tmp, f"in-{n}")
+            docs.write.mode("overwrite").parquet(path)
+            docs = spark.read.parquet(path)
+        return docs
+
+    mb = lambda b: "-" if b is None else f"{b / 2**20:.1f}"  # noqa: E731
+    with tempfile.TemporaryDirectory(prefix="sweep_build_") as tmp:
+        warm = generate_corpus(spark, 200, seed=1)
+        for site in forced:
+            build(warm, os.path.join(tmp, f"warm-{site}"), site)
+        print(f"{'input':>8} {'docs':>7} {'est_MB':>7} {'in_MB':>7} {'spark_s':>8} "
+              f"{'spark_cpu':>9} {'local_s':>8} {'local_cpu':>9} {'site':>6} same")
+        for kind in a.inputs:
+            for n in a.sizes:
+                docs = frame(kind, n, tmp)
+                est, size = segments.plan_bytes(docs), measure(docs, 2**62)
+                site = "local" if size is not None and size <= segments.LOCAL_BUILD_MAX_BYTES else "spark"
+                best: dict[str, tuple[float, float]] = {}
+                for rep in range(a.reps):
+                    for s in forced:
+                        run = build(docs, os.path.join(tmp, f"{kind}-{n}-{s}"), s)
+                        best[s] = min(best.get(s, run), run)
+                same = same_tables(
+                    spark,
+                    *(segments.IndexStore(os.path.join(tmp, f"{kind}-{n}-{s}")) for s in forced),
+                    "s0",
+                )
+                docs.unpersist()
+                print(f"{kind:>8} {n:>7} {mb(est):>7} {mb(size):>7} {best['spark'][0]:>8.2f} "
+                      f"{best['spark'][1]:>9.2f} {best['local'][0]:>8.2f} {best['local'][1]:>9.2f} "
+                      f"{site:>6} {same}", flush=True)
+
+
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--docs", type=int, default=1_000_000)
     p.add_argument("--reps", type=int, default=5)
     p.add_argument("--cores", type=int, default=os.cpu_count() or 4)
     p.add_argument("--batch", action="store_true", help="time a 24-query topk_batch")
+    p.add_argument("--build", action="store_true", help="time build_segment by input size")
+    p.add_argument(
+        "--sizes",
+        type=lambda s: [int(x) for x in s.split(",")],
+        default=[1500, 3000, 6000, 12000, 24000, 48000],
+        help="--build input sizes in docs, comma-separated",
+    )
+    p.add_argument(
+        "--inputs",
+        type=lambda s: s.split(","),
+        default=["cached", "parquet", "uncached"],
+        help="--build input kinds, comma-separated: cached, parquet, uncached",
+    )
     a = p.parse_args()
 
     from pyspark.sql import functions as F
@@ -63,6 +160,10 @@ def main() -> None:
 
     spark = get_spark("local-budget-sweep", cores=a.cores)
     spark.sparkContext.setLogLevel("ERROR")
+    if a.build:
+        build_sweep(spark, a)
+        spark.stop()
+        return
     words = [F.when(F.col("doc_id") % 1000 < m, F.lit(f"p{m}")) for m in PERMILLE]
     docs = spark.range(1, a.docs + 1).select(
         F.col("id").alias("doc_id"),

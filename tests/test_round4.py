@@ -312,10 +312,11 @@ def test_bm25_tiny_norm_cache_golden(spark, tmp_path):
     assert got == nowand
 
 
-def test_assign_doc_ids_null_keys_raise(spark):
+def test_assign_doc_ids_null_keys_raise(spark, tmp_path):
     """NULL key columns would silently diverge from the documented
     row_number() rank (Spark sorts NULLs first, pandas last) — the build
-    now fails fast instead (r3 ADVICE)."""
+    now fails fast instead (r3 ADVICE), on both build_segment sites."""
+    import iresearch_spark.index.segments as S
     from iresearch_spark.index.build import assign_doc_ids
 
     df = spark.createDataFrame(
@@ -323,6 +324,16 @@ def test_assign_doc_ids_null_keys_raise(spark):
     )
     with pytest.raises(Exception, match="NULL in key columns"):
         assign_doc_ids(df, ["k"]).collect()
+    store = S.IndexStore(str(tmp_path))
+    df = df.persist()
+    df.count()  # a cached frame has a size estimate, so the local site applies
+    for cap, err in ((10**15, ValueError), (-1, Exception)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(S, "LOCAL_BUILD_MAX_BYTES", cap)
+            with pytest.raises(err, match="NULL in key columns"):
+                S.build_segment(spark, store, df, "s0", text_col="v", key_cols=["k"])
+    df.unpersist()
+    assert not store.current().segments
 
 
 def test_wand_skips_blocks_on_bursty_corpus(spark, tmp_path):

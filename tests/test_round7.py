@@ -86,6 +86,12 @@ def test_xxhash64_string_paths_vs_spark(spark):
     # plain default-seed string hash
     exp2 = [r[0] for r in df.select(F.xxhash64(F.col("t"))).collect()]
     assert list(xxhash64_bytes(toks, 42)) == exp2
+    # chained string pair (the lineage row hash): the seed array is
+    # aligned with the input, across differently sized length groups
+    keys = toks[::-1]
+    kdf = spark.createDataFrame(list(zip(keys, toks)), "k string, t string")
+    exp3 = [r[0] for r in kdf.select(F.xxhash64("k", "t")).collect()]
+    assert list(xxhash64_bytes(toks, xxhash64_bytes(keys, 42))) == exp3
 
 
 def test_xxhash64_long_paths_vs_spark(spark):

@@ -334,12 +334,15 @@ def test_eval_outputs_are_tombstone_free(spark, ix, tier):
 BATCH_LABELS = (
     "HighTerm",
     "MedTerm",
+    "LowTerm",
     "AndHighMed",
     "OrHighMed",
     "MinMatch2of3",
     "OrMax",
     "TermsBoosted",
     "Prefix3",
+    "Wildcard",  # many legs: WAND off by the leg cap in topk
+    "Fuzzy1",
     "Phrase",  # fallback: per-query topk, at its own site
     "Absent",
 )

@@ -21,10 +21,12 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 fan-out-weighted scan estimate (sum over the scanned terms
                 of doc_freq x the queries subscribed to the term) is at
                 most `SearchEngine.LOCAL_MAX_POSTINGS`, pyarrow reads just
-                those terms' row groups from each segment's term-sorted
-                postings parquet and the kernel runs in-process as one
-                partition — zero Spark jobs, the reference's in-process
-                mmap walk (PAPER.md §0);
+                those terms' row groups (picked by the term ranges of
+                footers read once per engine) from each segment's
+                term-sorted postings parquet, the kernel runs in-process
+                as one partition, and the result answers collect() from
+                pandas — no Spark job and no JVM call, the reference's
+                in-process mmap walk (PAPER.md §0);
               - Spark (everything else): parquet scan with `term IN`
                 pushdown -> (for multi-leg queries) ONE repartition of the
                 packed blocks by (segment, chunk) -> an Arrow mapInPandas
@@ -79,12 +81,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 from pyspark.sql.types import (
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
+    _create_row,
 )
 
 from iresearch_spark.index.build import DEFAULT_CHUNK_BITS
@@ -169,8 +175,9 @@ _log = logging.getLogger(__name__)
 class _ScanPlan(NamedTuple):
     """One planned postings scan, runnable at either execution site: the
     kernel closure, the terms and columns it reads, whether its rows must
-    arrive (segment, chunk)-grouped, its output schema and whether
-    block-max pruning is on."""
+    arrive (segment, chunk)-grouped, its output schema, whether block-max
+    pruning is on, and the dict the kernel fills with its block counters
+    (read back only where the kernel ran in this process)."""
 
     kernel: Callable
     terms: list
@@ -178,6 +185,7 @@ class _ScanPlan(NamedTuple):
     grouped: bool
     schema: StructType
     prune: bool = False
+    counters: dict | None = None
 
 
 def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
@@ -804,6 +812,59 @@ def _phrase_sums_kernel(
     return kernel
 
 
+# pandas dtypes of toPandas() on the result columns' Spark types
+_PANDAS_DTYPES = {LongType: np.int64, FloatType: np.float32, DoubleType: np.float64, StringType: object}
+
+
+class _LocalFrame(_ClassicDataFrame):
+    """DataFrame of a small driver-side pandas result ([query,] gdoc,
+    score). `collect()`, `toPandas()`, `count()`, `schema` and `columns`
+    answer from the pandas frame, with the Row fields, Python types and
+    pandas dtypes Spark's own answers have, and make no JVM call. Any
+    other use (join, union, orderBy, explain, ...) reads `_jdf`, which
+    builds the local relation once; from then on the frame is an ordinary
+    DataFrame over it."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic __new__ calls __init__(jdf, session)
+        return object.__new__(cls)
+
+    def __init__(self, session: SparkSession, pdf: pd.DataFrame, schema: StructType):
+        self._session = session
+        self._sc = session._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._pdf = pdf
+        self.schema = schema  # shadows the classic property's JVM schema call
+
+    @cached_property
+    def _jdf(self):
+        pdf = self._pdf
+        if pdf.empty:
+            # limit(0) of a one-row local relation folds to an empty local
+            # relation (an empty pandas frame or list becomes an RDD scan,
+            # one job)
+            row = {"query": "", "gdoc": 0, "score": 0.0}
+            pdf = pd.DataFrame({c: [row[c]] for c in pdf.columns})
+            return self._session.createDataFrame(pdf, self.schema).limit(0)._jdf
+        return self._session.createDataFrame(pdf, self.schema)._jdf
+
+    def toPandas(self) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                f.name: self._pdf[f.name].to_numpy(_PANDAS_DTYPES[type(f.dataType)])
+                for f in self.schema
+            }
+        )
+
+    def collect(self) -> list:
+        pdf, names = self.toPandas(), self.columns
+        return [_create_row(names, vals) for vals in zip(*(pdf[c].tolist() for c in names))]
+
+    def count(self) -> int:
+        return len(self._pdf)
+
+
 class SearchEngine:
     def __init__(self, spark: SparkSession, store: IndexStore, scorer: Scorer | None = None):
         self.spark = spark
@@ -839,7 +900,6 @@ class SearchEngine:
         self._vocab_series: pd.Series | None = None
         # proxy_filter cache: normalized child (+boost) -> persisted hits
         self._proxy_cache: dict = {}
-        self._arrow_postings: list | None = None  # driver-local site, lazy
         self.last_run: dict | None = None  # the last topk(_batch)'s site choice
         # live-delete mask (reference index_writer Remove(),
         # index_writer.hpp:381-416): deletes stay visible as a query-time
@@ -881,6 +941,32 @@ class SearchEngine:
     @cached_property
     def postings(self) -> DataFrame:
         return self.store.read_union(self.spark, "postings", list(self.seg_base))
+
+    @cached_property
+    def _postings_footers(self) -> dict[str, list[tuple]]:
+        """segment -> its postings parquet files, each footer read once
+        per engine: (path, footer metadata, term min, term max, whether
+        the row group has those stats), the last three per row group.
+        The driver-local site picks row groups from them and
+        `_segments_without` reads their schemas."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        out: dict[str, list[tuple]] = {}
+        for name in sorted(self.seg_base):
+            files = []
+            path = self.store.seg_path(name, "postings")
+            for f in sorted(glob.glob(_os.path.join(path, "*.parquet"))):
+                md = pq.read_metadata(f)
+                j = md.schema.names.index("term")
+                st = [md.row_group(g).column(j).statistics for g in range(md.num_row_groups)]
+                known = np.array([x is not None and x.has_min_max for x in st], dtype=bool)
+                lo = np.array([x.min if ok else "" for x, ok in zip(st, known)], dtype=object)
+                hi = np.array([x.max if ok else "" for x, ok in zip(st, known)], dtype=object)
+                files.append((f, md, lo, hi, known))
+            out[name] = files
+        return out
 
     @cached_property
     def term_stats(self) -> DataFrame:
@@ -1385,6 +1471,7 @@ class SearchEngine:
             else:  # min-merge: block-local bound only; none with a tail
                 other_ub = {t: 0.0 for t in scorers}
                 prune = tail_sel is None
+        counters: dict = {}
         kernel = _sums_kernel(
             legs,
             np.array([s[1] for s in specs], dtype=np.int64),
@@ -1403,8 +1490,9 @@ class SearchEngine:
                 if tail_sel is not None
                 else None
             ),
+            counters=counters,
         )
-        return _ScanPlan(kernel, list(legs), self.SCAN_COLS, grouped, HITS_SCHEMA, prune)
+        return _ScanPlan(kernel, list(legs), self.SCAN_COLS, grouped, HITS_SCHEMA, prune, counters)
 
     def _spark_hits(self, plan: _ScanPlan, tail_sel=None) -> DataFrame:
         """Spark site: parquet scan (`term IN` pushdown, or the no-vocab
@@ -1439,31 +1527,58 @@ class SearchEngine:
             hits = self._mask(hits)
         return hits
 
-    def _local_blocks(self, plan: _ScanPlan) -> pd.DataFrame:
-        """Driver-local site input: only the plan's terms' row groups from
-        each segment's term-sorted postings parquet (pyarrow `term IN`
-        filter, the plan's columns only), in (segment, chunk, term,
-        first_doc) order — the grouping the Spark site's repartition and
-        sort provide, with a deterministic order inside each group."""
+    def _local_blocks(self, plan: _ScanPlan) -> tuple[pd.DataFrame, int, int]:
+        """Driver-local site input: the row groups whose footer term range
+        holds one of the plan's terms, read with each file's cached
+        footer, filtered to those terms and the plan's columns, in
+        (segment, chunk, term, first_doc) order — the grouping the Spark
+        site's repartition and sort provide, with a deterministic order
+        inside each group. Returns the blocks, the row groups read and
+        the row groups in the files. Decoded postings are not cached: the
+        driver holds only the footers."""
+        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
 
-        if self._arrow_postings is None:
-            self._arrow_postings = [
-                (s.name, pads.dataset(self.store.seg_path(s.name, "postings"), format="parquet"))
-                for s in self.manifest.segments
-            ]
+        want = np.array(sorted(plan.terms), dtype=object)
+        value_set = pa.array(want, pa.string())
         cols = [c for c in plan.cols if c != "segment"]
-        flt = pc.field("term").isin(plan.terms)
-        parts = []
-        for name, dset in self._arrow_postings:
-            pdf = dset.to_table(columns=cols, filter=flt).to_pandas()
-            parts.append(pdf.assign(segment=name))
-        blocks = pd.concat(parts, ignore_index=True)
-        blocks["chunkid"] = blocks["first_doc"].to_numpy(np.int64) >> self.chunk_bits
-        return blocks.sort_values(
-            ["segment", "chunkid", "term", "first_doc"], kind="stable", ignore_index=True
-        )
+        tables, names, sizes = [], [], []
+        n_read = n_total = 0
+        for name, files in self._postings_footers.items():
+            parts = []
+            for path, md, lo, hi, known in files:
+                at = np.searchsorted(want, lo)
+                hit = ~known | ((at < want.size) & (want[np.minimum(at, want.size - 1)] <= hi))
+                rgs = np.flatnonzero(hit).tolist()
+                n_read += len(rgs)
+                n_total += hit.size
+                if rgs:
+                    parts.append(pq.ParquetFile(path, metadata=md).read_row_groups(rgs, columns=cols))
+            if not parts:
+                continue
+            t = pa.concat_tables(parts)
+            code = pc.index_in(t["term"], value_set=value_set)
+            t = t.filter(code.is_valid())
+            if not t.num_rows:
+                continue
+            # the codes index the sorted terms: one integer sort, and no
+            # reorder when the rows already are in that order (a
+            # term-sorted file of one chunk)
+            fd = t["first_doc"].to_numpy()
+            order = np.lexsort((fd, pc.drop_null(code).to_numpy(), fd >> self.chunk_bits))
+            if (np.diff(order) < 0).any():
+                t = t.take(order)
+            tables.append(t)
+            names.append(name)
+            sizes.append(t.num_rows)
+        if not tables:
+            return pd.DataFrame(columns=[*cols, "segment", "chunkid"]), n_read, n_total
+        tbl = pa.concat_tables(tables)
+        blocks = {c: tbl[c].to_numpy() for c in cols}
+        blocks["segment"] = np.repeat(np.array(names, dtype=object), sizes)
+        blocks["chunkid"] = blocks["first_doc"] >> self.chunk_bits
+        return pd.DataFrame(blocks, copy=False), n_read, n_total
 
     def _site(self, subs: dict[str, int] | None) -> tuple[int | None, bool]:
         """Execution-site decision shared by `topk` and `topk_batch`:
@@ -1478,17 +1593,30 @@ class SearchEngine:
         est = sum(df * subs[t] for t, df in self._stats_for(list(subs)).items())
         return est, self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
 
-    def _local_run(self, plan: _ScanPlan | None) -> pd.DataFrame | None:
+    def _local_run(self, plan: _ScanPlan | None, tally: dict) -> pd.DataFrame | None:
         """Driver-local site: the plan's kernel over `_local_blocks` as one
-        in-process partition; None when nothing matched."""
-        out = list(plan.kernel(iter([self._local_blocks(plan)]))) if plan else []
+        in-process partition; None when nothing matched. Adds the scan's
+        row groups [read, total] and the kernel's block counters to
+        `tally` (a run record)."""
+        rg = tally.setdefault("row_groups", [0, 0])
+        if plan is None:
+            return None
+        blocks, n_read, n_total = self._local_blocks(plan)
+        rg[0] += n_read
+        rg[1] += n_total
+        out = list(plan.kernel(iter([blocks])))
+        if plan.counters is not None:
+            for key in ("blocks", "skipped"):
+                tally[key] = tally.get(key, 0) + plan.counters.get(key, 0)
         return pd.concat(out, ignore_index=True) if out else None
 
-    def _local_topk(self, plan: _ScanPlan | None, k: int, post: str | None) -> pd.DataFrame:
+    def _local_topk(
+        self, plan: _ScanPlan | None, k: int, post: str | None, tally: dict
+    ) -> pd.DataFrame:
         """Driver-local top k of a single query by (score desc, gdoc asc),
         as a pandas (gdoc, score) frame. `post` is the final-score
         transform for kernels that score in leaf mode (phrase)."""
-        hits = self._local_run(plan)
+        hits = self._local_run(plan, tally)
         if hits is None:
             return pd.DataFrame({"gdoc": np.empty(0, np.int64), "score": np.empty(0)})
         gd = hits["gdoc"].to_numpy(np.int64)
@@ -1647,19 +1775,17 @@ class SearchEngine:
         return self._local_frame(pd.DataFrame({"gdoc": [], "score": []}))
 
     def _local_frame(self, pdf: pd.DataFrame) -> DataFrame:
-        """Local relation of a pandas ([query,] gdoc, score) frame, in that
-        column order: its collect() launches no Spark job."""
-        schema = f"gdoc long, score {self._score_t}"
+        """DataFrame of a pandas ([query,] gdoc, score) frame, in that
+        column order: its collect(), toPandas() and count() answer from
+        pandas with no JVM call; any other use builds the local relation
+        once (`_LocalFrame`), whose collect() launches no Spark job."""
+        fields = [
+            StructField("gdoc", LongType()),
+            StructField("score", DoubleType() if self.precise else FloatType()),
+        ]
         if "query" in pdf:
-            schema = "query string, " + schema
-        if pdf.empty:
-            # limit(0) of a one-row local relation folds to an empty local
-            # relation (an empty pandas frame or list becomes an RDD scan,
-            # one job)
-            row = {"query": "", "gdoc": 0, "score": 0.0}
-            pdf = pd.DataFrame({c: [row[c]] for c in pdf.columns})
-            return self.spark.createDataFrame(pdf, schema).limit(0)
-        return self.spark.createDataFrame(pdf, schema)
+            fields.insert(0, StructField("query", StringType()))
+        return _LocalFrame(self.spark, pdf, StructType(fields))
 
     # ------------------------------------------------------------- boolean
 
@@ -1826,12 +1952,12 @@ class SearchEngine:
 
     def _segments_without(self, col: str) -> list[str]:
         """Committed segments whose postings parquet footer lacks `col`
-        (read once per engine and stream)."""
+        (from the engine's cached footers, once per stream)."""
         if col not in self._streams_missing:
             self._streams_missing[col] = [
                 s.name
                 for s in self.manifest.segments
-                if col not in self.store.table_columns(self.spark, s.name, "postings")
+                if col not in self._postings_footers[s.name][0][1].schema.names
             ]
         return self._streams_missing[col]
 
@@ -1955,16 +2081,22 @@ class SearchEngine:
         the phrase kernel; other shapes fall back to the general evaluator
         + global TakeOrdered. A single scan with kernel-resident tombstones
         and at most LOCAL_MAX_POSTINGS scanned postings runs on the driver
-        (zero Spark jobs); the choice is recorded in `last_run`."""
+        (zero Spark jobs) and returns a local result: its collect(),
+        toPandas() and count() answer from pandas with no JVM call, and
+        any other use builds the local relation once. The choice is
+        recorded in `last_run`; a local run also records the row groups
+        it read ([read, total]) and the kernel's `blocks` / `skipped`
+        counters."""
         hits, self.last_run = self._topk(node, k, wand)
         _log.debug("topk %s", self.last_run)
         return self._local_frame(hits) if isinstance(hits, pd.DataFrame) else hits
 
     def _topk(
-        self, node: Node, k: int, wand: bool
+        self, node: Node, k: int, wand: bool, tally: dict | None = None
     ) -> tuple[pd.DataFrame | DataFrame, dict]:
         """(top k, run record) of one query: a pandas (gdoc, score) frame
-        when it ran on the driver, a Spark DataFrame otherwise."""
+        when it ran on the driver, a Spark DataFrame otherwise. A local
+        scan's counts go to `tally` (default: the run record)."""
         n = normalize(node)
         plan, post, tail_sel, single = None, None, None, True
         if isinstance(n, (Phrase, SamePosition, VarPhrase)):
@@ -1995,7 +2127,7 @@ class SearchEngine:
             "wand": bool(plan and plan.prune),
         }
         if local:
-            return self._local_topk(plan, k, post), run
+            return self._local_topk(plan, k, post, run if tally is None else tally), run
         hits = self._plan_hits(plan, tail_sel) if single else self._eval(n)
         if post or not single:
             hits = hits.select("gdoc", self._final_score("score").alias("score"))
@@ -2031,9 +2163,12 @@ class SearchEngine:
         Other shapes (phrase, Not, nesting, no-vocab distributed-tail
         multiterm) fall back to per-query `topk` — each at its own site —
         and union in: correct, just not amortized. When every part ran on
-        the driver the result is one local relation (zero Spark jobs on
-        collect); `last_run` records {path, postings_est, tombstone_tier,
-        n_batched, n_fallback}.
+        the driver the result is local, like `topk`'s: collect(),
+        toPandas() and count() answer from pandas with no JVM call, and
+        any other use builds the local relation once (zero Spark jobs on
+        its collect). `last_run` records {path, postings_est,
+        tombstone_tier, n_batched, n_fallback}, plus the local scans'
+        summed row_groups / blocks / skipped.
         """
         batched: list[tuple[str, tuple]] = []
         fallback: list[str] = []
@@ -2050,7 +2185,7 @@ class SearchEngine:
                 batched.append((name, spec))
         local_parts: list[pd.DataFrame] = []
         spark_parts: list[DataFrame] = []
-        est = None
+        est, tally = None, {}
         if batched:
             specs = [spec for _, spec in batched]
             qnames = np.array([name for name, _ in batched], dtype=object)
@@ -2061,7 +2196,7 @@ class SearchEngine:
             )
             est, local = self._site(Counter(t for spec in specs for t in spec[0]))
             if local:
-                hits = self._local_run(plan)
+                hits = self._local_run(plan, tally)
                 if hits is not None:
                     local_parts.append(
                         pd.DataFrame(
@@ -2090,7 +2225,7 @@ class SearchEngine:
                     )
                 )
         for name in fallback:
-            hits, _run = self._topk(queries[name], k, True)
+            hits, _run = self._topk(queries[name], k, True, tally)
             if isinstance(hits, pd.DataFrame):
                 local_parts.append(hits.assign(query=name)[["query", "gdoc", "score"]])
             else:
@@ -2101,6 +2236,7 @@ class SearchEngine:
             "tombstone_tier": self._tombstone_tier(),
             "n_batched": len(batched),
             "n_fallback": len(fallback),
+            **tally,
         }
         _log.debug("topk_batch %s", self.last_run)
         pdf = (

@@ -13,7 +13,14 @@ on a 2-segment store with deletes:
 - the no-vocab regime, the anti-join tombstone tier, the general evaluator
   and queries or batches over the budget stay on Spark;
 - every `_eval` output is tombstone-free in all three tiers, so callers
-  need no second mask.
+  need no second mask;
+- a local result's collect(), toPandas(), count(), schema and columns
+  answer from pandas (no JVM relation, no job) with the rows, types and
+  dtypes of the materialized relation, other Spark APIs build it once,
+  and concurrent local queries agree with sequential ones;
+- the local read picks row groups by cached footer term ranges (a
+  64-row-group rewrite stays oracle-identical and reads fewer groups),
+  and the run record carries row_groups and the kernel's block counters.
 """
 
 from __future__ import annotations
@@ -25,6 +32,7 @@ import re
 import numpy as np
 import pyarrow.dataset as pads
 import pytest
+from pyspark.sql import functions as F
 
 import iresearch_spark.search.executor as X
 from iresearch_spark.analysis.analyzers import DEFAULT_STOPWORDS
@@ -519,3 +527,195 @@ def test_dictionary_over_footer_cap_takes_the_job_path(spark, ix):
     for _label, node, _ in _cases(ix):
         assert _rows(eng.topk(node, K)) == _rows(ref.topk(node, K))
         assert eng.last_run["path"] == "local"
+
+
+# ------------------------------------------------------------ lazy results
+
+
+def _lazy_shapes(ix) -> dict[str, tuple]:
+    """(method, argument) per result shape: topk and topk_batch, each
+    with a non-empty and an empty result."""
+    _, _, _, (hi, med, *_rest) = ix
+    absent = Term("zzqqxxnotaterm")
+    return {
+        "topk": ("topk", Or((Term(hi), Term(med)))),
+        "topk_empty": ("topk", absent),
+        "batch": ("topk_batch", {"b": And((Term(hi), Term(med))), "a": Term(hi)}),
+        "batch_empty": ("topk_batch", {"a": absent}),
+    }
+
+
+@pytest.mark.parametrize("scorer", ["bm25", "precise"])
+def test_local_result_answers_from_pandas(spark, ix, scorer, capsys):
+    """collect(), toPandas(), count(), schema and columns of a local
+    result make no JVM relation and launch no job, and equal what the
+    materialized relation answers; any other Spark API builds the
+    relation once and works on it."""
+    import pandas as pd
+
+    store, *_ = ix
+    eng = _engine(spark, store, scorer=PreciseBM25() if scorer == "precise" else None)
+    score_t = "double" if scorer == "precise" else "float"
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for label, (method, arg) in _lazy_shapes(ix).items():
+        group = f"lazy-{scorer}-{label}"
+        sc.setJobGroup(group, label)
+        try:
+            df = getattr(eng, method)(arg, K)
+            assert eng.last_run["path"] == "local", label
+            rows, pdf, n = df.collect(), df.toPandas(), df.count()
+            schema, columns = df.schema, df.columns
+            assert "_jdf" not in df.__dict__, label
+        finally:
+            sc.setJobGroup("local-path-idle", "")
+        assert tracker.getJobIdsForGroup(group) == [], label
+        want_cols = ["gdoc", "score"] if method == "topk" else ["query", "gdoc", "score"]
+        assert columns == want_cols and schema.simpleString().endswith(f"score:{score_t}>")
+        assert (n == 0) == label.endswith("_empty") and n == len(rows) == len(pdf)
+
+        ref = spark.createDataFrame(df._pdf, schema)
+        ref_rows = ref.collect()
+        assert rows == ref_rows, label
+        assert [tuple(map(type, r)) for r in rows] == [tuple(map(type, r)) for r in ref_rows]
+        assert [r.asDict() for r in rows] == [r.asDict() for r in ref_rows]
+        pd.testing.assert_frame_equal(pdf, ref.toPandas())
+        assert schema == ref.schema and n == ref.count()
+
+        # every other API builds the local relation once and runs on it
+        assert df.join(ref, columns).count() == n
+        assert sorted(df.unionByName(ref).collect()) == sorted(rows + ref_rows)
+        assert df.orderBy(F.desc("gdoc")).collect() == sorted(rows, key=lambda r: -r["gdoc"])
+        assert "_jdf" in df.__dict__
+        assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+        df.explain()
+        assert "LocalTableScan" in capsys.readouterr().out
+        assert df.schema == schema and df.collect() == rows and df.count() == n
+
+
+def test_local_results_from_threads_equal_sequential(spark, ix):
+    """Concurrent local queries share the engine's footer cache: eight
+    threads' rows equal sequential calls' rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    store, *_ = ix
+    eng = _engine(spark, store)
+    nodes = [node for _, node, _ in _cases(ix)]
+    want = [_rows(eng.topk(node, K)) for node in nodes]
+    with ThreadPoolExecutor(8) as pool:
+        got = list(pool.map(lambda node: _rows(eng.topk(node, K)), nodes * 4))
+    assert got == want * 4
+
+
+def _rewrite_postings(store: IndexStore, seg: str, rows_per_group: int) -> int:
+    """Rewrite a segment's postings as one term-sorted parquet file of
+    `rows_per_group`-row row groups: the same rows, the Spark schema kept
+    in the footer. Returns the file's row group count."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = store.seg_path(seg, "postings")
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    tbl = pq.read_table(files).sort_by([("term", "ascending"), ("first_doc", "ascending")])
+    for f in files:
+        os.remove(f)
+    out = os.path.join(path, "part-00000.parquet")
+    pq.write_table(tbl, out, row_group_size=rows_per_group)
+    return pq.read_metadata(out).num_row_groups
+
+
+FOOTER_LABELS = ("HighTerm", "LowTerm", "AndHighMed", "OrHighMed", "MinMatch2of3", "Prefix3", "Phrase")
+
+
+def test_footer_cached_read_prunes_row_groups(spark, ix, tmp_path):
+    """A postings file of many small row groups: the local site reads
+    only the row groups whose footer term range holds a query term, and
+    topk / topk_batch results stay bit-identical to the oracle."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    store, _idx, deleted, _ = ix
+    shutil.copytree(store.root, tmp_path / "small_groups")
+    copy = IndexStore(str(tmp_path / "small_groups"))
+    before = pq.read_table(copy.seg_path("s0", "postings"))
+    n_groups = _rewrite_postings(copy, "s0", 64)
+    after = pq.read_table(copy.seg_path("s0", "postings"))
+    assert n_groups > 8 and after.schema.metadata == before.schema.metadata
+    order = [("term", "ascending"), ("first_doc", "ascending")]
+    assert after.equals(before.sort_by(order))
+
+    eng = _engine(spark, copy)
+    cases = {label: (node, scores) for label, node, scores in _cases(ix) if label in FOOTER_LABELS}
+    for label, (node, scores) in cases.items():
+        assert _rows(eng.topk(node, K)) == _top(scores, deleted), label
+        run = eng.last_run
+        assert run["path"] == "local", label
+        read, total = run["row_groups"]
+        assert 0 < read < total, (label, run)
+        assert total - read >= n_groups // 2, (label, run)
+    queries = {label: node for label, (node, _) in cases.items()}
+    assert _batch_rows(eng.topk_batch(queries, K)) == _batch_oracle(cases, deleted)
+    read, total = eng.last_run["row_groups"]
+    assert eng.last_run["path"] == "local" and 0 < read < total
+
+    # blocks arrive in (segment, chunk, term, first_doc) order from the
+    # sorted rewrite and from the original multi-file segments, with one
+    # chunk per segment or many
+    _, _, _, (hi, med, low, _bigram) = ix
+    node = normalize(Or((Term(hi), Term(med), Term(low))))
+    for e in (eng, _engine(spark, store)):
+        plan = e._sums_plan([e._query_spec(node)])
+        want_rows = sum(
+            pads.dataset(e.store.seg_path(s, "postings"), format="parquet").count_rows(
+                filter=pads.field("term").isin(plan.terms)
+            )
+            for s in e.seg_base
+        )
+        for bits in (e.chunk_bits, 6):
+            e.chunk_bits = bits
+            got, _, _ = e._local_blocks(plan)
+            key = ["segment", "chunkid", "term", "first_doc"]
+            assert len(got) == want_rows and not got.duplicated(key).any()
+            assert got.equals(got.sort_values(key, ignore_index=True)), bits
+            assert (got["chunkid"].nunique() > 2) == (bits == 6)
+
+
+def test_local_run_records_row_groups_and_block_counters(spark, ix, tmp_path):
+    """A local-site run record carries the row groups it read and the
+    kernel's block counters; block-max pruning skips blocks of a
+    prunable HighTerm query on a bursty corpus, and a Spark-site record
+    has neither."""
+    store = IndexStore(str(tmp_path / "bursty"))
+    corpus = generate_corpus(spark, 1500, seed=41, burstiness=0.1).persist()
+    corpus.count()
+    build_segment(spark, store, corpus, "b0")
+    corpus.unpersist()
+    eng = _engine(spark, store)
+    n_groups = sum(f[1].num_row_groups for files in eng._postings_footers.values() for f in files)
+    # the high doc-frequency band, most frequent first
+    high = [t for df, t in sorted(zip(eng._vocab[1], eng._vocab[0]), key=lambda x: (-x[0], x[1])) if df >= 300]
+    skipped = []
+    for t in high[:20]:
+        pruned = _rows(eng.topk(Term(t), 1))
+        run = eng.last_run
+        assert run["path"] == "local" and run["wand"], run
+        assert run["row_groups"] == [1, n_groups] and n_groups == 1
+        assert run["blocks"] >= run["skipped"] >= 0 and run["blocks"] > 0, run
+        if run["skipped"]:
+            skipped.append(t)
+            assert _rows(eng.topk(Term(t), 1, wand=False)) == pruned
+            assert eng.last_run["skipped"] == 0 and eng.last_run["blocks"] == run["blocks"]
+    assert skipped, high[:20]
+
+    store, _idx, _deleted, (hi, med, *_rest) = ix
+    eng = _engine(spark, store)
+    eng.topk_batch({"a": Term(hi), "b": Or((Term(hi), Term(med))), "p": Phrase((hi, med))}, K)
+    run = eng.last_run
+    assert run["path"] == "local" and run["blocks"] > 0 and run["row_groups"][0] >= 2
+    eng.LOCAL_MAX_POSTINGS = 0
+    eng.topk(Term(hi), K)
+    assert eng.last_run["path"] == "spark"
+    assert not {"row_groups", "blocks", "skipped"} & set(eng.last_run)

@@ -8,11 +8,11 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
               constants (the reference's per-query "stats blob",
               core/search/bm25.cpp:366-410), then ONE scan plan: the
               kernel closure plus the terms and columns it reads
-              (`_sums_plan` / `_phrase_plan`). Every term, multiterm and
-              flat-boolean scan — one query or `topk_batch`'s many —
-              runs ONE sums kernel (`_sums_kernel`: term -> [(qid,
-              scorer)] legs, one decode per (segment, chunk) group, one
-              pool per query); a single query is a width-1 plan;
+              (`_sums_plan`). Every scan — term, multiterm, flat boolean
+              or phrase-family, one query or `topk_batch`'s many — runs
+              ONE kernel (`_sums_kernel`: term -> [(qid, scorer)] legs and
+              phrase legs, one decode per (segment, chunk) group, one pool
+              per query); a single query is a batch of one;
   execute   = the plan runs at one of two sites, same kernel either way:
               - driver-local: when the plan is one scan (a term,
                 vocab-cached multiterm, flat And/Or/min-match or phrase
@@ -33,7 +33,9 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 kernel that unpacks delta+varint blocks, scores them, and
                 reduces per-doc sums LOCALLY (a doc's postings for every
                 query term live in the same chunk group, so no downstream
-                groupBy shuffle exists at all);
+                groupBy shuffle exists at all); positions are read only
+                for plans with a phrase leg, and shuffled only for the
+                phrase terms' blocks;
   collect   = `ORDER BY score DESC, gdoc ASC LIMIT k` over the kernel's
               top-k survivors: np.lexsort / the kernel's per-query pools
               locally, TakeOrderedAndProject or a window on Spark (the
@@ -137,17 +139,9 @@ HITS_SCHEMA = StructType(
     ]
 )
 
-PHRASE_SCHEMA = StructType(
-    [
-        StructField("gdoc", LongType()),
-        StructField("score", DoubleType()),
-    ]
-)
-
-# positions live in the low bits of the phrase intersection key; doc-local
-# ids (< 2^chunk_bits inside one chunk group) in the high bits
+# positions live in the low bits of the phrase intersection key, the
+# doc's dense rank inside its (segment, chunk) group in the high bits
 _POS_BITS = 42
-_OFF_BASE = 64  # max supported phrase length (offset shift headroom)
 
 # tombstone sets up to this size ride in the kernel CLOSURE (pickled into
 # every task binary — cheap at this size)
@@ -174,18 +168,30 @@ _log = logging.getLogger(__name__)
 
 class _ScanPlan(NamedTuple):
     """One planned postings scan, runnable at either execution site: the
-    kernel closure, the terms and columns it reads, whether its rows must
-    arrive (segment, chunk)-grouped, its output schema, whether block-max
-    pruning is on, and the dict the kernel fills with its block counters
-    (read back only where the kernel ran in this process)."""
+    kernel closure, the terms it reads (term -> the number of queries
+    subscribed to it) and the columns, whether its rows must arrive
+    (segment, chunk)-grouped, whether block-max pruning is on, the dict
+    the kernel fills with its block counters (read back only where the
+    kernel ran in this process), and the phrase legs' terms: the blocks
+    whose positions the kernel reads."""
 
     kernel: Callable
-    terms: list
+    terms: dict
     cols: tuple
     grouped: bool
-    schema: StructType
-    prune: bool = False
-    counters: dict | None = None
+    prune: bool
+    counters: dict
+    pos_terms: list
+
+
+class _PhraseLeg(NamedTuple):
+    """A phrase-family query's leg of the sums kernel: each slot's
+    indexed terms, each slot's position offset (relative: the smallest
+    is 0), and the phrase-frequency scorer (summed member idf)."""
+
+    slots: list
+    offsets: list
+    scorer: TermScorer
 
 
 def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
@@ -211,9 +217,10 @@ def _resolve_deleted(deleted):
 
 
 def _delta_blocks(docs_buf, counts: np.ndarray) -> np.ndarray:
-    """Doc ids of many concatenated delta+varint doc blocks: one varint
-    pass, the delta cumsum reset at each block start (`counts` values per
-    block)."""
+    """Values of many concatenated delta+varint runs — doc blocks, or the
+    per-doc position runs of a block group (reference .pos stream,
+    formats_10.cpp:166-267): one varint pass, the delta cumsum reset at
+    each run start (`counts` values per run)."""
     ddeltas = varint_decode(docs_buf).astype(np.int64)
     cs = np.cumsum(ddeltas)
     st = np.cumsum(counts) - counts
@@ -408,6 +415,62 @@ def _damerau_batch(
     return out
 
 
+def _phrase_rows(phrases, uniq, codes, tok_codes, docs, tfs, dls, pos_bins):
+    """Phrase legs over one decoded (segment, chunk) group: [(qid, gdocs,
+    scores)], one entry per matching doc. `codes` holds each block's and
+    `tok_codes` each posting's index into the group's terms `uniq`.
+
+    Phrase matching is set algebra on packed keys (reference
+    FixedPhraseFrequency leapfrog, core/search/phrase_iterator.hpp:75-154,
+    re-expressed columnar): for slot j at offset o_j, every occurrence
+    (doc, pos) of a slot term becomes key = doc_rank << _POS_BITS | (pos -
+    o_j), with doc_rank the doc's dense rank in the group; a phrase
+    occurrence is a key present in EVERY slot's key set, and a doc's
+    phrase frequency is its count of such keys. Offsets are relative (the
+    smallest is 0): a key below 0 would start before the doc and is
+    dropped. Positions are decoded only for the blocks of phrases whose
+    every slot has a block here, in one varint pass (`_delta_blocks`
+    resets the position deltas at each doc)."""
+    if not phrases:
+        return []
+    code_of = {t: c for c, t in enumerate(uniq)}
+    ready = []
+    for qid, ph in phrases:
+        slots = [[code_of[t] for t in ts if t in code_of] for ts in ph.slots]
+        if all(slots):
+            ready.append((qid, ph, slots))
+    if not ready:
+        return []
+    need = np.zeros(len(uniq), dtype=bool)
+    need[[c for _, _, slots in ready for cs in slots for c in cs]] = True
+    tok = np.flatnonzero(need[tok_codes])  # whole blocks, in block order
+    tf = tfs[tok].astype(np.int64)
+    pos = _delta_blocks(b"".join(pos_bins[b] for b in np.flatnonzero(need[codes])), tf)
+    udocs, rank = np.unique(docs[tok], return_inverse=True)
+    dl = np.empty(udocs.size, dtype=dls.dtype)
+    dl[rank] = dls[tok]
+    prank = np.repeat(rank.astype(np.int64) << _POS_BITS, tf)
+    pcode = np.repeat(tok_codes[tok], tf)
+    out = []
+    for qid, ph, slots in ready:
+        acc = None
+        for cs, off in zip(slots, ph.offsets):
+            m = np.isin(pcode, cs)
+            sh = pos[m] - off
+            ok = sh >= 0
+            keys = np.unique(prank[m][ok] | sh[ok])
+            acc = keys if acc is None else acc[np.isin(acc, keys, assume_unique=True)]
+            if not acc.size:
+                break
+        if not acc.size:
+            continue
+        r, ptf = np.unique(acc >> _POS_BITS, return_counts=True)
+        sc = ph.scorer
+        scores = sc.scores(ptf.astype(sc.dtype), dl[r].astype(sc.dtype))
+        out.append((qid, udocs[r], scores.astype(np.float64, copy=False)))
+    return out
+
+
 _MERGE_REDUCERS = (("sum", np.add), ("max", np.maximum), ("min", np.minimum))
 _MERGE_CODE = {m: i for i, (m, _) in enumerate(_MERGE_REDUCERS)}
 
@@ -428,6 +491,7 @@ def _sums_kernel(
     other_ub_default: float = 0.0,
     tail_legs: list[tuple[int, TermScorer]] | None = None,
     counters: dict | None = None,
+    phrases: list[tuple[int, _PhraseLeg]] = (),
 ):
     """mapInPandas kernel: packed block rows -> per-(query, doc)
     (qid, gdoc, score) for one query or a batch sharing one postings scan.
@@ -439,7 +503,10 @@ def _sums_kernel(
     (index into _MERGE_REDUCERS). `tail_legs` subscribe every block whose
     term is not in `legs` — the distributed unscored tail (no-vocab
     regime), a shared zero scorer; without them every block's term must
-    have legs (the scan reads only those terms).
+    have legs (the scan reads only those terms). `phrases`: (qid, leg) per
+    phrase-family query, whose rows (`_phrase_rows`) join the term legs'
+    before the reduction; they need a `pos_bin` column, which may be null
+    for blocks of terms no phrase reads.
 
     grouped=True requires rows sorted by (segment, chunkid) within the
     partition (a doc's blocks for all query terms share one group — chunk
@@ -482,10 +549,7 @@ def _sums_kernel(
         # grouped mode buffers RAW streams per (segment, chunk) group;
         # decode happens batched at flush (wide multiterm expansions put
         # thousands of small blocks in one group)
-        buf_terms: list = []
-        buf_db: list = []
-        buf_tb: list = []
-        buf_lb: list = []
+        buf: list = []  # (term, docs_bin, tfs_bin, dls_bin, pos_bin) per block
         cur_key: tuple | None = None
         shift = 0
 
@@ -511,14 +575,12 @@ def _sums_kernel(
             out_s.append(tsums)
 
         def flush() -> None:
-            if not buf_terms:
+            if not buf:
                 return
-            docs, tfs_u, dls_u, counts_b = _decode_block_group(buf_db, buf_tb, buf_lb, shift)
-            codes, uniq = pd.factorize(np.asarray(buf_terms, dtype=object))
-            buf_terms.clear()
-            buf_db.clear()
-            buf_tb.clear()
-            buf_lb.clear()
+            terms, docs_bins, tfs_bins, dls_bins, pos_bins = zip(*buf)
+            buf.clear()
+            docs, tfs_u, dls_u, counts_b = _decode_block_group(docs_bins, tfs_bins, dls_bins, shift)
+            codes, uniq = pd.factorize(np.asarray(terms, dtype=object))
             # fan out: each term's token positions scored once per
             # subscribed query (casts shared by one scorer dtype)
             tok_codes = np.repeat(codes, counts_b)
@@ -529,17 +591,28 @@ def _sums_kernel(
             for t, hi in zip(uniq, term_ends):
                 pos, lo = by_term[lo:hi], hi  # the term's token positions
                 cast: dict = {}
-                for qid, sc in legs.get(t) or tail_legs:
+                for qid, sc in legs.get(t) or tail_legs or ():
                     if sc.dtype not in cast:
                         cast[sc.dtype] = (tfs_u[pos].astype(sc.dtype), dls_u[pos].astype(sc.dtype))
                     parts_p.append(pos)
                     parts_s.append(sc.scores(*cast[sc.dtype]).astype(np.float64, copy=False))
                     leg_q.append(qid)
                     leg_n.append(pos.size)
+            # a phrase leg's rows (one per matching doc) join as extra
+            # entries past the group's postings
+            ph_rows = _phrase_rows(phrases, uniq, codes, tok_codes, docs, tfs_u, dls_u, pos_bins)
+            for qid, gd, sc in ph_rows:
+                parts_p.append(np.arange(docs.size, docs.size + gd.size))
+                docs = np.concatenate((docs, gd))
+                parts_s.append(sc)
+                leg_q.append(qid)
+                leg_n.append(gd.size)
+            if not parts_s:
+                return
             pos = np.concatenate(parts_p)
+            gdocs = docs[pos]
             scores = np.concatenate(parts_s)
             qids = np.repeat(np.asarray(leg_q, dtype=np.int64), leg_n)
-            gdocs = docs[pos]
             # one sort by (qid, doc, token position): every (query, doc)
             # sum adds its legs in token order — the float order of a
             # per-doc reduction over the group's rows
@@ -575,6 +648,7 @@ def _sums_kernel(
             docsb = pdf["docs_bin"].to_numpy()
             tfsb = pdf["tfs_bin"].to_numpy()
             dlsb = pdf["dls_bin"].to_numpy()
+            posb = pdf["pos_bin"].to_numpy() if phrases else [None] * n
             # Vectorized block-max bounds (r3: per-row scalar bounds cost
             # more than the skipped decodes at bench scale — VERDICT r2
             # "WAND inversion"): one numpy pass per term, factorized masks
@@ -617,10 +691,7 @@ def _sums_kernel(
                         counters["skipped"] = counters.get("skipped", 0) + 1
                     continue  # block-max skip (STRICT <)
                 if grouped:  # defer decode to the batched flush
-                    buf_terms.append(terms[i])
-                    buf_db.append(docsb[i])
-                    buf_tb.append(tfsb[i])
-                    buf_lb.append(dlsb[i])
+                    buf.append((terms[i], docsb[i], tfsb[i], dlsb[i], posb[i]))
                     continue
                 qid, sc = (legs.get(terms[i]) or tail_legs)[0]
                 docs = delta_decode(varint_decode(docsb[i])).astype(np.int64)
@@ -682,134 +753,6 @@ def _topk_sums_kernel(
         tail_legs=None if default_scorer is None else [(0, default_scorer)],
         counters=counters,
     )
-
-
-def _decode_abs_positions(pos_bin: bytes, tfs: np.ndarray) -> np.ndarray:
-    """Flat per-doc-delta position stream -> flat ABSOLUTE positions,
-    vectorized (no per-doc loop): per-doc cumsum via global cumsum minus a
-    per-doc base, recovering the reference .pos stream semantics
-    (formats_10.cpp:166-267) without row-at-a-time Python."""
-    flat = varint_decode(pos_bin).astype(np.int64)
-    if flat.size == 0:
-        return flat
-    c = np.cumsum(flat)
-    starts = np.concatenate(([0], np.cumsum(tfs)[:-1])).astype(np.int64)
-    adjust = np.repeat(c[starts] - flat[starts], tfs)
-    return c - adjust
-
-
-def _phrase_sums_kernel(
-    slot_terms: list[list[str]],
-    offsets: list[int],
-    shim: TermScorer,
-    seg_base: dict[str, int],
-    chunk_bits: int,
-    *,
-    mode: str,
-    deleted,  # np.ndarray | pyspark Broadcast of one | None
-):
-    """mapInPandas kernel over (segment, chunkid)-grouped posting blocks of
-    the phrase's terms: emits (gdoc, score) per matching doc.
-
-    Phrase matching is set algebra on packed keys (reference
-    FixedPhraseFrequency leapfrog, core/search/phrase_iterator.hpp:75-154,
-    re-expressed columnar): for slot j at offset o_j, every occurrence
-    (doc, pos) of a slot term becomes key = doc_local << POS_BITS | (pos +
-    OFF - o_j); a phrase occurrence is a key present in EVERY slot's key
-    set; phrase_tf per doc = multiplicity of the doc in the intersection.
-    Fully vectorized — no per-posting or per-doc Python in the loop.
-    """
-    term_slots: dict[str, list[int]] = {}
-    for j, ts in enumerate(slot_terms):
-        for t in ts:
-            term_slots.setdefault(t, []).append(j)
-    nslots = len(slot_terms)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dels = _resolve_deleted(deleted)
-        out_g: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        rows_buf: list[tuple[str, np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-        cur_key: tuple | None = None
-
-        def flush() -> None:
-            if not rows_buf or cur_key is None:
-                return
-            seg, chunk = cur_key
-            chunk_base = int(chunk) << chunk_bits
-            slot_keys: list[list[np.ndarray]] = [[] for _ in range(nslots)]
-            dl_docs: list[np.ndarray] = []
-            dl_vals: list[np.ndarray] = []
-            for term, docs, tfs, dls, abspos in rows_buf:
-                local = docs - chunk_base
-                doc_rep = np.repeat(local, tfs)
-                for j in term_slots[term]:
-                    slot_keys[j].append(
-                        (doc_rep << _POS_BITS) | (abspos + _OFF_BASE - offsets[j])
-                    )
-                dl_docs.append(local)
-                dl_vals.append(dls)
-            rows_buf.clear()
-            if any(not ks for ks in slot_keys):
-                return
-            keys = [
-                np.unique(np.concatenate(ks)) if len(ks) > 1 else np.sort(ks[0])
-                for ks in slot_keys
-            ]
-            acc = keys[0]
-            for ka in keys[1:]:
-                if acc.size == 0:
-                    return
-                acc = acc[np.isin(acc, ka, assume_unique=False)]
-            if not acc.size:
-                return
-            docs = acc >> _POS_BITS
-            udocs, ptf = np.unique(docs, return_counts=True)
-            dd = np.concatenate(dl_docs)
-            dv = np.concatenate(dl_vals)
-            o = np.argsort(dd, kind="stable")
-            dd, dv = dd[o], dv[o]
-            dls_u = dv[np.searchsorted(dd, udocs)]
-            gd = udocs + chunk_base + seg_base.get(seg, 0)
-            if dels is not None and dels.size:
-                keep = _not_deleted_mask(dels, gd)
-                gd, ptf, dls_u = gd[keep], ptf[keep], dls_u[keep]
-            if not gd.size:
-                return
-            sc = shim.scores(
-                ptf.astype(shim.dtype), dls_u.astype(shim.dtype)
-            ).astype(np.float64, copy=False)
-            out_g.append(gd)
-            out_s.append(_transform_arr(mode, sc))
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            segs = pdf["segment"].to_numpy()
-            chunks = pdf["chunkid"].to_numpy()
-            docsb = pdf["docs_bin"].to_numpy()
-            tfsb = pdf["tfs_bin"].to_numpy()
-            dlsb = pdf["dls_bin"].to_numpy()
-            posb = pdf["pos_bin"].to_numpy()
-            for i in range(n):
-                key = (segs[i], chunks[i])
-                if key != cur_key:
-                    flush()
-                    cur_key = key
-                docs = delta_decode(varint_decode(docsb[i])).astype(np.int64)
-                tfs = varint_decode(tfsb[i]).astype(np.int64)
-                dls = varint_decode(dlsb[i]).astype(np.int64)
-                abspos = _decode_abs_positions(posb[i], tfs)
-                rows_buf.append((terms[i], docs, tfs, dls, abspos))
-        flush()
-        if out_g:
-            yield pd.DataFrame(
-                {"gdoc": np.concatenate(out_g), "score": np.concatenate(out_s)}
-            )
-
-    return kernel
 
 
 # pandas dtypes of toPandas() on the result columns' Spark types
@@ -1404,10 +1347,12 @@ class SearchEngine:
         """Scan plan of the sums kernel for `_query_spec` results sharing
         one scan (qid = position in `specs`; a single query is a batch of
         one): legs, bounds, pruning and grouping decided once for both
-        execution sites. None matches nothing: no scored leg AND no
-        distributed tail (with a tail predicate the scan must still run —
-        scored_terms_limit 0 in the no-vocab regime surfaces every matched
-        doc at score 0, identical to the vocab path, r6 review).
+        execution sites. A spec whose legs are a `_PhraseLeg` is a phrase
+        leg: grouped, never pruned, and the reason the scan reads
+        `pos_bin`. None matches nothing: no leg AND no distributed tail
+        (with a tail predicate the scan must still run — scored_terms_limit
+        0 in the no-vocab regime surfaces every matched doc at score 0,
+        identical to the vocab path, r6 review).
 
         Only a width-1 plan prunes (block-max bounds are per query) and
         carries a tail selector (spec[4], no-vocab multiterm regime): a
@@ -1419,15 +1364,23 @@ class SearchEngine:
         kernel; no tail term ever reaches the driver. Such a plan runs on
         Spark only; `topk_batch` never batches it."""
         legs: dict[str, list[tuple[int, TermScorer]]] = {}
+        phrases: list[tuple[int, _PhraseLeg]] = []
+        subs: Counter = Counter()  # term -> queries subscribed to it
         for qid, spec in enumerate(specs):
+            if isinstance(spec[0], _PhraseLeg):
+                phrases.append((qid, spec[0]))
+                subs.update({t for ts in spec[0].slots for t in ts})
+                continue
+            subs.update(spec[0].keys())
             for t, sc in spec[0].items():
                 legs.setdefault(t, []).append((qid, sc))
         scorers, min_match, _, merge, tail_sel = specs[0]
-        if len(specs) > 1:
+        shared = len(specs) > 1 or bool(phrases)
+        if shared:
             tail_sel, prune = None, False
-        if not legs and tail_sel is None:
+        if not subs and tail_sel is None:
             return None
-        grouped = len(specs) > 1 or len(scorers) > 1 or min_match > 1 or tail_sel is not None
+        grouped = shared or len(scorers) > 1 or min_match > 1 or tail_sel is not None
         if prune and not all(
             getattr(sc, "monotone_dl", True) for sc in scorers.values()
         ):
@@ -1491,15 +1444,19 @@ class SearchEngine:
                 else None
             ),
             counters=counters,
+            phrases=phrases,
         )
-        return _ScanPlan(kernel, list(legs), self.SCAN_COLS, grouped, HITS_SCHEMA, prune, counters)
+        pos_terms = sorted({t for _, ph in phrases for ts in ph.slots for t in ts})
+        cols = self.SCAN_COLS + (("pos_bin",) if phrases else ())
+        return _ScanPlan(kernel, subs, cols, grouped, prune, counters, pos_terms)
 
     def _spark_hits(self, plan: _ScanPlan, tail_sel=None) -> DataFrame:
         """Spark site: parquet scan (`term IN` pushdown, or the no-vocab
         tail selector) -> (segment, chunk) repartition when the kernel
         needs grouped rows -> the plan's kernel in mapInPandas."""
         # explicit projection: mapInPandas does not push column pruning into
-        # the scan, and pos_bin (the largest column) is not needed to score
+        # the scan, and pos_bin (the largest column) is read only for a
+        # phrase leg — and nulled before the shuffle for every other term
         if tail_sel is None:
             blocks = self._term_filtered(self.postings, plan.terms)
         elif isinstance(tail_sel, DataFrame):
@@ -1509,6 +1466,10 @@ class SearchEngine:
         else:
             blocks = self.postings.where(tail_sel)
         blocks = blocks.select(*plan.cols)
+        if plan.pos_terms and len(plan.pos_terms) < len(plan.terms):
+            blocks = blocks.withColumn(
+                "pos_bin", F.when(F.col("term").isin(*plan.pos_terms), F.col("pos_bin"))
+            )
         if plan.grouped:
             n_part = self.spark.sparkContext.defaultParallelism
             blocks = (
@@ -1522,7 +1483,7 @@ class SearchEngine:
         # tried to tighten the threshold early cost more than it saved —
         # the pool fills after the first 128-doc block anyway, and the sort
         # added a stage; measured wand > nowand on HighTerm because of it)
-        hits = blocks.mapInPandas(plan.kernel, plan.schema)
+        hits = blocks.mapInPandas(plan.kernel, HITS_SCHEMA)
         if not self._deleted_inline:
             hits = self._mask(hits)
         return hits
@@ -1593,38 +1554,25 @@ class SearchEngine:
         est = sum(df * subs[t] for t, df in self._stats_for(list(subs)).items())
         return est, self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
 
-    def _local_run(self, plan: _ScanPlan | None, tally: dict) -> pd.DataFrame | None:
+    def _local_run(self, plan: _ScanPlan | None, run: dict) -> pd.DataFrame:
         """Driver-local site: the plan's kernel over `_local_blocks` as one
-        in-process partition; None when nothing matched. Adds the scan's
-        row groups [read, total] and the kernel's block counters to
-        `tally` (a run record)."""
-        rg = tally.setdefault("row_groups", [0, 0])
-        if plan is None:
-            return None
-        blocks, n_read, n_total = self._local_blocks(plan)
-        rg[0] += n_read
-        rg[1] += n_total
-        out = list(plan.kernel(iter([blocks])))
-        if plan.counters is not None:
-            for key in ("blocks", "skipped"):
-                tally[key] = tally.get(key, 0) + plan.counters.get(key, 0)
-        return pd.concat(out, ignore_index=True) if out else None
-
-    def _local_topk(
-        self, plan: _ScanPlan | None, k: int, post: str | None, tally: dict
-    ) -> pd.DataFrame:
-        """Driver-local top k of a single query by (score desc, gdoc asc),
-        as a pandas (gdoc, score) frame. `post` is the final-score
-        transform for kernels that score in leaf mode (phrase)."""
-        hits = self._local_run(plan, tally)
+        in-process partition, whose per-query pools already are the final
+        top k. Returns (qid, gdoc, score) rows by (qid, score desc, gdoc
+        asc), and adds the scan's row groups [read, total] and the
+        kernel's block counters to the run record."""
+        run["row_groups"] = [0, 0]
+        hits = None
+        if plan is not None:
+            blocks, n_read, n_total = self._local_blocks(plan)
+            run["row_groups"] = [n_read, n_total]
+            hits = next(plan.kernel(iter([blocks])), None)
+            run.update({key: plan.counters.get(key, 0) for key in ("blocks", "skipped")})
         if hits is None:
-            return pd.DataFrame({"gdoc": np.empty(0, np.int64), "score": np.empty(0)})
-        gd = hits["gdoc"].to_numpy(np.int64)
-        sc = hits["score"].to_numpy(np.float64)
-        if post is not None:
-            sc = _transform_arr(post, sc)
-        top = np.lexsort((gd, -sc))[:k]
-        return pd.DataFrame({"gdoc": gd[top], "score": sc[top]})
+            return pd.DataFrame(
+                {"qid": np.empty(0, np.int32), "gdoc": np.empty(0, np.int64), "score": np.empty(0)}
+            )
+        qid, gd, sc = (hits[c].to_numpy() for c in ("qid", "gdoc", "score"))
+        return hits.take(np.lexsort((gd, -sc, qid))).reset_index(drop=True)
 
     def _leaf_scorers(
         self, expansion: list[tuple[str, int]], boost: float
@@ -1637,14 +1585,18 @@ class SearchEngine:
 
     def _query_spec(
         self, node: Node, boost: float = 1.0
-    ) -> tuple[dict[str, TermScorer], int, float, str, object] | None:
+    ) -> tuple[dict[str, TermScorer] | _PhraseLeg, int, float, str, object] | None:
         """(scorers, min_match, const_add, merge, tail_sel) for single-scan
-        shapes: exact/multiterm leaves and flat And/Or of exact terms. None
-        when the node needs the general evaluator (phrase legs, nesting,
-        Not). tail_sel is None (tail folded into scorers as zero entries —
-        vocab regime) or a Column predicate / term-DataFrame selecting ALL
-        matched terms for the postings scan (no-vocab regime; terms outside
-        the scorer dict score zero in the kernel)."""
+        shapes: exact/multiterm leaves, flat And/Or of exact terms, and
+        phrase-family leaves, whose legs are a `_PhraseLeg` instead of a
+        scorer dict (`_phrase_spec`). None when the node needs the general
+        evaluator (nesting, Not). tail_sel is None (tail folded into
+        scorers as zero entries — vocab regime) or a Column predicate /
+        term-DataFrame selecting ALL matched terms for the postings scan
+        (no-vocab regime; terms outside the scorer dict score zero in the
+        kernel)."""
+        if isinstance(node, (Phrase, SamePosition, VarPhrase)):
+            return self._phrase_spec(node, boost)
         if isinstance(node, (Term, Terms, Prefix, Wildcard, Fuzzy, Range)):
             expansion, tail = self.expand_tiered(node)
             min_match = node.min_match if isinstance(node, Terms) else 1
@@ -1718,35 +1670,30 @@ class SearchEngine:
 
     # -------------------------------------------------------------- phrase
 
-    def _phrase_slots(self, leaf: Node) -> tuple[list[list[str]], list[int]]:
-        if isinstance(leaf, SamePosition):
-            return [[t] for t in leaf.terms], [0] * len(leaf.terms)
+    def _phrase_spec(self, leaf: Node, boost: float) -> tuple:
+        """`_query_spec` of a phrase-family leaf: a phrase leg with
+        relative offsets. A single one-term slot is a term query and specs
+        as one; a slot with no indexed term matches nothing (no legs)."""
+        self._require_stream("pos_bin", "with_positions=True")
         if isinstance(leaf, VarPhrase):
             # expand each slot leaf against the term dictionary
-            slots = [[t for t, _ in self.expand(n)] for n in leaf.slots]
-            return slots, list(range(len(slots)))
-        terms = list(leaf.terms)
-        if getattr(leaf, "offsets", None) is not None:
-            if len(leaf.offsets) != len(terms):
-                raise ValueError("Phrase.offsets must align with Phrase.terms")
-            return [[t] for t in terms], list(leaf.offsets)
-        return [[t] for t in terms], list(range(len(terms)))
-
-    PHRASE_COLS = ("segment", "term", "first_doc", "docs_bin", "tfs_bin", "dls_bin", "pos_bin")
-
-    def _phrase_plan(self, leaf: Node, boost: float) -> _ScanPlan | None:
-        """Scan plan for a phrase-family leaf (None: matches nothing). A
-        single one-term slot is a term query and plans as one."""
-        self._require_stream("pos_bin", "with_positions=True")
-        slot_terms, offsets = self._phrase_slots(leaf)
+            slot_terms = [[t for t, _ in self.expand(n)] for n in leaf.slots]
+        else:
+            slot_terms = [[t] for t in leaf.terms]
+        offsets = getattr(leaf, "offsets", None)
+        if isinstance(leaf, SamePosition):
+            offsets = [0] * len(slot_terms)
+        elif offsets is None:
+            offsets = range(len(slot_terms))
+        elif len(offsets) != len(slot_terms):
+            raise ValueError("Phrase.offsets must align with Phrase.terms")
         if len(slot_terms) == 1 and len(slot_terms[0]) == 1:
             stats = self._stats_for(slot_terms[0])
-            scorers = self._leaf_scorers(list(stats.items()), boost * leaf.boost)
-            return self._sums_plan([(scorers, 1, 0.0, "sum", None)])
+            return self._leaf_scorers(list(stats.items()), boost * leaf.boost), 1, 0.0, "sum", None
         all_terms = sorted({t for ts in slot_terms for t in ts})
         stats = self._stats_for(all_terms)
         if any(all(t not in stats for t in ts) for ts in slot_terms):
-            return None  # a slot with no indexed term matches nothing
+            return {}, 1, 0.0, "sum", None
         slot_terms = [[t for t in ts if t in stats] for ts in slot_terms]
         # phrase idf = sum of matched member idfs (pinned semantics, shared
         # with tests/oracle.py and plans/parity.py phrase_topk)
@@ -1760,16 +1707,8 @@ class SearchEngine:
                 )
             )
         shim = _phrase_term_scorer(self.scorer, self.field, idf_sum, boost * leaf.boost)
-        kernel = _phrase_sums_kernel(
-            slot_terms,
-            offsets,
-            shim,
-            self.seg_base,
-            self.chunk_bits,
-            mode=self.leaf_mode,
-            deleted=self._kernel_deleted if self._deleted_inline else None,
-        )
-        return _ScanPlan(kernel, sorted(stats), self.PHRASE_COLS, True, PHRASE_SCHEMA)
+        lo = min(offsets, default=0)
+        return _PhraseLeg(slot_terms, [o - lo for o in offsets], shim), 1, 0.0, "sum", None
 
     def _empty_hits(self) -> DataFrame:
         return self._local_frame(pd.DataFrame({"gdoc": [], "score": []}))
@@ -1799,8 +1738,6 @@ class SearchEngine:
             return self.doc_universe().withColumn(
                 "score", F.lit(lit).cast(self._score_t)
             )
-        if isinstance(node, (Phrase, SamePosition, VarPhrase)):
-            return self._plan_hits(self._phrase_plan(node, boost))
         if isinstance(node, Proxy):
             # cached filter (proxy_filter.cpp): compute the child's scored
             # hits ONCE per engine, persist, reuse for every equal Proxy
@@ -2076,10 +2013,11 @@ class SearchEngine:
 
     def topk(self, node: Node, k: int = 10, wand: bool = True) -> DataFrame:
         """Top-k by (score desc, gdoc asc). Single-scan queries (term /
-        multiterm / flat boolean / min-match) run the block-max WAND kernel
-        (reference wanderator + block_disjunction), phrase-family leaves
-        the phrase kernel; other shapes fall back to the general evaluator
-        + global TakeOrdered. A single scan with kernel-resident tombstones
+        multiterm / flat boolean / min-match / phrase-family leaf) run the
+        sums kernel as a batch of one — block-max WAND (reference
+        wanderator + block_disjunction) for the term shapes, a phrase leg
+        for phrases; other shapes fall back to the general evaluator +
+        global TakeOrdered. A single scan with kernel-resident tombstones
         and at most LOCAL_MAX_POSTINGS scanned postings runs on the driver
         (zero Spark jobs) and returns a local result: its collect(),
         toPandas() and count() answer from pandas with no JVM call, and
@@ -2091,18 +2029,13 @@ class SearchEngine:
         _log.debug("topk %s", self.last_run)
         return self._local_frame(hits) if isinstance(hits, pd.DataFrame) else hits
 
-    def _topk(
-        self, node: Node, k: int, wand: bool, tally: dict | None = None
-    ) -> tuple[pd.DataFrame | DataFrame, dict]:
+    def _topk(self, node: Node, k: int, wand: bool) -> tuple[pd.DataFrame | DataFrame, dict]:
         """(top k, run record) of one query: a pandas (gdoc, score) frame
-        when it ran on the driver, a Spark DataFrame otherwise. A local
-        scan's counts go to `tally` (default: the run record)."""
+        when it ran on the driver, a Spark DataFrame otherwise."""
         n = normalize(node)
-        plan, post, tail_sel, single = None, None, None, True
-        if isinstance(n, (Phrase, SamePosition, VarPhrase)):
-            plan, post = self._phrase_plan(n, 1.0), self.final_mode
-        elif (spec := self._query_spec(n)) is not None:
-            tail_sel = spec[4]
+        spec = self._query_spec(n)
+        plan = None
+        if spec is not None:
             plan = self._sums_plan(
                 [spec],
                 # per-partition pools/caps count docs the kernel can't see
@@ -2116,10 +2049,8 @@ class SearchEngine:
                 prune=wand and self._deleted_inline,
                 mode=self.final_mode,
             )
-        else:
-            single = False
-        one_scan = single and tail_sel is None
-        est, local = self._site(dict.fromkeys(plan.terms if plan else (), 1) if one_scan else None)
+        one_scan = spec is not None and spec[4] is None
+        est, local = self._site((plan.terms if plan else {}) if one_scan else None)
         run = {
             "path": "local" if local else "spark",
             "postings_est": est,
@@ -2127,10 +2058,11 @@ class SearchEngine:
             "wand": bool(plan and plan.prune),
         }
         if local:
-            return self._local_topk(plan, k, post, run if tally is None else tally), run
-        hits = self._plan_hits(plan, tail_sel) if single else self._eval(n)
-        if post or not single:
-            hits = hits.select("gdoc", self._final_score("score").alias("score"))
+            return self._local_run(plan, run)[["gdoc", "score"]], run
+        if spec is None:
+            hits = self._eval(n).select("gdoc", self._final_score("score").alias("score"))
+        else:
+            hits = self._plan_hits(plan, spec[4])
         return hits.orderBy(F.desc("score"), F.asc("gdoc")).limit(k), run
 
     def topk_batch(self, queries: dict[str, Node], k: int = 10) -> DataFrame:
@@ -2144,69 +2076,54 @@ class SearchEngine:
         time — it drains a batch. The batch costs ONE scan filtered by the
         UNION of all expansions and one kernel pass that decodes each
         matched block once and scores it for every subscribed query
-        (term -> [qid] fan-out, per-query top-k pools). The reference has
-        no batch API (its per-query cost is a mmap'd in-process walk,
-        ~free); where a scan dominates, amortizing it IS the idiomatic
-        restatement.
+        (term -> [qid] fan-out, phrase legs, per-query top-k pools). The
+        reference has no batch API (its per-query cost is a mmap'd
+        in-process walk, ~free); where a scan dominates, amortizing it IS
+        the idiomatic restatement.
 
         The shared scan takes `topk`'s site decision (`_site`) with a
         fan-out-weighted estimate (a term's doc_freq counts once per
-        subscribed query). On the driver, pyarrow reads the union terms'
-        row groups and the kernel runs as one in-process partition, whose
-        per-query pools already are the final top k. On Spark it is a
-        `term IN` pushdown / broadcast semi-join scan, one (segment,
-        chunk) repartition of packed blocks, the kernel, and one window
-        ranking the ~k pool survivors per query per partition.
+        subscribed query). On the driver it is `topk`'s local path with
+        many queries. On Spark it is a `term IN` pushdown / broadcast
+        semi-join scan, one (segment, chunk) repartition of packed blocks,
+        the kernel, and one window ranking the ~k pool survivors per query
+        per partition.
 
-        Any single-scan shape joins the shared scan (term / multiterm /
-        flat And/Or incl. min_match, per-term boosts, kmax/kmin merges).
-        Other shapes (phrase, Not, nesting, no-vocab distributed-tail
-        multiterm) fall back to per-query `topk` — each at its own site —
-        and union in: correct, just not amortized. When every part ran on
-        the driver the result is local, like `topk`'s: collect(),
-        toPandas() and count() answer from pandas with no JVM call, and
-        any other use builds the local relation once (zero Spark jobs on
-        its collect). `last_run` records {path, postings_est,
-        tombstone_tier, n_batched, n_fallback}, plus the local scans'
-        summed row_groups / blocks / skipped.
+        Every single-scan shape joins the shared scan (term / multiterm /
+        flat And/Or incl. min_match, per-term boosts, kmax/kmin merges,
+        Phrase / VarPhrase / SamePosition). The rest (Not, nesting,
+        no-vocab distributed-tail multiterm) fall back to per-query `topk`
+        on Spark and union in. Without fallbacks a locally run batch
+        returns a local result, like `topk`'s. `last_run` records {path,
+        postings_est, tombstone_tier, n_batched, n_fallback}, plus a local
+        scan's row_groups / blocks / skipped.
         """
         batched: list[tuple[str, tuple]] = []
         fallback: list[str] = []
         for name, node in queries.items():
-            n = normalize(node)
-            spec = (
-                self._query_spec(n)
-                if not isinstance(n, (Phrase, SamePosition, VarPhrase))
-                else None
-            )
+            spec = self._query_spec(normalize(node))
             if spec is None or spec[4] is not None:
                 fallback.append(name)
             else:
                 batched.append((name, spec))
-        local_parts: list[pd.DataFrame] = []
-        spark_parts: list[DataFrame] = []
+        pdf = pd.DataFrame({"query": [], "gdoc": [], "score": []})
+        parts: list[DataFrame] = []
         est, tally = None, {}
         if batched:
-            specs = [spec for _, spec in batched]
             qnames = np.array([name for name, _ in batched], dtype=object)
             # kernel pooling only when the tombstone mask is inline (same
             # reasoning as topk — r6 review)
             plan = self._sums_plan(
-                specs, k=k if self._deleted_inline else None, mode=self.final_mode
+                [spec for _, spec in batched],
+                k=k if self._deleted_inline else None,
+                mode=self.final_mode,
             )
-            est, local = self._site(Counter(t for spec in specs for t in spec[0]))
+            est, local = self._site(plan.terms if plan else {})
             if local:
                 hits = self._local_run(plan, tally)
-                if hits is not None:
-                    local_parts.append(
-                        pd.DataFrame(
-                            {
-                                "query": qnames[hits["qid"].to_numpy()],
-                                "gdoc": hits["gdoc"],
-                                "score": hits["score"],
-                            }
-                        )
-                    )
+                hits["query"] = qnames[hits.pop("qid").to_numpy()]
+                pdf = hits[["query", "gdoc", "score"]]
+                pdf = pdf.sort_values("query", kind="stable", ignore_index=True)
             elif plan is not None:
                 from pyspark.sql.window import Window
 
@@ -2214,7 +2131,7 @@ class SearchEngine:
                 name_map = F.create_map(
                     *[F.lit(x) for qid, name in enumerate(qnames) for x in (qid, name)]
                 )
-                spark_parts.append(
+                parts.append(
                     self._spark_hits(plan)
                     .withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") <= k)
@@ -2225,13 +2142,10 @@ class SearchEngine:
                     )
                 )
         for name in fallback:
-            hits, _run = self._topk(queries[name], k, True, tally)
-            if isinstance(hits, pd.DataFrame):
-                local_parts.append(hits.assign(query=name)[["query", "gdoc", "score"]])
-            else:
-                spark_parts.append(hits.select(F.lit(name).alias("query"), "gdoc", "score"))
+            hits, _run = self._topk(queries[name], k, True)
+            parts.append(hits.select(F.lit(name).alias("query"), "gdoc", "score"))
         self.last_run = {
-            "path": "spark" if spark_parts else "local",
+            "path": "spark" if parts else "local",
             "postings_est": est,
             "tombstone_tier": self._tombstone_tier(),
             "n_batched": len(batched),
@@ -2239,18 +2153,12 @@ class SearchEngine:
             **tally,
         }
         _log.debug("topk_batch %s", self.last_run)
-        pdf = (
-            pd.concat(local_parts, ignore_index=True)
-            if local_parts
-            else pd.DataFrame({"query": [], "gdoc": [], "score": []})
-        )
-        if not spark_parts:
-            pdf = pdf.sort_values(
-                ["query", "score", "gdoc"], ascending=[True, False, True], ignore_index=True
-            )
+        if not parts:
             return self._local_frame(pdf)
-        out = self._local_frame(pdf) if local_parts else spark_parts.pop()
-        for p in spark_parts:
+        if len(pdf):
+            parts.append(self._local_frame(pdf))
+        out = parts.pop()
+        for p in parts:
             out = out.unionByName(p)
         return out.orderBy("query", F.desc("score"), F.asc("gdoc"))
 

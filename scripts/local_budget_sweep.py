@@ -17,9 +17,12 @@ median Spark ms, and whether the rows matched. The default budget is the
 largest doc_freq at which the local site is still no slower than Spark.
 
 `--batch` times `topk_batch(...).collect()` of 24 queries that all
-subscribe to one band term `pM` (M <= 100): six each of Term(pM),
-And(pM, fI), Or(pM, fI) and Or(pM, fI, fJ, min_match=2), with distinct
-fI. Each row also prints the batch's fan-out-weighted scan estimate
+subscribe to one band term `pM` (M <= 100): 22 of Term(pM), And(pM, fI),
+Or(pM, fI) and Or(pM, fI, fJ, min_match=2) in turn, with distinct fI,
+and two phrases over the docs' fixed word order (p1000 p500 ... p1 fI
+gJ), Phrase((pL, pM)) and Phrase((pM, pN)) with L and N the next larger
+and smaller per-mille (`f0` follows p1), so the shared scan also decodes
+positions. Each row also prints the batch's fan-out-weighted scan estimate
 (`last_run["postings_est"]`, the number the budget is compared with).
 
 `--build` generates each size of synthetic corpus (`generate_corpus`)
@@ -48,16 +51,22 @@ PERMILLE = (1000, 500, 400, 300, 250, 100, 50, 20, 15, 10, 1)
 BATCH = 24
 
 
-def batch_of(term: str) -> dict:
-    """BATCH queries subscribed to `term`, in four shapes over distinct
-    `fI` partners."""
-    from iresearch_spark.search import And, Or, Term
+def batch_of(m: int) -> dict:
+    """BATCH queries subscribed to `pM`: two phrases with its neighbours
+    in the word order, the rest in four shapes over distinct `fI`
+    partners."""
+    from iresearch_spark.search import And, Or, Phrase, Term
 
+    term = f"p{m}"
+    at = PERMILLE.index(m)
+    nxt = f"p{PERMILLE[at + 1]}" if at + 1 < len(PERMILLE) else "f0"
     t, out = Term(term), {}
-    for i in range(BATCH):
+    for i in range(BATCH - 2):
         f1, f2 = Term(f"f{2 * i}"), Term(f"f{2 * i + 1}")
         shapes = (t, And((t, f1)), Or((t, f1)), Or((t, f1, f2), min_match=2))
         out[f"q{i:02d}"] = shapes[i % 4]
+    out["ph_prev"] = Phrase((f"p{PERMILLE[at - 1]}", term))
+    out["ph_next"] = Phrase((term, nxt))
     return out
 
 
@@ -193,7 +202,7 @@ def main() -> None:
                 break
             term = f"p{m}"
             if a.batch:
-                queries = batch_of(term)
+                queries = batch_of(m)
                 run = lambda: eng.topk_batch(queries, 10)  # noqa: E731
             else:
                 run = lambda: eng.topk(Term(term), 10)  # noqa: E731

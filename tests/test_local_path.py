@@ -30,6 +30,7 @@ import math
 import re
 
 import numpy as np
+import pandas as pd
 import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,7 @@ from iresearch_spark.search import (
     PreciseBM25,
     Prefix,
     Proxy,
+    SamePosition,
     SearchEngine,
     Term,
     Terms,
@@ -131,9 +133,18 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _same_position(idx, term: str) -> dict:
+    """SamePosition((term, term)): phrase frequency = tf, idf = the two
+    slots' idfs summed in float32."""
+    idf = F32(oracle.bm25_idf(idx.n_docs, idx.doc_freq(term)))
+    idf = F32(idf + idf)
+    return {d: oracle.bm25_score(tf, idx.doclen[d], idf, idx.avg_dl) for d, tf, _ in idx.postings[term]}
+
+
 def _cases(ix) -> list[tuple[str, object, dict]]:
     """(label, query, oracle scores) — every point_query category plus
-    boosted Terms, a kmax merge and a VarPhrase."""
+    boosted Terms, a kmax merge, a VarPhrase, a SamePosition and a Phrase
+    with explicit offsets (relative: (70, 71) is the bigram)."""
     _, idx, _, (hi, med, low, bigram) = ix
     st = lambda t, b=1.0: oracle.score_term(idx, t, boost=b)  # noqa: E731
     vocab = sorted(idx.postings)
@@ -172,6 +183,8 @@ def _cases(ix) -> list[tuple[str, object, dict]]:
             VarPhrase((Term(bigram[0]), Terms(tuple(slot2)))),
             oracle.score_varphrase(idx, [[bigram[0]], slot2]),
         ),
+        ("SamePosition", SamePosition((med, med)), _same_position(idx, med)),
+        ("PhraseOffsets", Phrase(bigram, offsets=(70, 71)), oracle.score_phrase(idx, list(bigram))),
         ("Absent", Term("zzqqxxnotaterm"), {}),
     ]
 
@@ -351,9 +364,13 @@ BATCH_LABELS = (
     "Prefix3",
     "Wildcard",  # many legs: WAND off by the leg cap in topk
     "Fuzzy1",
-    "Phrase",  # fallback: per-query topk, at its own site
+    "Phrase",  # phrase legs join the shared scan
+    "VarPhrase",
+    "SamePosition",
+    "PhraseOffsets",
     "Absent",
 )
+PHRASE_LABELS = ("Phrase", "VarPhrase", "SamePosition", "PhraseOffsets")
 
 
 def _batch_cases(ix, labels=BATCH_LABELS) -> dict[str, tuple[object, dict]]:
@@ -393,21 +410,87 @@ def test_batch_local_equals_spark_equals_oracle(spark, ix, tier):
     assert local == spark_rows == _batch_oracle(cases, deleted)
     assert {q for q, _, _ in local} == set(cases) - {"Absent"}
     assert run["tombstone_tier"] == tier
-    assert (run["n_batched"], run["n_fallback"]) == (len(cases) - 1, 1)
+    assert (run["n_batched"], run["n_fallback"]) == (len(cases), 0)
     # the fan-out-weighted estimate: a term's doc_freq once per subscriber
+    # (a phrase subscribes once to each of its terms)
     subs: dict[str, int] = {}
     for name, node in queries.items():
-        if name != "Phrase":
-            for t in eng._query_spec(normalize(node))[0]:
-                subs[t] = subs.get(t, 0) + 1
+        legs = eng._query_spec(normalize(node))[0]
+        terms = {t for ts in legs.slots for t in ts} if isinstance(legs, X._PhraseLeg) else legs
+        for t in terms:
+            subs[t] = subs.get(t, 0) + 1
     stats = eng._stats_for(list(subs))
     assert run["postings_est"] == sum(stats[t] * n for t, n in subs.items())
 
-    # an all-fallback batch (no shared scan) takes the same site choice
-    fb = _batch_cases(ix, ("Phrase", "VarPhrase"))
-    local, spark_rows, run = _batch_both(eng, {n: q for n, (q, _) in fb.items()})
-    assert local == spark_rows == _batch_oracle(fb, deleted) and local
-    assert (run["n_batched"], run["n_fallback"], run["postings_est"]) == (0, 2, None)
+    # an all-phrase batch is one shared scan too
+    ph = _batch_cases(ix, PHRASE_LABELS)
+    local, spark_rows, run = _batch_both(eng, {n: q for n, (q, _) in ph.items()})
+    assert local == spark_rows == _batch_oracle(ph, deleted) and local
+    assert (run["n_batched"], run["n_fallback"]) == (len(PHRASE_LABELS), 0)
+    assert run["postings_est"] is not None
+
+
+def test_phrase_leg_keys_never_cross_docs():
+    """A phrase key below 0 (an occurrence before its slot's offset) is
+    dropped, never OR-ed into another doc's key: with offsets (70, 71),
+    doc 1's only `a`@2 and doc 2's only `b`@3 match nothing, while doc 4's
+    `a b` at 80-81 still does; with offsets (0, 1) docs 3 and 4 match."""
+    from iresearch_spark.index.codec import pack_doc_block, pack_positions, varint_encode
+    from iresearch_spark.search.scorers import ConstTermScorer
+
+    def blocks(occ: dict) -> pd.DataFrame:
+        rows = []
+        for term, by_doc in occ.items():
+            docs = np.array(sorted(by_doc), dtype=np.uint64)
+            docs_bin, tfs_bin = pack_doc_block(docs, np.ones(docs.size, dtype=np.uint64))
+            rows.append({
+                "segment": "s", "term": term, "first_doc": int(docs[0]), "max_tf": 1, "min_dl": 9,
+                "docs_bin": docs_bin, "tfs_bin": tfs_bin,
+                "dls_bin": varint_encode(np.full(docs.size, 9, dtype=np.uint64)),
+                "pos_bin": pack_positions([[by_doc[d]] for d in docs]), "chunkid": 0,
+            })
+        return pd.DataFrame(rows)
+
+    def gdocs(occ: dict, offsets: list[int]) -> list[int]:
+        leg = X._PhraseLeg([["a"], ["b"]], offsets, ConstTermScorer(1.0))
+        kern = X._sums_kernel(
+            {}, np.array([1]), np.array([0.0]), np.array([0]), {"s": 0},
+            k=None, mode="f32", deleted=None, grouped=True, phrases=[(0, leg)],
+        )
+        return sorted(g for out in kern(iter([blocks(occ)])) for g in out["gdoc"])
+
+    assert gdocs({"a": {1: 2}, "b": {2: 3}}, [70, 71]) == []
+    occ = {"a": {1: 2, 3: 5, 4: 80}, "b": {2: 3, 3: 6, 4: 81}}
+    assert gdocs(occ, [70, 71]) == [4]
+    assert gdocs(occ, [0, 1]) == [3, 4]
+
+
+@pytest.mark.parametrize("tier", ["inline", "broadcast"])
+def test_spark_scan_reads_positions_only_for_phrase_legs(spark, ix, tier):
+    """On the Spark site a phrase-free plan's scan does not read pos_bin;
+    a mixed batch reads it, nulled for non-phrase terms before the
+    shuffle, and its rows equal the local rows and the oracle."""
+    store, _idx, deleted, _ = ix
+    patch = {"MAX_INLINE_TOMBSTONES": 0} if tier == "broadcast" else {}
+    eng = _engine(spark, store, **patch)
+    terms_only = {n: q for n, (q, _) in _batch_cases(ix).items() if n not in PHRASE_LABELS}
+    mixed = _batch_cases(ix, ("HighTerm", "AndHighMed", "Phrase", "PhraseOffsets", "VarPhrase"))
+    queries = {n: q for n, (q, _) in mixed.items()}
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    eng.LOCAL_MAX_POSTINGS = 0
+    for df in (eng.topk(terms_only["AndHighMed"], K), eng.topk_batch(terms_only, K)):
+        assert eng.last_run["path"] == "spark" and "pos_bin" not in plan(df)
+    df = eng.topk_batch(queries, K)
+    assert eng.last_run["path"] == "spark" and eng.last_run["n_fallback"] == 0
+    assert "pos_bin" in plan(df) and "CASE WHEN" in plan(df)
+    spark_rows = _batch_rows(df)
+    eng.LOCAL_MAX_POSTINGS = BIG
+    local = _batch_rows(eng.topk_batch(queries, K))
+    assert eng.last_run["path"] == "local"
+    assert spark_rows == local == _batch_oracle(mixed, deleted) and local
 
 
 def test_batch_local_launches_no_job(spark, ix):
@@ -710,11 +793,20 @@ def test_local_run_records_row_groups_and_block_counters(spark, ix, tmp_path):
             assert eng.last_run["skipped"] == 0 and eng.last_run["blocks"] == run["blocks"]
     assert skipped, high[:20]
 
+    # a phrase-bearing batch is one scan: each block of its terms is
+    # read and decoded once
     store, _idx, _deleted, (hi, med, *_rest) = ix
     eng = _engine(spark, store)
     eng.topk_batch({"a": Term(hi), "b": Or((Term(hi), Term(med))), "p": Phrase((hi, med))}, K)
     run = eng.last_run
-    assert run["path"] == "local" and run["blocks"] > 0 and run["row_groups"][0] >= 2
+    n_blocks = sum(
+        pads.dataset(store.seg_path(s, "postings"), format="parquet").count_rows(
+            filter=pads.field("term").isin([hi, med])
+        )
+        for s in eng.seg_base
+    )
+    assert run["path"] == "local" and run["n_fallback"] == 0
+    assert run["blocks"] == n_blocks and run["row_groups"][0] >= 2
     eng.LOCAL_MAX_POSTINGS = 0
     eng.topk(Term(hi), K)
     assert eng.last_run["path"] == "spark"

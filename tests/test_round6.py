@@ -421,10 +421,10 @@ def test_batch_topk4_duck_parity(spark):
 
 def test_topk_batch_matches_individual(spark, store800):
     """topk_batch must reproduce topk(node, k) row-for-row for every query
-    in the batch — across term/boolean/min-match/multiterm/fuzzy shapes on
-    the shared-scan path AND fallback shapes (phrase), with an
-    absent-term query contributing zero rows, at both execution sites
-    (driver-local and Spark)."""
+    in the batch — across term/boolean/min-match/multiterm/fuzzy and
+    phrase shapes on the shared-scan path, with an absent-term query
+    contributing zero rows, at both execution sites (driver-local and
+    Spark)."""
     from iresearch_spark.search import And, Or, Phrase, Term, Terms
 
     batch = {
@@ -437,7 +437,7 @@ def test_topk_batch_matches_individual(spark, store800):
         "prefix": Prefix("s", scored_terms_limit=3),
         "wild": Wildcard("*a*n", scored_terms_limit=2),
         "fuzzy": Fuzzy("batch", distance=1, max_terms=1000),
-        "phrase": Phrase(("key", "order")),  # fallback (positional kernel)
+        "phrase": Phrase(("key", "order")),
         "absent": Term("zzz_not_a_term"),
     }
     eng = SearchEngine(spark, store800)

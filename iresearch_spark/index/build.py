@@ -1,12 +1,16 @@
-"""Inverted-index build: invert -> postings -> packed blocks -> segment.
+"""Inverted-index build: doc packer -> partial merge -> packed blocks -> segment.
 
 Spark-first restatement of the reference indexing path (SURVEY.md §3.1):
 IndexWriter::Insert's per-doc inversion (core/index/field_data.cpp:985-1080)
-becomes `tokenize -> posexplode -> groupBy(doc_id, term)`; the in-memory
-postings hash (core/index/postings.cpp) IS Spark's hash aggregate; the
-postings_writer's 128-doc block encode (core/formats/formats_10.cpp:865-891)
-becomes Arrow pandas UDFs over per-block arrays; flush/commit becomes a
-parquet write + manifest snapshot (index/segments.py).
+becomes one Arrow kernel per input batch (`_make_doc_packer`) that inverts
+its docs into varint-packed (term, chunk) partials; one shuffle brings each
+(term, chunk)'s partials together and `_make_partial_merger` re-blocks them
+at 128 docs (the postings_writer's block encode,
+core/formats/formats_10.cpp:865-891); flush/commit becomes a parquet write
++ manifest snapshot (index/segments.py). Every build uses this one packer:
+the doc packer has a text front (`text_py_spec` analyzers tokenize inside
+the kernel) and a token-array front (Catalyst analyzers and pre-tokenized
+streams hand it per-doc position/term arrays); both end in `_invert`.
 
 Scale notes (the parts that must survive 1000 executors / 100 TB):
 - Deterministic docIDs WITHOUT a global single-partition window:
@@ -24,8 +28,6 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from iresearch_spark.analysis.analyzers import Analyzer, TextAnalyzer, tokenize
+from iresearch_spark.analysis.analyzers import Analyzer, TextAnalyzer
 from iresearch_spark.index.codec import (
     BLOCK_SIZE,
     delta_encode,
@@ -233,56 +235,6 @@ def assign_doc_ids(
 
 
 # ---------------------------------------------------------------------------
-# Inversion
-# ---------------------------------------------------------------------------
-
-def invert(
-    docs: DataFrame,
-    text_col: str = "content",
-    doc_id_col: str = "doc_id",
-    analyzer: Analyzer | None = None,
-    with_positions: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """docs -> (postings_flat, doclen).
-
-    postings_flat: (doc_id, term, tf, positions array<int>|absent)
-    doclen:        (doc_id, len)   [len = emitted-token count, Norm2
-                   semantics, reference core/index/norm.hpp:75-125]
-    """
-    analyzer = analyzer or TextAnalyzer()
-    # attach dl (emitted-token count) BEFORE the explode: it rides along to
-    # every posting, so packing never joins a doclen table — at cluster
-    # scale that join would shuffle the whole postings set per build.
-    raw = docs.select(
-        F.col(doc_id_col).alias("doc_id"),
-        analyzer.raw_tokens(F.col(text_col)).alias("_raw"),
-    )
-    raw = raw.withColumn(
-        "dl", F.size(F.filter("_raw", lambda t: analyzer.keep(t))).cast("int")
-    )
-    toks = raw.select(
-        "doc_id", "dl", F.posexplode("_raw").alias("pos", "term")
-    ).where(analyzer.keep(F.col("term")))
-    # post-filter per-token transform (stemming): reference pipeline order
-    # is stopword-check-then-stem (text_token_stream.cpp:356-421)
-    toks = toks.withColumn("term", analyzer.map_term(F.col("term")))
-    if with_positions:
-        flat = toks.groupBy("doc_id", "dl", "term").agg(
-            F.count("*").cast("int").alias("tf"),
-            F.sort_array(F.collect_list("pos")).alias("positions"),
-        )
-    else:
-        flat = toks.groupBy("doc_id", "dl", "term").agg(
-            F.count("*").cast("int").alias("tf")
-        )
-    # doclen derived from flat (callers persist flat); docs with zero
-    # emitted tokens have no postings and no doclen row — docs_with_field
-    # semantics, matching the reference's norms column
-    doclen = flat.groupBy("doc_id").agg(F.max("dl").cast("int").alias("len"))
-    return flat, doclen
-
-
-# ---------------------------------------------------------------------------
 # Block packing
 # ---------------------------------------------------------------------------
 
@@ -314,8 +266,8 @@ def pack_postings(
     style): BM25 needs (tf, dl) per posting, and inlining dl (~1 varint
     byte) makes query scoring join-free — at cluster scale a per-query join
     of the hit set against a doclen table would dwarf everything else. If
-    `postings_flat` lacks a dl column, pass `doclen` to attach it (merge
-    path); `invert()` output already carries dl.
+    `postings_flat` lacks a dl column, pass `doclen` to attach it;
+    `merge.unpack_postings` output already carries dl.
     """
     p = postings_flat
     if "dl" not in p.columns:
@@ -388,147 +340,21 @@ def pack_postings(
 
 
 # ---------------------------------------------------------------------------
-# Single-shuffle build path: token-level groupBy(term, chunk)
-# ---------------------------------------------------------------------------
-
-
-def _make_token_packer(block_size: int):
-    @pandas_udf(ArrayType(_BLOCK_STRUCT))
-    def _pack_tokens_udf(
-        doc_ids: pd.Series, dls: pd.Series, pos_flat: pd.Series
-    ) -> pd.Series:
-        """One input row = one (term, chunk) TOKEN group, sorted by
-        (doc, pos); per-doc tf/positions are derived here instead of in a
-        separate groupBy(doc, term) aggregation — the r2 single-shuffle
-        build (the old two-agg pipeline moved every posting through TWO
-        shuffles; this moves each token through ONE)."""
-        out = []
-        for d, l, p in zip(doc_ids, dls, pos_flat):
-            darr = np.asarray(d, dtype=np.int64)
-            larr = np.asarray(l, dtype=np.uint64)
-            n = darr.size
-            with_pos = p is not None
-            # unique-doc boundaries (tokens sorted by doc, then pos)
-            bnd = np.flatnonzero(np.concatenate(([True], darr[1:] != darr[:-1])))
-            udocs = darr[bnd].astype(np.uint64)
-            tf = np.diff(np.concatenate((bnd, [n]))).astype(np.uint64)
-            udl = larr[bnd]
-            if with_pos:
-                parr = np.asarray(p, dtype=np.int64)
-                deltas = np.empty_like(parr)
-                if n:
-                    deltas[0] = parr[0]
-                    np.subtract(parr[1:], parr[:-1], out=deltas[1:])
-                    deltas[bnd] = parr[bnd]  # delta resets per doc
-                deltas = deltas.astype(np.uint64)
-            blocks = []
-            nu = udocs.size
-            for bi, s in enumerate(range(0, nu, block_size)):
-                e = min(s + block_size, nu)
-                tok_s = int(bnd[s])
-                tok_e = int(bnd[e]) if e < nu else n
-                tb = tf[s:e]
-                lb = udl[s:e]
-                blocks.append(
-                    {
-                        "block_intra": bi,
-                        "doc_count": int(e - s),
-                        "first_doc": int(udocs[s]),
-                        "last_doc": int(udocs[e - 1]),
-                        "max_tf": int(tb.max()),
-                        "min_dl": int(lb.min()),
-                        "sum_tf": int(tb.sum()),
-                        "docs_bin": varint_encode(delta_encode(udocs[s:e])),
-                        "tfs_bin": varint_encode(tb),
-                        "dls_bin": varint_encode(lb),
-                        "pos_bin": varint_encode(deltas[tok_s:tok_e]) if with_pos else None,
-                    }
-                )
-            out.append(blocks)
-        return pd.Series(out)
-
-    return _pack_tokens_udf
-
-
-def pack_tokens(
-    tokens: DataFrame,
-    block_size: int = BLOCK_SIZE,
-    chunk_bits: int = DEFAULT_CHUNK_BITS,
-    with_positions: bool = True,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Token-level rows (doc_id, dl, term[, pos]) -> packed block rows, in
-    ONE shuffle: groupBy(term, chunk) collects sorted (doc, pos, dl)
-    structs and the Arrow kernel derives per-doc tf/positions AND packs
-    blocks in the same pass. Replaces the two-shuffle pipeline
-    (groupBy(doc, term) then groupBy(term, chunk)) on the build path —
-    measured the dominant cost at scale; the token payload through the one
-    remaining shuffle is ~1.4x a posting row, for half the shuffles.
-    Output schema identical to pack_postings()."""
-    t = tokens.withColumn("_chunk", (F.col("doc_id") / F.lit(1 << chunk_bits)).cast("long"))
-    entry = (
-        F.struct("doc_id", "pos", "dl") if with_positions else F.struct("doc_id", "dl")
-    )
-    grouped = t.groupBy("term", "_chunk").agg(
-        F.sort_array(F.collect_list(entry)).alias("tl")
-    )
-    doc_ids = F.transform("tl", lambda x: x["doc_id"])
-    dls = F.transform("tl", lambda x: x["dl"])
-    pos = (
-        F.transform("tl", lambda x: x["pos"]).cast("array<long>")
-        if with_positions
-        else F.lit(None).cast("array<long>")
-    )
-    pre = grouped.select(
-        "term",
-        "_chunk",
-        doc_ids.cast("array<long>").alias("_dd"),
-        dls.cast("array<long>").alias("_dl"),
-        pos.alias("_pp"),
-    )
-    n_part = num_partitions or tokens.sparkSession.sparkContext.defaultParallelism
-    # exchange = physical term clustering for parquet pruning + the
-    # CollapseProject barrier Python UDFs need under lambda-bearing inputs
-    pre = pre.repartition(n_part, "term", "_chunk").sortWithinPartitions("term", "_chunk")
-    packer = _make_token_packer(block_size)
-    blocks_per_chunk = max(1, (1 << chunk_bits) // block_size)
-    exploded = pre.select(
-        "term",
-        "_chunk",
-        F.explode(packer("_dd", "_dl", "_pp")).alias("_b"),
-    )
-    return exploded.select(
-        "term",
-        (F.col("_chunk") * blocks_per_chunk + F.col("_b.block_intra"))
-        .cast("long")
-        .alias("block_id"),
-        F.col("_b.doc_count").alias("doc_count"),
-        F.col("_b.first_doc").alias("first_doc"),
-        F.col("_b.last_doc").alias("last_doc"),
-        F.col("_b.max_tf").alias("max_tf"),
-        F.col("_b.min_dl").alias("min_dl"),
-        F.col("_b.sum_tf").alias("sum_tf"),
-        F.col("_b.docs_bin").alias("docs_bin"),
-        F.col("_b.tfs_bin").alias("tfs_bin"),
-        F.col("_b.dls_bin").alias("dls_bin"),
-        *([F.col("_b.pos_bin").alias("pos_bin")] if with_positions else []),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Combiner build path (r3): map-side tokenize + local invert + varint pack,
-# then ONE shuffle of packed partials, then a sorted-stream merge kernel.
+# Combiner build (r3), the one build packer: map-side tokenize + local
+# invert + varint pack, then ONE shuffle of packed partials, then a
+# sorted-stream merge kernel.
 #
-# Why: the r2 single-shuffle path still moved every TOKEN through the
-# exchange as an UnsafeRow struct(doc_id, pos, dl) (~30 B/token) and paid a
-# JVM sort_array(collect_list(struct)) per (term, chunk) group. Here each
-# map task inverts its own doc slice and ships one varint-packed partial row
+# Why: a token-level shuffle moves every TOKEN through the exchange as an
+# UnsafeRow struct(doc_id, pos, dl) (~30 B/token) and pays a JVM
+# sort_array(collect_list(struct)) per (term, chunk) group. Here each map
+# task inverts its own doc slice and ships one varint-packed partial row
 # per (term, chunk) (~4-6 B/token, ~25x fewer rows) — the classic map-side
 # combine the reference gets for free from its in-memory postings hash
 # (core/index/postings.cpp). The reduce side merges partials (disjoint doc
 # sets — each doc's tokens live in exactly one map batch) and re-blocks at
 # 128 docs, reusing the already-encoded tf/dl/pos bytes via offset slicing.
-# Output is byte-identical to pack_tokens() (pinned by tests).
+# Output is byte-identical to the token-level packer kept in tests/oracle.py
+# (pinned by tests).
 # ---------------------------------------------------------------------------
 
 _PARTIAL_SCHEMA = StructType(
@@ -558,9 +384,10 @@ _PARTIAL_SCHEMA = StructType(
 
 
 def text_py_spec(analyzer: Analyzer) -> dict | None:
-    """Python-side tokenizer spec for analyzers the combiner path can run
-    entirely inside an Arrow kernel; None -> caller falls back to
-    pack_tokens. TextAnalyzer's whole pipeline (accent fold, lowercase,
+    """Python-side tokenizer spec for analyzers the doc packer's text front
+    can run entirely inside an Arrow kernel; None -> the analyzer's Catalyst
+    token arrays feed the token-array front (`_token_arrays`) instead.
+    TextAnalyzer's whole pipeline (accent fold, lowercase,
     delimiter split, stopword gaps, Porter stem) has exact Python
     equivalents — the Arrow tokenizer already runs the same `re` split."""
     if type(analyzer) is not TextAnalyzer:
@@ -582,13 +409,14 @@ def _make_doc_packer(
     with_offsets: bool = False,
     payload_fn=None,
 ):
-    """mapInPandas kernel: docs (doc_id, text) -> partial posting rows, one
-    per (term, chunk) per input batch, plus one doclen row (term=NULL) per
-    batch carrying (doc_id, dl) for every input doc — so the build needs
-    exactly ONE tokenize pass (docmap reuses the doclen rows instead of
-    re-tokenizing the corpus). with_offsets additionally records each
-    occurrence's (char start, length) in the cased text — the highlighting
-    half of the reference .pay stream — via delimiter-span tokenization.
+    """mapInPandas kernel, the doc packer's text front: docs (doc_id, text)
+    -> `_invert`'s partial posting rows, one per (term, chunk) per input
+    batch, plus one doclen row (term=NULL) per batch carrying (doc_id, dl)
+    for every input doc — so the build needs exactly ONE tokenize pass
+    (docmap reuses the doclen rows instead of re-tokenizing the corpus).
+    with_offsets additionally records each occurrence's (char start,
+    length) in the cased text — the highlighting half of the reference .pay
+    stream — via delimiter-span tokenization.
 
     payload_fn (the generic payload half of .pay): a BATCH-vectorized
     callable (surface_tokens: object ndarray, starts: int64 ndarray,
@@ -680,8 +508,10 @@ def _make_doc_packer(
                 ]
             lens = np.fromiter((len(l) for l in tok_lists), dtype=np.int64, count=n)
             total = int(lens.sum())
-            out_frames = []
             dl = np.zeros(n, dtype=np.int64)
+            kdoc_idx = kpos = kcodes = np.zeros(0, dtype=np.int64)
+            fterms = np.zeros(0, dtype=object)
+            spans = pays = None
             if total:
                 flat = np.fromiter(
                     chain.from_iterable(tok_lists), dtype=object, count=total
@@ -702,6 +532,10 @@ def _make_doc_packer(
                 if with_spans:
                     kst = np.asarray(span_st, dtype=np.int64)[keep]
                     kln = np.asarray(span_ln, dtype=np.int64)[keep]
+                    if with_offsets:
+                        spans = (kst, kln)
+                    if payload_fn is not None and kc0.size:
+                        pays = payload_fn(flat[keep], kst, kln)
                 if use_stem:
                     stemmed = np.empty(uniq.size, dtype=object)
                     for i, t in enumerate(uniq):
@@ -715,153 +549,206 @@ def _make_doc_packer(
                 else:
                     kcodes = kc0
                     fterms = uniq
-                if kcodes.size:
-                    kdocs = ids[kdoc_idx]
-                    kdl = dl[kdoc_idx]
-                    kchunk = kdocs >> chunk_bits
-                    order = np.argsort(kcodes, kind="stable")
-                    c = kcodes[order]
-                    d = kdocs[order]
-                    p = kpos[order]
-                    l = kdl[order]
-                    ch = kchunk[order]
-                    m = c.size
-                    gb = np.empty(m, dtype=bool)
-                    gb[0] = True
-                    gb[1:] = (c[1:] != c[:-1]) | (ch[1:] != ch[:-1])
-                    db = gb.copy()
-                    db[1:] |= d[1:] != d[:-1]
-                    doc_starts = np.flatnonzero(db)
-                    udocs = d[doc_starts]
-                    tf = np.diff(np.append(doc_starts, m)).astype(np.int64)
-                    udl = l[doc_starts]
-                    # group starts in unique-doc space and token space
-                    ug_starts = np.flatnonzero(gb[doc_starts])
-                    tok_g_starts = np.flatnonzero(gb)
-                    nu = udocs.size
-                    # doc deltas reset at group start (first doc absolute)
-                    ddelta = np.empty(nu, dtype=np.int64)
-                    ddelta[0] = udocs[0]
-                    np.subtract(udocs[1:], udocs[:-1], out=ddelta[1:])
-                    ddelta[ug_starts] = udocs[ug_starts]
-                    docs_buf, docs_ends = varint_encode_offsets(ddelta)
-                    tfs_buf, tfs_ends = varint_encode_offsets(tf)
-                    dls_buf, dls_ends = varint_encode_offsets(udl)
-                    if with_positions:
-                        pdelta = np.empty(m, dtype=np.int64)
-                        pdelta[0] = p[0]
-                        np.subtract(p[1:], p[:-1], out=pdelta[1:])
-                        pdelta[db] = p[db]
-                        pos_buf, pos_ends = varint_encode_offsets(pdelta)
-                    if with_offsets:
-                        so = kst[order]
-                        lo = kln[order]
-                        sdelta = np.empty(m, dtype=np.int64)
-                        sdelta[0] = so[0]
-                        np.subtract(so[1:], so[:-1], out=sdelta[1:])
-                        sdelta[db] = so[db]  # start delta resets per doc
-                        ovals = np.empty(2 * m, dtype=np.int64)
-                        ovals[0::2] = sdelta
-                        ovals[1::2] = lo
-                        off_buf, off_ends = varint_encode_offsets(ovals)
-                        uo0 = np.concatenate(([0], off_ends))
-                    if payload_fn is not None:
-                        # batch-vectorized payload call over kept surface
-                        # occurrences, then reordered to token order
-                        pays = np.asarray(
-                            list(payload_fn(flat[keep], kst, kln)), dtype=object
-                        )[order]
-                        plens = np.fromiter((len(b) for b in pays), np.int64, count=m)
-                        paylen_buf, paylen_ends = varint_encode_offsets(plens)
-                        upl0 = np.concatenate(([0], paylen_ends))
-                        pay_bounds = np.concatenate(([0], np.cumsum(plens)))
-                        pay_all = b"".join(pays.tolist())
-                    ud0 = np.concatenate(([0], docs_ends))
-                    ut0 = np.concatenate(([0], tfs_ends))
-                    ul0 = np.concatenate(([0], dls_ends))
-                    if with_positions:
-                        up0 = np.concatenate(([0], pos_ends))
-                    g_doc_end = np.append(ug_starts[1:], nu)
-                    g_tok_end = np.append(tok_g_starts[1:], m)
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "term": fterms[c[tok_g_starts]],
-                                "_chunk": ch[tok_g_starts],
-                                "first_doc": udocs[ug_starts],
-                                "n_docs": (g_doc_end - ug_starts).astype(np.int32),
-                                "n_tok": (g_tok_end - tok_g_starts).astype(np.int64),
-                                "docs_bin": [
-                                    docs_buf[ud0[s] : ud0[e]]
-                                    for s, e in zip(ug_starts, g_doc_end)
-                                ],
-                                "tfs_bin": [
-                                    tfs_buf[ut0[s] : ut0[e]]
-                                    for s, e in zip(ug_starts, g_doc_end)
-                                ],
-                                "dls_bin": [
-                                    dls_buf[ul0[s] : ul0[e]]
-                                    for s, e in zip(ug_starts, g_doc_end)
-                                ],
-                                "pos_bin": (
-                                    [
-                                        pos_buf[up0[s] : up0[e]]
-                                        for s, e in zip(tok_g_starts, g_tok_end)
-                                    ]
-                                    if with_positions
-                                    else [None] * ug_starts.size
-                                ),
-                                "off_bin": (
-                                    [
-                                        off_buf[uo0[2 * s] : uo0[2 * e]]
-                                        for s, e in zip(tok_g_starts, g_tok_end)
-                                    ]
-                                    if with_offsets
-                                    else [None] * ug_starts.size
-                                ),
-                                "paylen_bin": (
-                                    [
-                                        paylen_buf[upl0[s] : upl0[e]]
-                                        for s, e in zip(tok_g_starts, g_tok_end)
-                                    ]
-                                    if payload_fn is not None
-                                    else [None] * ug_starts.size
-                                ),
-                                "pay_bin": (
-                                    [
-                                        pay_all[pay_bounds[s] : pay_bounds[e]]
-                                        for s, e in zip(tok_g_starts, g_tok_end)
-                                    ]
-                                    if payload_fn is not None
-                                    else [None] * ug_starts.size
-                                ),
-                            }
-                        )
-                    )
-            # doclen side-channel row: ALL docs of the batch (len 0 kept —
-            # docmap needs them; doclen readers filter len > 0)
-            sidx = np.argsort(ids, kind="stable")
-            out_frames.append(
-                pd.DataFrame(
-                    {
-                        "term": [None],
-                        "_chunk": [-1],
-                        "first_doc": [int(ids[sidx[0]])],
-                        "n_docs": np.array([n], dtype=np.int32),
-                        "n_tok": np.array([0], dtype=np.int64),
-                        "docs_bin": [varint_encode(delta_encode(ids[sidx]))],
-                        "tfs_bin": [b""],
-                        "dls_bin": [varint_encode(dl[sidx])],
-                        "pos_bin": [None],
-                        "off_bin": [None],
-                        "paylen_bin": [None],
-                        "pay_bin": [None],
-                    }
-                )
+            yield _invert(
+                ids, dl, kdoc_idx, kpos, kcodes, fterms, chunk_bits,
+                with_positions, spans, pays,
             )
-            yield pd.concat(out_frames, ignore_index=True)
 
     return fn
+
+
+def _deltas(v: np.ndarray, resets) -> np.ndarray:
+    """Successive differences of `v` (int64), restarting from the value
+    itself at `resets` (indices or a mask) and at index 0."""
+    out = np.empty(v.size, dtype=np.int64)
+    out[0] = v[0]
+    np.subtract(v[1:], v[:-1], out=out[1:])
+    out[resets] = v[resets]
+    return out
+
+
+def _cut(buf: bytes, ends0: np.ndarray, starts, stops) -> list[bytes]:
+    """Slices of an encoded stream between element boundaries: `ends0` is
+    the stream's byte offset of every element (0 first)."""
+    return [buf[ends0[s] : ends0[e]] for s, e in zip(starts, stops)]
+
+
+def _invert(
+    ids, dl, kdoc_idx, kpos, kcodes, fterms, chunk_bits, with_positions,
+    spans=None, pays=None,
+) -> pd.DataFrame:
+    """The doc packer's inversion core, shared by both fronts: one input
+    batch's kept tokens -> partial posting rows (`_PARTIAL_SCHEMA`), one per
+    (term, chunk), plus the batch's doclen side-channel row.
+
+    ids/dl: the batch's doc ids and emitted-token counts, one per doc (a
+    doc with no kept token has dl 0). Kept tokens, in (doc, position)
+    order: kdoc_idx (row of the doc in the batch), kpos (position), kcodes
+    (index into the unique terms `fterms`). spans: the kept tokens'
+    (char starts, lengths) for the offset stream; pays: their payload
+    bytes."""
+    out_frames = []
+    if kcodes.size:
+        kdocs = ids[kdoc_idx]
+        kdl = dl[kdoc_idx]
+        kchunk = kdocs >> chunk_bits
+        order = np.argsort(kcodes, kind="stable")
+        c = kcodes[order]
+        d = kdocs[order]
+        p = kpos[order]
+        l = kdl[order]
+        ch = kchunk[order]
+        m = c.size
+        gb = np.empty(m, dtype=bool)
+        gb[0] = True
+        gb[1:] = (c[1:] != c[:-1]) | (ch[1:] != ch[:-1])
+        db = gb.copy()
+        db[1:] |= d[1:] != d[:-1]
+        doc_starts = np.flatnonzero(db)
+        udocs = d[doc_starts]
+        tf = np.diff(np.append(doc_starts, m)).astype(np.int64)
+        udl = l[doc_starts]
+        # group starts in unique-doc space and token space
+        ug_starts = np.flatnonzero(gb[doc_starts])
+        tok_g_starts = np.flatnonzero(gb)
+        nu = udocs.size
+        # doc deltas reset at group start (first doc absolute)
+        docs_buf, docs_ends = varint_encode_offsets(_deltas(udocs, ug_starts))
+        tfs_buf, tfs_ends = varint_encode_offsets(tf)
+        dls_buf, dls_ends = varint_encode_offsets(udl)
+        if with_positions:
+            pos_buf, pos_ends = varint_encode_offsets(_deltas(p, db))
+        if spans is not None:
+            ovals = np.empty(2 * m, dtype=np.int64)
+            ovals[0::2] = _deltas(spans[0][order], db)  # start delta resets per doc
+            ovals[1::2] = spans[1][order]
+            off_buf, off_ends = varint_encode_offsets(ovals)
+            uo0 = np.concatenate(([0], off_ends))
+        if pays is not None:
+            # payloads arrive in kept-token order; reorder to token order
+            pays = np.asarray(list(pays), dtype=object)[order]
+            plens = np.fromiter((len(b) for b in pays), np.int64, count=m)
+            paylen_buf, paylen_ends = varint_encode_offsets(plens)
+            upl0 = np.concatenate(([0], paylen_ends))
+            pay_bounds = np.concatenate(([0], np.cumsum(plens)))
+            pay_all = b"".join(pays.tolist())
+        ud0 = np.concatenate(([0], docs_ends))
+        ut0 = np.concatenate(([0], tfs_ends))
+        ul0 = np.concatenate(([0], dls_ends))
+        if with_positions:
+            up0 = np.concatenate(([0], pos_ends))
+        g_doc_end = np.append(ug_starts[1:], nu)
+        g_tok_end = np.append(tok_g_starts[1:], m)
+        none = [None] * ug_starts.size
+        out_frames.append(
+            pd.DataFrame(
+                {
+                    "term": fterms[c[tok_g_starts]],
+                    "_chunk": ch[tok_g_starts],
+                    "first_doc": udocs[ug_starts],
+                    "n_docs": (g_doc_end - ug_starts).astype(np.int32),
+                    "n_tok": (g_tok_end - tok_g_starts).astype(np.int64),
+                    "docs_bin": _cut(docs_buf, ud0, ug_starts, g_doc_end),
+                    "tfs_bin": _cut(tfs_buf, ut0, ug_starts, g_doc_end),
+                    "dls_bin": _cut(dls_buf, ul0, ug_starts, g_doc_end),
+                    "pos_bin": (
+                        _cut(pos_buf, up0, tok_g_starts, g_tok_end) if with_positions else none
+                    ),
+                    "off_bin": (
+                        _cut(off_buf, uo0, 2 * tok_g_starts, 2 * g_tok_end)
+                        if spans is not None
+                        else none
+                    ),
+                    "paylen_bin": (
+                        _cut(paylen_buf, upl0, tok_g_starts, g_tok_end) if pays is not None else none
+                    ),
+                    "pay_bin": (
+                        _cut(pay_all, pay_bounds, tok_g_starts, g_tok_end) if pays is not None else none
+                    ),
+                }
+            )
+        )
+    # doclen side-channel row: ALL docs of the batch (len 0 kept —
+    # docmap needs them; doclen readers filter len > 0)
+    sidx = np.argsort(ids, kind="stable")
+    out_frames.append(
+        pd.DataFrame(
+            {
+                "term": [None],
+                "_chunk": [-1],
+                "first_doc": [int(ids[sidx[0]])],
+                "n_docs": np.array([ids.size], dtype=np.int32),
+                "n_tok": np.array([0], dtype=np.int64),
+                "docs_bin": [varint_encode(delta_encode(ids[sidx]))],
+                "tfs_bin": [b""],
+                "dls_bin": [varint_encode(dl[sidx])],
+                "pos_bin": [None],
+                "off_bin": [None],
+                "paylen_bin": [None],
+                "pay_bin": [None],
+            }
+        )
+    )
+    return pd.concat(out_frames, ignore_index=True)
+
+
+def _make_token_array_packer(chunk_bits: int, with_positions: bool):
+    """mapInPandas kernel, the doc packer's token-array front: per-doc rows
+    (doc_id, dl, pos array, term array) — the kept tokens in position
+    order, NULL arrays for docs without tokens — -> `_invert`'s partial
+    rows. A term repeated at one position counts once per occurrence."""
+
+    def fn(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            terms = pdf["term"].to_numpy()
+            lens = np.fromiter(
+                (0 if t is None else len(t) for t in terms), dtype=np.int64, count=n
+            )
+            kdoc_idx = np.repeat(np.arange(n), lens)
+            kpos = kcodes = np.zeros(0, dtype=np.int64)
+            fterms = np.zeros(0, dtype=object)
+            if kdoc_idx.size:
+                has = lens > 0
+                kcodes, fterms = pd.factorize(np.concatenate(terms[has].tolist()))
+                fterms = np.asarray(fterms, dtype=object)
+                kpos = np.concatenate(pdf["pos"].to_numpy()[has].tolist()).astype(np.int64)
+            yield _invert(
+                pdf["doc_id"].to_numpy().astype(np.int64),
+                pdf["dl"].to_numpy().astype(np.int64),
+                kdoc_idx, kpos, kcodes, fterms, chunk_bits, with_positions,
+            )
+
+    return fn
+
+
+def _token_arrays(docs: DataFrame, analyzer: Analyzer, text_col: str) -> DataFrame:
+    """docs (doc_id, text) -> the token-array front's input for a Catalyst
+    analyzer: per doc, the kept tokens' raw positions and terms as two
+    parallel arrays, and dl = their count. A NULL token is not a term and a
+    NULL token array is a doc with no tokens (dl 0), as a NULL text is on
+    the text front."""
+    probe = F.col("term")
+    if analyzer.map_term(probe) is not probe:
+        raise ValueError(
+            "a post-filter map_term needs a text_py_spec analyzer; "
+            f"{analyzer.name!r} has none"
+        )
+    kept = F.filter(
+        F.transform(
+            analyzer.raw_tokens(F.col(text_col)),
+            lambda t, i: F.struct(i.alias("pos"), t.alias("term")),
+        ),
+        lambda x: x["term"].isNotNull() & analyzer.keep(x["term"]),
+    )
+    return docs.select("doc_id", kept.alias("_k")).select(
+        "doc_id",
+        F.when(F.col("_k").isNull(), 0).otherwise(F.size("_k")).alias("dl"),
+        F.col("_k.pos").alias("pos"),
+        F.col("_k.term").alias("term"),
+    )
 
 
 def _merge_partial_arrays(
@@ -1008,11 +895,7 @@ def _make_partial_merger(
         bstart = grp_doc_start[gidx] + intra * block_size
         bend = np.minimum(bstart + block_size, grp_doc_end[gidx])
         # doc deltas with reset at block starts; encode once, slice per block
-        ddelta = np.empty(total_docs, dtype=np.int64)
-        ddelta[0] = docs[0]
-        np.subtract(docs[1:], docs[:-1], out=ddelta[1:])
-        ddelta[bstart] = docs[bstart]
-        docs_buf, docs_ends_b = varint_encode_offsets(ddelta)
+        docs_buf, docs_ends_b = varint_encode_offsets(_deltas(docs, bstart))
         d0 = np.concatenate(([0], docs_ends_b))
         # tf/dl bytes: values unchanged by re-blocking -> slice the original
         # concatenated streams at element boundaries (re-encode only if the
@@ -1033,6 +916,7 @@ def _make_partial_merger(
         sum_tf = np.add.reduceat(tfs, bstart)
         if with_positions or with_offsets or with_payloads:
             tok_off = np.concatenate(([0], np.cumsum(tfs)))
+            tok_s, tok_e = tok_off[bstart], tok_off[bend]
         if with_positions:
             if resorted:
                 pos_buf, p_ends = varint_encode_offsets(pos_deltas)
@@ -1065,29 +949,18 @@ def _make_partial_merger(
                 "max_tf": max_tf.astype(np.int32),
                 "min_dl": min_dl.astype(np.int32),
                 "sum_tf": sum_tf.astype(np.int64),
-                "docs_bin": [docs_buf[d0[s] : d0[e]] for s, e in zip(bstart, bend)],
-                "tfs_bin": [tfs_buf[t0[s] : t0[e]] for s, e in zip(bstart, bend)],
-                "dls_bin": [dls_buf[l0[s] : l0[e]] for s, e in zip(bstart, bend)],
+                "docs_bin": _cut(docs_buf, d0, bstart, bend),
+                "tfs_bin": _cut(tfs_buf, t0, bstart, bend),
+                "dls_bin": _cut(dls_buf, l0, bstart, bend),
             }
         )
         if with_positions:
-            out["pos_bin"] = [
-                pos_buf[p0[tok_off[s]] : p0[tok_off[e]]] for s, e in zip(bstart, bend)
-            ]
+            out["pos_bin"] = _cut(pos_buf, p0, tok_s, tok_e)
         if with_offsets:
-            out["off_bin"] = [
-                off_buf[o0[2 * tok_off[s]] : o0[2 * tok_off[e]]]
-                for s, e in zip(bstart, bend)
-            ]
+            out["off_bin"] = _cut(off_buf, o0, 2 * tok_s, 2 * tok_e)
         if with_payloads:
-            out["paylen_bin"] = [
-                paylen_cat[pl0[tok_off[s]] : pl0[tok_off[e]]]
-                for s, e in zip(bstart, bend)
-            ]
-            out["pay_bin"] = [
-                pay_buf[payb0[tok_off[s]] : payb0[tok_off[e]]]
-                for s, e in zip(bstart, bend)
-            ]
+            out["paylen_bin"] = _cut(paylen_cat, pl0, tok_s, tok_e)
+            out["pay_bin"] = _cut(pay_buf, payb0, tok_s, tok_e)
         # stream out in bounded slices (keeps Arrow batches reasonable)
         step = 65536
         for i in range(0, len(out), step):
@@ -1112,31 +985,58 @@ def pack_docs_combined(
     The returned `partials` DataFrame (persisted by the caller) also carries
     the per-doc lengths as term=NULL rows — `doclen_from_partials` projects
     them back out, so build_segment tokenizes the corpus exactly once.
-    with_offsets adds the per-occurrence (char start, length) highlighting
-    stream (`off_bin`). Requires `text_py_spec(analyzer)` support; callers
-    fall back to tokenize_stream + pack_tokens otherwise."""
+    A `text_py_spec` analyzer tokenizes inside the doc packer's text front;
+    any other analyzer's Catalyst token arrays (`_token_arrays`) feed its
+    token-array front. with_offsets adds the per-occurrence (char start,
+    length) highlighting stream (`off_bin`); it and payload_fn need the
+    text front's spans."""
     spec = text_py_spec(analyzer)
-    assert spec is not None, "analyzer lacks a python spec; use pack_tokens"
-    partials = docs.select("doc_id", text_col).mapInPandas(
-        _make_doc_packer(
-            spec, text_col, chunk_bits, with_positions, with_offsets, payload_fn
-        ),
-        _PARTIAL_SCHEMA,
+    if spec is not None:
+        partials = docs.select("doc_id", text_col).mapInPandas(
+            _make_doc_packer(
+                spec, text_col, chunk_bits, with_positions, with_offsets, payload_fn
+            ),
+            _PARTIAL_SCHEMA,
+        )
+    elif with_offsets or payload_fn is not None:
+        raise ValueError(
+            "with_offsets / payload_fn require a text_py_spec analyzer; "
+            "both need span-aware tokenization"
+        )
+    else:
+        partials = _token_arrays(docs, analyzer, text_col).mapInPandas(
+            _make_token_array_packer(chunk_bits, with_positions), _PARTIAL_SCHEMA
+        )
+    packed = merge_partials(
+        partials, block_size, chunk_bits, with_positions, with_offsets,
+        payload_fn is not None, num_partitions,
     )
-    n_part = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
+    return packed, partials
+
+
+def merge_partials(
+    partials: DataFrame,
+    block_size: int = BLOCK_SIZE,
+    chunk_bits: int = DEFAULT_CHUNK_BITS,
+    with_positions: bool = True,
+    with_offsets: bool = False,
+    with_payloads: bool = False,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Doc-packer partials -> packed block rows: the one shuffle by
+    (term, chunk), then `_make_partial_merger`. The doclen rows stay out."""
+    n_part = num_partitions or partials.sparkSession.sparkContext.defaultParallelism
     post = (
         partials.where(F.col("term").isNotNull())
         .repartition(n_part, "term", "_chunk")
         .sortWithinPartitions("term", "_chunk", "first_doc")
     )
-    with_payloads = payload_fn is not None
-    packed = post.mapInPandas(
+    return post.mapInPandas(
         _make_partial_merger(
             block_size, chunk_bits, with_positions, with_offsets, with_payloads
         ),
         packed_schema(with_positions, with_offsets, with_payloads),
     )
-    return packed, partials
 
 
 def packed_schema(
@@ -1207,8 +1107,8 @@ def tokenize_stream(
     with_positions: bool = True,
 ) -> DataFrame:
     """docs -> token-level rows (doc_id, dl, term[, pos]) with stopword
-    position gaps and post-filter term mapping (stemming) — the front half
-    of invert() without the per-(doc, term) aggregation."""
+    position gaps and post-filter term mapping (stemming): an analyzer's
+    token stream as Catalyst rows, with no packing."""
     analyzer = analyzer or TextAnalyzer()
     raw = docs.select(
         F.col("doc_id"),
@@ -1223,15 +1123,6 @@ def tokenize_stream(
     if with_positions:
         return toks.select("doc_id", "dl", "term", F.col("pos").cast("long").alias("pos"))
     return toks.select("doc_id", "dl", "term")
-
-
-def term_stats(postings_flat: DataFrame) -> DataFrame:
-    """Per-term corpus stats (reference term_meta docs_count/freq,
-    core/formats/formats.hpp:92-108)."""
-    return postings_flat.groupBy("term").agg(
-        F.count("*").alias("doc_freq"),
-        F.sum("tf").alias("total_tf"),
-    )
 
 
 def term_stats_from_packed(packed: DataFrame) -> DataFrame:

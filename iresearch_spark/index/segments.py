@@ -56,19 +56,22 @@ from iresearch_spark.analysis.analyzers import Analyzer, TextAnalyzer
 from iresearch_spark.functions.hashing import xxhash64_bytes
 from iresearch_spark.index.build import (
     DEFAULT_CHUNK_BITS,
+    _PARTIAL_SCHEMA,
     _make_doc_packer,
     _make_partial_merger,
+    _make_token_array_packer,
     assign_doc_ids,
     decode_doclen,
     doclen_from_partials,
+    merge_partials,
     null_key_error,
     pack_docs_combined,
-    pack_tokens,
     packed_schema,
     term_stats_from_packed,
     text_py_spec,
-    tokenize_stream,
 )
+# perfbench's traced runs time this module's attribute of that name
+from iresearch_spark.index.build import tokenize_stream  # noqa: F401
 from iresearch_spark.index.codec import BLOCK_SIZE
 
 TABLES = ("postings", "doclen", "term_stats", "docmap", "lineage")
@@ -495,10 +498,13 @@ def build_segment(
     highlighting stream; payload_fn stores caller-supplied per-occurrence
     payload bytes (the generic half of the reference .pay stream,
     formats_10.cpp:166-267) — a batch-vectorized callable
-    (tokens, starts, lens) -> sequence of bytes. Both combiner-path only.
+    (tokens, starts, lens) -> sequence of bytes. Both need a
+    `text_py_spec` analyzer (span-aware tokenization).
 
-    Two sites, the same kernels and the same tables. When the analyzer
-    runs on the combiner path (`text_py_spec`) and `input_bytes(docs)`
+    One packer for every build: the doc packer's text front for
+    `text_py_spec` analyzers, its token-array front for Catalyst analyzers,
+    then `_make_partial_merger`. Two sites, the same kernels and the same
+    tables. When the analyzer has a `text_py_spec` and `input_bytes(docs)`
     (a materialized cache's size, or parquet footers' uncompressed size;
     read without a job) is at most LOCAL_BUILD_MAX_BYTES, the segment is
     built on the driver (`_build_local`): one `toArrow()` collect is the
@@ -532,6 +538,12 @@ def build_segment(
             spark, store, docs, seg_name, text_col, key_cols, doc_id_col, analyzer,
             with_positions, with_offsets, payload_fn,
         )
+    return _commit_segment(store, seg_name, agg, analyzer.name, commit)
+
+
+def _commit_segment(store, seg_name, agg: dict, analyzer_name: str, commit: bool) -> SegmentMeta:
+    """The built segment's SegmentMeta from its docmap aggregates,
+    committed into the manifest when `commit`."""
     meta = SegmentMeta(
         name=seg_name,
         docs_count=agg["n"],
@@ -547,9 +559,31 @@ def build_segment(
         m = store.current()
         m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
         m.gen += 1
-        m.analyzer = analyzer.name
+        m.analyzer = analyzer_name
         store.commit(m)
     return meta
+
+
+def _docmap_aggs(docmap: DataFrame) -> dict:
+    """SegmentMeta's counts over a docmap (docs_count/sum_len over len > 0)."""
+    agg = docmap.agg(
+        F.count("*").alias("total"),
+        F.count(F.when(F.col("len") > 0, 1)).alias("n"),
+        F.coalesce(F.sum("len"), F.lit(0)).alias("s"),
+        F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
+        F.coalesce(F.max("doc_id"), F.lit(-1)).alias("hi"),
+        F.coalesce(F.max("len"), F.lit(0)).alias("mx"),
+    ).collect()[0]
+    return {k: int(agg[k]) for k in ("total", "n", "s", "lo", "hi", "mx")}
+
+
+def _write_term_stats(spark, store, seg_name, n_part) -> None:
+    """term_stats from the written postings' block metadata."""
+    term_stats_from_packed(spark.read.parquet(store.seg_path(seg_name, "postings"))).repartition(
+        max(1, n_part // 4), "term"
+    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+        store.seg_path(seg_name, "term_stats")
+    )
 
 
 def _build_spark(
@@ -568,71 +602,44 @@ def _build_spark(
         docs = docs.withColumnRenamed(doc_id_col, "doc_id")
     docs = docs.persist()
 
-    # Combiner build (r3): map-side tokenize + local invert + varint-pack
-    # partials per input slice, shuffle ONLY packed bytes (~4-6 B/token vs
-    # ~30 B/token for struct rows, ~25x fewer rows), then a sorted-stream
-    # merge kernel re-blocks at 128 docs. Byte-identical output to the r2
-    # token-level pack_tokens path (pinned by tests); partials also carry
-    # the per-doc lengths, so docmap no longer re-tokenizes the corpus
-    # (the r2 build tokenized twice). Falls back to tokenize_stream +
-    # pack_tokens for analyzers without a Python-side spec.
+    # One packer for every build (the combiner, r3): map-side tokenize +
+    # local invert + varint-pack partials per input slice, shuffle ONLY
+    # packed bytes (~4-6 B/token vs ~30 B/token for struct rows, ~25x fewer
+    # rows), then a sorted-stream merge kernel re-blocks at 128 docs.
+    # `text_py_spec` analyzers tokenize in the packer; the rest hand it
+    # their Catalyst token arrays. Partials also carry the per-doc lengths,
+    # so docmap never re-tokenizes the corpus.
     n_part = spark.sparkContext.defaultParallelism
-    partials = None
-    if text_py_spec(analyzer) is not None:
-        packed, partials = pack_docs_combined(
-            docs, analyzer, text_col,
-            with_positions=with_positions, with_offsets=with_offsets,
-            payload_fn=payload_fn,
-            num_partitions=n_part,
-        )
-        partials = partials.persist()
-    else:
-        if with_offsets or payload_fn is not None:
-            raise ValueError(
-                "with_offsets / payload_fn require a combiner-path analyzer "
-                "(text_py_spec); both need span-aware tokenization"
-            )
-        tokens = tokenize_stream(docs, text_col, analyzer, with_positions)
-        packed = pack_tokens(tokens, with_positions=with_positions, num_partitions=n_part)
+    packed, partials = pack_docs_combined(
+        docs, analyzer, text_col,
+        with_positions=with_positions, with_offsets=with_offsets,
+        payload_fn=payload_fn,
+        num_partitions=n_part,
+    )
+    partials = partials.persist()
     packed.write.mode("overwrite").parquet(store.seg_path(seg_name, "postings"))
     if inner_cache is not None:
         # the write above materialized the docs cache; assign_doc_ids'
         # intermediate range-partition cache is no longer needed
         inner_cache.unpersist()
 
-    packed_on_disk = spark.read.parquet(store.seg_path(seg_name, "postings"))
-
-    def _write_term_stats():
-        term_stats_from_packed(packed_on_disk).repartition(
-            max(1, n_part // 4), "term"
-        ).sortWithinPartitions("term").write.mode("overwrite").parquet(
-            store.seg_path(seg_name, "term_stats")
-        )
-
     # docmap carries the doc length (`len`) so no separate doclen table is
-    # written — IndexStore.read(seg, "doclen") projects it back out. On the
-    # combiner path the lengths come from the cached partials' doclen
-    # side-channel rows (zero extra tokenize passes); fallback path
-    # tokenizes once more via the analyzer expression.
+    # written — IndexStore.read(seg, "doclen") projects it back out. The
+    # lengths come from the cached partials' doclen side-channel rows (zero
+    # extra tokenize passes).
     ident_cols = _ident_cols(docs)
-    if partials is not None:
-        dl_df = doclen_from_partials(partials)
-        # the doclen side is (doc_id, len) — 16 B/doc; when the doc count
-        # is known (assign_doc_ids collected it anyway) and small enough,
-        # broadcast it so the docmap write shuffles NOTHING (guide §3.1 —
-        # without stats Spark picked a two-sided shuffle join here).
-        # Cluster scale keeps the shuffle join: cap parameterized via env.
-        bcast_max = int(os.environ.get("IR_DL_BCAST_MAX", "2000000"))
-        if n_docs_known is not None and n_docs_known <= bcast_max:
-            dl_df = F.broadcast(dl_df)
-        dm = docs.select("doc_id", *ident_cols).join(dl_df, "doc_id").select(
-            "doc_id", "len", *ident_cols
-        )
-    else:
-        dl_expr = F.size(
-            F.filter(analyzer.raw_tokens(F.col(text_col)), lambda t: analyzer.keep(t))
-        ).cast("int")
-        dm = docs.select("doc_id", dl_expr.alias("len"), *ident_cols)
+    dl_df = doclen_from_partials(partials)
+    # the doclen side is (doc_id, len) — 16 B/doc; when the doc count
+    # is known (assign_doc_ids collected it anyway) and small enough,
+    # broadcast it so the docmap write shuffles NOTHING (guide §3.1 —
+    # without stats Spark picked a two-sided shuffle join here).
+    # Cluster scale keeps the shuffle join: cap parameterized via env.
+    bcast_max = int(os.environ.get("IR_DL_BCAST_MAX", "2000000"))
+    if n_docs_known is not None and n_docs_known <= bcast_max:
+        dl_df = F.broadcast(dl_df)
+    dm = docs.select("doc_id", *ident_cols).join(dl_df, "doc_id").select(
+        "doc_id", "len", *ident_cols
+    )
 
     def _write_docmap():
         _sized_for_write(dm, n_docs_known).write.mode("overwrite").parquet(
@@ -654,27 +661,20 @@ def _build_spark(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(f) for f in (_write_term_stats, _write_docmap, _write_lineage)
+            pool.submit(f)
+            for f in (
+                lambda: _write_term_stats(spark, store, seg_name, n_part),
+                _write_docmap,
+                _write_lineage,
+            )
         ]
         for fu in futs:
             fu.result()
-    if partials is not None:
-        partials.unpersist()
+    partials.unpersist()
 
-    agg = (
-        store.read(spark, seg_name, "docmap")
-        .agg(
-            F.count("*").alias("total"),
-            F.count(F.when(F.col("len") > 0, 1)).alias("n"),
-            F.coalesce(F.sum("len"), F.lit(0)).alias("s"),
-            F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
-            F.coalesce(F.max("doc_id"), F.lit(-1)).alias("hi"),
-            F.coalesce(F.max("len"), F.lit(0)).alias("mx"),
-        )
-        .collect()[0]
-    )
+    agg = _docmap_aggs(store.read(spark, seg_name, "docmap"))
     docs.unpersist()
-    return {k: int(agg[k]) for k in ("total", "n", "s", "lo", "hi", "mx")}
+    return agg
 
 
 def _write_table(path: str, tbl, schema: StructType) -> None:
@@ -864,18 +864,31 @@ def build_segment_from_tokens(
     several terms may share one position).
 
     tokens: (doc_id, dl, term, pos) rows — multiple terms per (doc_id,
-    pos) allowed. docmap: (doc_id, len, ...identity columns) for every doc.
-    Lineage is recorded over the docmap rows (no raw text at this seam).
+    pos) allowed, and a term repeated at one position counts once per
+    occurrence in tf. The rows are grouped per doc into position-sorted
+    arrays and packed by the build's one packer (the doc packer's
+    token-array front, then `_make_partial_merger`); the caller's dl and
+    positions pass through unchanged and NULL terms are dropped. docmap:
+    (doc_id, len, ...identity columns) for every doc. Lineage is recorded
+    over the docmap rows (no raw text at this seam).
     """
     n_part = spark.sparkContext.defaultParallelism
-    packed = pack_tokens(tokens, with_positions=with_positions, num_partitions=n_part)
-    packed.write.mode("overwrite").parquet(store.seg_path(seg_name, "postings"))
-    packed_on_disk = spark.read.parquet(store.seg_path(seg_name, "postings"))
-    term_stats_from_packed(packed_on_disk).repartition(
-        max(1, n_part // 4), "term"
-    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
-        store.seg_path(seg_name, "term_stats")
+    pos = F.col("pos") if with_positions else F.lit(0)
+    per_doc = (
+        tokens.where(F.col("term").isNotNull())
+        .groupBy("doc_id", "dl")
+        .agg(F.sort_array(F.collect_list(F.struct(pos.alias("pos"), "term"))).alias("_k"))
+        .select("doc_id", "dl", F.col("_k.pos").alias("pos"), F.col("_k.term").alias("term"))
+        # docs ascend in every packer batch, so the merger keeps its
+        # sorted-stream path
+        .sortWithinPartitions("doc_id")
     )
+    partials = per_doc.mapInPandas(
+        _make_token_array_packer(DEFAULT_CHUNK_BITS, with_positions), _PARTIAL_SCHEMA
+    )
+    packed = merge_partials(partials, with_positions=with_positions, num_partitions=n_part)
+    packed.write.mode("overwrite").parquet(store.seg_path(seg_name, "postings"))
+    _write_term_stats(spark, store, seg_name, n_part)
     docmap.write.mode("overwrite").parquet(store.seg_path(seg_name, "docmap"))
     key = F.col("doc_id").cast("string")
     docmap_src = store.read(spark, seg_name, "docmap")
@@ -886,32 +899,7 @@ def build_segment_from_tokens(
         F.sum("len").alias("bytes"),
         F.expr("bit_xor(_rh)").alias("input_hash"),
     ).write.mode("overwrite").parquet(store.seg_path(seg_name, "lineage"))
-    agg = docmap_src.agg(
-        F.count("*").alias("total"),
-        F.count(F.when(F.col("len") > 0, 1)).alias("n"),
-        F.coalesce(F.sum("len"), F.lit(0)).alias("s"),
-        F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
-        F.coalesce(F.max("doc_id"), F.lit(-1)).alias("hi"),
-        F.coalesce(F.max("len"), F.lit(0)).alias("mx"),
-    ).collect()[0]
-    meta = SegmentMeta(
-        name=seg_name,
-        docs_count=int(agg["n"]),
-        sum_len=int(agg["s"]),
-        bytes=store.dir_bytes(seg_name),
-        created_at=time.time(),
-        docs_total=int(agg["total"]),
-        min_doc=int(agg["lo"]),
-        max_doc=int(agg["hi"]),
-        max_dl=int(agg["mx"]),
-    )
-    if commit:
-        m = store.current()
-        m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
-        m.gen += 1
-        m.analyzer = analyzer_name
-        store.commit(m)
-    return meta
+    return _commit_segment(store, seg_name, _docmap_aggs(docmap_src), analyzer_name, commit)
 
 
 def import_segment(

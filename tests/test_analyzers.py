@@ -161,13 +161,15 @@ def test_text_analyzer_stem_and_accents(spark):
 
 def test_invert_with_stemming_preserves_positions(spark):
     from iresearch_spark.analysis.analyzers import TextAnalyzer
-    from iresearch_spark.index.build import invert
+    from iresearch_spark.index.build import doclen_from_partials, pack_docs_combined
+    from iresearch_spark.index.merge import unpack_postings
 
     df = spark.createDataFrame(
         [(1, "the running runner runs")], "doc_id long, content string"
     )
-    flat, doclen = invert(df, analyzer=TextAnalyzer(stem=True))
+    packed, partials = pack_docs_combined(df, TextAnalyzer(stem=True))
+    flat = unpack_postings(packed.withColumn("segment", F.lit("s0")), with_positions=True)
     rows = {r["term"]: (r["tf"], list(r["positions"])) for r in flat.collect()}
     # 'the' is a stopword (position gap at 0); running/runs stem to 'run'
     assert rows == {"run": (2, [1, 3]), "runner": (1, [2])}
-    assert {r["doc_id"]: r["len"] for r in doclen.collect()} == {1: 3}
+    assert {r["doc_id"]: r["len"] for r in doclen_from_partials(partials).collect()} == {1: 3}

@@ -8,15 +8,21 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from iresearch_spark.analysis.analyzers import TextAnalyzer
+from iresearch_spark.analysis.analyzers import (
+    CollationAnalyzer,
+    NgramAnalyzer,
+    PipelineAnalyzer,
+    SegmentationAnalyzer,
+    TextAnalyzer,
+)
 from iresearch_spark.corpus import generate_corpus
 from iresearch_spark.index.build import (
     assign_doc_ids,
     doclen_from_partials,
     pack_docs_combined,
-    pack_tokens,
     tokenize_stream,
 )
+from tests.oracle import pack_tokens
 
 
 @pytest.fixture(scope="module")
@@ -29,30 +35,72 @@ def docs2k(spark):
     d.unpersist()
 
 
+SEG_STOP = SegmentationAnalyzer(stopwords=("the", "a", "of", "to", "in", "is", "for", "return"))
+
+
 @pytest.mark.parametrize(
-    "analyzer,with_pos",
+    "analyzer,with_pos,max_doc",
     [
-        (TextAnalyzer(), True),
-        (TextAnalyzer(stem=True), True),
-        (TextAnalyzer(), False),
+        (TextAnalyzer(), True, None),
+        (TextAnalyzer(stem=True), True, None),
+        (TextAnalyzer(), False, None),
+        (SEG_STOP, True, None),
+        (NgramAnalyzer(), True, 200),
+        (CollationAnalyzer(), True, None),
+        (PipelineAnalyzer(stages=(SegmentationAnalyzer(), NgramAnalyzer(min_n=3, max_n=3))), True, 200),
+        (SEG_STOP, False, None),
     ],
-    ids=["plain", "stem", "nopos"],
+    ids=["plain", "stem", "nopos", "seg_stop", "ngram", "collation", "pipeline", "seg_nopos"],
 )
-def test_combiner_pack_byte_identical(spark, docs2k, analyzer, with_pos):
-    """The r3 combiner build (map-side invert + partial merge) must emit
-    byte-identical packed blocks to the r2 token-level pack_tokens path."""
+def test_combiner_pack_byte_identical(spark, docs2k, analyzer, with_pos, max_doc):
+    """The combiner build (map-side invert + partial merge) — the text
+    front for TextAnalyzer, the token-array front for Catalyst analyzers —
+    must emit byte-identical packed blocks to the token-level pack_tokens
+    reference. n-gram analyzers run on a 200-doc slice (~12x the tokens
+    per doc)."""
+    docs = docs2k if max_doc is None else docs2k.where(F.col("doc_id") <= max_doc)
     old = pack_tokens(
-        tokenize_stream(docs2k, "content", analyzer, with_pos),
+        tokenize_stream(docs, "content", analyzer, with_pos),
         with_positions=with_pos,
         num_partitions=8,
     )
     new, _ = pack_docs_combined(
-        docs2k, analyzer, "content", with_positions=with_pos, num_partitions=8
+        docs, analyzer, "content", with_positions=with_pos, num_partitions=8
     )
     cols = old.columns
     o = sorted(tuple(r) for r in old.collect())
     n = sorted(tuple(r) for r in new.select(*cols).collect())
+    assert o and o == n
+
+
+def test_seam_pack_byte_identical(spark, tmp_path):
+    """build_segment_from_tokens packs through the one build packer and
+    writes the postings the token-level reference packs from the same
+    rows: several terms at one position (a word's 2-grams) and one term
+    repeated at one position (the 2-grams of 'aaaa'), with the caller's dl
+    and shared positions unchanged."""
+    from iresearch_spark.index.segments import IndexStore, build_segment_from_tokens
+
+    texts = ["aaaa bcd aaaa", "xyz bcd", "aaaa", "bcdbcd x aaaa y"]
+    rows = []
+    for doc_id, text in enumerate(texts, start=1):
+        words = text.split()
+        for pos, w in enumerate(words):
+            grams = [w[i : i + 2] for i in range(len(w) - 1)] or [w]
+            rows += [(doc_id, len(words), g, pos) for g in grams]
+    tokens = spark.createDataFrame(rows, "doc_id long, dl int, term string, pos long")
+    docmap = spark.createDataFrame(
+        [(i, len(t.split())) for i, t in enumerate(texts, start=1)], "doc_id long, len int"
+    )
+    store = IndexStore(str(tmp_path / "seam"))
+    build_segment_from_tokens(spark, store, tokens, docmap, "s0")
+    old = pack_tokens(tokens, num_partitions=4)
+    cols = old.columns
+    o = sorted(tuple(r) for r in old.collect())
+    n = sorted(tuple(r) for r in store.read(spark, "s0", "postings").select(*cols).collect())
     assert o == n
+    (aa,) = [r for r in n if r[0] == "aa"]
+    assert aa[cols.index("sum_tf")] == 3 * 4  # each of the 4 'aaaa' counts 3 'aa'
 
 
 def test_doclen_side_channel(spark, docs2k):

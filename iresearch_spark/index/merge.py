@@ -23,6 +23,7 @@ bucket with the most mergeable members wins.
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Iterator
 
@@ -45,7 +46,15 @@ from iresearch_spark.index.build import (
     term_stats_from_packed,
 )
 from iresearch_spark.index.codec import BLOCK_SIZE, varint_decode, varint_encode_offsets
-from iresearch_spark.index.segments import IndexStore, Manifest, SegmentMeta
+from iresearch_spark.index import segments
+from iresearch_spark.index.segments import (
+    IndexStore,
+    Manifest,
+    SegmentMeta,
+    _arrow_capped,
+    _live_tombstone_col,
+    live_tombstones,
+)
 
 FLAT_SCHEMA = StructType(
     [
@@ -405,6 +414,8 @@ def docmap_shift_spec(
 
 MERGE_INLINE_DELETES_MAX = 2_000_000
 
+_log = logging.getLogger(__name__)
+
 
 def merge_segments(
     spark: SparkSession,
@@ -428,30 +439,47 @@ def merge_segments(
     (`off_bin`) merge losslessly (the r3 flat path dropped the
     highlighting stream — r3 ADVICE).
 
-    Fallback (tombstone sets beyond MERGE_INLINE_DELETES_MAX, or members
-    with non-dense id ranges where the rank formula doesn't hold): the
-    flat unpack -> doc_map join -> pack_postings pipeline. Offsets
-    segments refuse the fallback with a clear error instead of silently
-    dropping the stream."""
-    import time as _time
+    The tombstones (default: the store's, read with pyarrow; a caller's
+    frame in one capped collect) ride in the kernel up to
+    MERGE_INLINE_DELETES_MAX. Two sites run that inline path with the same
+    kernels and the same tables: when the members' postings and docmap
+    footers hold at most `segments.LOCAL_BUILD_MAX_BYTES` uncompressed and
+    every member's id range is dense, the merge runs on the driver
+    (`_merge_local`: no Spark job, tables written with pyarrow — the
+    reference's in-process merge); otherwise as Spark jobs. The site, the
+    footer bytes and the cap go to one DEBUG log line.
 
-    from iresearch_spark.index.build import _PARTIAL_SCHEMA, _make_partial_merger, packed_schema
+    Fallback (tombstone sets beyond MERGE_INLINE_DELETES_MAX, members
+    with non-dense id ranges under tombstones where the rank formula
+    doesn't hold, or `force_flat`): the flat unpack -> doc_map join ->
+    pack_postings pipeline on Spark. Offsets segments refuse the fallback
+    with a clear error instead of silently dropping the stream."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     manifest = store.current()
     by_name = {s.name: s for s in manifest.segments}
     assert all(s in by_name for s in seg_names), "unknown segment in merge set"
     seg_names = sorted(seg_names, key=lambda s: manifest.segments.index(by_name[s]))
 
-    if tombstones is None:  # default: apply the store's live-delete mask
-        tombstones = store.read_deletes(spark)
-    if tombstones is not None:
+    def tomb_df():
         # caller-supplied masks may cover segments outside the merge set
         # (e.g. the store's whole delete table) — restrict first
-        tombstones = tombstones.where(F.col("segment").isin(seg_names))
-        if not tombstones.limit(1).count():
-            tombstones = None
+        df = tombstones if tombstones is not None else store.read_deletes(spark)
+        return df.where(F.col("segment").isin(seg_names))
 
-    blocks = store.read_union(spark, "postings", seg_names)
+    # the members' tombstones as Arrow, or None over the inline cap
+    dels, n_del = (None, -1) if tombstones is not None else store.deletes_table(
+        manifest, max_rows=MERGE_INLINE_DELETES_MAX
+    )
+    has_dels = n_del != 0
+    if has_dels:
+        if dels is None:
+            dels = _arrow_capped(tomb_df().select("segment", "doc_id"), MERGE_INLINE_DELETES_MAX)
+        if dels is not None:
+            dels = dels.filter(pc.is_in(dels["segment"], value_set=pa.array(seg_names, pa.string())))
+            has_dels = dels.num_rows > 0
+
     # parquet-footer schema probe (pyarrow) instead of one spark.read per
     # segment: 10-way merges paid ~10 file-listing + schema-inference
     # round-trips just to learn column sets (r7; guide §1.2 fixed-overhead)
@@ -490,6 +518,152 @@ def merge_segments(
         }
     else:
         aggs = docmap_aggs(spark, store, seg_names)
+    # dense-rank remap needs dense per-segment id ranges (ids are dense for
+    # every assign_doc_ids build; caller ids may not be)
+    dense = all(
+        s in aggs and aggs[s]["hi"] - aggs[s]["lo"] + 1 == aggs[s]["n"] for s in seg_names
+    )
+    # force_flat exists to BENCHMARK the legacy flat pipeline against the
+    # packed path on identical inputs (bench.py merge_10seg_flat); it is
+    # never the production choice
+    inline = not force_flat and (not has_dels or (dels is not None and dense))
+    dels_by_seg: dict[str, np.ndarray] = {}
+    shift_by_seg: dict[str, int] = {}
+    if inline and has_dels:
+        for s, d in dels.to_pandas().groupby("segment")["doc_id"]:
+            # clip tombstones to each segment's id range so live counts
+            # match build_doc_map's anti-join exactly
+            a, d = aggs[s], np.unique(d.to_numpy(np.int64))
+            dels_by_seg[s] = d[(d >= a["lo"]) & (d <= a["hi"])]
+        acc = 1  # dense 1-based renumber (build_doc_map parity)
+        for s in seg_names:
+            a = aggs[s]
+            shift_by_seg[s] = acc - a["lo"]
+            acc += a["n"] - dels_by_seg.get(s, np.empty(0)).size
+    else:
+        shift_by_seg = docmap_shift_spec(spark, store, seg_names, aggs)
+
+    footer = segments._uncompressed_bytes(
+        f for s in seg_names for t in ("postings", "docmap")
+        for f in segments._parquet_files(store.seg_path(s, t))
+    )
+    cap = segments.LOCAL_BUILD_MAX_BYTES
+    local = inline and dense and footer <= cap
+    if _log.isEnabledFor(logging.DEBUG):
+        _log.debug(
+            "merge_segments %s: site=%s footer_bytes=%s cap=%s",
+            new_name, "local" if local else "spark", footer, cap,
+        )
+    streams = (with_positions, with_offsets, with_payloads)
+    if local:
+        agg = _merge_local(store, seg_names, new_name, shift_by_seg, dels_by_seg, has_dels, *streams)
+    else:
+        agg = _merge_spark(
+            spark, store, seg_names, new_name, tomb_df() if has_dels else None, aggs,
+            inline, shift_by_seg, dels_by_seg, *streams,
+        )
+    meta = segments._segment_meta(store, new_name, agg)
+    if commit:
+        m = store.current()
+        kept = [s for s in m.segments if s.name not in seg_names and s.name != new_name]
+        m.segments = kept + [meta]
+        m.gen += 1
+        # merged members' tombstones were applied physically above
+        store.rewrite_deletes_after_merge(spark, m, seg_names)
+        store.commit(m)
+    return meta
+
+
+def _block_cols(with_positions: bool, with_offsets: bool, with_payloads: bool) -> list[str]:
+    """The postings columns `_blocks_to_partials_kernel` reads."""
+    cols = ["term", "doc_count", "docs_bin", "tfs_bin", "dls_bin"]
+    if with_positions:
+        cols.append("pos_bin")
+    if with_offsets:
+        cols.append("off_bin")
+    if with_payloads:
+        cols.extend(["paylen_bin", "pay_bin"])
+    return cols
+
+
+def _merge_local(
+    store, seg_names, new_name, shift_by_seg, dels_by_seg, has_dels,
+    with_positions, with_offsets, with_payloads,
+) -> dict:
+    """merge_segments' driver-local site: the Spark site's inline path on
+    one in-process partition, with no Spark job; returns the docmap
+    aggregates.
+
+    The members' blocks (read with pyarrow) go through the unchanged
+    `_blocks_to_partials_kernel` and `_make_partial_merger`
+    (`segments._local_postings`, as the local build). The docmap takes the
+    kernel's remap (base shift, minus the tombstones below, tombstoned
+    docs dropped) with the Spark site's doc_id type; lineage sums and XORs
+    the members' rows per part in numpy. All four tables are written with
+    `segments._write_table`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    def read(s, table, columns=None):
+        return pads.dataset(store.seg_path(s, table), format="parquet").to_table(columns=columns)
+
+    streams = (with_positions, with_offsets, with_payloads)
+    blocks = pd.concat(
+        [read(s, "postings", _block_cols(*streams)).to_pandas().assign(segment=s) for s in seg_names],
+        ignore_index=True,
+    )
+    kernel = _blocks_to_partials_kernel(shift_by_seg, dels_by_seg, DEFAULT_CHUNK_BITS, *streams)
+    parts = list(kernel(iter([blocks])))
+    postings = segments._local_postings(pd.concat(parts, ignore_index=True) if parts else None, *streams)
+
+    docmaps, fields, id_types = [], {}, set()
+    for s in seg_names:
+        t = read(s, "docmap")
+        sch = segments._footer_schema(store.seg_path(s, "docmap"))
+        id_types.add(sch["doc_id"].dataType)
+        fields.update({f.name: f for f in sch if f.name not in fields and f.name != "doc_id"})
+        ids = t["doc_id"].to_numpy().astype(np.int64)
+        d = dels_by_seg.get(s, np.empty(0, dtype=np.int64))
+        new_ids = pa.array(ids + shift_by_seg[s] - np.searchsorted(d, ids))
+        t = t.set_column(t.schema.get_field_index("doc_id"), "doc_id", new_ids)
+        docmaps.append(t.filter(pa.array(~np.isin(ids, d))))
+    docmap = pa.concat_tables(docmaps, promote_options="default").sort_by("doc_id")
+    # the Spark site's doc_id type: member ids plus an int literal shift
+    # without tombstones (int when both are ints), the renumbering's long
+    # with them
+    i32 = np.iinfo(np.int32)
+    int_ids = not has_dels and id_types == {IntegerType()} and all(
+        i32.min <= v <= i32.max for v in shift_by_seg.values()
+    )
+    fields["doc_id"] = StructField("doc_id", IntegerType() if int_ids else LongType())
+
+    lin = pa.concat_tables([read(s, "lineage") for s in seg_names], promote_options="default")
+    longs = lambda c: c.to_numpy(zero_copy_only=False).astype(np.int64)  # noqa: E731
+    lineage = segments._lineage_rows(
+        longs(lin["part"]), longs(lin["doc_count"]), longs(pc.fill_null(lin["bytes"], 0)),
+        pc.is_valid(lin["bytes"]).to_numpy(zero_copy_only=False), longs(lin["input_hash"]),
+    )
+    tables = {
+        "postings": postings,
+        "term_stats": segments._local_term_stats(postings[0]),
+        "docmap": (docmap, StructType(list(fields.values()))),
+        "lineage": (lineage, segments.LINEAGE_SCHEMA),
+    }
+    for table, (t, sch) in tables.items():
+        segments._write_table(store.seg_path(new_name, table), t, sch)
+    lens = docmap["len"].fill_null(0).to_numpy(zero_copy_only=False)
+    return segments._local_aggs(docmap["doc_id"].to_numpy(), lens)
+
+
+def _merge_spark(
+    spark, store, seg_names, new_name, tombstones, aggs, inline, shift_by_seg, dels_by_seg,
+    with_positions, with_offsets, with_payloads,
+) -> dict:
+    """merge_segments' Spark site (the inline kernel path or the flat
+    fallback); returns the docmap aggregates."""
+    from iresearch_spark.index.build import _PARTIAL_SCHEMA, _make_partial_merger, packed_schema
+
     # with no tombstones the doc map is a pure base-shift expression —
     # materializing + joining it is a full shuffle of every docmap row for
     # what a create_map projection computes inline (r7; guide §2.4);
@@ -499,53 +673,12 @@ def merge_segments(
         if tombstones is not None
         else None
     )
-    dels_by_seg: dict[str, np.ndarray] = {}
-    shift_by_seg: dict[str, int] = {}
-    # force_flat exists to BENCHMARK the legacy flat pipeline against the
-    # packed path on identical inputs (bench.py merge_10seg_flat); it is
-    # never the production choice
-    inline = not force_flat
-    if inline and tombstones is not None:
-        if tombstones.count() <= MERGE_INLINE_DELETES_MAX:
-            tmp: dict[str, list[int]] = {}
-            for r in tombstones.select("segment", "doc_id").collect():
-                tmp.setdefault(r["segment"], []).append(r["doc_id"])
-            dels_by_seg = {
-                s: np.unique(np.asarray(v, dtype=np.int64)) for s, v in tmp.items()
-            }
-        else:
-            inline = False
-        if inline:
-            # dense-rank remap needs dense per-segment id ranges (ids are
-            # dense for every assign_doc_ids build; caller ids may not be)
-            inline = all(
-                s in aggs and aggs[s]["hi"] - aggs[s]["lo"] + 1 == aggs[s]["n"]
-                for s in seg_names
-            )
-        if inline:
-            # clip tombstones to each segment's id range so live counts
-            # match build_doc_map's anti-join exactly
-            for s in list(dels_by_seg):
-                a, d = aggs[s], dels_by_seg[s]
-                dels_by_seg[s] = d[(d >= a["lo"]) & (d <= a["hi"])]
-            acc = 1  # dense 1-based renumber (build_doc_map parity)
-            for s in seg_names:
-                a = aggs[s]
-                shift_by_seg[s] = acc - a["lo"]
-                acc += a["n"] - dels_by_seg.get(s, np.empty(0)).size
-    else:
-        shift_by_seg = docmap_shift_spec(spark, store, seg_names, aggs)
-
+    blocks = store.read_union(spark, "postings", seg_names)
     n_part = spark.sparkContext.defaultParallelism
     if inline:
-        in_cols = ["segment", "term", "doc_count", "docs_bin", "tfs_bin", "dls_bin"]
-        if with_positions:
-            in_cols.append("pos_bin")
-        if with_offsets:
-            in_cols.append("off_bin")
-        if with_payloads:
-            in_cols.extend(["paylen_bin", "pay_bin"])
-        partials = blocks.select(*in_cols).mapInPandas(
+        partials = blocks.select(
+            "segment", *_block_cols(with_positions, with_offsets, with_payloads)
+        ).mapInPandas(
             _blocks_to_partials_kernel(
                 shift_by_seg,
                 dels_by_seg,
@@ -619,10 +752,9 @@ def merge_segments(
         new_docmap = docmaps.join(doc_map, ["segment", "doc_id"]).select(
             *keep_cols, F.col("new_doc").alias("doc_id")
         )
-    from iresearch_spark.index.segments import _sized_for_write
 
     def _write_docmap():
-        _sized_for_write(
+        segments._sized_for_write(
             new_docmap, sum(a["n"] for a in aggs.values())
         ).write.mode("overwrite").parquet(store.seg_path(new_name, "docmap"))
 
@@ -646,44 +778,13 @@ def merge_segments(
         ]:
             fu.result()
 
-    agg = (
-        store.read(spark, new_name, "docmap")
-        .agg(
-            F.count("*").alias("total"),
-            F.count(F.when(F.col("len") > 0, 1)).alias("n"),
-            F.coalesce(F.sum(F.when(F.col("len") > 0, F.col("len"))), F.lit(0)).alias("s"),
-            F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
-            F.coalesce(F.max("doc_id"), F.lit(-1)).alias("hi"),
-            F.coalesce(F.max(F.when(F.col("len") > 0, F.col("len"))), F.lit(0)).alias("mx"),
-        )
-        .collect()[0]
-    )
-    meta = SegmentMeta(
-        name=new_name,
-        docs_count=int(agg["n"]),
-        sum_len=int(agg["s"]),
-        bytes=store.dir_bytes(new_name),
-        created_at=_time.time(),
-        docs_total=int(agg["total"]),  # live ids spanned (incl. zero-token docs)
-        min_doc=int(agg["lo"]),
-        max_doc=int(agg["hi"]),
-        max_dl=int(agg["mx"]),
-    )
+    agg = segments._docmap_aggs(store.read(spark, new_name, "docmap"))
     if doc_map is not None:
         doc_map.unpersist()
         inner = getattr(doc_map, "_ir_cached_input", None)
         if inner is not None:  # tombstone-path range-partition cache (r3 ADVICE leak)
             inner.unpersist()
-
-    if commit:
-        m = store.current()
-        kept = [s for s in m.segments if s.name not in seg_names and s.name != new_name]
-        m.segments = kept + [meta]
-        m.gen += 1
-        # merged members' tombstones were applied physically above
-        store.rewrite_deletes_after_merge(spark, m, seg_names)
-        store.commit(m)
-    return meta
+    return agg
 
 
 # ---------------------------------------------------------------------------
@@ -810,15 +911,23 @@ def consolidate(
 ) -> SegmentMeta | None:
     """One consolidation round: policy -> merge -> commit. Queued live
     deletes feed the policy's fill factors (dirty segments score higher via
-    the removal-cleanup term) and are physically dropped by the merge."""
+    the removal-cleanup term) and are physically dropped by the merge.
+    The per-segment tombstone counts come from the pyarrow-read table (no
+    Spark job) up to MERGE_INLINE_DELETES_MAX, so a small index
+    consolidates without a job when `merge_segments` runs on the driver."""
     m = store.current()
     live = None
-    dels = store.read_deletes(spark)
-    if dels is not None:
-        counts = {
-            r["segment"]: r["n"]
-            for r in dels.groupBy("segment").agg(F.count("*").alias("n")).collect()
-        }
+    dels, n_del = store.deletes_table(m, max_rows=MERGE_INLINE_DELETES_MAX)
+    if n_del:
+        if dels is not None:
+            names, n = np.unique(live_tombstones(m.segments, dels)[0]["segment"], return_counts=True)
+            counts = dict(zip(names, n.tolist()))
+        else:  # over the inline cap: Spark counts them
+            counts = {
+                r["segment"]: r["n"]
+                for r in store.read_deletes(spark).where(_live_tombstone_col(m.segments))
+                .groupBy("segment").agg(F.count("*").alias("n")).collect()
+            }
         live = {s.name: s.doc_span - counts.get(s.name, 0) for s in m.segments}
     cands = tier_candidates(m, live_docs=live, **policy_kw)
     if not cands:

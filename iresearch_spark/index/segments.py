@@ -29,7 +29,10 @@ build_segment (the flush) runs at one of two sites with the same kernels
 and the same tables: a small input of known size (`input_bytes` at most
 LOCAL_BUILD_MAX_BYTES) is built on the driver from one collect and
 written with pyarrow; anything larger or of unknown size runs as Spark
-jobs.
+jobs. The other writes follow the same rule: `IndexStore.remove` merges
+up to MAX_INLINE_TOMBSTONES tombstones on the driver, and
+`merge.merge_segments` merges members whose footers hold at most
+LOCAL_BUILD_MAX_BYTES on the driver.
 """
 
 from __future__ import annotations
@@ -225,17 +228,10 @@ class IndexStore:
         """spark.read.parquet with the schema Spark wrote into the first
         file's footer: Spark's own schema inference runs one job per read
         (an engine open reads four tables), the footer read is local."""
-        import glob
-
-        import pyarrow.parquet as pq
-        from pyspark.sql.types import StructType
-
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
-        js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
-        if js is None:
+        schema = _footer_schema(path)
+        if schema is None:
             return spark.read.parquet(path)
-        return spark.read.schema(StructType.fromJson(json.loads(js))).parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def read(self, spark: SparkSession, seg: str, table: str) -> DataFrame:
         # doclen is a projection of docmap (which carries `len`) — one less
@@ -255,10 +251,7 @@ class IndexStore:
         footer (pyarrow) — a schema probe without a spark.read per call
         (merge reads K of these just to detect stream mixes; the Spark
         path pays file-listing + schema-inference per segment)."""
-        import glob
-
-        path = self.seg_path(seg, table)
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        files = _parquet_files(self.seg_path(seg, table))
         if files:
             import pyarrow.parquet as pq
 
@@ -293,27 +286,74 @@ class IndexStore:
             return None
         return self.read_parquet(spark, self.deletes_path(m.deletes_gen))
 
+    def deletes_table(self, manifest: Manifest | None = None, max_rows: int | None = None):
+        """(table, rows): the tombstones of `manifest` (default: the
+        current one) as a pyarrow (segment, doc_id) table, and their row
+        count from the parquet footers. Launches no Spark job. The table
+        is None when nothing is deleted, or when `rows` exceeds `max_rows`
+        (then only the footers are read)."""
+        import pyarrow.dataset as pads
+
+        m = manifest if manifest is not None else self.current()
+        if m.deletes_gen is None:
+            return None, 0
+        ds = pads.dataset(self.deletes_path(m.deletes_gen), format="parquet")
+        n = ds.count_rows()
+        if max_rows is not None and n > max_rows:
+            return None, n
+        return ds.to_table(columns=["segment", "doc_id"]), n
+
     def remove(self, spark: SparkSession, condemned: DataFrame) -> Manifest:
         """Queue live deletes: `condemned` = (segment, doc_id) rows. Merged
         with any existing tombstones and committed as a new generation —
         the query-time mask analogue of IndexWriter::Remove(filter)
         (core/index/index_writer.hpp:381-416). Deleted docs stay in the
         stats (idf/avgdl) until a merge physically drops them, matching
-        the reference's mask-until-consolidation semantics."""
+        the reference's mask-until-consolidation semantics. Only rows that
+        name a doc of a live segment are kept (`live_tombstones`).
+
+        Two sites, the same table. When the existing tombstones' footer
+        row count and the condemned rows (one capped collect, the only
+        Spark job) are each within the engine's inline tier
+        (MAX_INLINE_TOMBSTONES), the rows are merged on the driver
+        (deduplicated in numpy) and written with pyarrow — the
+        reference's in-process doc mask. Otherwise the Spark plan
+        (union, distinct, one-file write) runs. A frame made from a
+        Python list has no size Spark knows, so the rule is a capped read,
+        not `input_bytes`. The site, the row counts and the cap go to one
+        DEBUG log line."""
+        from iresearch_spark.search.executor import MAX_INLINE_TOMBSTONES as cap
+
         m = self.current()
-        live_segs = [s.name for s in m.segments]
-        dels = condemned.select("segment", "doc_id").where(
-            F.col("segment").isin(live_segs)
-        )
-        existing = self.read_deletes(spark)
-        if existing is not None:
-            dels = dels.unionByName(existing.select("segment", "doc_id"))
-        new_gen = m.gen + 1
-        dels.distinct().coalesce(1).write.mode("overwrite").parquet(
-            self.deletes_path(new_gen)
-        )
-        m.gen = new_gen
-        m.deletes_gen = new_gen
+        old, n_old = self.deletes_table(m, max_rows=cap)
+        new = _arrow_capped(condemned.select("segment", "doc_id"), cap) if n_old <= cap else None
+        if _log.isEnabledFor(logging.DEBUG):
+            _log.debug(
+                "remove gen %s: site=%s rows=%s existing=%s cap=%s",
+                m.gen + 1, "spark" if new is None else "local",
+                None if new is None else new.num_rows, n_old, cap,
+            )
+        m.gen += 1
+        path = self.deletes_path(m.gen)
+        if new is not None:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            tbl = new if old is None else pa.concat_tables([new, old], promote_options="permissive")
+            tbl = live_tombstones(m.segments, tbl)[0]
+            codes, names = pd.factorize(tbl["segment"].to_numpy(zero_copy_only=False))
+            keys = np.unique(np.stack([codes, tbl["doc_id"].to_numpy()]), axis=1)
+            out = pa.table({"segment": pa.array(names[keys[0]], pa.string()), "doc_id": keys[1]})
+            _write_table(path, out, from_arrow_schema(tbl.schema))
+        else:
+            dels = condemned.select("segment", "doc_id")
+            existing = self.read_deletes(spark)
+            if existing is not None:
+                dels = dels.unionByName(existing.select("segment", "doc_id"))
+            dels.where(_live_tombstone_col(m.segments)).distinct().coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(path)
+        m.deletes_gen = m.gen
         self.commit(m)
         return m
 
@@ -322,22 +362,32 @@ class IndexStore:
     ) -> None:
         """Drop tombstones belonging to segments that a merge just removed
         (the merge applied them physically). Mutates `manifest` in place —
-        call AFTER bumping manifest.gen, BEFORE commit()."""
-        existing = (
-            self.read_parquet(spark, self.deletes_path(manifest.deletes_gen))
-            if manifest.deletes_gen is not None
-            else None
-        )
-        if existing is None:
+        call AFTER bumping manifest.gen, BEFORE commit(). Up to
+        MAX_INLINE_TOMBSTONES tombstones are filtered and written with
+        pyarrow (no Spark job); a larger table is filtered by Spark."""
+        from iresearch_spark.search.executor import MAX_INLINE_TOMBSTONES as cap
+
+        if manifest.deletes_gen is None:
             return
-        remaining = existing.where(~F.col("segment").isin(merged_away))
-        if remaining.limit(1).count() == 0:
-            manifest.deletes_gen = None
-            return
-        remaining.coalesce(1).write.mode("overwrite").parquet(
-            self.deletes_path(manifest.gen)
-        )
-        manifest.deletes_gen = manifest.gen
+        path = self.deletes_path(manifest.gen)
+        tbl, _ = self.deletes_table(manifest, max_rows=cap)
+        if tbl is not None:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            gone = pc.is_in(tbl["segment"], value_set=pa.array(merged_away, pa.string()))
+            remaining = tbl.filter(pc.invert(gone))
+            keep = remaining.num_rows > 0
+            if keep:
+                _write_table(path, remaining, from_arrow_schema(tbl.schema))
+        else:
+            existing = self.read_parquet(spark, self.deletes_path(manifest.deletes_gen))
+            remaining = existing.where(~F.col("segment").isin(merged_away))
+            keep = remaining.limit(1).count() > 0
+            if keep:
+                remaining.coalesce(1).write.mode("overwrite").parquet(path)
+        manifest.deletes_gen = manifest.gen if keep else None
 
     def dir_bytes(self, seg: str) -> int:
         total = 0
@@ -347,11 +397,91 @@ class IndexStore:
         return total
 
 
+def _parquet_files(path: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema written into the footer of the first parquet file
+    under `path`, or None."""
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
+    js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if js is None else StructType.fromJson(json.loads(js))
+
+
+def _uncompressed_bytes(files) -> int:
+    """Uncompressed row-group bytes in the footers of parquet `files`."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
+    return total
+
+
+def _arrow_capped(df: DataFrame, cap: int):
+    """`df` as a pyarrow table from one collect of at most `cap` + 1 rows,
+    or None when it holds more than `cap` rows."""
+    tbl = df.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
+
+
+def _doc_ranges(segments: list[SegmentMeta]) -> dict[str, tuple[int, int, int]]:
+    """segment -> (lo, hi, base_doc): the doc ids [lo, hi] a tombstone of
+    it may name. A legacy entry with no recorded range (and some docs)
+    admits every id; an empty segment admits none."""
+    i64 = np.iinfo(np.int64)
+    out = {}
+    for s in segments:
+        known = s.max_doc >= s.min_doc and s.max_doc >= 0
+        lo, hi = (s.min_doc, s.max_doc) if known or not s.doc_span else (i64.min, i64.max)
+        out[s.name] = (lo, hi, s.base_doc)
+    return out
+
+
+def live_tombstones(segments: list[SegmentMeta], tbl):
+    """(rows, gdocs): the rows of a pyarrow (segment, doc_id) tombstone
+    table that name a doc of one of `segments`, and their global doc ids
+    (base_doc + doc_id). A doc id outside its segment's [min_doc, max_doc]
+    names no doc of it — read as a gdoc it would delete a doc of the next
+    segment — so it is dropped, as are rows of other segments and rows
+    with a NULL. `_live_tombstone_col` is the same filter for Spark."""
+    import pyarrow as pa
+
+    tbl = tbl.select(["segment", "doc_id"]).drop_null()
+    codes, names = pd.factorize(tbl["segment"].to_numpy(zero_copy_only=False))
+    rng = _doc_ranges(segments)
+    lo, hi, base = np.array([rng.get(n, (1, 0, 0)) for n in names], dtype=np.int64).reshape(-1, 3)[codes].T
+    doc = tbl["doc_id"].to_numpy().astype(np.int64)
+    keep = (doc >= lo) & (doc <= hi)
+    return tbl.filter(pa.array(keep)), (doc + base)[keep]
+
+
+def _live_tombstone_col(segments: list[SegmentMeta]):
+    """`live_tombstones`' row filter as a Spark column over (segment,
+    doc_id)."""
+    if not segments:
+        return F.lit(False)
+    rng = _doc_ranges(segments)
+    lo, hi = (F.create_map(*[F.lit(x) for k, r in rng.items() for x in (k, r[i])]) for i in (0, 1))
+    seg = F.col("segment")
+    return F.col("doc_id").between(lo[seg], hi[seg])
+
+
 # ---------------------------------------------------------------------------
 # Segment build (the "flush" job)
 # ---------------------------------------------------------------------------
 
 LINEAGE_PARTS = 64  # logical lineage partitioning (stable, not physical)
+LINEAGE_SCHEMA = StructType(
+    [StructField(c, LongType()) for c in ("part", "doc_count", "bytes", "input_hash")]
+)
 
 # Largest input (`input_bytes`, bytes) that build_segment builds on the
 # driver instead of through Spark jobs. From `scripts/local_budget_sweep.py
@@ -433,8 +563,6 @@ def input_bytes(df: DataFrame, limit: int) -> int | None:
     bounds the input from above."""
     from urllib.parse import unquote, urlparse
 
-    import pyarrow.parquet as pq
-
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
     total = 0
     for i in range(leaves.size()):
@@ -453,12 +581,10 @@ def input_bytes(df: DataFrame, limit: int) -> int | None:
             rel = leaf.relation()
             if total + int(rel.sizeInBytes()) > limit:
                 return total + int(rel.sizeInBytes())
-            for f in rel.location().inputFiles():
-                url = urlparse(f)
-                if url.scheme != "file":
-                    return None
-                md = pq.read_metadata(unquote(url.path))
-                total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
+            urls = [urlparse(f) for f in rel.location().inputFiles()]
+            if any(u.scheme != "file" for u in urls):
+                return None
+            total += _uncompressed_bytes(unquote(u.path) for u in urls)
         else:
             return None
     return total
@@ -544,7 +670,19 @@ def build_segment(
 def _commit_segment(store, seg_name, agg: dict, analyzer_name: str, commit: bool) -> SegmentMeta:
     """The built segment's SegmentMeta from its docmap aggregates,
     committed into the manifest when `commit`."""
-    meta = SegmentMeta(
+    meta = _segment_meta(store, seg_name, agg)
+    if commit:
+        m = store.current()
+        m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
+        m.gen += 1
+        m.analyzer = analyzer_name
+        store.commit(m)
+    return meta
+
+
+def _segment_meta(store, seg_name: str, agg: dict) -> SegmentMeta:
+    """A written segment's SegmentMeta from its docmap aggregates."""
+    return SegmentMeta(
         name=seg_name,
         docs_count=agg["n"],
         sum_len=agg["s"],
@@ -555,13 +693,6 @@ def _commit_segment(store, seg_name, agg: dict, analyzer_name: str, commit: bool
         max_doc=agg["hi"],
         max_dl=agg["mx"],
     )
-    if commit:
-        m = store.current()
-        m.segments = [s for s in m.segments if s.name != seg_name] + [meta]
-        m.gen += 1
-        m.analyzer = analyzer_name
-        store.commit(m)
-    return meta
 
 
 def _docmap_aggs(docmap: DataFrame) -> dict:
@@ -575,6 +706,19 @@ def _docmap_aggs(docmap: DataFrame) -> dict:
         F.coalesce(F.max("len"), F.lit(0)).alias("mx"),
     ).collect()[0]
     return {k: int(agg[k]) for k in ("total", "n", "s", "lo", "hi", "mx")}
+
+
+def _local_aggs(ids: np.ndarray, lens: np.ndarray) -> dict:
+    """`_docmap_aggs` of a docmap's doc ids and (non-negative) lengths."""
+    n = ids.size
+    return {
+        "total": n,
+        "n": int((lens > 0).sum()),
+        "s": int(lens.sum()),
+        "lo": int(ids.min()) if n else 0,
+        "hi": int(ids.max()) if n else -1,
+        "mx": int(lens.max()) if n else 0,
+    }
 
 
 def _write_term_stats(spark, store, seg_name, n_part) -> None:
@@ -706,16 +850,39 @@ def _write_table(path: str, tbl, schema: StructType) -> None:
     )
 
 
+def _lineage_rows(part, doc_count, nbytes, has_bytes, input_hash):
+    """`_lineage`'s aggregate over rows given as numpy arrays: doc_count
+    and bytes summed and input_hash XORed per part; bytes is NULL for a
+    part with no non-NULL bytes, as Spark's sum."""
+    import pyarrow as pa
+
+    if not part.size:
+        return pa.table({c: pa.array([], pa.int64()) for c in ("part", "doc_count", "bytes", "input_hash")})
+    order = np.argsort(part, kind="stable")
+    p = part[order]
+    starts = np.flatnonzero(np.r_[True, p[1:] != p[:-1]])
+    return pa.table(
+        {
+            "part": p[starts],
+            "doc_count": np.add.reduceat(doc_count[order], starts),
+            "bytes": pa.array(
+                np.add.reduceat(nbytes[order], starts),
+                mask=~np.logical_or.reduceat(has_bytes[order], starts),
+            ),
+            "input_hash": np.bitwise_xor.reduceat(input_hash[order], starts),
+        }
+    )
+
+
 def _local_lineage(tbl, text_col: str):
     """`_lineage`'s rows from the collected input (`_lkey` = the lineage
     key string Spark built in the collect): the same xxhash64 values,
     computed with functions/hashing.py."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     n = tbl.num_rows
     if not n:
-        return pa.table({c: pa.array([], pa.int64()) for c in ("part", "doc_count", "bytes", "input_hash")})
+        return _lineage_rows(*[np.zeros(0, dtype=np.int64)] * 5)
     key_hash = xxhash64_bytes(tbl["_lkey"].to_pylist())
     row_hash = key_hash
     if "content_sha256" in tbl.column_names:
@@ -729,20 +896,37 @@ def _local_lineage(tbl, text_col: str):
     chars = pc.utf8_length(text).fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
     has_text = pc.is_valid(text).to_numpy(zero_copy_only=False)
     part = np.mod(key_hash, LINEAGE_PARTS)
-    order = np.argsort(part, kind="stable")
-    p = part[order]
-    starts = np.flatnonzero(np.r_[True, p[1:] != p[:-1]])
-    return pa.table(
-        {
-            "part": p[starts],
-            "doc_count": np.diff(np.r_[starts, n]),
-            # sum(length(text)) is NULL for a part whose texts are all NULL
-            "bytes": pa.array(
-                np.add.reduceat(chars[order], starts),
-                mask=~np.logical_or.reduceat(has_text[order], starts),
-            ),
-            "input_hash": np.bitwise_xor.reduceat(row_hash[order], starts),
-        }
+    return _lineage_rows(part, np.ones(n, dtype=np.int64), chars, has_text, row_hash)
+
+
+def _local_postings(partials: pd.DataFrame | None, with_positions, with_offsets, with_payloads):
+    """(table, schema): the postings `_make_partial_merger` makes of
+    combiner `partials` on one in-process partition, sorted by (term,
+    _chunk, first_doc) first. The table runs in (term, block_id) order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = packed_schema(with_positions, with_offsets, with_payloads)
+    blocks = []
+    if partials is not None and len(partials):
+        post = partials.sort_values(["term", "_chunk", "first_doc"], kind="mergesort", ignore_index=True)
+        merger = _make_partial_merger(
+            BLOCK_SIZE, DEFAULT_CHUNK_BITS, with_positions, with_offsets, with_payloads
+        )
+        blocks = list(merger(iter([post])))
+    if not blocks:
+        return to_arrow_schema(schema).empty_table(), schema
+    return pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), preserve_index=False), schema
+
+
+def _local_term_stats(postings):
+    """(table, schema): term_stats of a postings table, in term order."""
+    import pyarrow as pa
+
+    ts = postings.group_by("term").aggregate([("doc_count", "sum"), ("sum_tf", "sum")]).sort_by("term")
+    return (
+        pa.table([ts["term"], ts["doc_count_sum"], ts["sum_tf_sum"]], ["term", "doc_freq", "total_tf"]),
+        StructType([StructField("term", StringType()), *[StructField(c, LongType()) for c in ("doc_freq", "total_tf")]]),
     )
 
 
@@ -762,7 +946,6 @@ def _build_local(
     the docmap aggregates follow in pyarrow/numpy."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     assign = doc_id_col is None
     if not assign and doc_id_col != "doc_id":
@@ -789,36 +972,18 @@ def _build_local(
         spec, text_col, DEFAULT_CHUNK_BITS, with_positions, with_offsets, payload_fn
     )
     parts = list(packer(pdf.iloc[i : i + step] for i in range(0, n, step)))
-    with_payloads = payload_fn is not None
-    schema = packed_schema(with_positions, with_offsets, with_payloads)
-    lens, blocks = np.zeros(0, dtype=np.int32), []
+    lens, post = np.zeros(0, dtype=np.int32), None
     if parts:
         partials = pd.concat(parts, ignore_index=True)
         is_dl = partials["term"].isna().to_numpy()
         # slices are id-sorted and each doclen row lists its slice's ids in
         # stable order, so the lens line up with tbl's rows
         lens = decode_doclen(partials[is_dl])[1]
-        post = partials[~is_dl].sort_values(
-            ["term", "_chunk", "first_doc"], kind="mergesort", ignore_index=True
-        )
-        merger = _make_partial_merger(
-            BLOCK_SIZE, DEFAULT_CHUNK_BITS, with_positions, with_offsets, with_payloads
-        )
-        blocks = list(merger(iter([post])))
-    # merger output runs in (term, _chunk, intra) order == (term, block_id)
-    postings = (
-        pa.Table.from_pandas(pd.concat(blocks, ignore_index=True), preserve_index=False)
-        if blocks
-        else to_arrow_schema(schema).empty_table()
-    )
-    ts = postings.group_by("term").aggregate([("doc_count", "sum"), ("sum_tf", "sum")]).sort_by("term")
-    longs = lambda *names: [StructField(c, LongType()) for c in names]  # noqa: E731
+        post = partials[~is_dl]
+    postings = _local_postings(post, with_positions, with_offsets, payload_fn is not None)
     tables = {
-        "postings": (postings, schema),
-        "term_stats": (
-            pa.table([ts["term"], ts["doc_count_sum"], ts["sum_tf_sum"]], ["term", "doc_freq", "total_tf"]),
-            StructType([StructField("term", StringType()), *longs("doc_freq", "total_tf")]),
-        ),
+        "postings": postings,
+        "term_stats": _local_term_stats(postings[0]),
         "docmap": (
             pa.table({"doc_id": tbl["doc_id"], "len": lens, **{c: tbl[c] for c in ident}}),
             StructType(
@@ -829,22 +994,11 @@ def _build_local(
                 ]
             ),
         ),
-        "lineage": (
-            _local_lineage(tbl, text_col),
-            StructType(longs("part", "doc_count", "bytes", "input_hash")),
-        ),
+        "lineage": (_local_lineage(tbl, text_col), LINEAGE_SCHEMA),
     }
     for table, (t, sch) in tables.items():
         _write_table(store.seg_path(seg_name, table), t, sch)
-    ids = tbl["doc_id"].to_numpy()
-    return {
-        "total": n,
-        "n": int((lens > 0).sum()),
-        "s": int(lens.sum()),
-        "lo": int(ids.min()) if n else 0,
-        "hi": int(ids.max()) if n else -1,
-        "mx": int(lens.max()) if n else 0,
-    }
+    return _local_aggs(tbl["doc_id"].to_numpy(), lens)
 
 
 def build_segment_from_tokens(

@@ -97,7 +97,7 @@ from pyspark.sql.types import (
 
 from iresearch_spark.index.build import DEFAULT_CHUNK_BITS
 from iresearch_spark.index.codec import delta_decode, varint_decode
-from iresearch_spark.index.segments import IndexStore
+from iresearch_spark.index.segments import IndexStore, _live_tombstone_col, live_tombstones
 from iresearch_spark.search.query import (
     All,
     And,
@@ -855,18 +855,9 @@ class SearchEngine:
             # no Spark job on open: the row count comes from the parquet
             # footers, the kernel-resident tiers read (segment, doc_id)
             # with pyarrow and map to gdocs in numpy
-            import pyarrow.dataset as pads
-
-            dels = pads.dataset(
-                store.deletes_path(self.manifest.deletes_gen), format="parquet"
-            )
-            n_del = dels.count_rows()
-            if n_del <= MAX_BCAST_TOMBSTONES:
-                t = dels.to_table(columns=["segment", "doc_id"]).to_pandas()
-                arr = np.sort(
-                    t["doc_id"].to_numpy(np.int64)
-                    + t["segment"].map(self.seg_base).to_numpy(np.int64)
-                )
+            t, n_del = store.deletes_table(self.manifest, max_rows=MAX_BCAST_TOMBSTONES)
+            if t is not None:
+                arr = np.sort(live_tombstones(self.manifest.segments, t)[1])
                 if n_del <= MAX_INLINE_TOMBSTONES:
                     self._deleted_arr = arr
                 else:
@@ -978,9 +969,9 @@ class SearchEngine:
                     )
                 )
             else:
-                self._tomb_gdocs = self.tombstones.select(
-                    (F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc")
-                )
+                self._tomb_gdocs = self.tombstones.where(
+                    _live_tombstone_col(self.manifest.segments)
+                ).select((F.col("doc_id") + self._base_map()[F.col("segment")]).alias("gdoc"))
         return hits.join(self._tomb_gdocs, "gdoc", "left_anti")
 
     VOCAB_CACHE_MAX = 1_000_000

@@ -2,11 +2,13 @@
 top-10 (or, with `--batch`, of one 24-query `topk_batch`) at the
 driver-local site vs the Spark site, across doc_freq. With `--build`,
 the sweep for `segments.LOCAL_BUILD_MAX_BYTES` instead: `build_segment`
-at both sites across input sizes.
+at both sites across input sizes; with `--merge`, the same cap as
+`merge_segments` reads it, across member sizes.
 
     python scripts/local_budget_sweep.py [--docs 1000000] [--reps 5] [--batch]
     python scripts/local_budget_sweep.py --build [--sizes 1500,6000,...] [--reps 2]
         [--inputs cached,parquet,uncached]
+    python scripts/local_budget_sweep.py --merge [--sizes 1500,3000,...] [--reps 2]
 
 Builds one segment of `--docs` short synthetic docs in which term `pM`
 occurs in M of every 1000 docs (doc_freq = docs * M / 1000) and term `fI`
@@ -34,6 +36,14 @@ with; "-" when the input has no trusted size), the best wall time and
 the CPU of that run (driver + JVM + Python workers) per site, the site
 the cap picks, and whether the four tables the two sites wrote hold the
 same rows with the same schemas.
+
+`--merge` builds two segments of `--sizes` docs each (a cached
+`generate_corpus` frame per member), deletes 1% of the first one's docs,
+and merges the pair `--reps` times at each site (forced) after one
+warm-up merge per site. Each row prints the members' uncompressed
+postings + docmap footer bytes (the number the cap is compared with), the
+best wall time and the CPU of that run per site, the site the cap picks,
+and whether the four merged tables are the same.
 """
 
 from __future__ import annotations
@@ -140,6 +150,70 @@ def build_sweep(spark, a) -> None:
                       f"{site:>6} {same}", flush=True)
 
 
+def merge_sweep(spark, a) -> None:
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from perfbench.acct import cpu_split
+
+    from iresearch_spark.corpus import generate_corpus
+    from iresearch_spark.index import merge, segments
+
+    jvm = spark.sparkContext._gateway.proc.pid
+    cap = segments.LOCAL_BUILD_MAX_BYTES
+    forced = {"spark": -1, "local": 2**62}
+
+    def members(root: str, n: int) -> int:
+        """Build segments a and b of n docs under `root`, delete 1% of a;
+        returns their footer bytes."""
+        store = segments.IndexStore(root)
+        for i, name in enumerate("ab"):
+            docs = generate_corpus(spark, n, seed=n + i).persist()
+            docs.count()
+            segments.build_segment(spark, store, docs, name)
+            docs.unpersist()
+        store.remove(spark, spark.range(1, n + 1, 100).select(F.lit("a").alias("segment"), F.col("id").alias("doc_id")))
+        return segments._uncompressed_bytes(
+            f for s in "ab" for t in ("postings", "docmap")
+            for f in segments._parquet_files(store.seg_path(s, t))
+        )
+
+    def run(root: str, site: str) -> tuple[float, float]:
+        segments.LOCAL_BUILD_MAX_BYTES = forced[site]
+        try:
+            c0, t0 = cpu_split(jvm), time.perf_counter()
+            merge.merge_segments(spark, segments.IndexStore(root), ["a", "b"], "m", commit=False)
+            wall, c = time.perf_counter() - t0, cpu_split(jvm) - c0
+        finally:
+            segments.LOCAL_BUILD_MAX_BYTES = cap
+        return wall, c.driver + c.jvm + c.workers + c.jit
+
+    with tempfile.TemporaryDirectory(prefix="sweep_merge_") as tmp:
+        warm = os.path.join(tmp, "warm")
+        members(warm, 200)
+        for site in forced:
+            run(warm, site)
+        print(f"{'docs':>7} {'footer_MB':>9} {'spark_s':>8} {'spark_cpu':>9} {'local_s':>8} "
+              f"{'local_cpu':>9} {'site':>6} same")
+        for n in a.sizes:
+            root = os.path.join(tmp, f"m{n}")
+            footer = members(root, n)
+            for site in forced:
+                shutil.copytree(root, f"{root}-{site}")
+            best: dict[str, tuple[float, float]] = {}
+            for rep in range(a.reps):
+                for s in forced:
+                    r = run(f"{root}-{s}", s)
+                    best[s] = min(best.get(s, r), r)
+            same = same_tables(
+                spark, *(segments.IndexStore(f"{root}-{s}") for s in forced), "m"
+            )
+            print(f"{n:>7} {footer / 2**20:>9.1f} {best['spark'][0]:>8.2f} {best['spark'][1]:>9.2f} "
+                  f"{best['local'][0]:>8.2f} {best['local'][1]:>9.2f} "
+                  f"{'local' if footer <= cap else 'spark':>6} {same}", flush=True)
+
+
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--docs", type=int, default=1_000_000)
@@ -147,11 +221,12 @@ def main() -> None:
     p.add_argument("--cores", type=int, default=os.cpu_count() or 4)
     p.add_argument("--batch", action="store_true", help="time a 24-query topk_batch")
     p.add_argument("--build", action="store_true", help="time build_segment by input size")
+    p.add_argument("--merge", action="store_true", help="time a 2-segment merge_segments by member size")
     p.add_argument(
         "--sizes",
         type=lambda s: [int(x) for x in s.split(",")],
-        default=[1500, 3000, 6000, 12000, 24000, 48000],
-        help="--build input sizes in docs, comma-separated",
+        help="--build input sizes / --merge member sizes in docs, comma-separated "
+        "(default 1500,3000,6000,12000,24000,48000 / 1500,3000,6000,9000,12000)",
     )
     p.add_argument(
         "--inputs",
@@ -167,10 +242,15 @@ def main() -> None:
     from iresearch_spark.search import SearchEngine, Term
     from iresearch_spark.session import get_spark
 
-    spark = get_spark("local-budget-sweep", cores=a.cores)
+    # no console progress bars: they share lines with the printed rows
+    spark = get_spark(
+        "local-budget-sweep", cores=a.cores, extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     spark.sparkContext.setLogLevel("ERROR")
-    if a.build:
-        build_sweep(spark, a)
+    if a.build or a.merge:
+        if a.sizes is None:
+            a.sizes = [1500, 3000, 6000, 9000, 12000] if a.merge else [1500, 3000, 6000, 12000, 24000, 48000]
+        (merge_sweep if a.merge else build_sweep)(spark, a)
         spark.stop()
         return
     words = [F.when(F.col("doc_id") % 1000 < m, F.lit(f"p{m}")) for m in PERMILLE]

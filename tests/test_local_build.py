@@ -270,9 +270,12 @@ def test_merge_of_local_and_spark_segments(spark, docs, tmp_path):
     merged = {}
     for label, root in roots.items():
         store = IndexStore(root)
-        merge_segments(spark, store, ["a", "b"], "m")
-        merged[label] = _tables(spark, store, "m")
-    assert merged["mixed"] == merged["spark"]
+        for site in SITES:  # each merge site, over the same members
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(S, "LOCAL_BUILD_MAX_BYTES", SITES[site])
+                merge_segments(spark, store, ["a", "b"], "m", commit=False)
+            merged[label, site] = _tables(spark, store, "m")
+    assert all(t == merged["spark", "spark"] for t in merged.values())
 
 
 def test_topk_over_local_index_equals_oracle(spark, docs, tmp_path):

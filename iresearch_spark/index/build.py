@@ -22,8 +22,10 @@ Scale notes (the parts that must survive 1000 executors / 100 TB):
   2^chunk_bits postings, and one Arrow kernel splits each group into packed
   blocks. This is the salting strategy from SURVEY.md §7; the cost is at
   most one partial block per (term, chunk) tail.
-- dl rides on every posting from tokenize time — no doclen join anywhere in
-  the build or query path.
+- A doc's length is stored once, in the docmap (`len`); postings keep only
+  each block's `min_dl` for the WAND bounds (index/norms.py). The build
+  carries dl on its partials from tokenize time, so it never joins a
+  doclen table.
 """
 
 from __future__ import annotations
@@ -74,13 +76,11 @@ _BLOCK_STRUCT = StructType(
         StructField("block_intra", IntegerType()),
         StructField("doc_count", IntegerType()),
         StructField("first_doc", LongType()),
-        StructField("last_doc", LongType()),
         StructField("max_tf", IntegerType()),
         StructField("min_dl", IntegerType()),
         StructField("sum_tf", LongType()),
         StructField("docs_bin", BinaryType()),
         StructField("tfs_bin", BinaryType()),
-        StructField("dls_bin", BinaryType()),
         StructField("pos_bin", BinaryType()),
     ]
 )
@@ -128,13 +128,11 @@ def _make_chunk_packer(block_size: int):
                         "block_intra": b,
                         "doc_count": int(e - s),
                         "first_doc": int(db[0]),
-                        "last_doc": int(db[-1]),
                         "max_tf": int(tb.max()),
                         "min_dl": int(lb.min()),
                         "sum_tf": int(tb.sum()),
                         "docs_bin": varint_encode(delta_encode(db)),
                         "tfs_bin": varint_encode(tb),
-                        "dls_bin": varint_encode(lb),
                         "pos_bin": pos_bin,
                     }
                 )
@@ -248,8 +246,8 @@ def pack_postings(
 ) -> DataFrame:
     """(doc_id, dl, term, tf[, positions]) -> packed block rows.
 
-    Output: (term, block_id, doc_count, first_doc, last_doc, max_tf, min_dl,
-    docs_bin, tfs_bin, dls_bin[, pos_bin]).
+    Output: (term, block_id, doc_count, first_doc, max_tf, min_dl, sum_tf,
+    docs_bin, tfs_bin[, pos_bin]).
 
     Blocks hold up to `block_size` docs in ascending doc order; blocks are
     exactly block_size within each doc-range *chunk* (chunk = doc_id >>
@@ -260,14 +258,10 @@ def pack_postings(
     chunk * blocks_per_chunk + intra is globally doc-ordered per term.
 
     (max_tf, min_dl) per block is the block-max WAND pair (reference
-    core/search/wand_writer.hpp MaxFreq/MinNorm producers).
-
-    Per-posting doc length is INLINED into the block (impact-ordered-index
-    style): BM25 needs (tf, dl) per posting, and inlining dl (~1 varint
-    byte) makes query scoring join-free — at cluster scale a per-query join
-    of the hit set against a doclen table would dwarf everything else. If
-    `postings_flat` lacks a dl column, pass `doclen` to attach it;
-    `merge.unpack_postings` output already carries dl.
+    core/search/wand_writer.hpp MaxFreq/MinNorm producers); dl itself is
+    read from the docmap at query time (index/norms.py). If
+    `postings_flat` lacks a dl column, pass `doclen` (doc_id, len) to
+    attach it.
     """
     p = postings_flat
     if "dl" not in p.columns:
@@ -327,13 +321,11 @@ def pack_postings(
         .alias("block_id"),
         F.col("_b.doc_count").alias("doc_count"),
         F.col("_b.first_doc").alias("first_doc"),
-        F.col("_b.last_doc").alias("last_doc"),
         F.col("_b.max_tf").alias("max_tf"),
         F.col("_b.min_dl").alias("min_dl"),
         F.col("_b.sum_tf").alias("sum_tf"),
         F.col("_b.docs_bin").alias("docs_bin"),
         F.col("_b.tfs_bin").alias("tfs_bin"),
-        F.col("_b.dls_bin").alias("dls_bin"),
         *([F.col("_b.pos_bin").alias("pos_bin")] if with_positions else []),
     )
     return out
@@ -352,7 +344,7 @@ def pack_postings(
 # combine the reference gets for free from its in-memory postings hash
 # (core/index/postings.cpp). The reduce side merges partials (disjoint doc
 # sets — each doc's tokens live in exactly one map batch) and re-blocks at
-# 128 docs, reusing the already-encoded tf/dl/pos bytes via offset slicing.
+# 128 docs, reusing the already-encoded tf/pos bytes via offset slicing.
 # Output is byte-identical to the token-level packer kept in tests/oracle.py
 # (pinned by tests).
 # ---------------------------------------------------------------------------
@@ -850,9 +842,11 @@ def _make_partial_merger(
 ):
     """mapInPandas kernel over partials sorted by (term, _chunk, first_doc):
     concatenates the partition, merges each (term, chunk) group's partials,
-    and re-blocks at `block_size` docs. tf/dl/pos/off bytes are SLICED from
+    and re-blocks at `block_size` docs. tf/pos/off bytes are SLICED from
     the concatenated input streams (values unchanged by re-blocking — only
-    doc deltas need re-encoding, since delta resets move to block starts)."""
+    doc deltas need re-encoding, since delta resets move to block starts);
+    the partials' dl values give each block's `min_dl` and are not
+    written."""
     blocks_per_chunk = max(1, (1 << chunk_bits) // block_size)
 
     def fn(batches):
@@ -897,19 +891,15 @@ def _make_partial_merger(
         # doc deltas with reset at block starts; encode once, slice per block
         docs_buf, docs_ends_b = varint_encode_offsets(_deltas(docs, bstart))
         d0 = np.concatenate(([0], docs_ends_b))
-        # tf/dl bytes: values unchanged by re-blocking -> slice the original
-        # concatenated streams at element boundaries (re-encode only if the
+        # tf bytes: values unchanged by re-blocking -> slice the original
+        # concatenated stream at element boundaries (re-encode only if the
         # rare doc re-sort fallback permuted the arrays)
         if resorted:
             tfs_buf, t_ends = varint_encode_offsets(tfs)
-            dls_buf, l_ends = varint_encode_offsets(dls)
         else:
             tfs_buf = b"".join(tfs_bins)
-            dls_buf = b"".join(dls_bins)
             t_ends = np.cumsum(varint_byte_lens(tfs))
-            l_ends = np.cumsum(varint_byte_lens(dls))
         t0 = np.concatenate(([0], t_ends))
-        l0 = np.concatenate(([0], l_ends))
         # per-block metadata (blocks tile [0, total_docs) contiguously)
         max_tf = np.maximum.reduceat(tfs, bstart)
         min_dl = np.minimum.reduceat(dls, bstart)
@@ -945,13 +935,11 @@ def _make_partial_merger(
                 "block_id": block_id,
                 "doc_count": (bend - bstart).astype(np.int32),
                 "first_doc": docs[bstart],
-                "last_doc": docs[bend - 1],
                 "max_tf": max_tf.astype(np.int32),
                 "min_dl": min_dl.astype(np.int32),
                 "sum_tf": sum_tf.astype(np.int64),
                 "docs_bin": _cut(docs_buf, d0, bstart, bend),
                 "tfs_bin": _cut(tfs_buf, t0, bstart, bend),
-                "dls_bin": _cut(dls_buf, l0, bstart, bend),
             }
         )
         if with_positions:
@@ -1042,19 +1030,18 @@ def merge_partials(
 def packed_schema(
     with_positions: bool, with_offsets: bool = False, with_payloads: bool = False
 ) -> StructType:
-    """Schema of a committed postings table (block rows)."""
+    """Schema of a committed postings table (block rows). Doc lengths are
+    not in it: they are the docmap's `len` (index/norms.py)."""
     out_fields = [
         StructField("term", StringType()),
         StructField("block_id", LongType()),
         StructField("doc_count", IntegerType()),
         StructField("first_doc", LongType()),
-        StructField("last_doc", LongType()),
         StructField("max_tf", IntegerType()),
         StructField("min_dl", IntegerType()),
         StructField("sum_tf", LongType()),
         StructField("docs_bin", BinaryType()),
         StructField("tfs_bin", BinaryType()),
-        StructField("dls_bin", BinaryType()),
     ]
     if with_positions:
         out_fields.append(StructField("pos_bin", BinaryType()))

@@ -88,6 +88,24 @@ def delta_decode(deltas: np.ndarray) -> np.ndarray:
     return np.cumsum(np.asarray(deltas, dtype=np.uint64), dtype=np.uint64)
 
 
+def delta_runs_decode(buf, counts: np.ndarray) -> np.ndarray:
+    """Values (int64) of many concatenated delta+varint runs — doc blocks,
+    or the per-doc position runs of a block group: one varint pass, the
+    delta cumsum restarting at each run (`counts` values per run)."""
+    ddeltas = varint_decode(buf).astype(np.int64)
+    cs = np.cumsum(ddeltas)
+    st = np.cumsum(counts) - counts
+    return cs - np.repeat(cs[st] - ddeltas[st], counts)
+
+
+def varint_counts(bins) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes of the concatenated varint streams `bins`, values per
+    stream): a value ends at a byte with the high bit clear."""
+    u8 = np.frombuffer(b"".join(bins), dtype=np.uint8)
+    lens = np.fromiter((len(b) for b in bins), np.int64, count=len(bins))
+    return u8, np.add.reduceat((u8 < 128).astype(np.int64), np.cumsum(lens) - lens)
+
+
 def pack_doc_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
     """(sorted docIDs, tfs) -> (docs_bin, tfs_bin).
 

@@ -47,6 +47,7 @@ from iresearch_spark.index.build import (
 )
 from iresearch_spark.index.codec import BLOCK_SIZE, varint_decode, varint_encode_offsets
 from iresearch_spark.index import segments
+from iresearch_spark.index.norms import Norms, norm_rows, take_norm_rows, with_norm_rows
 from iresearch_spark.index.segments import (
     IndexStore,
     Manifest,
@@ -60,7 +61,6 @@ FLAT_SCHEMA = StructType(
     [
         StructField("segment", StringType()),
         StructField("doc_id", LongType()),
-        StructField("dl", IntegerType()),
         StructField("term", StringType()),
         StructField("tf", IntegerType()),
         StructField("positions", ArrayType(IntegerType())),
@@ -69,7 +69,8 @@ FLAT_SCHEMA = StructType(
 
 
 def _unpack_kernel(with_positions: bool):
-    """Packed block rows -> flat (segment, doc_id, dl, term, tf, positions).
+    """Packed block rows -> flat (segment, doc_id, term, tf, positions).
+    Doc lengths are not in the postings: join the docmap's `len`.
 
     Vectorized batch decode (the r3 itertuples + per-block list.extend loop
     was the slowest codec path in the repo — r3 VERDICT wrong-5/next-7):
@@ -90,7 +91,6 @@ def _unpack_kernel(with_positions: bool):
             carry = cs[starts] - ddeltas[starts]  # cumsum reset per block
             docs = cs - carry[row_of_doc]
             tfs = varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
-            dls = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
             if with_positions:
                 pos_deltas = varint_decode(
                     b"".join(b for b in pdf["pos_bin"] if b is not None)
@@ -107,7 +107,6 @@ def _unpack_kernel(with_positions: bool):
                 {
                     "segment": pdf["segment"].to_numpy()[row_of_doc],
                     "doc_id": docs,
-                    "dl": dls.astype(np.int32),
                     "term": pdf["term"].to_numpy()[row_of_doc],
                     "tf": tfs.astype(np.int32),
                     "positions": plists,
@@ -128,10 +127,14 @@ def _blocks_to_partials_kernel(
     with_positions: bool,
     with_offsets: bool,
     with_payloads: bool = False,
+    norms: Norms | None = None,
 ):
     """Packed block rows (+ segment col) -> combiner-partial rows
     (build._PARTIAL_SCHEMA) with REMAPPED doc ids, tombstoned docs dropped,
-    and runs split at new-chunk boundaries — the r4 merge path.
+    and runs split at new-chunk boundaries — the r4 merge path. Each
+    doc's dl comes from the members' docmaps: `norms` on the driver, or in
+    a Spark task the norm rows sorted ahead of each (segment, chunk)'s
+    blocks (index/norms.py).
 
     Remap is join-free: new_doc = old + shift[segment] - |deleted < old|
     (binary search against the segment's sorted tombstone array), which
@@ -146,7 +149,9 @@ def _blocks_to_partials_kernel(
     col_order = [f.name for f in _PARTIAL_SCHEMA.fields]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        doc_norms = Norms() if norms is None else norms
         for pdf in batches:
+            pdf = take_norm_rows(pdf, doc_norms)
             R = len(pdf)
             if R == 0:
                 continue
@@ -160,14 +165,15 @@ def _blocks_to_partials_kernel(
             carry = cs[starts] - ddeltas[starts]
             docs = cs - carry[row_of_doc]
             tfs = varint_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
-            dls = varint_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
             seg_codes, seg_uniq = pd.factorize(pdf["segment"].to_numpy())
             seg_of_doc = seg_codes[row_of_doc]
             new_docs = np.empty(D, dtype=np.int64)
+            dls = np.empty(D, dtype=np.int64)
             keep = np.ones(D, dtype=bool)
             for si, s in enumerate(seg_uniq):
                 m = seg_of_doc == si
                 d = docs[m]
+                dls[m] = doc_norms.of(s, d)
                 shift = shift_by_seg[s]
                 dels = dels_by_seg.get(s)
                 if dels is not None and dels.size:
@@ -269,7 +275,7 @@ def build_doc_map(
     tombstones: DataFrame | None = None,
     aggs: dict | None = None,
 ) -> DataFrame:
-    """(segment, doc_id) -> new_doc.
+    """(segment, doc_id, len) -> new_doc.
 
     No tombstones: contiguous base offsets in member order (merge_writer
     base-id assignment). With tombstones: dense renumbering of live docs in
@@ -280,7 +286,7 @@ def build_doc_map(
     docs) — spacing by docs-with-field would collide gdoc ranges (see
     SegmentMeta.docs_total).
     """
-    docs = store.read_union(spark, "docmap", seg_names).select("segment", "doc_id")
+    docs = store.read_union(spark, "docmap", seg_names).select("segment", "doc_id", "len")
     if tombstones is not None:
         tombstones = tombstones.where(F.col("segment").isin(seg_names))
         docs = docs.join(tombstones, ["segment", "doc_id"], "left_anti")
@@ -346,6 +352,7 @@ def build_doc_map(
                 {
                     "segment": pdf["segment"],
                     "doc_id": pdf["doc_id"],
+                    "len": pdf["len"],
                     "new_doc": bases + local,
                 }
             )
@@ -356,6 +363,7 @@ def build_doc_map(
                 [
                     StructField("segment", StringType()),
                     StructField("doc_id", LongType()),
+                    StructField("len", IntegerType()),
                     StructField("new_doc", LongType()),
                 ]
             ),
@@ -433,7 +441,7 @@ def merge_segments(
     binary search against each segment's sorted inline tombstone array) ->
     the same sorted-stream merge kernel the combiner build uses
     (build._make_partial_merger), which re-blocks at 128 docs by slicing
-    the already-encoded tf/dl/pos/off byte streams. Postings never explode
+    the already-encoded tf/pos/off byte streams. Postings never explode
     to rows and never join doc_map: the only shuffle moves packed partial
     bytes (~1 B/posting), exactly like the build. Offsets segments
     (`off_bin`) merge losslessly (the r3 flat path dropped the
@@ -576,7 +584,7 @@ def merge_segments(
 
 def _block_cols(with_positions: bool, with_offsets: bool, with_payloads: bool) -> list[str]:
     """The postings columns `_blocks_to_partials_kernel` reads."""
-    cols = ["term", "doc_count", "docs_bin", "tfs_bin", "dls_bin"]
+    cols = ["term", "doc_count", "docs_bin", "tfs_bin"]
     if with_positions:
         cols.append("pos_bin")
     if with_offsets:
@@ -595,12 +603,12 @@ def _merge_local(
     aggregates.
 
     The members' blocks (read with pyarrow) go through the unchanged
-    `_blocks_to_partials_kernel` and `_make_partial_merger`
-    (`segments._local_postings`, as the local build). The docmap takes the
-    kernel's remap (base shift, minus the tombstones below, tombstoned
-    docs dropped) with the Spark site's doc_id type; lineage sums and XORs
-    the members' rows per part in numpy. All four tables are written with
-    `segments._write_table`."""
+    `_blocks_to_partials_kernel`, with dl from the members' docmaps, and
+    `_make_partial_merger` (`segments._local_postings`, as the local
+    build). The docmap takes the kernel's remap (base shift, minus the
+    tombstones below, tombstoned docs dropped) with the Spark site's doc_id
+    type; lineage sums and XORs the members' rows per part in numpy. All
+    four tables are written with `segments._write_table`."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
@@ -609,17 +617,20 @@ def _merge_local(
         return pads.dataset(store.seg_path(s, table), format="parquet").to_table(columns=columns)
 
     streams = (with_positions, with_offsets, with_payloads)
+    members = {s: read(s, "docmap") for s in seg_names}
+    norms = Norms()
+    for s, t in members.items():
+        norms.add(s, t["doc_id"].to_numpy().astype(np.int64), t["len"].fill_null(0).to_numpy(zero_copy_only=False))
     blocks = pd.concat(
         [read(s, "postings", _block_cols(*streams)).to_pandas().assign(segment=s) for s in seg_names],
         ignore_index=True,
     )
-    kernel = _blocks_to_partials_kernel(shift_by_seg, dels_by_seg, DEFAULT_CHUNK_BITS, *streams)
+    kernel = _blocks_to_partials_kernel(shift_by_seg, dels_by_seg, DEFAULT_CHUNK_BITS, *streams, norms=norms)
     parts = list(kernel(iter([blocks])))
     postings = segments._local_postings(pd.concat(parts, ignore_index=True) if parts else None, *streams)
 
     docmaps, fields, id_types = [], {}, set()
-    for s in seg_names:
-        t = read(s, "docmap")
+    for s, t in members.items():
         sch = segments._footer_schema(store.seg_path(s, "docmap"))
         id_types.add(sch["doc_id"].dataType)
         fields.update({f.name: f for f in sch if f.name not in fields and f.name != "doc_id"})
@@ -651,7 +662,7 @@ def _merge_local(
         "lineage": (lineage, segments.LINEAGE_SCHEMA),
     }
     for table, (t, sch) in tables.items():
-        segments._write_table(store.seg_path(new_name, table), t, sch)
+        segments._write_table(store.seg_path(new_name, table), t, sch, term_groups=table == "postings")
     lens = docmap["len"].fill_null(0).to_numpy(zero_copy_only=False)
     return segments._local_aggs(docmap["doc_id"].to_numpy(), lens)
 
@@ -676,9 +687,14 @@ def _merge_spark(
     blocks = store.read_union(spark, "postings", seg_names)
     n_part = spark.sparkContext.defaultParallelism
     if inline:
-        partials = blocks.select(
-            "segment", *_block_cols(with_positions, with_offsets, with_payloads)
-        ).mapInPandas(
+        # each (segment, chunk)'s blocks meet the norm rows of its docmap
+        blocks = with_norm_rows(
+            blocks.select("segment", "first_doc", *_block_cols(with_positions, with_offsets, with_payloads)),
+            norm_rows(store.read_union(spark, "docmap", seg_names), DEFAULT_CHUNK_BITS),
+            DEFAULT_CHUNK_BITS,
+            n_part,
+        )
+        partials = blocks.mapInPandas(
             _blocks_to_partials_kernel(
                 shift_by_seg,
                 dels_by_seg,
@@ -715,7 +731,7 @@ def _merge_spark(
             .join(doc_map, ["segment", "doc_id"])
             .select(
                 F.col("new_doc").alias("doc_id"),
-                "dl",
+                F.col("len").alias("dl"),
                 "term",
                 "tf",
                 *(["positions"] if with_positions else []),
@@ -723,7 +739,7 @@ def _merge_spark(
         )
         packed = pack_postings(flat, with_positions=with_positions, num_partitions=n_part)
 
-    packed.write.mode("overwrite").parquet(store.seg_path(new_name, "postings"))
+    segments.write_postings(packed, store.seg_path(new_name, "postings"))
     packed_disk = spark.read.parquet(store.seg_path(new_name, "postings"))
 
     def _write_term_stats():
@@ -749,7 +765,7 @@ def _merge_spark(
             (F.col("doc_id") + base_map[F.col("segment")]).alias("doc_id"),
         )
     else:
-        new_docmap = docmaps.join(doc_map, ["segment", "doc_id"]).select(
+        new_docmap = docmaps.join(doc_map.select("segment", "doc_id", "new_doc"), ["segment", "doc_id"]).select(
             *keep_cols, F.col("new_doc").alias("doc_id")
         )
 

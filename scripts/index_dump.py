@@ -1,6 +1,7 @@
 """Index inspection CLI — the analogue of the reference's read-only Python
-tooling (reference python/scripts/index-dump.py): dump manifest, per-term
-postings, and block metadata from a built index.
+tooling (reference python/scripts/index-dump.py): dump manifest, each
+postings file's row groups (row counts and term ranges), and per-term
+postings with block metadata, dl read from the docmap's `len`.
 
     python scripts/index_dump.py --index <root> [--term foo] [--limit 20]
 """
@@ -25,8 +26,13 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from iresearch_spark.index.codec import unpack_positions, varint_decode, delta_decode
-    from iresearch_spark.index.segments import IndexStore
+    from functools import partial
+
+    import pyarrow.parquet as pq
+
+    from iresearch_spark.index.codec import varint_decode, delta_decode
+    from iresearch_spark.index.norms import Norms, docmap_lens
+    from iresearch_spark.index.segments import IndexStore, _parquet_files
     from iresearch_spark.session import get_spark
 
     spark = get_spark("index-dump", cores=args.cores)
@@ -42,7 +48,20 @@ def main() -> int:
         "segments": [s.to_dict() for s in m.segments],
     }, indent=1))
 
+    print("\npostings row groups:")
+    for s in m.segments:
+        for f in _parquet_files(store.seg_path(s.name, "postings")):
+            md = pq.read_metadata(f)
+            term = md.schema.names.index("term")
+            print(f"  seg={s.name} file={os.path.basename(f)} row_groups={md.num_row_groups}")
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(term).statistics
+                rng = f"[{st.min!r} .. {st.max!r}]" if st is not None and st.has_min_max else "[no stats]"
+                print(f"    {g}: rows={rg.num_rows} terms={rng}")
+
     if args.term:
+        norms = Norms(partial(docmap_lens, store.root))
         blocks = (
             store.read_union(spark, "postings")
             .where(F.col("term") == args.term)
@@ -54,10 +73,10 @@ def main() -> int:
         for b in blocks:
             docs = delta_decode(varint_decode(b["docs_bin"])).astype(int)
             tfs = varint_decode(b["tfs_bin"]).astype(int)
-            dls = varint_decode(b["dls_bin"]).astype(int)
+            dls = norms.of(b["segment"], docs).astype(int)
             print(
                 f"  seg={b['segment']} block={b['block_id']} n={b['doc_count']} "
-                f"docs[{b['first_doc']}..{b['last_doc']}] max_tf={b['max_tf']} min_dl={b['min_dl']}"
+                f"docs[{b['first_doc']}..{docs[-1]}] max_tf={b['max_tf']} min_dl={b['min_dl']}"
             )
             for d, tf, dl in list(zip(docs, tfs, dls))[: args.limit]:
                 print(f"    doc={d} tf={tf} dl={dl}")

@@ -14,7 +14,8 @@ Pinned semantics shared with the engine (and asserted by tests):
 - top-k: score desc, docID asc
 
 The end of the file keeps the token-level Spark packer (`pack_tokens`) that
-the library's one build packer must match byte for byte.
+the library's one build packer must match byte for byte, in the block layout
+that still carried per-posting doc lengths (`LEGACY_COLS`).
 """
 
 from __future__ import annotations
@@ -28,9 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, BinaryType, IntegerType, LongType, StructField, StructType
 
-from iresearch_spark.index.build import _BLOCK_STRUCT, DEFAULT_CHUNK_BITS
+from iresearch_spark.index.build import DEFAULT_CHUNK_BITS
 from iresearch_spark.index.codec import BLOCK_SIZE, delta_encode, varint_encode
 
 F32 = np.float32
@@ -209,6 +210,28 @@ def score_varphrase(idx: OracleIndex, slots: list[list[str]], boost: float = 1.0
 # ---------------------------------------------------------------------------
 
 
+# The block layout before doc lengths moved to the docmap: every block
+# also carries `last_doc` and a per-posting `dls_bin`. `pack_tokens` keeps
+# writing it, so tests can build stores that mix both layouts; the library
+# writes neither column and compares the rest byte for byte.
+LEGACY_COLS = ("last_doc", "dls_bin")
+_BLOCK_STRUCT = StructType(
+    [
+        StructField("block_intra", IntegerType()),
+        StructField("doc_count", IntegerType()),
+        StructField("first_doc", LongType()),
+        StructField("last_doc", LongType()),
+        StructField("max_tf", IntegerType()),
+        StructField("min_dl", IntegerType()),
+        StructField("sum_tf", LongType()),
+        StructField("docs_bin", BinaryType()),
+        StructField("tfs_bin", BinaryType()),
+        StructField("dls_bin", BinaryType()),
+        StructField("pos_bin", BinaryType()),
+    ]
+)
+
+
 def _make_token_packer(block_size: int):
     @pandas_udf(ArrayType(_BLOCK_STRUCT))
     def _pack_tokens_udf(
@@ -281,7 +304,7 @@ def pack_tokens(
     (groupBy(doc, term) then groupBy(term, chunk)) on the build path —
     measured the dominant cost at scale; the token payload through the one
     remaining shuffle is ~1.4x a posting row, for half the shuffles.
-    Output schema identical to pack_postings()."""
+    Output: the library's postings schema plus the legacy `LEGACY_COLS`."""
     t = tokens.withColumn("_chunk", (F.col("doc_id") / F.lit(1 << chunk_bits)).cast("long"))
     entry = (
         F.struct("doc_id", "pos", "dl") if with_positions else F.struct("doc_id", "dl")

@@ -85,22 +85,20 @@ def test_packed_postings_match_oracle(spark, store, oracle_idx):
         # block ids strictly increasing, doc ranges disjoint ascending
         ids = [b["block_id"] for b in blocks]
         assert ids == sorted(set(ids))
-        for b1, b2 in zip(blocks, blocks[1:]):
-            assert b1["last_doc"] < b2["first_doc"]
+        decoded = [delta_decode(varint_decode(b["docs_bin"])).astype(int) for b in blocks]
+        for d1, d2 in zip(decoded, decoded[1:]):
+            assert d1[-1] < d2[0]
+        assert "last_doc" not in blocks[0] and "dls_bin" not in blocks[0]
         docs, tfs, poss = [], [], []
-        for b in blocks:
-            d = delta_decode(varint_decode(b["docs_bin"])).astype(int)
+        for b, d in zip(blocks, decoded):
             t = varint_decode(b["tfs_bin"]).astype(int)
-            dl = varint_decode(b["dls_bin"]).astype(int)
             p = unpack_positions(b["pos_bin"], t)
-            assert len(d) == b["doc_count"] == len(t) == len(dl)
-            assert b["first_doc"] == d[0] and b["last_doc"] == d[-1]
+            assert len(d) == b["doc_count"] == len(t)
+            assert b["first_doc"] == d[0] and all(np.diff(d) > 0)
             assert b["max_tf"] == t.max()
             assert all(len(pp) == tf for pp, tf in zip(p, t))
-            # dl inline matches doclen
-            for dd, l in zip(d, dl):
-                assert oracle_idx.doclen[dd] == l
-            assert b["min_dl"] == min(dl)
+            # the block-max norm is the smallest docmap len of its docs
+            assert b["min_dl"] == min(oracle_idx.doclen[dd] for dd in d)
             docs.extend(d)
             tfs.extend(t)
             poss.extend([list(map(int, x)) for x in p])

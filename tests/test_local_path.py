@@ -439,14 +439,19 @@ def test_phrase_leg_keys_never_cross_docs():
     from iresearch_spark.search.scorers import ConstTermScorer
 
     def blocks(occ: dict) -> pd.DataFrame:
-        rows = []
+        # the group's norm row (term NULL: every doc has dl 9) comes first,
+        # as the Spark site sorts it
+        ids = np.arange(1, 5, dtype=np.uint64)
+        rows = [{
+            "segment": "s", "term": None, "first_doc": 1, "chunkid": 0,
+            "docs_bin": pack_doc_block(ids, ids)[0], "dls_bin": varint_encode(np.full(4, 9, dtype=np.uint64)),
+        }]
         for term, by_doc in occ.items():
             docs = np.array(sorted(by_doc), dtype=np.uint64)
             docs_bin, tfs_bin = pack_doc_block(docs, np.ones(docs.size, dtype=np.uint64))
             rows.append({
                 "segment": "s", "term": term, "first_doc": int(docs[0]), "max_tf": 1, "min_dl": 9,
-                "docs_bin": docs_bin, "tfs_bin": tfs_bin,
-                "dls_bin": varint_encode(np.full(docs.size, 9, dtype=np.uint64)),
+                "docs_bin": docs_bin, "tfs_bin": tfs_bin, "dls_bin": None,
                 "pos_bin": pack_positions([[by_doc[d]] for d in docs]), "chunkid": 0,
             })
         return pd.DataFrame(rows)
@@ -785,7 +790,7 @@ def test_local_run_records_row_groups_and_block_counters(spark, ix, tmp_path):
         pruned = _rows(eng.topk(Term(t), 1))
         run = eng.last_run
         assert run["path"] == "local" and run["wand"], run
-        assert run["row_groups"] == [1, n_groups] and n_groups == 1
+        assert 0 < run["row_groups"][0] < run["row_groups"][1] == n_groups, run
         assert run["blocks"] >= run["skipped"] >= 0 and run["blocks"] > 0, run
         if run["skipped"]:
             skipped.append(t)

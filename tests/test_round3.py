@@ -22,7 +22,8 @@ from iresearch_spark.index.build import (
     pack_docs_combined,
     tokenize_stream,
 )
-from tests.oracle import pack_tokens
+from iresearch_spark.index.codec import delta_decode, varint_decode
+from tests.oracle import LEGACY_COLS, pack_tokens
 
 
 @pytest.fixture(scope="module")
@@ -64,13 +65,25 @@ def test_combiner_pack_byte_identical(spark, docs2k, analyzer, with_pos, max_doc
         with_positions=with_pos,
         num_partitions=8,
     )
-    new, _ = pack_docs_combined(
+    new, partials = pack_docs_combined(
         docs, analyzer, "content", with_positions=with_pos, num_partitions=8
     )
-    cols = old.columns
-    o = sorted(tuple(r) for r in old.collect())
-    n = sorted(tuple(r) for r in new.select(*cols).collect())
+    cols = [c for c in old.columns if c not in LEGACY_COLS]
+    assert new.columns == cols
+    o = sorted(tuple(r) for r in old.select(*cols).collect())
+    n = sorted(tuple(r) for r in new.collect())
     assert o and o == n
+    _assert_legacy_cols(old, {r["doc_id"]: r["len"] for r in doclen_from_partials(partials).collect()})
+
+
+def _assert_legacy_cols(old, lens: dict) -> None:
+    """The columns the library no longer writes hold what it keeps
+    elsewhere: each oracle block's per-posting dl is its doc's len, and its
+    last_doc is the block's last decoded doc."""
+    for r in old.select("docs_bin", *LEGACY_COLS).collect():
+        d = delta_decode(varint_decode(r["docs_bin"])).tolist()
+        assert r["last_doc"] == d[-1]
+        assert varint_decode(r["dls_bin"]).tolist() == [lens[x] for x in d]
 
 
 def test_seam_pack_byte_identical(spark, tmp_path):
@@ -95,10 +108,13 @@ def test_seam_pack_byte_identical(spark, tmp_path):
     store = IndexStore(str(tmp_path / "seam"))
     build_segment_from_tokens(spark, store, tokens, docmap, "s0")
     old = pack_tokens(tokens, num_partitions=4)
-    cols = old.columns
-    o = sorted(tuple(r) for r in old.collect())
-    n = sorted(tuple(r) for r in store.read(spark, "s0", "postings").select(*cols).collect())
+    cols = [c for c in old.columns if c not in LEGACY_COLS]
+    written = store.read(spark, "s0", "postings")
+    assert written.columns == cols
+    o = sorted(tuple(r) for r in old.select(*cols).collect())
+    n = sorted(tuple(r) for r in written.collect())
     assert o == n
+    _assert_legacy_cols(old, {r["doc_id"]: r["len"] for r in store.read(spark, "s0", "docmap").collect()})
     (aa,) = [r for r in n if r[0] == "aa"]
     assert aa[cols.index("sum_tf")] == 3 * 4  # each of the 4 'aaaa' counts 3 'aa'
 

@@ -283,8 +283,9 @@ def test_bm25_tiny_norm_cache_golden(spark, tmp_path):
     # independent oracle: reference cache semantics re-derived from scratch
     m = store.current()
     N, avg_dl = m.docs_count, m.sum_len / m.docs_count
+    dl = {r["doc_id"]: r["len"] for r in store.read(spark, "seg0", "docmap").collect()}
     flat = {
-        r["doc_id"]: (r["tf"], r["dl"])
+        r["doc_id"]: (r["tf"], dl[r["doc_id"]])
         for r in unpack_postings(
             store.read_union(spark, "postings", ["seg0"]), True
         )
@@ -591,8 +592,9 @@ def test_bm25_legacy_norm_golden(spark, tmp_path):
 
     m = store.current()
     N, avg_dl = m.docs_count, m.sum_len / m.docs_count
+    dl = {r["doc_id"]: r["len"] for r in store.read(spark, "seg0", "docmap").collect()}
     flat = {
-        r["doc_id"]: (r["tf"], r["dl"])
+        r["doc_id"]: (r["tf"], dl[r["doc_id"]])
         for r in unpack_postings(store.read_union(spark, "postings", ["seg0"]), True)
         .where("term = 'spark'")
         .collect()

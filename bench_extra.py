@@ -227,12 +227,14 @@ def main() -> None:
                 rows = beng.topk(node, k).collect()
                 thrs[qn] = min(r["score"] for r in rows) if len(rows) == k else float("-inf")
             term_subs = {}
-            for qn, (scorers, mm, const, merge, _) in specs.items():
-                ubs = {t: sc.term_ub() for t, sc in scorers.items()}
-                tot = sum(ubs.values())
-                for t, sc in scorers.items():
+            for qn, (legs, mm, const, merge, _) in specs.items():
+                # scored terms: (array scorer, term code); tail terms score 0
+                n = legs.n_scored
+                ubs = np.concatenate((legs.scorer.term_ubs(), np.zeros(legs.terms.size - n)))
+                tot = sum(ubs.tolist())
+                for i, t in enumerate(legs.terms.tolist()):
                     term_subs.setdefault(t, []).append(
-                        (qn, sc, tot - ubs[t], const)
+                        (qn, (legs.scorer, i) if i < n else None, tot - ubs[i], const)
                     )
             blocks = (
                 beng.postings.where(F2.col("term").isin(*list(term_subs)))
@@ -247,10 +249,14 @@ def main() -> None:
                 mt = grp["max_tf"].to_numpy()
                 md = grp["min_dl"].to_numpy()
                 all_skip = np.ones(len(grp), dtype=bool)
-                for qn, sc, other, const in subs:
-                    bound = sc.scores(
-                        mt.astype(sc.dtype), md.astype(sc.dtype)
-                    ).astype(np.float64) + other + const
+                for qn, leg, other, const in subs:
+                    if leg is None:
+                        bound = np.zeros(len(mt)) + other + const
+                    else:
+                        sc, code = leg
+                        bound = sc.scores(
+                            mt.astype(sc.dtype), md.astype(sc.dtype), np.full(len(mt), code)
+                        ).astype(np.float64) + other + const
                     bound = np.float32(bound).astype(np.float64)
                     skip = bound < thrs[qn]
                     pair_total += len(grp)

@@ -16,6 +16,7 @@ vectorized: the inner loop is over *byte position* (<=10), not over values.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128  # parity with reference formats_10.cpp:90
 
@@ -98,12 +99,25 @@ def delta_runs_decode(buf, counts: np.ndarray) -> np.ndarray:
     return cs - np.repeat(cs[st] - ddeltas[st], counts)
 
 
-def varint_counts(bins) -> tuple[np.ndarray, np.ndarray]:
-    """(bytes of the concatenated varint streams `bins`, values per
-    stream): a value ends at a byte with the high bit clear."""
-    u8 = np.frombuffer(b"".join(bins), dtype=np.uint8)
-    lens = np.fromiter((len(b) for b in bins), np.int64, count=len(bins))
-    return u8, np.add.reduceat((u8 < 128).astype(np.int64), np.cumsum(lens) - lens)
+def binary_cells(col) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, offsets) of an Arrow binary array: the column buffer as
+    uint8, zero-copy, and the n+1 offsets of its cells into it (int64), so
+    a run of cells is one slice."""
+    n = len(col)
+    _, offs, data = col.buffers()
+    if not n or data is None:
+        return np.empty(0, np.uint8), np.zeros(n + 1, np.int64)
+    off_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    o = np.frombuffer(offs, dtype=off_t)[col.offset : col.offset + n + 1].astype(np.int64)
+    return np.frombuffer(data, dtype=np.uint8), o
+
+
+def run_counts(u8: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Values per varint stream of streams `lens` bytes long, back to back
+    in `u8`: a value ends at a byte with the high bit clear."""
+    ends = np.concatenate(([0], np.cumsum(u8 < 128)))
+    stops = np.cumsum(lens)
+    return ends[stops] - ends[stops - lens]
 
 
 def pack_doc_block(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:

@@ -27,10 +27,18 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
-from iresearch_spark.index.codec import delta_runs_decode, varint_counts, varint_decode, varint_encode_offsets
+from iresearch_spark.index.codec import (
+    binary_cells,
+    delta_runs_decode,
+    run_counts,
+    varint_decode,
+    varint_encode_offsets,
+)
 
 NORM_ROW_SCHEMA = StructType(
     [
@@ -101,20 +109,29 @@ class Norms:
         return lo, None if dense else ids, lens
 
 
+def _binary_array(buf: bytes, ends: np.ndarray, starts: np.ndarray, stops: np.ndarray) -> pa.Array:
+    """Binary cells of the runs [starts, stops) of values whose encodings
+    end at byte `ends` of `buf`, as one Arrow array over `buf`."""
+    e = np.append(0, ends)
+    offs = e[np.append(starts, stops[-1:])].astype(np.int32)
+    return pa.Array.from_buffers(pa.binary(), starts.size, [None, pa.py_buffer(offs), pa.py_buffer(buf)])
+
+
 def norm_rows(docmap: DataFrame, chunk_bits: int) -> DataFrame:
     """Norm rows (`NORM_ROW_SCHEMA`) of a (segment, doc_id, len) frame:
     per input batch, one row per (segment, chunk) it holds, with the
     chunk's doc ids delta+varint packed as a block's `docs_bin` and their
-    lens varint packed in `dls_bin`. A map-only kernel: a chunk spread
-    over several batches gets several rows."""
+    lens varint packed in `dls_bin`. A map-only Arrow kernel: a chunk
+    spread over several batches gets several rows."""
 
     def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            codes, uniq = pd.factorize(pdf["segment"].to_numpy())
-            ids = pdf["doc_id"].to_numpy().astype(np.int64)
-            lens = pdf["len"].fillna(0).to_numpy().astype(np.int64)
+            seg = pc.dictionary_encode(b.column("segment"))
+            codes, uniq = seg.indices.to_numpy(), seg.dictionary
+            ids = b.column("doc_id").to_numpy().astype(np.int64)
+            lens = pc.fill_null(b.column("len"), 0).to_numpy().astype(np.int64)
             chunk = ids >> chunk_bits
             order = np.lexsort((ids, chunk, codes))
             codes, ids, lens, chunk = codes[order], ids[order], lens[order], chunk[order]
@@ -126,18 +143,18 @@ def norm_rows(docmap: DataFrame, chunk_bits: int) -> DataFrame:
             deltas[starts] = ids[starts]
             d_buf, d_ends = varint_encode_offsets(deltas)
             l_buf, l_ends = varint_encode_offsets(lens)
-            d0, l0 = np.append(0, d_ends), np.append(0, l_ends)
-            yield pd.DataFrame(
-                {
-                    "segment": uniq[codes[starts]],
-                    "chunkid": chunk[starts],
-                    "first_doc": ids[starts],
-                    "docs_bin": [d_buf[d0[s] : d0[e]] for s, e in zip(starts, stops)],
-                    "dls_bin": [l_buf[l0[s] : l0[e]] for s, e in zip(starts, stops)],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    uniq.take(pa.array(codes[starts])),
+                    pa.array(chunk[starts]),
+                    pa.array(ids[starts]),
+                    _binary_array(d_buf, d_ends, starts, stops),
+                    _binary_array(l_buf, l_ends, starts, stops),
+                ],
+                names=NORM_ROW_SCHEMA.names,
             )
 
-    return docmap.select("segment", "doc_id", "len").mapInPandas(fn, NORM_ROW_SCHEMA)
+    return docmap.select("segment", "doc_id", "len").mapInArrow(fn, NORM_ROW_SCHEMA)
 
 
 def with_norm_rows(blocks: DataFrame, norms: DataFrame, chunk_bits: int, n_part: int) -> DataFrame:
@@ -156,19 +173,32 @@ def with_norm_rows(blocks: DataFrame, norms: DataFrame, chunk_bits: int, n_part:
     )
 
 
-def take_norm_rows(pdf: pd.DataFrame, norms: Norms) -> pd.DataFrame:
+def take_norm_rows(batch, norms: Norms):
     """Move a kernel batch's norm rows (term NULL) into `norms`; returns
-    the block rows."""
-    if "dls_bin" not in pdf:
-        return pdf
-    is_norm = pdf["term"].isna().to_numpy()
-    if not is_norm.any():
-        return pdf
-    nr = pdf[is_norm]
-    u8, counts = varint_counts(nr["docs_bin"].tolist())
+    the block rows. `batch` is a `pyarrow.RecordBatch`, or a pandas
+    DataFrame (the merge kernel's)."""
+    if "dls_bin" not in (batch.columns if isinstance(batch, pd.DataFrame) else batch.schema.names):
+        return batch
+    if isinstance(batch, pd.DataFrame):
+        is_norm = batch["term"].isna().to_numpy()
+        if is_norm.any():
+            _add_norm_rows(pa.RecordBatch.from_pandas(batch.loc[is_norm, list(NORM_ROW_SCHEMA.names)], preserve_index=False), norms)
+            return batch[~is_norm]
+        return batch
+    is_norm = batch.column("term").is_null()
+    if not pc.any(is_norm).as_py():
+        return batch
+    _add_norm_rows(batch.filter(is_norm), norms)
+    return batch.filter(pc.invert(is_norm))
+
+
+def _add_norm_rows(nr: pa.RecordBatch, norms: Norms) -> None:
+    u8, offs = binary_cells(nr.column("docs_bin"))
+    u8 = u8[offs[0] : offs[-1]]
+    counts = run_counts(u8, np.diff(offs))
     ids = delta_runs_decode(u8, counts)
-    lens = varint_decode(b"".join(nr["dls_bin"]))
+    l8, loffs = binary_cells(nr.column("dls_bin"))
+    lens = varint_decode(l8[loffs[0] : loffs[-1]])
     ends = np.cumsum(counts)
-    for seg, s, e in zip(nr["segment"], ends - counts, ends):
+    for seg, s, e in zip(nr.column("segment").to_pylist(), ends - counts, ends):
         norms.add(seg, ids[s:e], lens[s:e])
-    return pdf[~is_norm]

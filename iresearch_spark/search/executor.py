@@ -3,16 +3,18 @@ the driver.
 
 Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
 
-  prepare   = tiny driver-side lookups on the (small) term_stats table to
-              expand multiterm leaves and compute per-term scoring
-              constants (the reference's per-query "stats blob",
-              core/search/bm25.cpp:366-410), then ONE scan plan: the
-              kernel closure plus the terms and columns it reads
-              (`_sums_plan`). Every scan — term, multiterm, flat boolean
-              or phrase-family, one query or `topk_batch`'s many — runs
-              ONE kernel (`_sums_kernel`: term -> [(qid, scorer)] legs and
-              phrase legs, one decode per (segment, chunk) group, one pool
-              per query); a single query is a batch of one;
+  prepare   = tiny driver-side lookups on the (small) term dictionary,
+              array-at-a-time, to expand multiterm leaves and compute
+              per-term scoring constants (the reference's per-query
+              "stats blob", core/search/bm25.cpp:366-410) as one array
+              scorer per leaf, then ONE scan plan: the kernel closure plus
+              the terms and columns it reads (`_sums_plan`). Every scan —
+              term, multiterm, flat boolean or phrase-family, one query or
+              `topk_batch`'s many — runs ONE Arrow-in/Arrow-out kernel
+              (`_sums_kernel`: a leg table of (qid, scorer family, term
+              code) per term and phrase legs, one decode per (segment,
+              chunk) group, one pool per query); a single query is a
+              batch of one;
   execute   = the plan runs at one of two sites, same kernel either way:
               - driver-local: when the plan is one scan (a term,
                 vocab-cached multiterm, flat And/Or/min-match or phrase
@@ -24,14 +26,15 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 those terms' row groups (picked by the term ranges of
                 footers read once per engine) from each segment's
                 term-sorted postings parquet, the kernel runs in-process
-                as one partition, and the result answers collect() from
-                pandas — no Spark job and no JVM call, the reference's
-                in-process mmap walk (PAPER.md §0);
+                as one partition over the read Arrow table, and the
+                result answers collect() from numpy arrays — no Spark job
+                and no JVM call, the reference's in-process mmap walk
+                (PAPER.md §0);
               - Spark (everything else): parquet scan with `term IN`
                 pushdown -> (for multi-leg queries, with the docmap's
                 norm rows) ONE repartition of the packed blocks by
-                (segment, chunk) -> an
-                Arrow mapInPandas kernel that unpacks delta+varint blocks,
+                (segment, chunk) -> the kernel in mapInArrow, which
+                unpacks delta+varint blocks,
                 scores them, and reduces per-doc sums LOCALLY (a doc's
                 postings for every query term live in the same chunk
                 group, so no downstream groupBy shuffle exists at all);
@@ -88,12 +91,13 @@ the global sort all see the same values the comparator will.
 from __future__ import annotations
 
 import logging
-from collections import Counter
 from functools import cached_property, partial
 from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
@@ -109,7 +113,7 @@ from pyspark.sql.types import (
 )
 
 from iresearch_spark.index.build import DEFAULT_CHUNK_BITS
-from iresearch_spark.index.codec import delta_decode, delta_runs_decode, varint_counts, varint_decode
+from iresearch_spark.index.codec import binary_cells, delta_decode, delta_runs_decode, run_counts, varint_decode
 from iresearch_spark.index.norms import Norms, docmap_lens, norm_rows, take_norm_rows, with_norm_rows
 from iresearch_spark.index.segments import IndexStore, _live_tombstone_col, live_tombstones
 from iresearch_spark.search.query import (
@@ -152,6 +156,7 @@ HITS_SCHEMA = StructType(
         StructField("score", DoubleType()),
     ]
 )
+_HITS_ARROW = pa.schema([("qid", pa.int32()), ("gdoc", pa.int64()), ("score", pa.float64())])
 
 # positions live in the low bits of the phrase intersection key, the
 # doc's dense rank inside its (segment, chunk) group in the high bits
@@ -182,30 +187,128 @@ _log = logging.getLogger(__name__)
 
 class _ScanPlan(NamedTuple):
     """One planned postings scan, runnable at either execution site: the
-    kernel closure, the terms it reads (term -> the number of queries
-    subscribed to it) and the columns, whether its rows must arrive
-    (segment, chunk)-grouped, whether block-max pruning is on, the dict
-    the kernel fills with its block counters (read back only where the
-    kernel ran in this process), and the phrase legs' terms: the blocks
-    whose positions the kernel reads."""
+    kernel closure, the terms it reads (sorted) with the number of queries
+    subscribed to each and each one's doc_freq, the columns, whether its
+    rows must arrive (segment, chunk)-grouped, whether block-max pruning
+    is on, the dict the kernel fills with its block counters (read back
+    only where the kernel ran in this process), the phrase legs' terms
+    (the blocks whose positions the kernel reads), and the scored legs
+    and unscored tail terms it holds (None: a distributed tail)."""
 
     kernel: Callable
-    terms: dict
+    terms: np.ndarray
+    subs: np.ndarray
+    dfs: np.ndarray
     cols: tuple
     grouped: bool
     prune: bool
     counters: dict
     pos_terms: list
+    n_legs: int
+    n_tail: int | None
+
+
+class _TermLegs(NamedTuple):
+    """A term-family query's legs: its terms and their doc_freqs, the
+    first `n_scored` scored by one array scorer (`Scorer.prepare_terms`),
+    the rest an unscored tail (score 0, the reference's lazy bitset leg)."""
+
+    terms: np.ndarray
+    dfs: np.ndarray
+    scorer: TermScorer
+    n_scored: int
 
 
 class _PhraseLeg(NamedTuple):
     """A phrase-family query's leg of the sums kernel: each slot's
     indexed terms, each slot's position offset (relative: the smallest
-    is 0), and the phrase-frequency scorer (summed member idf)."""
+    is 0), the phrase-frequency scorer (summed member idf) and the
+    doc_freq of each term."""
 
     slots: list
     offsets: list
     scorer: TermScorer
+    dfs: dict
+
+
+class _LegTable(NamedTuple):
+    """A scan's legs by term: term t (an index into the sorted `terms`;
+    t = len(terms) stands for blocks of any other term, the distributed
+    tail) has legs ptr[t]:ptr[t+1], each a query `qid`, a scorer family
+    `fam` (index into `families`, one array scorer per family) and the
+    `code` of its term in that family's per-term factor."""
+
+    terms: np.ndarray
+    ptr: np.ndarray
+    qid: np.ndarray
+    fam: np.ndarray
+    code: np.ndarray
+    families: list
+
+
+def _leg_table(parts: list, extra_terms=(), tail: tuple | None = None) -> tuple[_LegTable, np.ndarray]:
+    """The leg table of `parts`, (qid, terms, scorer) with an array
+    scorer over the terms (or a term scorer of a single term), plus
+    `extra_terms` scanned with no leg and an optional (qid, scorer) tail
+    leg. Scorers of one family are concatenated into one array scorer.
+    Also returns each part term's index into the table's terms, in part
+    order."""
+    fam_of: dict = {}
+    members: list[list] = []
+    sizes: list[int] = []
+    t_parts, q_parts, f_parts, c_parts = [], [], [], []
+    for qid, terms, sc in [*parts, *([(tail[0], None, tail[1])] if tail else [])]:
+        n = 1 if terms is None else len(terms)
+        if not n:
+            continue
+        f = fam_of.setdefault(sc.family(), len(members))
+        if f == len(members):
+            members.append([])
+            sizes.append(0)
+        members[f].append(sc)
+        c_parts.append(sizes[f] + np.arange(n))
+        sizes[f] += n
+        f_parts.append(np.full(n, f))
+        q_parts.append(np.full(n, qid))
+        t_parts.append(terms)
+    named = [np.asarray(t, dtype=object) for t in t_parts if t is not None]
+    uterms = np.unique(np.concatenate([*named, np.asarray(list(extra_terms), dtype=object)]))
+    idx = np.searchsorted(uterms, np.concatenate(named)) if named else np.empty(0, np.int64)
+    ti = np.append(idx, [uterms.size] if tail else []).astype(np.int64)
+    qid = np.concatenate(q_parts) if q_parts else np.empty(0, np.int64)
+    order = np.lexsort((qid, ti))
+    table = _LegTable(
+        uterms,
+        np.searchsorted(ti[order], np.arange(uterms.size + 2)),
+        qid[order].astype(np.int64),
+        np.concatenate(f_parts)[order] if f_parts else np.empty(0, np.int64),
+        np.concatenate(c_parts)[order] if c_parts else np.empty(0, np.int64),
+        [TermScorer.concat(m) for m in members],
+    )
+    return table, idx
+
+
+def _score_legs(legs: _LegTable, leg: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    """float64 scores of postings (tfs, dls) under legs `leg`: one call
+    per scorer family, gathering each posting's per-term factor."""
+    out = np.empty(leg.size)
+    fam = legs.fam[leg]
+    for f, sc in enumerate(legs.families):
+        sel = slice(None) if len(legs.families) == 1 else fam == f
+        out[sel] = sc.scores(tfs[sel].astype(sc.dtype), dls[sel].astype(sc.dtype), legs.code[leg[sel]])
+    return out
+
+
+def _gather_cells(data: np.ndarray, offs: np.ndarray, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The bytes of binary cells `rows` (ascending) back to back, and each
+    cell's length: one slice of the column buffer for a run of rows."""
+    lens = offs[rows + 1] - offs[rows]
+    a, b = int(rows[0]), int(rows[-1]) + 1
+    if b - a == rows.size:
+        return data[offs[a] : offs[b]], lens
+    at = np.repeat(offs[rows] - (np.cumsum(lens) - lens), lens) + np.arange(int(lens.sum()))
+    return data[at], lens
+
 
 
 def _transform_arr(mode: str, a: np.ndarray) -> np.ndarray:
@@ -242,19 +345,6 @@ class _SegBase(dict):
 
     def __reduce__(self):
         return (_SegBase, (dict(self), self.norms))
-
-
-def _decode_block_group(docs_bins, tfs_bins, seg_shift: int):
-    """Segmented decode of MANY packed blocks at once (r7): one varint
-    pass per stream for a whole (segment, chunk) group instead of two
-    decodes per block in a Python loop — the merge `_unpack_kernel`
-    pattern applied to the query kernels. Per-block value counts come
-    from the doc stream's varint terminator bytes (high bit clear), so no
-    doc_count column is needed. Returns (docs int64 + seg_shift,
-    tfs uint64, counts per block)."""
-    u8, counts = varint_counts(docs_bins)
-    docs = delta_runs_decode(u8, counts) + seg_shift
-    return docs, varint_decode(b"".join(tfs_bins)), counts
 
 
 def _decode_rows_docs(pdf: pd.DataFrame, seg_base: dict[str, int]):
@@ -302,137 +392,126 @@ def _damerau(a: str, b: str) -> int:
     return d[la + 1][lb + 1]
 
 
-def _lev_batch(cands: list[str], b: str, target_bytes: int = 128 << 20) -> np.ndarray:
-    """Vectorized STANDARD Levenshtein of many candidates against one
-    query (r6): the classic two-row DP batched along the candidate axis in
-    numpy, length-grouped like `_damerau_batch`. Lets the vocab-cached
-    engine expand plain `by_edit_distance` leaves driver-locally with ZERO
-    Spark jobs (the reference walks its parametric DFA over the mmap'd FST
-    the same way, levenshtein_filter.cpp:283) — semantics identical to the
-    SQL path's JVM `levenshtein`."""
-    n = len(cands)
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    b_arr = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    lb = int(b_arr.size)
-    lens = np.fromiter((len(c) for c in cands), dtype=np.int64, count=n)
-    if lb == 0:
-        out[:] = lens
-        return out
-    for la in np.unique(lens):
-        la = int(la)
-        grp = np.flatnonzero(lens == la)
-        if la == 0:
-            out[grp] = lb
-            continue
-        # two DP rows of (m, lb+1) each — size the chunk from their area
-        chunk = max(1, target_bytes // ((lb + 1) * 8 * 3))
-        for c0 in range(0, grp.size, chunk):
-            idx = grp[c0 : c0 + chunk]
-            m = idx.size
-            amat = (
-                np.frombuffer(
-                    "".join(cands[i] for i in idx).encode("utf-32-le"),
-                    dtype=np.uint32,
-                )
-                .astype(np.int64)
-                .reshape(m, la)
-            )
-            prev = np.broadcast_to(
-                np.arange(lb + 1, dtype=np.int64), (m, lb + 1)
-            ).copy()
-            cur = np.empty((m, lb + 1), dtype=np.int64)
-            for i in range(1, la + 1):
-                cur[:, 0] = i
-                ai = amat[:, i - 1]
-                for j in range(1, lb + 1):
-                    v = prev[:, j - 1] + (ai != b_arr[j - 1])
-                    np.minimum(v, prev[:, j] + 1, out=v)
-                    np.minimum(v, cur[:, j - 1] + 1, out=v)
-                    cur[:, j] = v
-                prev, cur = cur, prev
-            out[idx] = prev[:, lb]
+def _utf32_groups(cands: list[str]) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Same-length groups of `cands`: (indices, (n, length) UTF-32 code
+    matrix) per distinct length, shortest first."""
+    lens = np.fromiter(map(len, cands), dtype=np.int64, count=len(cands))
+    order = np.argsort(lens, kind="stable")
+    out = []
+    for idx in np.split(order, np.flatnonzero(np.diff(lens[order])) + 1):
+        if idx.size:
+            s = "".join(cands[i] for i in idx.tolist())
+            out.append((idx, np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).reshape(idx.size, -1)))
     return out
 
 
-def _damerau_batch(
-    cands: list[str], b: str, target_bytes: int = 128 << 20
-) -> np.ndarray:
-    """Vectorized true Damerau-Levenshtein of many candidate strings
-    against one query: the same unrestricted DP as `_damerau`, batched
-    along the candidate axis in numpy (length-grouped so every candidate
-    in a group shares the DP shape; groups chunked so the (m, la+2, lb+2)
-    history tensor stays small). The i/j loops are O(|a|*|b|) Python steps,
-    each a handful of (m,)-wide numpy ops — the r4 per-candidate Python DP
-    cost (r4 VERDICT wrong-3/next-4) becomes C-level per-char work."""
-    n = len(cands)
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-    b_arr = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    lb = int(b_arr.size)
-    lens = np.fromiter((len(c) for c in cands), dtype=np.int64, count=n)
-    if lb == 0:
-        out[:] = lens  # empty query: distance = candidate length
-        return out
+def _lev_rows(amat: np.ndarray, b: str, target_bytes: int = 128 << 20) -> np.ndarray:
+    """STANDARD Levenshtein distance of every row of a (m, la) UTF-32 code
+    matrix (same-length candidates) to `b`: the classic two-row DP
+    batched along the candidate axis in numpy, chunked so the two (m,
+    lb+1) rows stay within `target_bytes`."""
+    m, la = amat.shape
+    b_arr = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+    lb = b_arr.size
+    if la == 0 or lb == 0:
+        return np.full(m, la + lb, dtype=np.int64)
+    out = np.empty(m, dtype=np.int64)
+    chunk = max(1, target_bytes // ((lb + 1) * 8 * 3))
+    for c0 in range(0, m, chunk):
+        at = np.ascontiguousarray(amat[c0 : c0 + chunk].T)  # one row per char
+        mm = at.shape[1]
+        prev = np.broadcast_to(np.arange(lb + 1, dtype=np.int64), (mm, lb + 1)).copy()
+        cur = np.empty((mm, lb + 1), dtype=np.int64)
+        for i in range(1, la + 1):
+            cur[:, 0] = i
+            ai = at[i - 1]
+            for j in range(1, lb + 1):
+                v = prev[:, j - 1] + (ai != b_arr[j - 1])
+                np.minimum(v, prev[:, j] + 1, out=v)
+                np.minimum(v, cur[:, j - 1] + 1, out=v)
+                cur[:, j] = v
+            prev, cur = cur, prev
+        out[c0 : c0 + mm] = prev[:, lb]
+    return out
+
+
+def _damerau_rows(amat: np.ndarray, b: str, target_bytes: int = 128 << 20) -> np.ndarray:
+    """True Damerau-Levenshtein distance of every row of a (m, la) UTF-32
+    code matrix to `b`: the same unrestricted DP as `_damerau`, batched
+    along the candidate axis in numpy, chunked so the (m, la+2, lb+2)
+    history tensor stays within `target_bytes`. The i/j loops are
+    O(|a|*|b|) Python steps, each a handful of (m,)-wide numpy ops."""
+    m, la = amat.shape
+    b_arr = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
+    lb = b_arr.size
+    if la == 0 or lb == 0:
+        return np.full(m, la + lb, dtype=np.int64)
+    out = np.empty(m, dtype=np.int64)
     bsort = np.unique(b_arr)
     j_cidx = np.searchsorted(bsort, b_arr)  # per-j index into last_row cols
-    for la in np.unique(lens):
-        la = int(la)
-        grp = np.flatnonzero(lens == la)
-        if la == 0:
-            out[grp] = lb
-            continue
-        # chunk sized from the DP area so the (m, la+2, lb+2) history
-        # tensor stays bounded regardless of string length (a fixed chunk
-        # made memory scale with la*lb — ADVICE r5)
-        chunk = max(1, target_bytes // ((la + 2) * (lb + 2) * 8))
-        for c0 in range(0, grp.size, chunk):
-            idx = grp[c0 : c0 + chunk]
-            m = idx.size
-            amat = (
-                np.frombuffer(
-                    "".join(cands[i] for i in idx).encode("utf-32-le"),
-                    dtype=np.uint32,
-                )
-                .astype(np.int64)
-                .reshape(m, la)
-            )
-            maxdist = la + lb
-            D = np.full((m, la + 2, lb + 2), maxdist, dtype=np.int64)
-            D[:, 1:, 1] = np.arange(la + 1)
-            D[:, 1, 1:] = np.arange(lb + 1)
-            last_row = np.zeros((m, bsort.size), dtype=np.int64)
-            rows_m = np.arange(m)
-            for i in range(1, la + 1):
-                ai = amat[:, i - 1]
-                last_col = np.zeros(m, dtype=np.int64)
-                for j in range(1, lb + 1):
-                    k = last_row[:, j_cidx[j - 1]]
-                    l = last_col
-                    cost = (ai != b_arr[j - 1]).astype(np.int64)
-                    v = D[:, i, j] + cost
-                    np.minimum(v, D[:, i + 1, j] + 1, out=v)
-                    np.minimum(v, D[:, i, j + 1] + 1, out=v)
-                    # transpose-block move from the last (match, match) cell
-                    np.minimum(v, D[rows_m, k, l] + (i - k) + (j - l) - 1, out=v)
-                    D[:, i + 1, j + 1] = v
-                    last_col = np.where(cost == 0, j, l)
-                pos = np.searchsorted(bsort, ai)
-                ok = pos < bsort.size
-                pos0 = np.where(ok, pos, 0)
-                ok &= bsort[pos0] == ai
-                last_row[rows_m[ok], pos0[ok]] = i
-            out[idx] = D[:, la + 1, lb + 1]
+    # chunk sized from the DP area so the history tensor stays bounded
+    # regardless of string length (a fixed chunk made memory scale with
+    # la*lb — ADVICE r5)
+    chunk = max(1, target_bytes // ((la + 2) * (lb + 2) * 8))
+    for c0 in range(0, m, chunk):
+        at = np.ascontiguousarray(amat[c0 : c0 + chunk].T)
+        mm = at.shape[1]
+        maxdist = la + lb
+        D = np.full((mm, la + 2, lb + 2), maxdist, dtype=np.int64)
+        D[:, 1:, 1] = np.arange(la + 1)
+        D[:, 1, 1:] = np.arange(lb + 1)
+        last_row = np.zeros((mm, bsort.size), dtype=np.int64)
+        rows_m = np.arange(mm)
+        for i in range(1, la + 1):
+            ai = at[i - 1]
+            last_col = np.zeros(mm, dtype=np.int64)
+            for j in range(1, lb + 1):
+                k = last_row[:, j_cidx[j - 1]]
+                l = last_col
+                cost = (ai != b_arr[j - 1]).astype(np.int64)
+                v = D[:, i, j] + cost
+                np.minimum(v, D[:, i + 1, j] + 1, out=v)
+                np.minimum(v, D[:, i, j + 1] + 1, out=v)
+                # transpose-block move from the last (match, match) cell
+                np.minimum(v, D[rows_m, k, l] + (i - k) + (j - l) - 1, out=v)
+                D[:, i + 1, j + 1] = v
+                last_col = np.where(cost == 0, j, l)
+            pos = np.searchsorted(bsort, ai)
+            ok = pos < bsort.size
+            pos0 = np.where(ok, pos, 0)
+            ok &= bsort[pos0] == ai
+            last_row[rows_m[ok], pos0[ok]] = i
+        out[c0 : c0 + mm] = D[:, la + 1, lb + 1]
     return out
 
 
-def _phrase_rows(phrases, uniq, codes, tok_codes, docs, tfs, dl_of, pos_bins):
+def _lev_batch(cands: list[str], b: str, target_bytes: int = 128 << 20) -> np.ndarray:
+    """Levenshtein distance of many candidates to one query (`_lev_rows`
+    per candidate length) — semantics identical to the SQL path's JVM
+    `levenshtein`."""
+    out = np.empty(len(cands), dtype=np.int64)
+    for idx, amat in _utf32_groups(cands):
+        out[idx] = _lev_rows(amat, b, target_bytes)
+    return out
+
+
+def _damerau_batch(cands: list[str], b: str, target_bytes: int = 128 << 20) -> np.ndarray:
+    """True Damerau-Levenshtein distance of many candidates to one query
+    (`_damerau_rows` per candidate length) — the executors' verify in the
+    no-vocab regime."""
+    out = np.empty(len(cands), dtype=np.int64)
+    for idx, amat in _utf32_groups(cands):
+        out[idx] = _damerau_rows(amat, b, target_bytes)
+    return out
+
+
+def _phrase_rows(phrases, n_terms, tc, tok_t, docs, tfs, dl_of, pos_bytes):
     """Phrase legs over one decoded (segment, chunk) group: [(qid, gdocs,
-    scores)], one entry per matching doc. `codes` holds each block's and
-    `tok_codes` each posting's index into the group's terms `uniq`;
-    `dl_of(gdocs)` gives the matching docs' lengths.
+    scores)], one entry per matching doc. `phrases` holds (qid, leg, each
+    slot's term indices); `tc` holds each block's and `tok_t` each
+    posting's term index (of the scan's `n_terms`); `dl_of(gdocs)` gives
+    the matching docs' lengths and `pos_bytes(mask)` the position streams
+    of the masked blocks, back to back.
 
     Phrase matching is set algebra on packed keys (reference
     FixedPhraseFrequency leapfrog, core/search/phrase_iterator.hpp:75-154,
@@ -447,22 +526,23 @@ def _phrase_rows(phrases, uniq, codes, tok_codes, docs, tfs, dl_of, pos_bins):
     resets the position deltas at each doc)."""
     if not phrases:
         return []
-    code_of = {t: c for c, t in enumerate(uniq)}
+    present = np.zeros(n_terms + 1, dtype=bool)
+    present[tc] = True
     ready = []
-    for qid, ph in phrases:
-        slots = [[code_of[t] for t in ts if t in code_of] for ts in ph.slots]
-        if all(slots):
+    for qid, ph, slots in phrases:
+        slots = [cs[present[cs]] for cs in slots]
+        if all(cs.size for cs in slots):
             ready.append((qid, ph, slots))
     if not ready:
         return []
-    need = np.zeros(len(uniq), dtype=bool)
-    need[[c for _, _, slots in ready for cs in slots for c in cs]] = True
-    tok = np.flatnonzero(need[tok_codes])  # whole blocks, in block order
+    need = np.zeros(n_terms + 1, dtype=bool)
+    need[np.concatenate([cs for _, _, slots in ready for cs in slots])] = True
+    tok = np.flatnonzero(need[tok_t])  # whole blocks, in block order
     tf = tfs[tok].astype(np.int64)
-    pos = delta_runs_decode(b"".join(pos_bins[b] for b in np.flatnonzero(need[codes])), tf)
+    pos = delta_runs_decode(pos_bytes(need[tc]), tf)
     udocs, rank = np.unique(docs[tok], return_inverse=True)
     prank = np.repeat(rank.astype(np.int64) << _POS_BITS, tf)
-    pcode = np.repeat(tok_codes[tok], tf)
+    pcode = np.repeat(tok_t[tok], tf)
     out = []
     for qid, ph, slots in ready:
         acc = None
@@ -488,7 +568,7 @@ _MERGE_CODE = {m: i for i, (m, _) in enumerate(_MERGE_REDUCERS)}
 
 
 def _sums_kernel(
-    legs: dict[str, list[tuple[int, TermScorer]]],
+    legs: _LegTable,
     mm_arr: np.ndarray,
     ca_arr: np.ndarray,
     mc_arr: np.ndarray,
@@ -499,26 +579,29 @@ def _sums_kernel(
     deleted,  # np.ndarray | pyspark Broadcast of one | None
     grouped: bool,
     prune: bool = False,
-    other_ub: dict[str, float] | None = None,
-    other_ub_default: float = 0.0,
-    tail_legs: list[tuple[int, TermScorer]] | None = None,
+    other_ub: np.ndarray | None = None,
     counters: dict | None = None,
     phrases: list[tuple[int, _PhraseLeg]] = (),
 ):
-    """mapInPandas kernel: packed block rows -> per-(query, doc)
-    (qid, gdoc, score) for one query or a batch sharing one postings scan.
+    """Arrow kernel (mapInArrow, or called in-process on the driver):
+    packed block rows (`pyarrow.RecordBatch`es) -> per-(query, doc)
+    (qid, gdoc, score) batches for one query or a batch sharing one
+    postings scan.
 
-    `legs`: term -> [(qid, scorer), ...], every query whose expansion
-    contains the term; a block is decoded ONCE and its postings scored for
-    each subscribed query. Per-query params ride in aligned arrays indexed
-    by qid: `mm_arr` min_match, `ca_arr` const_add, `mc_arr` merge code
-    (index into _MERGE_REDUCERS). `tail_legs` subscribe every block whose
-    term is not in `legs` — the distributed unscored tail (no-vocab
-    regime), a shared zero scorer; without them every block's term must
-    have legs (the scan reads only those terms). `phrases`: (qid, leg) per
-    phrase-family query, whose rows (`_phrase_rows`) join the term legs'
-    before the reduction; they need a `pos_bin` column, which may be null
-    for blocks of terms no phrase reads.
+    `legs` (`_leg_table`): each term's legs, (qid, scorer family, term
+    code); a block is decoded ONCE and its postings scored for every
+    subscribed query, every leg of one scorer family in one call that
+    gathers each posting's per-term factor by its code. Blocks of a term
+    outside `legs.terms` take the tail legs (the no-vocab regime's
+    distributed unscored tail, a zero scorer); without them every block's
+    term must be in `legs.terms` (the scan reads only those terms).
+    Per-query params ride in aligned arrays indexed by qid: `mm_arr`
+    min_match, `ca_arr` const_add, `mc_arr` merge code (index into
+    _MERGE_REDUCERS). `phrases`: (qid, leg) per phrase-family query,
+    whose rows (`_phrase_rows`) join the term legs' before the reduction;
+    they need a `pos_bin` column, which may be null for blocks of terms
+    no phrase reads. Binary cells are read as slices of their column's
+    buffer (`binary_cells`): a group's cells decode as one run.
 
     grouped=True requires rows sorted by (segment, chunkid) within the
     partition (a doc's blocks for all query terms share one group — chunk
@@ -538,10 +621,10 @@ def _sums_kernel(
     docs were already discarded inside the kernel).
 
     prune (width-1 plans only): block-max skipping against the query's
-    current k-th best, with `other_ub` (`other_ub_default` for tail terms)
-    the other legs' whole-list bounds. A batch block would only be
-    skippable when EVERY subscriber's bound fails, measured at 0% of
-    blocks at batch widths (OPTIMIZATION_r07 §7).
+    current k-th best, with `other_ub` (by term index, the tail last) the
+    other legs' whole-list bounds. A batch block would only be skippable
+    when EVERY subscriber's bound fails, measured at 0% of blocks at
+    batch widths (OPTIMIZATION_r07 §7).
 
     `counters` (direct/driver-side calls only — a distributed task's dict
     never comes back): filled with {"blocks", "skipped"} so tests and the
@@ -555,21 +638,32 @@ def _sums_kernel(
     has_const = bool(ca_arr.any())
     has_min_match = bool((mm_arr > 1).any())
     qid_edges = np.arange(n_q + 1)
+    n_terms = len(legs.terms)
+    n_legs = np.diff(legs.ptr)  # legs per term index, the tail's last
+    seg_names = list(seg_base)
+    seg_shift = np.array([seg_base[s] for s in seg_names], dtype=np.int64)
+    ph_codes = [
+        (qid, ph, [np.searchsorted(legs.terms, np.asarray(ts, dtype=object)) for ts in ph.slots])
+        for qid, ph in phrases
+    ]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         dels = _resolve_deleted(deleted)
         norms = getattr(seg_base, "norms", None)
         if norms is None:
             norms = Norms()
+        term_set = pa.array(legs.terms, pa.string())
+        seg_set = pa.array(seg_names, pa.string())
         pools = [np.empty(0, dtype=np.float64) for _ in range(n_q)]  # descending
         thr = np.full(n_q, -np.inf)  # per-query k-th best (-inf until full)
         out_q: list[int] = []
         out_d: list[np.ndarray] = []
         out_s: list[np.ndarray] = []
-        # grouped mode buffers RAW streams per (segment, chunk) group;
-        # decode happens batched at flush (wide multiterm expansions put
-        # thousands of small blocks in one group)
-        buf: list = []  # (term, docs_bin, tfs_bin, pos_bin) per block
+        # grouped mode buffers the row runs of the current (segment,
+        # chunk) group, across batches; decode happens batched at flush
+        # (wide multiterm expansions put thousands of small blocks in one
+        # group)
+        buf: list = []  # (rows, term index, docs cells, tfs cells, pos cells)
         cur_key: tuple | None = None
         shift = 0
 
@@ -594,53 +688,65 @@ def _sums_kernel(
             out_d.append(gd)
             out_s.append(tsums)
 
+        def cells(i: int) -> tuple[np.ndarray, np.ndarray]:
+            """The current group's cells of buffered column i, back to back,
+            and their lengths."""
+            got = [_gather_cells(*p[i], p[0]) for p in buf]
+            if len(got) == 1:
+                return got[0]
+            return np.concatenate([g[0] for g in got]), np.concatenate([g[1] for g in got])
+
+        def pos_bytes(mask: np.ndarray) -> np.ndarray:
+            out, o = [], 0
+            for rows, _, _, _, pos in buf:
+                m = mask[o : o + rows.size]
+                o += rows.size
+                if m.any():
+                    out.append(_gather_cells(*pos, rows[m])[0])
+            return np.concatenate(out)
+
         def flush() -> None:
             if not buf:
                 return
-            terms, docs_bins, tfs_bins, pos_bins = zip(*buf)
-            buf.clear()
-            docs, tfs_u, counts_b = _decode_block_group(docs_bins, tfs_bins, shift)
-            seg = cur_key[0]
+            tc = np.concatenate([tcode[rows] for rows, tcode, *_ in buf])
+            d8, dlen = cells(2)
+            counts = run_counts(d8, dlen)
+            docs = delta_runs_decode(d8, counts) + shift
+            tfs = varint_decode(cells(3)[0])
+            seg = seg_names[cur_key[0]]
 
             def dl_of(gd: np.ndarray) -> np.ndarray:
                 return norms.of(seg, gd - shift)
 
-            dls_u = None  # gathered once, on the first term leg
-            codes, uniq = pd.factorize(np.asarray(terms, dtype=object))
-            # fan out: each term's token positions scored once per
-            # subscribed query (casts shared by one scorer dtype)
-            tok_codes = np.repeat(codes, counts_b)
-            by_term = np.argsort(tok_codes, kind="stable")
-            term_ends = np.cumsum(np.bincount(tok_codes, minlength=len(uniq)))
-            parts_p, parts_s, leg_q, leg_n = [], [], [], []
-            lo = 0
-            for t, hi in zip(uniq, term_ends):
-                pos, lo = by_term[lo:hi], hi  # the term's token positions
-                cast: dict = {}
-                for qid, sc in legs.get(t) or tail_legs or ():
-                    if dls_u is None:
-                        dls_u = dl_of(docs)
-                    if sc.dtype not in cast:
-                        cast[sc.dtype] = (tfs_u[pos].astype(sc.dtype), dls_u[pos].astype(sc.dtype))
-                    parts_p.append(pos)
-                    parts_s.append(sc.scores(*cast[sc.dtype]).astype(np.float64, copy=False))
-                    leg_q.append(qid)
-                    leg_n.append(pos.size)
+            # fan out: each posting once per leg of its term, the legs of
+            # one scorer family scored in one call
+            tok_t = np.repeat(tc, counts)
+            rep = n_legs[tok_t]
+            if (rep == 1).all():
+                tok, leg = np.arange(tok_t.size), legs.ptr[tok_t]
+            else:
+                tok = np.repeat(np.arange(tok_t.size), rep)
+                first = np.cumsum(rep) - rep
+                leg = np.repeat(legs.ptr[tok_t] - first, rep) + np.arange(tok.size)
+            ps, pd_, pq, psc = [tok], [docs[tok]], [legs.qid[leg]], []
+            if tok.size:
+                psc.append(_score_legs(legs, leg, tfs[tok], dl_of(docs)[tok]))
             # a phrase leg's rows (one per matching doc) join as extra
             # entries past the group's postings
-            ph_rows = _phrase_rows(phrases, uniq, codes, tok_codes, docs, tfs_u, dl_of, pos_bins)
-            for qid, gd, sc in ph_rows:
-                parts_p.append(np.arange(docs.size, docs.size + gd.size))
-                docs = np.concatenate((docs, gd))
-                parts_s.append(sc)
-                leg_q.append(qid)
-                leg_n.append(gd.size)
-            if not parts_s:
+            nxt = docs.size
+            for qid, gd, sc in _phrase_rows(ph_codes, n_terms, tc, tok_t, docs, tfs, dl_of, pos_bytes):
+                ps.append(np.arange(nxt, nxt + gd.size))
+                nxt += gd.size
+                pd_.append(gd)
+                pq.append(np.full(gd.size, qid, dtype=np.int64))
+                psc.append(sc)
+            buf.clear()
+            if not psc:
                 return
-            pos = np.concatenate(parts_p)
-            gdocs = docs[pos]
-            scores = np.concatenate(parts_s)
-            qids = np.repeat(np.asarray(leg_q, dtype=np.int64), leg_n)
+            pos = np.concatenate(ps)
+            gdocs = np.concatenate(pd_)
+            scores = np.concatenate(psc)
+            qids = np.concatenate(pq)
             # one sort by (qid, doc, token position): every (query, doc)
             # sum adds its legs in token order — the float order of a
             # per-doc reduction over the group's rows
@@ -666,67 +772,71 @@ def _sums_kernel(
                 if qb[q] < qb[q + 1]:
                     emit(q, gd[qb[q] : qb[q + 1]], sums[qb[q] : qb[q + 1]])
 
-        for pdf in batches:
-            pdf = take_norm_rows(pdf, norms)
-            n = len(pdf)
+        for batch in batches:
+            batch = take_norm_rows(batch, norms)
+            n = batch.num_rows
             if n == 0:
                 continue
-            terms = pdf["term"].to_numpy()
-            segs = pdf["segment"].to_numpy()
-            chunks = pdf["chunkid"].to_numpy() if grouped else None
-            docsb = pdf["docs_bin"].to_numpy()
-            tfsb = pdf["tfs_bin"].to_numpy()
-            posb = pdf["pos_bin"].to_numpy() if phrases else [None] * n
+            tcode = pc.fill_null(pc.index_in(batch.column("term"), value_set=term_set), n_terms).to_numpy()
+            scode = pc.index_in(batch.column("segment"), value_set=seg_set).to_numpy()
+            docsb = binary_cells(batch.column("docs_bin"))
+            tfsb = binary_cells(batch.column("tfs_bin"))
+            posb = binary_cells(batch.column("pos_bin")) if phrases else None
             # Vectorized block-max bounds (r3: per-row scalar bounds cost
             # more than the skipped decodes at bench scale — VERDICT r2
-            # "WAND inversion"): one numpy pass per term, factorized masks
-            # (r7 — a 1k-term wildcard spent more in O(n_unique * n) object
-            # compares than in the skipped decodes); the row loop does a
-            # single array-index compare. Arithmetic stays float64 so
-            # bounds never round DOWN.
+            # "WAND inversion"): one scorer call per family for the whole
+            # batch, gathering each block's per-term factor. Arithmetic
+            # stays float64 so bounds never round DOWN.
             tb = None
             if prune:
-                maxtf = pdf["max_tf"].to_numpy()
-                mindl = pdf["min_dl"].to_numpy()
-                tb = np.empty(n, dtype=np.float64)
-                t_codes, t_uniq = pd.factorize(terms)
-                for ci, term in enumerate(t_uniq):
-                    m = t_codes == ci
-                    sc_t = (legs.get(term) or tail_legs)[0][1]
-                    blk = sc_t.scores(
-                        maxtf[m].astype(sc_t.dtype), mindl[m].astype(sc_t.dtype)
-                    ).astype(np.float64)
-                    if merge0 == "sum":
-                        # doc total <= this leg's block bound + every other
-                        # leg's whole-list bound
-                        tb[m] = blk + other_ub.get(term, other_ub_default) + ca_arr[0]
-                    elif merge0 == "max":
-                        tb[m] = np.maximum(blk, other_ub.get(term, other_ub_default)) + ca_arr[0]
-                    else:  # min: doc present in THIS leg -> min <= blk
-                        tb[m] = blk + ca_arr[0]
+                leg0 = legs.ptr[tcode]  # width 1: a term's one leg
+                blk = _score_legs(
+                    legs, leg0, batch.column("max_tf").to_numpy(), batch.column("min_dl").to_numpy()
+                )
+                if merge0 == "sum":
+                    # doc total <= this leg's block bound + every other
+                    # leg's whole-list bound
+                    tb = blk + other_ub[tcode] + ca_arr[0]
+                elif merge0 == "max":
+                    tb = np.maximum(blk, other_ub[tcode]) + ca_arr[0]
+                else:  # min: doc present in THIS leg -> min <= blk
+                    tb = blk + ca_arr[0]
                 tb = _transform_arr(mode, tb)
             if counters is not None:
                 counters["blocks"] = counters.get("blocks", 0) + n
-            for i in range(n):
-                if grouped:
-                    key = (segs[i], chunks[i])
+            if grouped:
+                chunks = batch.column("chunkid").to_numpy()
+                cut = np.flatnonzero((scode[1:] != scode[:-1]) | (chunks[1:] != chunks[:-1])) + 1
+                for a, b in zip([0, *cut], [*cut, n]):
+                    key = (int(scode[a]), int(chunks[a]))
                     if key != cur_key:
                         flush()
                         cur_key = key
-                        shift = seg_base.get(segs[i], 0)
+                        shift = int(seg_shift[key[0]])
+                    rows = np.arange(a, b)
+                    if tb is not None:
+                        skip = tb[a:b] < thr[0]  # block-max skip (STRICT <)
+                        if skip.any():
+                            if counters is not None:
+                                counters["skipped"] = counters.get("skipped", 0) + int(skip.sum())
+                            rows = rows[~skip]
+                    if rows.size:  # decode deferred to the batched flush
+                        buf.append((rows, tcode, docsb, tfsb, posb))
+                continue
+            for i in range(n):
                 if tb is not None and tb[i] < thr[0]:
                     if counters is not None:
                         counters["skipped"] = counters.get("skipped", 0) + 1
                     continue  # block-max skip (STRICT <)
-                if grouped:  # defer decode to the batched flush
-                    buf.append((terms[i], docsb[i], tfsb[i], posb[i]))
-                    continue
-                qid, sc = (legs.get(terms[i]) or tail_legs)[0]
-                docs = delta_decode(varint_decode(docsb[i])).astype(np.int64)
-                leg = sc.scores(
-                    varint_decode(tfsb[i]).astype(sc.dtype), norms.of(segs[i], docs).astype(sc.dtype)
-                ).astype(np.float64, copy=False)
-                emit(qid, docs + seg_base.get(segs[i], 0), leg)
+                leg = legs.ptr[tcode[i]]
+                sc = legs.families[legs.fam[leg]]
+                d8, o = docsb
+                docs = delta_decode(varint_decode(d8[o[i] : o[i + 1]])).astype(np.int64)
+                t8, o = tfsb
+                tfs = varint_decode(t8[o[i] : o[i + 1]])
+                dls = norms.of(seg_names[scode[i]], docs)
+                scores = sc.scores(tfs.astype(sc.dtype), dls.astype(sc.dtype), np.full(docs.size, legs.code[leg]))
+                emit(int(legs.qid[leg]), docs + seg_shift[scode[i]], scores.astype(np.float64, copy=False))
         flush()
         if out_d:
             gd = np.concatenate(out_d)
@@ -740,7 +850,7 @@ def _sums_kernel(
                 gq_s = gq[order]
                 sel = order[np.arange(gq_s.size) - np.searchsorted(gq_s, gq_s) < k]
                 gq, gd, sc_ = gq[sel], gd[sel], sc_[sel]
-            yield pd.DataFrame({"qid": gq, "gdoc": gd, "score": sc_})
+            yield pa.RecordBatch.from_arrays([pa.array(gq), pa.array(gd), pa.array(sc_)], schema=_HITS_ARROW)
 
     return kernel
 
@@ -762,11 +872,17 @@ def _topk_sums_kernel(
     default_scorer: TermScorer | None = None,
     other_ub_default: float = 0.0,
 ):
-    """The sums kernel for ONE query (qid 0) — a width-1 plan, built
-    directly from its scorers and bounds (kernel-level benches and tests).
-    `default_scorer` scores blocks of terms outside `scorers` (the tail)."""
-    return _sums_kernel(
-        {t: [(0, sc)] for t, sc in scorers.items()},
+    """The sums kernel for ONE query (qid 0), pandas in and pandas out —
+    a width-1 plan built directly from term scorers and bounds, for
+    kernel-level benches and tests. `default_scorer` scores blocks of
+    terms outside `scorers` (the tail)."""
+    legs, _ = _leg_table(
+        [(0, [t], sc) for t, sc in scorers.items()],
+        tail=None if default_scorer is None else (0, default_scorer),
+    )
+    ub = [other_ub.get(t, other_ub_default) for t in legs.terms.tolist()]
+    kern = _sums_kernel(
+        legs,
         np.array([min_match], dtype=np.int64),
         np.array([const_add], dtype=np.float64),
         np.array([_MERGE_CODE[merge]], dtype=np.int64),
@@ -776,41 +892,47 @@ def _topk_sums_kernel(
         deleted=deleted,
         grouped=grouped,
         prune=prune,
-        other_ub=other_ub,
-        other_ub_default=other_ub_default,
-        tail_legs=None if default_scorer is None else [(0, default_scorer)],
+        other_ub=np.array([*ub, other_ub_default], dtype=np.float64),
         counters=counters,
     )
 
+    def run(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in kern(pa.RecordBatch.from_pandas(f, preserve_index=False) for f in frames):
+            yield b.to_pandas()
 
-# pandas dtypes of toPandas() on the result columns' Spark types
-_PANDAS_DTYPES = {LongType: np.int64, FloatType: np.float32, DoubleType: np.float64, StringType: object}
+    return run
+
+
+
+# numpy dtypes of toPandas() on the result columns' Spark types
+_NP_DTYPES = {LongType: np.int64, FloatType: np.float32, DoubleType: np.float64, StringType: object}
 
 
 class _LocalFrame(_ClassicDataFrame):
-    """DataFrame of a small driver-side pandas result ([query,] gdoc,
-    score). `collect()`, `toPandas()`, `count()`, `schema` and `columns`
-    answer from the pandas frame, with the Row fields, Python types and
-    pandas dtypes Spark's own answers have, and make no JVM call. Any
-    other use (join, union, orderBy, explain, ...) reads `_jdf`, which
-    builds the local relation once; from then on the frame is an ordinary
-    DataFrame over it."""
+    """DataFrame of a small driver-side result: numpy ([query,] gdoc,
+    score) columns. `collect()`, `toPandas()`, `count()`, `schema` and
+    `columns` answer from the arrays, with the Row fields, Python types
+    and pandas dtypes Spark's own answers have, and make no JVM call; a
+    pandas frame is built only by `toPandas()`. Any other use (join,
+    union, orderBy, explain, ...) reads `_jdf`, which builds the local
+    relation once; from then on the frame is an ordinary DataFrame over
+    it."""
 
     def __new__(cls, *args, **kwargs):
         # the classic __new__ calls __init__(jdf, session)
         return object.__new__(cls)
 
-    def __init__(self, session: SparkSession, pdf: pd.DataFrame, schema: StructType):
+    def __init__(self, session: SparkSession, cols: dict[str, np.ndarray], schema: StructType):
         self._session = session
         self._sc = session._sc
         self.is_cached = False
         self._support_repr_html = False
-        self._pdf = pdf
+        self._cols = cols
         self.schema = schema  # shadows the classic property's JVM schema call
 
     @cached_property
     def _jdf(self):
-        pdf = self._pdf
+        pdf = self.toPandas()
         if pdf.empty:
             # limit(0) of a one-row local relation folds to an empty local
             # relation (an empty pandas frame or list becomes an RDD scan,
@@ -820,20 +942,18 @@ class _LocalFrame(_ClassicDataFrame):
             return self._session.createDataFrame(pdf, self.schema).limit(0)._jdf
         return self._session.createDataFrame(pdf, self.schema)._jdf
 
+    def _typed(self) -> dict[str, np.ndarray]:
+        return {f.name: self._cols[f.name].astype(_NP_DTYPES[type(f.dataType)], copy=False) for f in self.schema}
+
     def toPandas(self) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                f.name: self._pdf[f.name].to_numpy(_PANDAS_DTYPES[type(f.dataType)])
-                for f in self.schema
-            }
-        )
+        return pd.DataFrame(self._typed())
 
     def collect(self) -> list:
-        pdf, names = self.toPandas(), self.columns
-        return [_create_row(names, vals) for vals in zip(*(pdf[c].tolist() for c in names))]
+        cols, names = self._typed(), self.columns
+        return [_create_row(names, vals) for vals in zip(*(cols[c].tolist() for c in names))]
 
     def count(self) -> int:
-        return len(self._pdf)
+        return len(self._cols["gdoc"])
 
 
 class SearchEngine:
@@ -867,12 +987,14 @@ class SearchEngine:
         self.has_positions = not self._segments_without("pos_bin")
         # driver-side term dictionary (lazy): for vocabularies up to
         # VOCAB_CACHE_MAX the whole (term, doc_freq) table is pulled to the
-        # driver once, so Term/Prefix/Wildcard/Range expansion is a local
-        # lookup instead of a Spark job per query — the reference reads its
-        # term dictionary from mmap'd FST for the same reason. Fuzzy stays
-        # on the SQL path (JVM levenshtein beats a Python loop).
-        self._vocab: tuple[list[str], list[int]] | None | bool = False
-        self._vocab_series: pd.Series | None = None
+        # driver once, so every multiterm expansion is a local lookup
+        # instead of a Spark job per query — the reference reads its term
+        # dictionary from mmap'd FST for the same reason. `_vocab` holds
+        # it as (terms, doc_freqs) arrays, `_fuzzy_index` the per-length
+        # code matrices Fuzzy expands against (built on the first Fuzzy
+        # query)
+        self._vocab: tuple[np.ndarray, np.ndarray] | None | bool = False
+        self._fuzzy_index: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
         # proxy_filter cache: normalized child (+boost) -> persisted hits
         self._proxy_cache: dict = {}
         self.last_run: dict | None = None  # the last topk(_batch)'s site choice
@@ -1016,11 +1138,10 @@ class SearchEngine:
 
     VOCAB_CACHE_MAX = 1_000_000
 
-    def _vocab_pairs(self) -> tuple[list[str], list[int]] | None:
-        """(terms sorted asc, doc_freqs aligned) — or None when the
-        dictionary is too large to hold on the driver."""
+    def _vocab_pairs(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """(terms sorted asc, doc_freqs aligned) as arrays — or None when
+        the dictionary is too large to hold on the driver."""
         if self._vocab is False:
-            import pyarrow as pa
             import pyarrow.dataset as pads
 
             segs = [
@@ -1031,10 +1152,11 @@ class SearchEngine:
                 # the footers' row sum bounds the distinct terms: no Spark
                 # job — pyarrow reads (term, doc_freq), sums per term and
                 # sorts by UTF-8 bytes (the order of Spark's orderBy and of
-                # Python's str comparison, which bisect relies on)
+                # Python's str comparison, which searchsorted relies on)
                 t = pa.concat_tables(d.to_table(columns=["term", "doc_freq"]) for d in segs)
                 t = t.group_by("term").aggregate([("doc_freq", "sum")]).sort_by("term")
-                terms, dfs = t["term"].to_pylist(), t["doc_freq_sum"].to_pylist()
+                terms = t["term"].to_numpy()
+                dfs = t["doc_freq_sum"].to_numpy()
             else:
                 # ONE job (r7): pull cap+1 sorted rows — the extra row
                 # answers "too large?"; the pull materializes the cache the
@@ -1045,33 +1167,27 @@ class SearchEngine:
                     .limit(self.VOCAB_CACHE_MAX + 1)
                     .collect()
                 )
-                terms = [r["term"] for r in rows]
-                dfs = [r["doc_freq"] for r in rows]
+                terms = np.array([r["term"] for r in rows], dtype=object)
+                dfs = np.array([r["doc_freq"] for r in rows], dtype=np.int64)
                 if len(rows) <= self.VOCAB_CACHE_MAX:
                     self.term_stats.unpersist()
             if len(terms) > self.VOCAB_CACHE_MAX:
                 self._vocab = None
             else:
-                self._vocab = (terms, dfs)
-                # cached once for vectorized (C-level) wildcard matching —
-                # rebuilt only when the vocab itself is
-                self._vocab_series = pd.Series(self._vocab[0], dtype="object")
-                self._vocab_lens = self._vocab_series.str.len().to_numpy()
+                self._vocab = (terms, dfs.astype(np.int64, copy=False))
         return self._vocab
 
     def _stats_for(self, terms: list[str]) -> dict[str, int]:
         """Batched doc_freq lookup: one driver roundtrip for many terms."""
         vocab = self._vocab_pairs()
         if vocab is not None:
-            import bisect
-
             vt, vd = vocab
-            out = {}
-            for t in terms:
-                i = bisect.bisect_left(vt, t)
-                if i < len(vt) and vt[i] == t:
-                    out[t] = vd[i]
-            return out
+            q = np.array(terms, dtype=object)
+            if not vt.size or not q.size:
+                return {}
+            i = np.minimum(np.searchsorted(vt, q), vt.size - 1)
+            ok = vt[i] == q
+            return dict(zip(q[ok].tolist(), vd[i[ok]].tolist()))
         rows = self.term_stats.where(F.col("term").isin(*terms)).collect()
         return {r["term"]: r["doc_freq"] for r in rows}
 
@@ -1126,140 +1242,142 @@ class SearchEngine:
         return self.term_stats.where(self._leaf_term_cond(leaf)), limit
 
     @staticmethod
-    def _succ_upper(vt: list[str], p: str) -> int:
+    def _succ_upper(vt: np.ndarray, p: str) -> int:
         """Index of the smallest term > every p-prefixed string (increment
         the last non-max char of p) — the prefix range's upper bisect."""
-        import bisect
-
         for j in range(len(p) - 1, -1, -1):
             if ord(p[j]) < 0x10FFFF:
-                return bisect.bisect_left(vt, p[:j] + chr(ord(p[j]) + 1))
+                return int(np.searchsorted(vt, p[:j] + chr(ord(p[j]) + 1)))
         return len(vt)
 
-    def _vocab_matches(self, leaf: Node) -> list[tuple[str, int]] | None:
-        """Driver-local expansion against the cached dictionary (sorted
-        terms + bisect for prefix/range, compiled regex for wildcard) —
-        zero Spark jobs. None -> caller falls back to the SQL path."""
+    def _vocab_matches(self, leaf: Node) -> np.ndarray | None:
+        """Indices (ascending, i.e. in term order) of the cached
+        dictionary's terms an expandable leaf matches — bisect ranges for
+        prefix / range, a compiled regex over the literal prefix's range
+        for wildcard, per-length edit-distance DPs for fuzzy; zero Spark
+        jobs. None when the dictionary is not cached."""
         vocab = self._vocab_pairs()
-        if vocab is None or (isinstance(leaf, Fuzzy) and leaf.transpositions):
-            # Damerau routes through _fuzzy_damerau_pairs (callers check
-            # transpositions BEFORE _vocab_matches)
+        if vocab is None:
             return None
-        import bisect
-
-        vt, vd = vocab
+        vt = vocab[0]
         if isinstance(leaf, Fuzzy):
-            # plain by_edit_distance (r6): length band + batched two-row
-            # numpy DP over the cached dictionary — zero Spark jobs (the
-            # r2-r5 comment "JVM levenshtein beats a Python loop" predates
-            # the vectorized batch; measured, the driver DP now wins by
-            # skipping the whole expansion job)
-            band = np.flatnonzero(
-                np.abs(self._vocab_lens - len(leaf.term)) <= leaf.distance
-            )
-            cands = [vt[i] for i in band]
-            dist = _lev_batch(cands, leaf.term)
-            return [
-                (vt[i], vd[i]) for i, dd in zip(band, dist) if dd <= leaf.distance
-            ]
+            return self._vocab_fuzzy(leaf)
         if isinstance(leaf, (Term, Terms)):
-            wanted = [leaf.term] if isinstance(leaf, Term) else list(leaf.terms)
-            stats = self._stats_for(wanted)
-            return [(t, stats[t]) for t in sorted(stats)]
+            want = np.unique(np.array([leaf.term] if isinstance(leaf, Term) else list(leaf.terms), dtype=object))
+            if not vt.size:
+                return np.empty(0, np.int64)
+            i = np.minimum(np.searchsorted(vt, want), vt.size - 1)
+            return i[vt[i] == want]
+        lo, hi = 0, len(vt)
         if isinstance(leaf, Prefix):
-            p = leaf.prefix
-            lo = bisect.bisect_left(vt, p)
-            hi = self._succ_upper(vt, p)
-            return [(vt[i], vd[i]) for i in range(lo, hi)]
-        if isinstance(leaf, Range):
-            lo = 0
+            lo, hi = int(np.searchsorted(vt, leaf.prefix)), self._succ_upper(vt, leaf.prefix)
+        elif isinstance(leaf, Range):
             if leaf.min_term is not None:
-                lo = (
-                    bisect.bisect_left(vt, leaf.min_term)
-                    if leaf.include_min
-                    else bisect.bisect_right(vt, leaf.min_term)
-                )
-            hi = len(vt)
+                lo = int(np.searchsorted(vt, leaf.min_term, "left" if leaf.include_min else "right"))
             if leaf.max_term is not None:
-                hi = (
-                    bisect.bisect_right(vt, leaf.max_term)
-                    if leaf.include_max
-                    else bisect.bisect_left(vt, leaf.max_term)
-                )
-            return [(vt[i], vd[i]) for i in range(lo, hi)]
-        if isinstance(leaf, Wildcard):
+                hi = int(np.searchsorted(vt, leaf.max_term, "right" if leaf.include_max else "left"))
+        elif isinstance(leaf, Wildcard):
             import re
 
-            parts = []
-            for ch in leaf.pattern:
-                parts.append(".*" if ch == "*" else "." if ch == "?" else re.escape(ch))
-            rx = "".join(parts)
+            rx = re.compile(
+                "".join(".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in leaf.pattern),
+                re.DOTALL,
+            )
             # literal prefix (chars before the first meta) narrows the
-            # candidate range via bisect exactly like the Prefix arm — a
-            # pattern like 'spark*' never touches the rest of the dictionary
-            lit = ""
-            for ch in leaf.pattern:
-                if ch in "*?":
-                    break
-                lit += ch
-            lo, hi = 0, len(vt)
+            # candidate range exactly like the Prefix arm — a pattern like
+            # 'spark*' never touches the rest of the dictionary
+            lit = re.split(r"[*?]", leaf.pattern, maxsplit=1)[0]
             if lit:
-                lo = bisect.bisect_left(vt, lit)
-                hi = self._succ_upper(vt, lit)
-            # vectorized fullmatch over the cached term Series (the r3
-            # driver-side `for t in vocab: rx.match(t)` loop was the round-3
-            # Wildcard regression — cost grew with vocabulary, in Python)
-            hit = self._vocab_series.iloc[lo:hi].str.fullmatch(rx, flags=re.DOTALL)
-            idx = lo + np.flatnonzero(hit.to_numpy())
-            return [(vt[i], vd[i]) for i in idx]
-        return None
+                lo, hi = int(np.searchsorted(vt, lit)), self._succ_upper(vt, lit)
+            cand = vt[lo:hi]
+            hit = np.fromiter(map(bool, map(rx.fullmatch, cand)), dtype=bool, count=cand.size)
+            return lo + np.flatnonzero(hit)
+        else:
+            raise TypeError(f"not an expandable leaf: {leaf}")
+        return np.arange(lo, max(lo, hi))
+
+    def _vocab_fuzzy(self, leaf: Fuzzy) -> np.ndarray:
+        """Indices (ascending) of the cached dictionary's terms within
+        `leaf.distance` edits of `leaf.term` (true Damerau with
+        transpositions): only the length band |len(t) - len(q)| <= d can
+        match, and each length's terms are one UTF-32 code matrix, so the
+        batched DP (`_lev_rows` / `_damerau_rows`) runs on them as they
+        are. The matrices are built on the first Fuzzy query of the
+        engine (the reference walks its parametric DFA over the mmap'd
+        FST, levenshtein_filter.cpp:283)."""
+        if self._fuzzy_index is None:
+            vt = self._vocab[0]
+            self._fuzzy_index = {int(m.shape[1]): (idx, m) for idx, m in _utf32_groups(vt.tolist())}
+        q, d = leaf.term, leaf.distance
+        dist = _damerau_rows if leaf.transpositions else _lev_rows
+        hits = []
+        for la in range(max(0, len(q) - d), len(q) + d + 1):
+            if la in self._fuzzy_index:
+                idx, mat = self._fuzzy_index[la]
+                hits.append(idx[dist(mat, q) <= d])
+        return np.sort(np.concatenate(hits)) if hits else np.empty(0, np.int64)
+
+    def _expansion(self, leaf: Node) -> tuple[np.ndarray, np.ndarray, int, object]:
+        """(terms, doc_freqs, n_scored, tail_sel) of an expandable leaf:
+        the first `n_scored` terms are the scored head — the top
+        `scored_terms_limit` (Fuzzy: `max_terms`) by (doc_freq desc, term
+        asc), the top_terms_collector analogue
+        (core/search/top_terms_collector.hpp); exact terms are all scored,
+        in term order.
+
+        The rest is the unscored tail: the reference multiterm query
+        scores only the collector's top terms and unions every OTHER
+        matched term's postings as a zero-score bitset leg
+        (multiterm_query.cpp:36-71 — lazy_bitset_iterator carries an empty
+        `score`, so tail-only docs surface with score 0). By regime:
+        - vocab cached (<= VOCAB_CACHE_MAX terms): the tail terms follow
+          the head in the arrays (same order), tail_sel None;
+        - vocab too large (the 100-TB regime): NEVER a driver list. Only
+          the scored head is collected; the tail reaches the postings scan
+          as tail_sel, a Catalyst predicate Column (prefix/wildcard/
+          range/fuzzy) or a matched-terms DataFrame semi-join (Damerau),
+          exactly the reference's lazy bitset which never lists tail terms
+          either (multiterm_query.cpp:36-71, formats.hpp:228-229)."""
+        idx = self._vocab_matches(leaf)
+        if idx is not None:
+            vt, vd = self._vocab
+            if isinstance(leaf, (Term, Terms)):
+                return vt[idx], vd[idx], idx.size, None
+            idx = idx[np.lexsort((idx, -vd[idx]))]
+            limit = leaf.max_terms if isinstance(leaf, Fuzzy) else leaf.scored_terms_limit
+            return vt[idx], vd[idx], min(limit, idx.size), None
+        if isinstance(leaf, Fuzzy) and leaf.transpositions:
+            # no-vocab Damerau: distributed verify (executors,
+            # mapInPandas); collect ONLY the scored head, the tail stays a
+            # DataFrame. The verified frame is persisted and cached per
+            # (term, distance): the head collect AND the tail semi-join
+            # both consume it, and unpersisted that re-ran the full
+            # term_stats scan + DP verify twice per query (r6 review)
+            key = ("dam", leaf.term, leaf.distance)
+            verified = self._proxy_cache.get(key)
+            if verified is None:
+                verified = self._damerau_matches_df(leaf).persist()
+                self._proxy_cache[key] = verified
+            head, tail = self._collect_expansion(verified, leaf.max_terms), verified.select("term")
+        else:
+            df, limit = self._leaf_term_matches(leaf)
+            head = self._collect_expansion(df, limit)
+            tail = None if isinstance(leaf, (Term, Terms)) else self._leaf_term_cond(leaf)
+        terms = np.array([t for t, _ in head], dtype=object)
+        return terms, np.array([d for _, d in head], dtype=np.int64), terms.size, tail
+
+    def expand_tiered(self, leaf: Node) -> tuple[list[tuple[str, int]], object]:
+        """(scored expansion [(term, doc_freq)], unscored tail) of
+        `_expansion`: the tail is a list of terms when the dictionary is
+        cached, else the tail selector (Column or DataFrame)."""
+        terms, dfs, n, tail = self._expansion(leaf)
+        head = list(zip(terms[:n].tolist(), dfs[:n].tolist()))
+        return head, terms[n:].tolist() if tail is None else tail
 
     def expand(self, leaf: Node) -> list[tuple[str, int]]:
-        """Multiterm expansion against the term dictionary (term_stats).
-
-        Top `scored_terms_limit` terms by (doc_freq desc, term asc) — the
-        top_terms_collector analogue (core/search/top_terms_collector.hpp).
-        """
-        if isinstance(leaf, Fuzzy) and leaf.transpositions:
-            return self._fuzzy_damerau_pairs(leaf)[: leaf.max_terms]
-        local = self._vocab_matches(leaf)
-        if local is not None:
-            if isinstance(leaf, (Term, Terms)):
-                return local
-            local.sort(key=lambda p: (-p[1], p[0]))
-            limit = leaf.max_terms if isinstance(leaf, Fuzzy) else leaf.scored_terms_limit
-            return local[:limit]
-        df, limit = self._leaf_term_matches(leaf)
-        return self._collect_expansion(df, limit)
-
-    def _fuzzy_damerau_pairs(self, leaf: Fuzzy) -> list[tuple[str, int]]:
-        """Damerau (with_transpositions) expansion, bounded at every tier
-        (r4 VERDICT next-4 — the r4 version collected the whole lev<=2d
-        superset to the driver and ran a Python DP per candidate):
-
-        - vocab cached (<= VOCAB_CACHE_MAX terms): candidates = the length
-          band |len(t) - len(q)| <= d of the cached dictionary, verified by
-          the numpy batched DP (`_damerau_batch`). ZERO Spark jobs, work
-          bounded by the cache cap.
-        - vocab too large: the JVM lev <= 2d prefilter proposes (damerau <=
-          lev always, so damerau <= d implies lev <= 2d via transposition =
-          2 substitutions), and the batched DP verifies ON THE EXECUTORS in
-          mapInPandas — only true damerau <= d matches are collected, the
-          same matched-terms-only collect every other multiterm leaf does."""
-        q, dmax = leaf.term, leaf.distance
-        vocab = self._vocab_pairs()
-        if vocab is not None:
-            vt, vd = vocab
-            band = np.flatnonzero(np.abs(self._vocab_lens - len(q)) <= dmax)
-            cands = [vt[i] for i in band]
-            dist = _damerau_batch(cands, q)
-            pairs = [
-                (vt[i], vd[i]) for i, dd in zip(band, dist) if dd <= dmax
-            ]
-            pairs.sort(key=lambda p: (-p[1], p[0]))
-            return pairs
-        # no-vocab: distributed verify; collect only the bounded head
-        return self._collect_expansion(self._damerau_matches_df(leaf), leaf.max_terms)
+        """The scored terms [(term, doc_freq)] of a multiterm leaf (see
+        `_expansion`)."""
+        return self.expand_tiered(leaf)[0]
 
     def _damerau_matches_df(self, leaf: Fuzzy) -> DataFrame:
         """term_stats rows whose TRUE Damerau distance to leaf.term <= d,
@@ -1286,49 +1404,6 @@ class SearchEngine:
             .select("term", "doc_freq")
             .mapInPandas(verify, "term string, doc_freq long")
         )
-
-    def expand_tiered(self, leaf: Node) -> tuple[list[tuple[str, int]], object]:
-        """(scored expansion, unscored tail): the reference multiterm query
-        scores only the collector's top terms and unions every OTHER
-        matched term's postings as a zero-score bitset leg
-        (multiterm_query.cpp:36-71 — lazy_bitset_iterator carries an empty
-        `score`, so tail-only docs surface with score 0). Exact terms have
-        no tail.
-
-        Tail representation by regime:
-        - vocab cached (<= VOCAB_CACHE_MAX terms): list[str] — bounded by
-          the cache cap, becomes shared zero-scorer dict entries.
-        - vocab too large (the 100-TB regime): NEVER a driver list. Only the
-          scored head (`limit` rows) is collected; the tail reaches the
-          postings scan as a Catalyst predicate Column (prefix/wildcard/
-          range/fuzzy) or a matched-terms DataFrame semi-join (Damerau),
-          exactly the reference's lazy bitset which never lists tail terms
-          either (multiterm_query.cpp:36-71, formats.hpp:228-229)."""
-        if isinstance(leaf, (Term, Terms)):
-            return self.expand(leaf), []
-        if isinstance(leaf, Fuzzy) and leaf.transpositions:
-            if self._vocab_pairs() is not None:
-                pairs = self._fuzzy_damerau_pairs(leaf)
-                return pairs[: leaf.max_terms], [t for t, _ in pairs[leaf.max_terms :]]
-            # no-vocab: distributed Damerau verify (executors, mapInPandas);
-            # collect ONLY the scored head, tail stays a DataFrame. The
-            # verified frame is persisted and cached per (term, distance):
-            # the head collect AND the tail semi-join both consume it, and
-            # unpersisted that re-ran the full term_stats scan + DP verify
-            # twice per query (r6 review)
-            key = ("dam", leaf.term, leaf.distance)
-            verified = self._proxy_cache.get(key)
-            if verified is None:
-                verified = self._damerau_matches_df(leaf).persist()
-                self._proxy_cache[key] = verified
-            return self._collect_expansion(verified, leaf.max_terms), verified.select("term")
-        local = self._vocab_matches(leaf)
-        if local is not None:
-            local.sort(key=lambda p: (-p[1], p[0]))
-            limit = leaf.max_terms if isinstance(leaf, Fuzzy) else leaf.scored_terms_limit
-            return local[:limit], [t for t, _ in local[limit:]]
-        df, limit = self._leaf_term_matches(leaf)
-        return self._collect_expansion(df, limit), self._leaf_term_cond(leaf)
 
     # ------------------------------------------------------ physical pieces
 
@@ -1384,40 +1459,44 @@ class SearchEngine:
         0 in the no-vocab regime surfaces every matched doc at score 0,
         identical to the vocab path, r6 review).
 
+        Every term leg of one scorer family — across the queries of a
+        batch, and the unscored tail's zero scorer — is one array scorer
+        in the kernel's leg table (`_leg_table`).
+
         Only a width-1 plan prunes (block-max bounds are per query) and
         carries a tail selector (spec[4], no-vocab multiterm regime): a
         Column predicate over `term` or a DataFrame of matched terms
         selecting ALL matched blocks (scored head included) straight off
         the postings scan — predicates like `term LIKE 'pre%'` push into
         parquet; a term-DataFrame becomes a semi-join. Blocks whose term
-        has no scored leg score ZERO via a shared tail scorer in the
-        kernel; no tail term ever reaches the driver. Such a plan runs on
-        Spark only; `topk_batch` never batches it."""
-        legs: dict[str, list[tuple[int, TermScorer]]] = {}
-        phrases: list[tuple[int, _PhraseLeg]] = []
-        subs: Counter = Counter()  # term -> queries subscribed to it
+        has no scored leg score ZERO via a tail leg in the kernel; no
+        tail term ever reaches the driver. Such a plan runs on Spark only;
+        `topk_batch` never batches it."""
+        zero = PreciseConstTermScorer if self.precise else ConstTermScorer
+        parts, leg_dfs, phrases, ph_terms, ph_dfs = [], [], [], [], []
         for qid, spec in enumerate(specs):
-            if isinstance(spec[0], _PhraseLeg):
-                phrases.append((qid, spec[0]))
-                subs.update({t for ts in spec[0].slots for t in ts})
+            L = spec[0]
+            if isinstance(L, _PhraseLeg):
+                phrases.append((qid, L))
+                ph_terms += list(L.dfs)
+                ph_dfs += list(L.dfs.values())
                 continue
-            subs.update(spec[0].keys())
-            for t, sc in spec[0].items():
-                legs.setdefault(t, []).append((qid, sc))
-        scorers, min_match, _, merge, tail_sel = specs[0]
+            n = L.n_scored
+            leg_dfs.append(L.dfs)
+            parts.append((qid, L.terms[:n], L.scorer))
+            parts.append((qid, L.terms[n:], zero(np.zeros(L.terms.size - n, zero.dtype))))
+        legs0, min_match, _, merge, tail_sel = specs[0]
         shared = len(specs) > 1 or bool(phrases)
         if shared:
             tail_sel, prune = None, False
-        if not subs and tail_sel is None:
+        if not sum(len(t) for _, t, _ in parts) and not phrases and tail_sel is None:
             return None
-        grouped = shared or len(scorers) > 1 or min_match > 1 or tail_sel is not None
-        if prune and not all(
-            getattr(sc, "monotone_dl", True) for sc in scorers.values()
-        ):
+        grouped = shared or legs0.terms.size > 1 or min_match > 1 or tail_sel is not None
+        if prune and not legs0.scorer.monotone_dl:
             # (max_tf, min_dl) does not dominate a block for scorers that
             # reward longer docs (legacy-Norm BM25) — skip nothing
             prune = False
-        if prune and len(scorers) > WAND_MAX_LEGS:
+        if prune and legs0.terms.size > WAND_MAX_LEGS:
             # wide multiterm expansions (wildcard/prefix, hundreds+ of
             # legs): the sum-merge bound carries every OTHER leg's
             # whole-list upper bound, so it sits far above any reachable
@@ -1427,33 +1506,49 @@ class SearchEngine:
             # so cap it by leg count; narrow booleans keep their 5x
             # kernel-level WAND win.
             prune = False
-        other_ub, other_ub_default = {}, 0.0
+        legs, idx = _leg_table(
+            parts,
+            ph_terms,
+            (0, zero(np.zeros(1, zero.dtype))) if tail_sel is not None else None,
+        )
+        n_terms = legs.terms.size
+        dfs = np.zeros(n_terms, dtype=np.int64)
+        dfs[idx] = np.concatenate(leg_dfs) if leg_dfs else []
+        ph_idx = np.searchsorted(legs.terms, np.array(ph_terms, dtype=object))
+        dfs[ph_idx] = ph_dfs
+        # queries subscribed per term: its legs, plus the phrases reading it
+        subs = np.diff(legs.ptr)[:n_terms] + np.bincount(ph_idx, minlength=n_terms)
+        other_ub = None
         if prune:
-            if len(scorers) == 1 and tail_sel is None:
+            # whole-list bounds of the width-1 plan's terms, in its legs'
+            # order (tail terms, zero scorers, bound 0)
+            ubs = np.concatenate((legs0.scorer.term_ubs(), np.zeros(legs0.terms.size - legs0.n_scored)))
+            default = 0.0
+            if ubs.size == 1 and tail_sel is None:
                 # single leg: the block's own (max_tf, min_dl) bound
                 # suffices — no whole-list bound needed (works for any
                 # scorer, incl. TFIDF)
-                other_ub = {t: 0.0 for t in scorers}
+                oub = np.zeros(1)
             elif merge == "sum":
                 # tail legs (zero scorer) contribute 0 to every sum bound,
-                # so the scored-dict totals remain valid with a distributed
+                # so the scored totals remain valid with a distributed
                 # tail; a tail block's own bound is 0 + the whole total
-                ubs = {t: sc.term_ub() for t, sc in scorers.items()}
-                total_ub = sum(ubs.values())
-                other_ub = {t: total_ub - u for t, u in ubs.items()}
-                other_ub_default = total_ub
-                prune = bool(np.isfinite(total_ub))  # no closed form (TFIDF)
+                total = sum(ubs.tolist())
+                prune = bool(np.isfinite(total))  # no closed form (TFIDF)
+                oub, default = (total - ubs if prune else ubs), total
             elif merge == "max":
-                ubs = {t: sc.term_ub() for t, sc in scorers.items()}
-                other_ub = {
-                    t: max((u for x, u in ubs.items() if x != t), default=float("-inf"))
-                    for t in ubs
-                }
-                other_ub_default = max(ubs.values(), default=float("-inf"))
-                prune = all(np.isfinite(u) for u in ubs.values())
+                # the largest bound of the OTHER legs
+                top = np.argsort(-ubs, kind="stable")[:2]
+                default = ubs[top[0]] if top.size else -np.inf
+                oub = np.full(ubs.size, default)
+                if top.size:
+                    oub[top[0]] = ubs[top[1]] if top.size > 1 else -np.inf
+                prune = bool(np.isfinite(ubs).all())
             else:  # min-merge: block-local bound only; none with a tail
-                other_ub = {t: 0.0 for t in scorers}
+                oub = np.zeros(ubs.size)
                 prune = tail_sel is None
+            other_ub = np.full(n_terms + 1, default)
+            other_ub[idx] = oub
         counters: dict = {}
         kernel = _sums_kernel(
             legs,
@@ -1467,27 +1562,25 @@ class SearchEngine:
             grouped=grouped,
             prune=prune,
             other_ub=other_ub,
-            other_ub_default=other_ub_default,
-            tail_legs=(
-                [(0, PreciseConstTermScorer(0.0) if self.precise else ConstTermScorer(0.0))]
-                if tail_sel is not None
-                else None
-            ),
             counters=counters,
             phrases=phrases,
         )
-        pos_terms = sorted({t for _, ph in phrases for ts in ph.slots for t in ts})
         cols = self.SCAN_COLS + (("pos_bin",) if phrases else ())
-        return _ScanPlan(kernel, subs, cols, grouped, prune, counters, pos_terms)
+        n_scored = sum(len(t) for _, t, _ in parts[::2])
+        n_tail = None if tail_sel is not None else sum(len(t) for _, t, _ in parts[1::2])
+        return _ScanPlan(
+            kernel, legs.terms, subs, dfs, cols, grouped, prune, counters,
+            sorted(set(ph_terms)), n_scored + len(phrases), n_tail,
+        )
 
     def _spark_hits(self, plan: _ScanPlan, tail_sel=None) -> DataFrame:
         """Spark site: parquet scan (`term IN` pushdown, or the no-vocab
         tail selector) -> when the kernel needs grouped rows, the docmap's
         norm rows joined in and one (segment, chunk) repartition, each
         group's norm rows sorted first -> the plan's kernel in
-        mapInPandas. A single-term kernel runs in the scan tasks and reads
+        mapInArrow. A single-term kernel runs in the scan tasks and reads
         the docmap lens itself."""
-        # explicit projection: mapInPandas does not push column pruning into
+        # explicit projection: mapInArrow does not push column pruning into
         # the scan, and pos_bin (the largest column) is read only for a
         # phrase leg — and nulled before the shuffle for every other term
         if tail_sel is None:
@@ -1511,28 +1604,28 @@ class SearchEngine:
         # tried to tighten the threshold early cost more than it saved —
         # the pool fills after the first 128-doc block anyway, and the sort
         # added a stage; measured wand > nowand on HighTerm because of it)
-        hits = blocks.mapInPandas(plan.kernel, HITS_SCHEMA)
+        hits = blocks.mapInArrow(plan.kernel, HITS_SCHEMA)
         if not self._deleted_inline:
             hits = self._mask(hits)
         return hits
 
-    def _local_blocks(self, plan: _ScanPlan) -> tuple[pd.DataFrame, int, int]:
+    def _local_blocks(self, plan: _ScanPlan) -> tuple[pa.Table | None, int, int]:
         """Driver-local site input: the row groups whose footer term range
         holds one of the plan's terms, read with each file's cached
         footer, filtered to those terms and the plan's columns, in
         (segment, chunk, term, first_doc) order — the grouping the Spark
         site's repartition and sort provide, with a deterministic order
-        inside each group. Returns the blocks, the row groups read and
-        the row groups in the files. Decoded postings are not cached: the
-        driver holds only the footers."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        inside each group — as one Arrow table (one chunk per column),
+        `segment` dictionary-encoded and `chunkid` added. Returns the
+        blocks (None: no row matched), the row groups read and the row
+        groups in the files. Decoded postings are not cached: the driver
+        holds only the footers."""
         import pyarrow.parquet as pq
 
-        want = np.array(sorted(plan.terms), dtype=object)
+        want = plan.terms
         value_set = pa.array(want, pa.string())
         cols = [c for c in plan.cols if c != "segment"]
-        tables, names, sizes = [], [], []
+        tables, sizes = [], []
         n_read = n_total = 0
         for name, files in self._postings_footers.items():
             parts = []
@@ -1549,12 +1642,12 @@ class SearchEngine:
                     parts.append(
                         pq.ParquetFile(path, metadata=md).read_row_groups(rgs, columns=cols, use_threads=False)
                     )
-            if not parts:
-                continue
-            t = pa.concat_tables(parts)
-            code = pc.index_in(t["term"], value_set=value_set)
-            t = t.filter(code.is_valid())
-            if not t.num_rows:
+            t = pa.concat_tables(parts) if parts else None
+            if t is not None:
+                code = pc.index_in(t["term"], value_set=value_set)
+                t = t.filter(code.is_valid())
+            if t is None or not t.num_rows:
+                sizes.append(0)
                 continue
             # the codes index the sorted terms: one integer sort, and no
             # reorder when the rows already are in that order (a
@@ -1564,33 +1657,33 @@ class SearchEngine:
             if (np.diff(order) < 0).any():
                 t = t.take(order)
             tables.append(t)
-            names.append(name)
             sizes.append(t.num_rows)
         if not tables:
-            return pd.DataFrame(columns=[*cols, "segment", "chunkid"]), n_read, n_total
-        tbl = pa.concat_tables(tables)
-        blocks = {c: tbl[c].to_numpy() for c in cols}
-        blocks["segment"] = np.repeat(np.array(names, dtype=object), sizes)
-        blocks["chunkid"] = blocks["first_doc"] >> self.chunk_bits
-        return pd.DataFrame(blocks, copy=False), n_read, n_total
+            return None, n_read, n_total
+        tbl = pa.concat_tables(tables).combine_chunks()
+        seg = pa.DictionaryArray.from_arrays(
+            np.repeat(np.arange(len(sizes), dtype=np.int32), sizes), pa.array(list(self._postings_footers))
+        )
+        tbl = tbl.append_column("segment", seg)
+        return tbl.append_column("chunkid", pc.shift_right(tbl["first_doc"], self.chunk_bits)), n_read, n_total
 
-    def _site(self, subs: dict[str, int] | None) -> tuple[int | None, bool]:
+    def _site(self, plan: _ScanPlan | None, one_scan: bool = True) -> tuple[int | None, bool]:
         """Execution-site decision shared by `topk` and `topk_batch`:
-        (scan estimate, run on the driver?). `subs` maps each scanned term
-        to the number of queries subscribed to it, or is None for a plan
-        that is not one driver-readable scan. The estimate, Σ doc_freq(t) x
-        subs[t], exists only while the dictionary is cached; the driver
-        runs the scan when the tombstones ride in the kernel and the
-        estimate is at most LOCAL_MAX_POSTINGS."""
-        if subs is None or not isinstance(self._vocab, tuple):
+        (scan estimate, run on the driver?). `one_scan` is False for a
+        query that is not one driver-readable scan. The estimate, Σ
+        doc_freq(t) x the queries subscribed to t over the plan's terms
+        (0 without a plan), exists only while the dictionary is cached;
+        the driver runs the scan when the tombstones ride in the kernel
+        and the estimate is at most LOCAL_MAX_POSTINGS."""
+        if not one_scan or not isinstance(self._vocab, tuple):
             return None, False
-        est = sum(df * subs[t] for t, df in self._stats_for(list(subs)).items())
+        est = int(plan.dfs @ plan.subs) if plan is not None else 0
         return est, self._deleted_inline and est <= self.LOCAL_MAX_POSTINGS
 
-    def _local_run(self, plan: _ScanPlan | None, run: dict) -> pd.DataFrame:
+    def _local_run(self, plan: _ScanPlan | None, run: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """Driver-local site: the plan's kernel over `_local_blocks` as one
         in-process partition, whose per-query pools already are the final
-        top k. Returns (qid, gdoc, score) rows by (qid, score desc, gdoc
+        top k. Returns (qid, gdoc, score) arrays by (qid, score desc, gdoc
         asc), and adds the scan's row groups [read, total] and the
         kernel's block counters to the run record."""
         run["row_groups"] = [0, 0]
@@ -1598,99 +1691,73 @@ class SearchEngine:
         if plan is not None:
             blocks, n_read, n_total = self._local_blocks(plan)
             run["row_groups"] = [n_read, n_total]
-            hits = next(plan.kernel(iter([blocks])), None)
+            if blocks is not None:
+                hits = next(plan.kernel(iter(blocks.to_batches())), None)
             run.update({key: plan.counters.get(key, 0) for key in ("blocks", "skipped")})
         if hits is None:
-            return pd.DataFrame(
-                {"qid": np.empty(0, np.int32), "gdoc": np.empty(0, np.int64), "score": np.empty(0)}
-            )
-        qid, gd, sc = (hits[c].to_numpy() for c in ("qid", "gdoc", "score"))
-        return hits.take(np.lexsort((gd, -sc, qid))).reset_index(drop=True)
+            return np.empty(0, np.int32), np.empty(0, np.int64), np.empty(0)
+        qid, gd, sc = (c.to_numpy() for c in hits.columns)
+        order = np.lexsort((gd, -sc, qid))
+        return qid[order], gd[order], sc[order]
 
-    def _leaf_scorers(
-        self, expansion: list[tuple[str, int]], boost: float
-    ) -> dict[str, TermScorer]:
-        return {
-            t: self.scorer.prepare(self.field, df, boost) for t, df in expansion
-        }
+    def _term_legs(self, terms, dfs, boosts=1.0, n_scored: int | None = None) -> _TermLegs:
+        """Legs of `terms` (doc_freqs `dfs`), the first `n_scored` (all by
+        default) scored by one array scorer under `boosts`."""
+        terms = np.asarray(terms, dtype=object)
+        dfs = np.asarray(dfs, dtype=np.int64)
+        n = terms.size if n_scored is None else n_scored
+        return _TermLegs(terms, dfs, self.scorer.prepare_terms(self.field, dfs[:n], boosts), n)
 
     # -------------------------------------------------------- flat queries
 
-    def _query_spec(
-        self, node: Node, boost: float = 1.0
-    ) -> tuple[dict[str, TermScorer] | _PhraseLeg, int, float, str, object] | None:
-        """(scorers, min_match, const_add, merge, tail_sel) for single-scan
+    def _query_spec(self, node: Node, boost: float = 1.0) -> tuple[_TermLegs | _PhraseLeg, int, float, str, object] | None:
+        """(legs, min_match, const_add, merge, tail_sel) for single-scan
         shapes: exact/multiterm leaves, flat And/Or of exact terms, and
-        phrase-family leaves, whose legs are a `_PhraseLeg` instead of a
-        scorer dict (`_phrase_spec`). None when the node needs the general
-        evaluator (nesting, Not). tail_sel is None (tail folded into
-        scorers as zero entries — vocab regime) or a Column predicate /
+        phrase-family leaves, whose legs are a `_PhraseLeg` instead of
+        `_TermLegs` (`_phrase_spec`). None when the node needs the general
+        evaluator (nesting, Not). tail_sel is None (the unscored tail, if
+        any, is in the legs — vocab regime) or a Column predicate /
         term-DataFrame selecting ALL matched terms for the postings scan
-        (no-vocab regime; terms outside the scorer dict score zero in the
+        (no-vocab regime; terms outside the legs score zero in the
         kernel)."""
         if isinstance(node, (Phrase, SamePosition, VarPhrase)):
             return self._phrase_spec(node, boost)
         if isinstance(node, (Term, Terms, Prefix, Wildcard, Fuzzy, Range)):
-            expansion, tail = self.expand_tiered(node)
-            min_match = node.min_match if isinstance(node, Terms) else 1
-            merge = "sum"
-            if isinstance(node, Terms):
-                merge = node.merge
+            terms, dfs, n, tail_sel = self._expansion(node)
+            boosts = boost * node.boost
             if isinstance(node, Terms) and node.boosts is not None:
                 # per-term boosts (by_terms_options::search_term boost)
                 if len(node.boosts) != len(node.terms):
                     raise ValueError("Terms.boosts must align with Terms.terms")
                 tb = dict(zip(node.terms, node.boosts))
-                scorers = {
-                    t: self.scorer.prepare(
-                        self.field, df, boost * node.boost * tb.get(t, 1.0)
-                    )
-                    for t, df in expansion
-                }
-            else:
-                scorers = self._leaf_scorers(expansion, boost * node.boost)
-            # unscored tail (reference lazy_bitset_iterator): matched, but
-            # contributes score 0 — tail-only docs surface at score 0. ONE
-            # shared zero-scorer instance: a wide expansion's kernel closure
-            # pickles the scorer dict per task, and 10k identical frozen
-            # dataclasses serialize as 10k objects unless shared
-            tail_sel = None
-            if isinstance(tail, list):
-                if tail:
-                    zero = (
-                        PreciseConstTermScorer(0.0)
-                        if self.precise
-                        else ConstTermScorer(0.0)
-                    )
-                    for t in tail:
-                        scorers[t] = zero
-            else:
-                # no-vocab regime: tail is a predicate/DataFrame — stays
-                # distributed all the way to the postings scan
-                tail_sel = tail
-            return scorers, min_match, 0.0, merge, tail_sel
+                boosts = boosts * np.array([tb.get(t, 1.0) for t in terms[:n].tolist()], dtype=np.float64)
+            # the unscored tail (reference lazy_bitset_iterator) is matched
+            # but contributes score 0 — tail-only docs surface at score 0
+            legs = self._term_legs(terms, dfs, boosts, n)
+            if isinstance(node, Terms):
+                return legs, node.min_match, 0.0, node.merge, tail_sel
+            return legs, 1, 0.0, "sum", tail_sel
         if (
             isinstance(node, (And, Or))
             and all(isinstance(c, Term) for c in node.children)
             and len({c.term for c in node.children}) == len(node.children)
         ):
             stats = self._stats_for([c.term for c in node.children])
-            scorers = {
-                c.term: self.scorer.prepare(
-                    self.field, stats[c.term], boost * node.boost * c.boost
-                )
-                for c in node.children
-                if c.term in stats
-            }
+            kids = [c for c in node.children if c.term in stats]
             if isinstance(node, And):
-                if len(scorers) < len(node.children):
-                    return {}, 1, 0.0, "sum", None  # absent conjunct -> Empty
+                if len(kids) < len(node.children):
+                    return self._term_legs([], []), 1, 0.0, "sum", None  # absent conjunct -> Empty
                 need = len(node.children)
                 const = node.const_boost * boost
             else:
                 need = node.min_match
                 const = 0.0
-            return scorers, need, const, node.merge, None
+            legs = self._term_legs(
+                [c.term for c in kids],
+                [stats[c.term] for c in kids],
+                boost * node.boost * np.array([c.boost for c in kids], dtype=np.float64),
+            )
+            return legs, need, const, node.merge, None
         return None
 
     def _plan_hits(self, plan: _ScanPlan | None, tail_sel=None) -> DataFrame:
@@ -1722,11 +1789,11 @@ class SearchEngine:
             raise ValueError("Phrase.offsets must align with Phrase.terms")
         if len(slot_terms) == 1 and len(slot_terms[0]) == 1:
             stats = self._stats_for(slot_terms[0])
-            return self._leaf_scorers(list(stats.items()), boost * leaf.boost), 1, 0.0, "sum", None
+            return self._term_legs(list(stats), list(stats.values()), boost * leaf.boost), 1, 0.0, "sum", None
         all_terms = sorted({t for ts in slot_terms for t in ts})
         stats = self._stats_for(all_terms)
         if any(all(t not in stats for t in ts) for ts in slot_terms):
-            return {}, 1, 0.0, "sum", None
+            return self._term_legs([], []), 1, 0.0, "sum", None
         slot_terms = [[t for t in ts if t in stats] for ts in slot_terms]
         # phrase idf = sum of matched member idfs (pinned semantics, shared
         # with tests/oracle.py and plans/parity.py phrase_topk)
@@ -1741,23 +1808,24 @@ class SearchEngine:
             )
         shim = _phrase_term_scorer(self.scorer, self.field, idf_sum, boost * leaf.boost)
         lo = min(offsets, default=0)
-        return _PhraseLeg(slot_terms, [o - lo for o in offsets], shim), 1, 0.0, "sum", None
+        dfs = {t: stats[t] for ts in slot_terms for t in ts}
+        return _PhraseLeg(slot_terms, [o - lo for o in offsets], shim, dfs), 1, 0.0, "sum", None
 
     def _empty_hits(self) -> DataFrame:
-        return self._local_frame(pd.DataFrame({"gdoc": [], "score": []}))
+        return self._local_frame({"gdoc": np.empty(0, np.int64), "score": np.empty(0)})
 
-    def _local_frame(self, pdf: pd.DataFrame) -> DataFrame:
-        """DataFrame of a pandas ([query,] gdoc, score) frame, in that
-        column order: its collect(), toPandas() and count() answer from
-        pandas with no JVM call; any other use builds the local relation
+    def _local_frame(self, cols: dict[str, np.ndarray]) -> DataFrame:
+        """DataFrame of numpy ([query,] gdoc, score) columns, in that
+        order: its collect(), toPandas() and count() answer from the
+        arrays with no JVM call; any other use builds the local relation
         once (`_LocalFrame`), whose collect() launches no Spark job."""
         fields = [
             StructField("gdoc", LongType()),
             StructField("score", DoubleType() if self.precise else FloatType()),
         ]
-        if "query" in pdf:
+        if "query" in cols:
             fields.insert(0, StructField("query", StringType()))
-        return _LocalFrame(self.spark, pdf, StructType(fields))
+        return _LocalFrame(self.spark, cols, StructType(fields))
 
     # ------------------------------------------------------------- boolean
 
@@ -2053,17 +2121,18 @@ class SearchEngine:
         global TakeOrdered. A single scan with kernel-resident tombstones
         and at most LOCAL_MAX_POSTINGS scanned postings runs on the driver
         (zero Spark jobs) and returns a local result: its collect(),
-        toPandas() and count() answer from pandas with no JVM call, and
+        toPandas() and count() answer from arrays with no JVM call, and
         any other use builds the local relation once. The choice is
-        recorded in `last_run`; a local run also records the row groups
-        it read ([read, total]) and the kernel's `blocks` / `skipped`
-        counters."""
+        recorded in `last_run`, with a single scan's scored `legs` and
+        unscored `tail_terms` (None: a distributed tail); a local run also
+        records the row groups it read ([read, total]) and the kernel's
+        `blocks` / `skipped` counters."""
         hits, self.last_run = self._topk(node, k, wand)
         _log.debug("topk %s", self.last_run)
-        return self._local_frame(hits) if isinstance(hits, pd.DataFrame) else hits
+        return self._local_frame(hits) if isinstance(hits, dict) else hits
 
-    def _topk(self, node: Node, k: int, wand: bool) -> tuple[pd.DataFrame | DataFrame, dict]:
-        """(top k, run record) of one query: a pandas (gdoc, score) frame
+    def _topk(self, node: Node, k: int, wand: bool) -> tuple[dict | DataFrame, dict]:
+        """(top k, run record) of one query: numpy (gdoc, score) columns
         when it ran on the driver, a Spark DataFrame otherwise."""
         n = normalize(node)
         spec = self._query_spec(n)
@@ -2083,15 +2152,19 @@ class SearchEngine:
                 mode=self.final_mode,
             )
         one_scan = spec is not None and spec[4] is None
-        est, local = self._site((plan.terms if plan else {}) if one_scan else None)
+        est, local = self._site(plan, one_scan)
         run = {
             "path": "local" if local else "spark",
             "postings_est": est,
             "tombstone_tier": self._tombstone_tier(),
             "wand": bool(plan and plan.prune),
         }
+        if spec is not None:
+            run["legs"] = plan.n_legs if plan else 0
+            run["tail_terms"] = plan.n_tail if plan else 0
         if local:
-            return self._local_run(plan, run)[["gdoc", "score"]], run
+            _, gd, sc = self._local_run(plan, run)
+            return {"gdoc": gd, "score": sc}, run
         if spec is None:
             hits = self._eval(n).select("gdoc", self._final_score("score").alias("score"))
         else:
@@ -2128,8 +2201,9 @@ class SearchEngine:
         no-vocab distributed-tail multiterm) fall back to per-query `topk`
         on Spark and union in. Without fallbacks a locally run batch
         returns a local result, like `topk`'s. `last_run` records {path,
-        postings_est, tombstone_tier, n_batched, n_fallback}, plus a local
-        scan's row_groups / blocks / skipped.
+        postings_est, tombstone_tier, n_batched, n_fallback}, the shared
+        scan's legs / tail_terms, plus a local scan's row_groups / blocks /
+        skipped.
         """
         batched: list[tuple[str, tuple]] = []
         fallback: list[str] = []
@@ -2139,7 +2213,7 @@ class SearchEngine:
                 fallback.append(name)
             else:
                 batched.append((name, spec))
-        pdf = pd.DataFrame({"query": [], "gdoc": [], "score": []})
+        cols = {"query": np.empty(0, dtype=object), "gdoc": np.empty(0, np.int64), "score": np.empty(0)}
         parts: list[DataFrame] = []
         est, tally = None, {}
         if batched:
@@ -2151,12 +2225,15 @@ class SearchEngine:
                 k=k if self._deleted_inline else None,
                 mode=self.final_mode,
             )
-            est, local = self._site(plan.terms if plan else {})
+            est, local = self._site(plan)
+            if plan is not None:
+                tally.update(legs=plan.n_legs, tail_terms=plan.n_tail)
             if local:
-                hits = self._local_run(plan, tally)
-                hits["query"] = qnames[hits.pop("qid").to_numpy()]
-                pdf = hits[["query", "gdoc", "score"]]
-                pdf = pdf.sort_values("query", kind="stable", ignore_index=True)
+                qid, gd, sc = self._local_run(plan, tally)
+                # rows by (query name, score desc, gdoc asc)
+                name_rank = np.argsort(np.argsort(qnames, kind="stable"))
+                order = np.argsort(name_rank[qid], kind="stable")
+                cols = {"query": qnames[qid[order]], "gdoc": gd[order], "score": sc[order]}
             elif plan is not None:
                 from pyspark.sql.window import Window
 
@@ -2187,9 +2264,9 @@ class SearchEngine:
         }
         _log.debug("topk_batch %s", self.last_run)
         if not parts:
-            return self._local_frame(pdf)
-        if len(pdf):
-            parts.append(self._local_frame(pdf))
+            return self._local_frame(cols)
+        if len(cols["gdoc"]):
+            parts.append(self._local_frame(cols))
         out = parts.pop()
         for p in parts:
             out = out.unionByName(p)

@@ -22,7 +22,7 @@ exact and order-free), result cast back to float32.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, fields, replace
 
 import numpy as np
 
@@ -57,6 +57,19 @@ class Scorer:
     def prepare(self, field: FieldStats, doc_freq: int, boost: float = 1.0) -> "TermScorer":
         raise NotImplementedError
 
+    def prepare_terms(self, field: FieldStats, doc_freqs, boosts=1.0) -> "TermScorer":
+        """One array scorer for many terms: `prepare` of each (doc_freq,
+        boost) pair, bit for bit, with the per-term factor held as an
+        array (see `TermScorer`). `boosts` is one float or one per term."""
+        raise NotImplementedError
+
+    def _idfs(self, doc_freqs, field: FieldStats) -> np.ndarray:
+        """`idf` per doc_freq in `dtype`, evaluated once per distinct value
+        by the scalar formula: np.log1p differs from math.log1p in the
+        last float64 bit for some inputs, which can flip float32 ties."""
+        uniq, inv = np.unique(np.asarray(doc_freqs, dtype=np.int64), return_inverse=True)
+        return np.array([self.idf(int(n), field) for n in uniq], dtype=self.dtype)[inv]
+
 
 @dataclass(frozen=True)
 class BM25(Scorer):
@@ -86,10 +99,17 @@ class BM25(Scorer):
         return float(F32(math.log1p((field.docs_count - n + 0.5) / (n + 0.5))))
 
     def prepare(self, field: FieldStats, doc_freq: int, boost: float = 1.0) -> "TermScorer":
-        idf = self.idf(doc_freq, field)
-        c0 = F32(boost) * F32(self.k + 1) * F32(idf)
+        return self._compiled(field, F32(boost) * F32(self.k + 1) * F32(self.idf(doc_freq, field)))
+
+    def prepare_terms(self, field: FieldStats, doc_freqs, boosts=1.0) -> "TermScorer":
+        return self._compiled(field, F32(boosts) * F32(self.k + 1) * self._idfs(doc_freqs, field))
+
+    def _compiled(self, field: FieldStats, c0) -> "TermScorer":
+        """The term scorer of float32 factor(s) c0 = boost * (k+1) * idf."""
+        if np.ndim(c0) == 0:
+            c0 = float(c0)
         if self.k == 0.0:  # BM1: constant score c0 (bm25.hpp:107)
-            return ConstTermScorer(float(c0))
+            return ConstTermScorer(c0)
         kb = F32(self.k) * F32(self.b)
         k1b = F32(self.k) * F32(1.0 - self.b)
         inv_avg = F32(kb) / F32(field.avg_dl) if field.avg_dl else F32(0.0)
@@ -99,14 +119,10 @@ class BM25(Scorer):
             and 0 <= field.max_dl <= 255
         )
         if tiny:
-            return BM25TinyNormTermScorer(
-                c0=float(c0), c1_base=float(k1b), c1_slope=float(inv_avg)
-            )
+            return BM25TinyNormTermScorer(c0=c0, c1_base=float(k1b), c1_slope=float(inv_avg))
         if self.legacy_norms:
-            return BM25LegacyTermScorer(
-                c0=float(c0), c1_base=float(k1b), c1_slope=float(inv_avg)
-            )
-        return BM25TermScorer(c0=float(c0), c1_base=float(k1b), c1_slope=float(inv_avg))
+            return BM25LegacyTermScorer(c0=c0, c1_base=float(k1b), c1_slope=float(inv_avg))
+        return BM25TermScorer(c0=c0, c1_base=float(k1b), c1_slope=float(inv_avg))
 
 
 @dataclass(frozen=True)
@@ -123,9 +139,19 @@ class TFIDF(Scorer):
             with_norms=self.with_norms,
         )
 
+    def prepare_terms(self, field: FieldStats, doc_freqs, boosts=1.0) -> "TermScorer":
+        return TFIDFTermScorer(c0=F32(boosts) * self._idfs(doc_freqs, field), with_norms=self.with_norms)
+
 
 class TermScorer:
-    """Per-(query-term) compiled scorer: vectorized over posting arrays."""
+    """Compiled scorer of one query term, vectorized over posting arrays.
+
+    An array scorer (`Scorer.prepare_terms`, `concat`) scores many terms:
+    its per-term factor (the `per_term` field, c0 or idf) is an array with
+    one entry per term, its other fields are the parameters all of them
+    share, and `scores` takes each posting's term code, by which it
+    gathers the factor. Per posting it evaluates the same float ops as
+    the term scorer of that term."""
 
     dtype = np.float32
     # True when score is non-increasing in dl, i.e. (max_tf, min_dl)
@@ -133,46 +159,63 @@ class TermScorer:
     # BM25 REWARDS longer docs (c1 shrinks with dl), so its block bound
     # would need max_dl — pruning is disabled for such scorers.
     monotone_dl = True
+    per_term = "c0"
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def _factor(self, codes):
+        """The per-term factor: a term scorer's own, or an array scorer's
+        gathered at `codes`."""
+        v = getattr(self, self.per_term)
+        return self.dtype(v) if codes is None else v[codes]
+
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         raise NotImplementedError
 
-    def max_score(self, max_tf: int, min_dl: int) -> float:
-        """Block-max upper bound (reference wand_writer MaxFreq/MinNorm pair
-        evaluated through the same formula — monotone in tf, anti-monotone
-        in dl, so (max_tf, min_dl) dominates the block)."""
-        return float(
-            self.scores(
-                np.asarray([max_tf], self.dtype), np.asarray([min_dl], self.dtype)
-            )[0]
-        )
+    def term_ubs(self) -> np.ndarray:
+        """Whole-list upper bound per term (tf -> inf limit, float64), used
+        as the "other legs" contribution in boolean block-max pruning
+        (reference UpperBounds.tail, core/search/score.hpp:33-62). inf
+        disables pruning for scorers with no closed-form bound (TFIDF)."""
+        return np.full(np.size(getattr(self, self.per_term)), np.inf)
 
     def term_ub(self) -> float:
-        """Whole-list upper bound (tf -> inf limit), used as the "other
-        legs" contribution in boolean block-max pruning (reference
-        UpperBounds.tail, core/search/score.hpp:33-62). inf disables
-        pruning for scorers with no closed-form bound (TFIDF)."""
-        return float("inf")
+        return float(self.term_ubs()[0])
+
+    def family(self) -> tuple:
+        """Scorers of one family differ only in their per-term factor."""
+        return (type(self), *(getattr(self, f.name) for f in fields(self) if f.name != self.per_term))
+
+    @staticmethod
+    def concat(scorers: list["TermScorer"]) -> "TermScorer":
+        """One array scorer of same-family term or array scorers, their
+        terms in order."""
+        first = scorers[0]
+        f = first.per_term
+        v = np.concatenate([np.atleast_1d(np.asarray(getattr(s, f), first.dtype)) for s in scorers])
+        return replace(first, **{f: v})
+
+
+class _C0UB:
+    """Whole-list bound c0 (tf -> inf: score -> c0)."""
+
+    def term_ubs(self) -> np.ndarray:
+        return np.atleast_1d(np.asarray(self.c0, np.float32)).astype(np.float64)
 
 
 @dataclass(frozen=True)
-class BM25TermScorer(TermScorer):
+class BM25TermScorer(_C0UB, TermScorer):
     c0: float
     c1_base: float
     c1_slope: float
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         tf = tfs.astype(np.float32, copy=False)
         c1 = F32(self.c1_base) + F32(self.c1_slope) * dls.astype(np.float32, copy=False)
-        c0 = F32(self.c0)
+        c0 = self._factor(codes)
         return (c0 - c0 * c1 / (c1 + tf)).astype(np.float32, copy=False)
-
-    def term_ub(self) -> float:
-        return float(F32(self.c0))  # tf -> inf: score -> c0
 
 
 @dataclass(frozen=True)
-class BM25TinyNormTermScorer(TermScorer):
+class BM25TinyNormTermScorer(_C0UB, TermScorer):
     """kNorm2Tiny reciprocal-cache evaluation (bm25.cpp:404-409): a
     256-entry float32 cache of inv_c1(dl) = 1/(c1_base + c1_slope*dl)
     (cache[0] = 0, bm25.cpp:345-352), then score = c0 - c0/(1 + tf*inv_c1).
@@ -193,22 +236,19 @@ class BM25TinyNormTermScorer(TermScorer):
         cache[1:] = F32(1.0) / (F32(self.c1_base) + F32(self.c1_slope) * i)
         object.__setattr__(self, "_cache", cache)
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         dli = np.asarray(dls).astype(np.int64, copy=False)
         assert dli.size == 0 or (0 <= dli.min() and dli.max() <= 255), (
             "tiny-norm mode requires 1-byte doc lengths (dl <= 255)"
         )
         inv_c1 = self._cache[dli]  # type: ignore[attr-defined]
         tf = tfs.astype(np.float32, copy=False)
-        c0 = F32(self.c0)
+        c0 = self._factor(codes)
         return (c0 - c0 / (F32(1.0) + tf * inv_c1)).astype(np.float32, copy=False)
-
-    def term_ub(self) -> float:
-        return float(F32(self.c0))
 
 
 @dataclass(frozen=True)
-class BM25LegacyTermScorer(TermScorer):
+class BM25LegacyTermScorer(_C0UB, TermScorer):
     """Legacy-Norm BM25 (NormType::kNorm): tf' = f32 sqrt(tf), stored
     norm = f32(1)/f32(sqrt(f64(dl))), c1 = c1_base + c1_slope * norm,
     score = c0 - c0*c1/(c1 + tf') — bm25.cpp:330-361 with the kNorm
@@ -219,19 +259,13 @@ class BM25LegacyTermScorer(TermScorer):
     c1_slope: float
     monotone_dl = False
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         tf = np.sqrt(tfs.astype(np.float32, copy=False)).astype(np.float32)
         denom = np.sqrt(dls.astype(np.float64)).astype(np.float32)
         norm = (np.float32(1.0) / denom).astype(np.float32)
         c1 = F32(self.c1_base) + F32(self.c1_slope) * norm
-        c0 = F32(self.c0)
+        c0 = self._factor(codes)
         return (c0 - c0 * c1 / (c1 + tf)).astype(np.float32, copy=False)
-
-    def term_ub(self) -> float:
-        return float(F32(self.c0))
-
-    def max_score(self, max_tf: int, min_dl: int) -> float:
-        return float(F32(self.c0))  # dl-direction unsafe: whole-list cap
 
 
 @dataclass(frozen=True)
@@ -239,25 +273,21 @@ class TFIDFTermScorer(TermScorer):
     c0: float
     with_norms: bool = False
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        out = F32(self.c0) * np.sqrt(tfs.astype(np.float32, copy=False))
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
+        out = self._factor(codes) * np.sqrt(tfs.astype(np.float32, copy=False))
         if self.with_norms:
             out = out / np.sqrt(dls.astype(np.float32, copy=False))
         return out.astype(np.float32, copy=False)
 
-    def max_score(self, max_tf: int, min_dl: int) -> float:
-        return float(self.scores(np.asarray([max_tf], np.float32), np.asarray([min_dl], np.float32))[0])
-
 
 @dataclass(frozen=True)
-class ConstTermScorer(TermScorer):
+class ConstTermScorer(_C0UB, TermScorer):
     c0: float
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        return np.full(tfs.shape, F32(self.c0), dtype=np.float32)
-
-    def term_ub(self) -> float:
-        return float(F32(self.c0))
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
+        if codes is None:
+            return np.full(tfs.shape, F32(self.c0), dtype=np.float32)
+        return self.c0[codes]
 
 
 # ---------------------------------------------------------------------------
@@ -291,16 +321,18 @@ class PreciseBM25(Scorer):
         return math.log1p((field.docs_count - n + 0.5) / (n + 0.5))
 
     def prepare(self, field: FieldStats, doc_freq: int, boost: float = 1.0) -> "TermScorer":
-        idf = self.idf(doc_freq, field)
+        return self._compiled(field, boost * self.idf(doc_freq, field))
+
+    def prepare_terms(self, field: FieldStats, doc_freqs, boosts=1.0) -> "TermScorer":
+        return self._compiled(field, np.asarray(boosts, np.float64) * self._idfs(doc_freqs, field))
+
+    def _compiled(self, field: FieldStats, idf) -> "TermScorer":
+        """The term scorer of boosted idf(s)."""
         if self.k == 0.0:
-            return PreciseConstTermScorer(boost * idf)
+            return PreciseConstTermScorer(idf)
         if self.legacy_norms:
-            return PreciseBM25LegacyTermScorer(
-                idf=boost * idf, k=self.k, b=self.b, avg_dl=field.avg_dl
-            )
-        return PreciseBM25TermScorer(
-            idf=boost * idf, k=self.k, b=self.b, avg_dl=field.avg_dl
-        )
+            return PreciseBM25LegacyTermScorer(idf=idf, k=self.k, b=self.b, avg_dl=field.avg_dl)
+        return PreciseBM25TermScorer(idf=idf, k=self.k, b=self.b, avg_dl=field.avg_dl)
 
 
 @dataclass(frozen=True)
@@ -317,29 +349,39 @@ class PreciseTFIDF(Scorer):
             idf=boost * self.idf(doc_freq, field), with_norms=self.with_norms
         )
 
+    def prepare_terms(self, field: FieldStats, doc_freqs, boosts=1.0) -> "TermScorer":
+        idf = np.asarray(boosts, np.float64) * self._idfs(doc_freqs, field)
+        return PreciseTFIDFTermScorer(idf=idf, with_norms=self.with_norms)
+
+
+class _IdfUB:
+    """Whole-list bound idf * (k+1) (tf -> inf)."""
+
+    per_term = "idf"
+
+    def term_ubs(self) -> np.ndarray:
+        return np.atleast_1d(np.asarray(self.idf, np.float64) * (self.k + 1.0))
+
 
 @dataclass(frozen=True)
-class PreciseBM25TermScorer(TermScorer):
+class PreciseBM25TermScorer(_IdfUB, TermScorer):
     idf: float
     k: float
     b: float
     avg_dl: float
     dtype = np.float64
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         tf = tfs.astype(np.float64, copy=False)
         dl = dls.astype(np.float64, copy=False)
         # exact parity association: idf * ((k+1)*tf) / (k*((1-b) + (b*dl)/avgdl) + tf)
-        num = self.idf * ((self.k + 1.0) * tf)
+        num = self._factor(codes) * ((self.k + 1.0) * tf)
         den = self.k * ((1.0 - self.b) + (self.b * dl) / self.avg_dl) + tf
         return num / den
 
-    def term_ub(self) -> float:
-        return self.idf * (self.k + 1.0)
-
 
 @dataclass(frozen=True)
-class PreciseBM25LegacyTermScorer(TermScorer):
+class PreciseBM25LegacyTermScorer(_IdfUB, TermScorer):
     """float64 legacy-Norm BM25 matching the parity SQL expression tree:
     idf * ((k+1)*sqrt(tf)) / (k*(1-b) + (k*b/avgdl)/sqrt(dl) + sqrt(tf))."""
 
@@ -350,15 +392,12 @@ class PreciseBM25LegacyTermScorer(TermScorer):
     dtype = np.float64
     monotone_dl = False
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
         tf = np.sqrt(tfs.astype(np.float64, copy=False))
         dl = dls.astype(np.float64, copy=False)
-        num = self.idf * ((self.k + 1.0) * tf)
+        num = self._factor(codes) * ((self.k + 1.0) * tf)
         den = self.k * (1.0 - self.b) + (self.k * self.b / self.avg_dl) / np.sqrt(dl) + tf
         return num / den
-
-    def term_ub(self) -> float:
-        return self.idf * (self.k + 1.0)
 
 
 @dataclass(frozen=True)
@@ -366,9 +405,10 @@ class PreciseTFIDFTermScorer(TermScorer):
     idf: float
     with_norms: bool = False
     dtype = np.float64
+    per_term = "idf"
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        out = self.idf * np.sqrt(tfs.astype(np.float64, copy=False))
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
+        out = self._factor(codes) * np.sqrt(tfs.astype(np.float64, copy=False))
         if self.with_norms:
             out = out / np.sqrt(dls.astype(np.float64, copy=False))
         return out
@@ -379,11 +419,13 @@ class PreciseConstTermScorer(TermScorer):
     c0: float
     dtype = np.float64
 
-    def scores(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        return np.full(tfs.shape, self.c0, dtype=np.float64)
+    def scores(self, tfs: np.ndarray, dls: np.ndarray, codes: np.ndarray | None = None) -> np.ndarray:
+        if codes is None:
+            return np.full(tfs.shape, self.c0, dtype=np.float64)
+        return self.c0[codes]
 
-    def term_ub(self) -> float:
-        return self.c0
+    def term_ubs(self) -> np.ndarray:
+        return np.atleast_1d(np.asarray(self.c0, np.float64))
 
 
 _SCORERS = {

@@ -31,6 +31,7 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
@@ -416,7 +417,7 @@ def test_batch_local_equals_spark_equals_oracle(spark, ix, tier):
     subs: dict[str, int] = {}
     for name, node in queries.items():
         legs = eng._query_spec(normalize(node))[0]
-        terms = {t for ts in legs.slots for t in ts} if isinstance(legs, X._PhraseLeg) else legs
+        terms = {t for ts in legs.slots for t in ts} if isinstance(legs, X._PhraseLeg) else legs.terms
         for t in terms:
             subs[t] = subs.get(t, 0) + 1
     stats = eng._stats_for(list(subs))
@@ -457,12 +458,13 @@ def test_phrase_leg_keys_never_cross_docs():
         return pd.DataFrame(rows)
 
     def gdocs(occ: dict, offsets: list[int]) -> list[int]:
-        leg = X._PhraseLeg([["a"], ["b"]], offsets, ConstTermScorer(1.0))
+        leg = X._PhraseLeg([["a"], ["b"]], offsets, ConstTermScorer(1.0), {"a": 3, "b": 3})
         kern = X._sums_kernel(
-            {}, np.array([1]), np.array([0.0]), np.array([0]), {"s": 0},
+            X._leg_table([], ["a", "b"])[0], np.array([1]), np.array([0.0]), np.array([0]), {"s": 0},
             k=None, mode="f32", deleted=None, grouped=True, phrases=[(0, leg)],
         )
-        return sorted(g for out in kern(iter([blocks(occ)])) for g in out["gdoc"])
+        batch = pa.RecordBatch.from_pandas(blocks(occ), preserve_index=False)
+        return sorted(g for out in kern(iter([batch])) for g in out.column("gdoc").to_pylist())
 
     assert gdocs({"a": {1: 2}, "b": {2: 3}}, [70, 71]) == []
     occ = {"a": {1: 2, 3: 5, 4: 80}, "b": {2: 3, 3: 6, 4: 81}}
@@ -577,7 +579,7 @@ def test_dictionary_read_without_spark_equals_groupby_twin(spark, ix):
     store, idx, _deleted, (hi, *_rest) = ix
     eng = _engine(spark, store)
     twin = eng.term_stats.orderBy("term").collect()
-    terms, dfs = eng._vocab
+    terms, dfs = (a.tolist() for a in eng._vocab)
     assert terms == [r["term"] for r in twin] == sorted(idx.postings)
     assert dfs == [r["doc_freq"] for r in twin]
     assert dfs[terms.index(hi)] == idx.doc_freq(hi)
@@ -611,7 +613,8 @@ def test_dictionary_over_footer_cap_takes_the_job_path(spark, ix):
     finally:
         sc.setJobGroup("local-path-idle", "")
     assert sc.statusTracker().getJobIdsForGroup("vocab-job-path")
-    assert eng._vocab == ref._vocab and not eng.term_stats.is_cached
+    assert all(np.array_equal(a, b) for a, b in zip(eng._vocab, ref._vocab))
+    assert not eng.term_stats.is_cached
     for _label, node, _ in _cases(ix):
         assert _rows(eng.topk(node, K)) == _rows(ref.topk(node, K))
         assert eng.last_run["path"] == "local"
@@ -662,7 +665,7 @@ def test_local_result_answers_from_pandas(spark, ix, scorer, capsys):
         assert columns == want_cols and schema.simpleString().endswith(f"score:{score_t}>")
         assert (n == 0) == label.endswith("_empty") and n == len(rows) == len(pdf)
 
-        ref = spark.createDataFrame(df._pdf, schema)
+        ref = spark.createDataFrame(pdf, schema)
         ref_rows = ref.collect()
         assert rows == ref_rows, label
         assert [tuple(map(type, r)) for r in rows] == [tuple(map(type, r)) for r in ref_rows]
@@ -764,7 +767,7 @@ def test_footer_cached_read_prunes_row_groups(spark, ix, tmp_path):
         )
         for bits in (e.chunk_bits, 6):
             e.chunk_bits = bits
-            got, _, _ = e._local_blocks(plan)
+            got = e._local_blocks(plan)[0].to_pandas()
             key = ["segment", "chunkid", "term", "first_doc"]
             assert len(got) == want_rows and not got.duplicated(key).any()
             assert got.equals(got.sort_values(key, ignore_index=True)), bits
@@ -816,3 +819,82 @@ def test_local_run_records_row_groups_and_block_counters(spark, ix, tmp_path):
     eng.topk(Term(hi), K)
     assert eng.last_run["path"] == "spark"
     assert not {"row_groups", "blocks", "skipped"} & set(eng.last_run)
+
+
+# ------------------------------------------------------------ Arrow kernel
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_spark_scan_kernel_runs_as_map_in_arrow(spark, ix):
+    """The Spark site runs the scan kernel, and the norm rows' packing
+    that grouped plans union in, as MapInArrow: no MapInPandas is left on
+    the scan path of a term, a boolean, a phrase, a multiterm with a tail
+    or a batch."""
+    store, _idx, _deleted, (hi, med, _low, bigram) = ix
+    eng = _engine(spark, store)
+    eng.LOCAL_MAX_POSTINGS = 0
+    nodes = (Term(hi), Or((Term(hi), Term(med))), Phrase(bigram), Prefix(hi[:1], scored_terms_limit=2))
+    frames = [eng.topk(node, K) for node in nodes]
+    frames.append(eng.topk_batch({"a": Term(hi), "b": Phrase(bigram)}, K))
+    for df in frames:
+        plan = _plan_text(df)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
+
+def test_sites_agree_on_rows_and_leg_counts(spark, ix):
+    """Both sites feed the kernel Arrow batches: a term, a wide expansion
+    with an unscored tail, a phrase and a batch give the same rows at
+    either site, and the run records carry the same scored-leg and
+    tail-term counts."""
+    store, _idx, _deleted, (hi, med, _low, bigram) = ix
+    eng = _engine(spark, store)
+    n_match = sum(t.startswith(hi[:1]) for t in eng._vocab[0])
+    assert n_match > 3, "the prefix needs a tail"
+    cases = [
+        (Term(hi), 1, 0),
+        (Prefix(hi[:1], scored_terms_limit=2), 2, n_match - 2),
+        (Phrase(bigram), 1, 0),
+        (Or((Term(hi), Term(med), Term("zzqqxxnotaterm"))), 2, 0),
+    ]
+    for node, legs, tail in cases:
+        runs = []
+        for budget in (BIG, 0):
+            eng.LOCAL_MAX_POSTINGS = budget
+            runs.append((_rows(eng.topk(node, K)), dict(eng.last_run)))
+        del eng.LOCAL_MAX_POSTINGS
+        (local, lrun), (spark_rows, srun) = runs
+        assert (lrun["path"], srun["path"]) == ("local", "spark"), node
+        assert local == spark_rows and local, node
+        assert (lrun["legs"], lrun["tail_terms"]) == (srun["legs"], srun["tail_terms"]) == (legs, tail), node
+    queries = {"t": Term(hi), "p": Phrase(bigram), "w": Prefix(hi[:1], scored_terms_limit=2)}
+    local, spark_rows, lrun = _batch_both(eng, queries)
+    assert local == spark_rows and {q for q, _, _ in local} == set(queries)
+    assert (lrun["legs"], lrun["tail_terms"]) == (eng.last_run["legs"], eng.last_run["tail_terms"]) == (4, n_match - 2)
+
+
+def test_kernel_high_term_adapter_frame(spark, ix):
+    """The KernelHighTerm call shape: one term's pandas blocks in, one
+    pandas (qid int32, gdoc int64, score float64) frame of the k best
+    out — the oracle's top k without the tombstone mask, with and
+    without block-max pruning."""
+    store, idx, _deleted, (hi, *_rest) = ix
+    eng = _engine(spark, store)
+    dfreq = dict(zip(*eng._vocab))[hi]
+    sc = {hi: eng.scorer.prepare(eng.field, dfreq, 1.0)}
+    pdf = eng.postings.where(F.col("term") == hi).select(*eng.SCAN_COLS).toPandas()
+    want = _top(oracle.score_term(idx, hi), set())
+    for prune in (True, False):
+        counters: dict = {}
+        kern = X._topk_sums_kernel(
+            sc, {hi: 0.0}, eng.seg_base, k=K, min_match=1, const_add=0.0, merge="sum",
+            mode="f32", deleted=None, grouped=False, prune=prune, counters=counters,
+        )
+        (frame,) = list(kern(iter([pdf])))
+        assert list(frame.columns) == ["qid", "gdoc", "score"]
+        assert [str(t) for t in frame.dtypes] == ["int32", "int64", "float64"]
+        assert frame["qid"].eq(0).all() and counters["blocks"] == len(pdf)
+        got = sorted(zip(frame["gdoc"].tolist(), frame["score"].tolist()), key=lambda r: (-r[1], r[0]))
+        assert got == want, prune

@@ -352,7 +352,7 @@ def test_small_index_lifecycle_jobs(spark, corpora, tmp_path):
         eng = SearchEngine(spark, store)
         eng.prepare_dictionary()
         terms, dfs = eng._vocab
-        eng.topk(Term(terms[dfs.index(max(dfs))]), 10).collect()
+        eng.topk(Term(terms[dfs.argmax()]), 10).collect()
         assert eng.last_run["path"] == "local"
 
     def ingest():

@@ -30,7 +30,7 @@ from iresearch_spark.index.build import assign_doc_ids, tokenize_stream
 from iresearch_spark.index.merge import merge_segments
 from iresearch_spark.index.norms import Norms, docmap_lens, norm_rows, take_norm_rows
 from iresearch_spark.index.segments import POSTINGS_ROW_GROUP_ROWS, IndexStore, build_segment
-from iresearch_spark.search import Term
+from iresearch_spark.search import Or, Term
 from tests import oracle
 from tests.oracle import LEGACY_COLS, pack_tokens
 from tests.test_local_path import (
@@ -170,6 +170,25 @@ def test_mixed_layout_store_queries_match_oracle(spark, mixed):
     cases = _batch_cases(mixed)
     local, spark_rows, _ = _batch_both(eng, {n: q for n, (q, _) in cases.items()})
     assert local == spark_rows == _batch_oracle(cases, set()) and local
+
+
+def test_mixed_layout_norm_rows_ride_the_arrow_batches(spark, mixed):
+    """On the mixed store a grouped Spark plan unions the docmaps' norm
+    rows (packed by a MapInArrow kernel) into the scan kernel's Arrow
+    batches: every case answers as on the local site, with the same
+    scored-leg counts."""
+    store = mixed[0]
+    eng = _engine(spark, store)
+    for label, node, _scores in _cases(mixed):
+        rows, legs = [], []
+        for local in (True, False):
+            rows.append(_site_rows(eng, node, local, wand=True))
+            legs.append((eng.last_run.get("legs"), eng.last_run.get("tail_terms")))
+        assert rows[0] == rows[1] and legs[0] == legs[1], label
+    eng.LOCAL_MAX_POSTINGS = 0
+    hi, med = mixed[3][:2]
+    plan = eng.topk(Or((Term(hi), Term(med))), K)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") >= 2 and "MapInPandas" not in plan, plan
 
 
 @pytest.mark.parametrize("site", ["local", "spark", "flat"])

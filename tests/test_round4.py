@@ -115,7 +115,7 @@ def test_wildcard_vectorized_expansion(spark, tmp_path):
     eng = _tiny_engine(spark, tmp_path, DOCS)
     vt, _ = eng._vocab_pairs()
     for pattern in ["sp*", "*a*n", "sp?n", "*", "s*k", "zz*", "sp*n*"]:
-        got = [t for t, _ in eng._vocab_matches(Wildcard(pattern))]
+        got = vt[eng._vocab_matches(Wildcard(pattern))].tolist()
         parts = "".join(
             ".*" if c == "*" else "." if c == "?" else re.escape(c) for c in pattern
         )
@@ -138,7 +138,7 @@ def test_tail_expansion_broadcast_plan(spark, tmp_path):
     eng.TERM_IN_MAX = 1  # force the broadcast path (expansion > 1 term)
     spec = eng._query_spec(node)
     assert spec is not None
-    blocks = eng._term_filtered(eng.postings, list(spec[0].keys()))
+    blocks = eng._term_filtered(eng.postings, spec[0].terms.tolist())
     plan = blocks._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
     got = [tuple(r) for r in eng.topk(node, k=20).collect()]

@@ -60,8 +60,8 @@ def test_fuzzy_damerau_vocab_path_runs_no_spark_jobs(dam_engine):
     saved = eng.term_stats
     try:
         eng.term_stats = None  # any Spark access would AttributeError
-        pairs = eng._fuzzy_damerau_pairs(
-            Fuzzy("conts", distance=1, transpositions=True)
+        pairs = eng.expand(
+            Fuzzy("conts", distance=1, transpositions=True, max_terms=1_000_000)
         )
     finally:
         eng.term_stats = saved
@@ -78,12 +78,12 @@ def test_fuzzy_damerau_distributed_path_equals_vocab_path(dam_engine):
     matches reach the driver; results identical to the vocab path."""
     eng = dam_engine
     eng.prepare_dictionary()
-    leaf = Fuzzy("conts", distance=2, transpositions=True)
-    via_vocab = eng._fuzzy_damerau_pairs(leaf)
+    leaf = Fuzzy("conts", distance=2, transpositions=True, max_terms=1_000_000)
+    via_vocab = eng.expand(leaf)
     saved = eng._vocab
     try:
         eng._vocab = None  # simulate vocab > VOCAB_CACHE_MAX
-        via_spark = eng._fuzzy_damerau_pairs(leaf)
+        via_spark = eng.expand(leaf)
     finally:
         eng._vocab = saved
     assert via_vocab == via_spark

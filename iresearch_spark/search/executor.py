@@ -22,14 +22,18 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 queries), the tombstones ride in the kernel, and the
                 fan-out-weighted scan estimate (sum over the scanned terms
                 of doc_freq x the queries subscribed to the term) is at
-                most `SearchEngine.LOCAL_MAX_POSTINGS`, pyarrow reads just
-                those terms' row groups (picked by the term ranges of
-                footers read once per engine) from each segment's
-                term-sorted postings parquet, the kernel runs in-process
-                as one partition over the read Arrow table, and the
-                result answers collect() from numpy arrays — no Spark job
-                and no JVM call, the reference's in-process mmap walk
-                (PAPER.md §0);
+                most `SearchEngine.LOCAL_MAX_POSTINGS`, the scan takes
+                just those terms' row groups (picked by the term ranges of
+                footers read once per engine) of each segment's
+                term-sorted postings parquet from the engine's decoded
+                postings cache — a byte-bounded LRU of (file, row group,
+                column) columns within `segments.LOCAL_BUILD_MAX_BYTES`,
+                filled lazily: pyarrow reads only the pairs it lacks — the
+                kernel runs in-process as one partition over the Arrow
+                table, and the result answers collect() from numpy
+                arrays — no Spark job and no JVM call, the reference's
+                in-process walk over an mmapped / caching directory
+                (PAPER.md §0, §1.1);
               - Spark (everything else): parquet scan with `term IN`
                 pushdown -> (for multi-leg queries, with the docmap's
                 norm rows) ONE repartition of the packed blocks by
@@ -91,6 +95,8 @@ the global sort all see the same values the comparator will.
 from __future__ import annotations
 
 import logging
+import threading
+from collections import OrderedDict
 from functools import cached_property, partial
 from typing import Callable, Iterator, NamedTuple
 
@@ -112,6 +118,7 @@ from pyspark.sql.types import (
     _create_row,
 )
 
+from iresearch_spark.index import segments
 from iresearch_spark.index.build import DEFAULT_CHUNK_BITS
 from iresearch_spark.index.codec import binary_cells, delta_decode, delta_runs_decode, run_counts, varint_decode
 from iresearch_spark.index.norms import Norms, docmap_lens, norm_rows, take_norm_rows, with_norm_rows
@@ -252,7 +259,39 @@ def _leg_table(parts: list, extra_terms=(), tail: tuple | None = None) -> tuple[
     `extra_terms` scanned with no leg and an optional (qid, scorer) tail
     leg. Scorers of one family are concatenated into one array scorer.
     Also returns each part term's index into the table's terms, in part
-    order."""
+    order.
+
+    One part of distinct terms and nothing else (a single term or
+    multiterm query's scored legs) skips the general merge: its table is
+    its terms in sorted order, one leg each — the same table
+    `_leg_table_general` builds."""
+    named = [p for p in parts if p[1] is not None and len(p[1])]
+    if len(named) == 1 and tail is None and not len(extra_terms):
+        qid, terms, sc = named[0]
+        terms = np.asarray(terms, dtype=object)
+        order = np.argsort(terms, kind="stable")
+        uterms = terms[order]
+        if (uterms[1:] != uterms[:-1]).all():
+            n = terms.size
+            idx = np.empty(n, np.int64)
+            idx[order] = np.arange(n)
+            f = getattr(sc, sc.per_term)
+            own = isinstance(f, np.ndarray) and f.ndim == 1 and f.dtype == sc.dtype
+            table = _LegTable(
+                uterms,
+                np.append(np.arange(n + 1), n),
+                np.full(n, qid, np.int64),
+                np.zeros(n, np.int64),
+                order.astype(np.int64),
+                [sc if own else TermScorer.concat([sc])],
+            )
+            return table, idx
+    return _leg_table_general(parts, extra_terms, tail)
+
+
+def _leg_table_general(parts: list, extra_terms=(), tail: tuple | None = None) -> tuple[_LegTable, np.ndarray]:
+    """`_leg_table` of any parts: every part's legs merged by (term, qid),
+    scorers grouped by family."""
     fam_of: dict = {}
     members: list[list] = []
     sizes: list[int] = []
@@ -345,6 +384,74 @@ class _SegBase(dict):
 
     def __reduce__(self):
         return (_SegBase, (dict(self), self.norms))
+
+
+class _PostingsCache:
+    """An engine's decoded postings, for the driver-local site: a
+    byte-bounded LRU of (file, row group, column) -> the decoded column,
+    bounded by the driver budget `segments.LOCAL_BUILD_MAX_BYTES` (read
+    on use) over the columns' buffer sizes. Segment files never change
+    and an engine is one manifest snapshot, so nothing is ever
+    invalidated; the cache dies with its engine. Per column, so a first
+    read is no wider than the query needs (a term query never decodes
+    `pos_bin`). Lock-protected: threads may share an engine. Parquet
+    reads run outside the lock (a read racing another of the same pair
+    only costs the duplicate work)."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._cols: OrderedDict[tuple[str, int, str], tuple[pa.Array, int]] = OrderedDict()
+        self.nbytes = 0
+
+    def clear(self) -> None:
+        with self._lock:
+            self._cols.clear()
+            self.nbytes = 0
+
+    def row_groups(self, path: str, md, rgs: list[int], cols: list[str]) -> tuple[list[pa.RecordBatch], int]:
+        """Row groups `rgs` of parquet file `path` (footer `md`) as one
+        batch each, of columns `cols`: cached columns from memory, the
+        missing (row group, column) pairs read with one reader over the
+        cached footer. Also returns how many groups needed no read."""
+        with self._lock:
+            got = []
+            for g in rgs:
+                row = {}
+                for c in cols:
+                    hit = self._cols.get((path, g, c))
+                    if hit is not None:
+                        self._cols.move_to_end((path, g, c))
+                        row[c] = hit[0]
+                got.append(row)
+        n_cached = sum(len(row) == len(cols) for row in got)
+        if n_cached < len(rgs):
+            import pyarrow.parquet as pq
+
+            reader = pq.ParquetFile(path, metadata=md)
+            fresh = []
+            for g, row in zip(rgs, got):
+                miss = [c for c in cols if c not in row]
+                if miss:
+                    # one thread: for a few row groups a reader pool's
+                    # handoffs cost more CPU than they save
+                    t = reader.read_row_group(g, columns=miss, use_threads=False)
+                    for c, x in zip(miss, t.columns):
+                        row[c] = x.chunk(0) if x.num_chunks == 1 else x.combine_chunks()
+                        fresh.append(((path, g, c), row[c]))
+            self._put(fresh)
+        return [pa.RecordBatch.from_arrays([row[c] for c in cols], names=cols) for row in got], n_cached
+
+    def _put(self, entries: list) -> None:
+        cap = segments.LOCAL_BUILD_MAX_BYTES
+        with self._lock:
+            for key, a in entries:
+                size = a.get_total_buffer_size()
+                if size > cap or key in self._cols:
+                    continue
+                while self.nbytes + size > cap:
+                    self.nbytes -= self._cols.popitem(last=False)[1][1]
+                self._cols[key] = (a, size)
+                self.nbytes += size
 
 
 def _decode_rows_docs(pdf: pd.DataFrame, seg_base: dict[str, int]):
@@ -634,7 +741,8 @@ def _sums_kernel(
     n_q = len(mm_arr)
     prune = prune and k is not None and n_q == 1
     merge0 = _MERGE_REDUCERS[int(mc_arr[0])][0]
-    reducers = [(c, red) for c, (_, red) in enumerate(_MERGE_REDUCERS) if (mc_arr == c).any()]
+    merges = set(mc_arr.tolist())
+    reducers = [(c, red) for c, (_, red) in enumerate(_MERGE_REDUCERS) if c in merges]
     has_const = bool(ca_arr.any())
     has_min_match = bool((mm_arr > 1).any())
     qid_edges = np.arange(n_q + 1)
@@ -997,6 +1105,8 @@ class SearchEngine:
         self._fuzzy_index: dict[int, tuple[np.ndarray, np.ndarray]] | None = None
         # proxy_filter cache: normalized child (+boost) -> persisted hits
         self._proxy_cache: dict = {}
+        # decoded postings columns the driver-local site has read
+        self._postings_cache = _PostingsCache()
         self.last_run: dict | None = None  # the last topk(_batch)'s site choice
         # live-delete mask (reference index_writer Remove(),
         # index_writer.hpp:381-416): deletes stay visible as a query-time
@@ -1055,6 +1165,12 @@ class SearchEngine:
                 files.append((f, md, lo, hi, known))
             out[name] = files
         return out
+
+    @cached_property
+    def _segment_names(self) -> pa.Array:
+        """The segments in `_postings_footers` order: the local blocks'
+        `segment` dictionary."""
+        return pa.array(list(self._postings_footers), pa.string())
 
     @cached_property
     def term_stats(self) -> DataFrame:
@@ -1609,40 +1725,36 @@ class SearchEngine:
             hits = self._mask(hits)
         return hits
 
-    def _local_blocks(self, plan: _ScanPlan) -> tuple[pa.Table | None, int, int]:
+    def _local_blocks(self, plan: _ScanPlan) -> tuple[pa.Table | None, list[int]]:
         """Driver-local site input: the row groups whose footer term range
-        holds one of the plan's terms, read with each file's cached
-        footer, filtered to those terms and the plan's columns, in
-        (segment, chunk, term, first_doc) order — the grouping the Spark
-        site's repartition and sort provide, with a deterministic order
-        inside each group — as one Arrow table (one chunk per column),
-        `segment` dictionary-encoded and `chunkid` added. Returns the
-        blocks (None: no row matched), the row groups read and the row
-        groups in the files. Decoded postings are not cached: the driver
-        holds only the footers."""
-        import pyarrow.parquet as pq
-
+        holds one of the plan's terms, served from the engine's decoded
+        postings cache (`_PostingsCache`, which reads only the (row group,
+        column) pairs it lacks, over each file's cached footer), filtered
+        to those terms and the plan's columns, in (segment, chunk, term,
+        first_doc) order — the grouping the Spark site's repartition and
+        sort provide, with a deterministic order inside each group — as
+        one Arrow table (one chunk per column), `segment`
+        dictionary-encoded and `chunkid` added. Returns the blocks (None:
+        no row matched) and [row groups picked, row groups in the files,
+        picked groups served with no parquet read]."""
         want = plan.terms
         value_set = pa.array(want, pa.string())
         cols = [c for c in plan.cols if c != "segment"]
         tables, sizes = [], []
-        n_read = n_total = 0
+        counts = [0, 0, 0]
         for name, files in self._postings_footers.items():
             parts = []
             for path, md, lo, hi, known in files:
                 at = np.searchsorted(want, lo)
                 hit = ~known | ((at < want.size) & (want[np.minimum(at, want.size - 1)] <= hi))
                 rgs = np.flatnonzero(hit).tolist()
-                n_read += len(rgs)
-                n_total += hit.size
+                counts[0] += len(rgs)
+                counts[1] += hit.size
                 if rgs:
-                    # one thread: for a few row groups a reader pool's
-                    # handoffs cost more CPU than they save (two 2,048-row
-                    # groups: 1.8 -> 1.0 ms CPU, the same wall time)
-                    parts.append(
-                        pq.ParquetFile(path, metadata=md).read_row_groups(rgs, columns=cols, use_threads=False)
-                    )
-            t = pa.concat_tables(parts) if parts else None
+                    got, n_cached = self._postings_cache.row_groups(path, md, rgs, cols)
+                    parts += got
+                    counts[2] += n_cached
+            t = pa.Table.from_batches(parts) if parts else None
             if t is not None:
                 code = pc.index_in(t["term"], value_set=value_set)
                 t = t.filter(code.is_valid())
@@ -1659,13 +1771,13 @@ class SearchEngine:
             tables.append(t)
             sizes.append(t.num_rows)
         if not tables:
-            return None, n_read, n_total
+            return None, counts
         tbl = pa.concat_tables(tables).combine_chunks()
         seg = pa.DictionaryArray.from_arrays(
-            np.repeat(np.arange(len(sizes), dtype=np.int32), sizes), pa.array(list(self._postings_footers))
+            np.repeat(np.arange(len(sizes), dtype=np.int32), sizes), self._segment_names
         )
         tbl = tbl.append_column("segment", seg)
-        return tbl.append_column("chunkid", pc.shift_right(tbl["first_doc"], self.chunk_bits)), n_read, n_total
+        return tbl.append_column("chunkid", pc.shift_right(tbl["first_doc"], self.chunk_bits)), counts
 
     def _site(self, plan: _ScanPlan | None, one_scan: bool = True) -> tuple[int | None, bool]:
         """Execution-site decision shared by `topk` and `topk_batch`:
@@ -1684,13 +1796,15 @@ class SearchEngine:
         """Driver-local site: the plan's kernel over `_local_blocks` as one
         in-process partition, whose per-query pools already are the final
         top k. Returns (qid, gdoc, score) arrays by (qid, score desc, gdoc
-        asc), and adds the scan's row groups [read, total] and the
-        kernel's block counters to the run record."""
-        run["row_groups"] = [0, 0]
+        asc), and adds the scan's row groups [picked, total], the picked
+        groups served from the postings cache with no parquet read
+        (`row_groups_cached`) and the kernel's block counters to the run
+        record."""
+        run["row_groups"], run["row_groups_cached"] = [0, 0], 0
         hits = None
         if plan is not None:
-            blocks, n_read, n_total = self._local_blocks(plan)
-            run["row_groups"] = [n_read, n_total]
+            blocks, (n_picked, n_total, n_cached) = self._local_blocks(plan)
+            run["row_groups"], run["row_groups_cached"] = [n_picked, n_total], n_cached
             if blocks is not None:
                 hits = next(plan.kernel(iter(blocks.to_batches())), None)
             run.update({key: plan.counters.get(key, 0) for key in ("blocks", "skipped")})
@@ -1978,12 +2092,18 @@ class SearchEngine:
 
     def pin_postings(self) -> "SearchEngine":
         """Opt-in hot-index posture (r5): persist the postings block table
-        in Spark storage memory so queries scan cached columnar batches
-        instead of re-reading parquet — the serving-time analogue of the
-        reference keeping its index mmapped. Measured ~10% off per-query
-        latency at bench scale. Use ONLY when the index fits cluster
-        storage memory comfortably; for a 100-TB index rely on the parquet
-        scan's term-IN row-group pruning instead (the default)."""
+        in Spark storage memory so Spark-site queries scan cached columnar
+        batches instead of re-reading parquet — the serving-time analogue
+        of the reference keeping its index mmapped. Measured ~10% off
+        per-query latency at bench scale. Use ONLY when the index fits
+        cluster storage memory comfortably; for a 100-TB index rely on the
+        parquet scan's term-IN row-group pruning instead (the default).
+
+        Two caches, one per site: this one serves the Spark site only.
+        The driver-local site never reads the Spark relation; it serves
+        its row groups from the engine's own decoded postings cache
+        (`_PostingsCache`, always on, bounded by
+        `segments.LOCAL_BUILD_MAX_BYTES`), pinned or not."""
         self.postings = self.postings.persist()
         self.postings.count()  # materialize eagerly, off the query path
         return self

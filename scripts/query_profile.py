@@ -1,14 +1,17 @@
 """Driver CPU per point-query category, split by query-path layer.
 
     python scripts/query_profile.py [--seed 3] [--queries 40] [--docs 1500]
-        [--categories Prefix3,Wildcard,Fuzzy1]
+        [--categories Prefix3,Wildcard,Fuzzy1] [--cold]
 
 Builds a perfbench point_query-shaped index for `--seed` (a
 `generate_corpus` of `--docs` docs, no burstiness, one segment, 1% of
 the docs removed), opens an engine and warms its dictionary. It then
 answers `--queries` seeded queries of each category, drawn the way
 perfbench draws them (`perfbench.gen`), with `topk(node, 10).collect()`
-after one unmeasured warm-up query per category.
+after one unmeasured warm-up query per category. With `--cold` the
+engine's decoded postings cache is emptied before every measured query
+(outside the measured time), so the blocks layer shows the first-touch
+parquet read.
 
 Every query's driver CPU time (`time.process_time`) is split into
 layers by wrapping the engine methods that make them up. Each wrapper
@@ -17,7 +20,8 @@ counts its own time minus that of wrapped calls inside it:
   expand        expand_tiered / expand / _expansion / _stats_for
   scorer prep   Scorer.prepare / prepare_terms, _phrase_term_scorer
   plan          _query_spec and _sums_plan (leg tables, bounds), _site
-  blocks        _local_blocks (footer pick, pyarrow read, filter, order)
+  blocks        _local_blocks (footer pick, postings cache or pyarrow
+                read, filter, order)
   kernel        _local_run minus _local_blocks (the sums kernel, top k)
   result frame  _local_frame and the local frame's collect / toPandas
   other         the rest of topk + collect (normalize, run record, ...)
@@ -25,8 +29,10 @@ counts its own time minus that of wrapped calls inside it:
 Methods a tree does not have are skipped, so the script also profiles
 an older checkout: put that checkout first on PYTHONPATH.
 Prints one row per category in ms per query; `legs` and `tail` are the
-mean scored-leg and tail-term counts of the run records, when they
-exist. Every query must run on the driver-local site.
+mean scored-leg and tail-term counts of the run records, and `cached`
+the share of picked row groups served from the engine's postings cache
+with no parquet read, when they exist. Every query must run on the
+driver-local site.
 """
 
 from __future__ import annotations
@@ -82,6 +88,7 @@ def main() -> int:
     p.add_argument("--queries", type=int, default=40)
     p.add_argument("--docs", type=int, default=1500)
     p.add_argument("--categories", default="")
+    p.add_argument("--cold", action="store_true", help="empty the postings cache before each measured query")
     a = p.parse_args()
 
     from perfbench import gen
@@ -133,15 +140,18 @@ def main() -> int:
         cats = [c for c in a.categories.split(",") if c] or list(gen.CATEGORIES)
         print(f"query_profile seed={a.seed} docs={a.docs} queries/category={a.queries} "
               f"(driver CPU, ms per query)")
-        print(f"  {'category':<13s}" + "".join(f"{x:>13s}" for x in (*LAYERS, "total")) + f"{'legs':>8s}{'tail':>8s}")
+        print(f"  {'category':<13s}" + "".join(f"{x:>13s}" for x in (*LAYERS, "total"))
+              + f"{'legs':>8s}{'tail':>8s}{'cached':>8s}")
         col_tot: dict[str, float] = defaultdict(float)
         for cat in cats:
             qs = gen.query_sequence(a.seed, bands, bigrams, a.queries + 1, label=f"profile-{cat}", categories=(cat,))
             eng.topk(to_node(qs[0]), 10).collect()
             lay.acc.clear()
             total = 0.0
-            legs, tail = [], []
+            legs, tail, cached = [], [], []
             for q in qs[1:]:
+                if a.cold and hasattr(eng, "_postings_cache"):
+                    eng._postings_cache.clear()
                 t0 = time.process_time()
                 eng.topk(to_node(q), 10).collect()
                 total += time.process_time() - t0
@@ -151,6 +161,8 @@ def main() -> int:
                     return 1
                 legs.append(run.get("legs"))
                 tail.append(run.get("tail_terms"))
+                if "row_groups_cached" in run and run["row_groups"][0]:
+                    cached.append(run["row_groups_cached"] / run["row_groups"][0])
             n = len(qs) - 1
             per = {x: 1e3 * lay.acc.get(x, 0.0) / n for x in LAYERS if x != "other"}
             per["other"] = 1e3 * total / n - sum(per.values())
@@ -158,11 +170,12 @@ def main() -> int:
             for x, v in per.items():
                 col_tot[x] += v
 
-            def mean(xs):
+            def mean(xs, fmt="8.1f"):
                 xs = [x for x in xs if x is not None]
-                return f"{sum(xs) / len(xs):8.1f}" if xs else f"{'-':>8s}"
+                return f"{sum(xs) / len(xs):{fmt}}" if xs else f"{'-':>8s}"
 
-            print(f"  {cat:<13s}" + "".join(f"{per[x]:13.3f}" for x in (*LAYERS, "total")) + mean(legs) + mean(tail))
+            print(f"  {cat:<13s}" + "".join(f"{per[x]:13.3f}" for x in (*LAYERS, "total"))
+                  + mean(legs) + mean(tail) + mean(cached, "8.2f"))
         print(f"  {'mean':<13s}" + "".join(f"{col_tot[x] / len(cats):13.3f}" for x in (*LAYERS, "total")))
     finally:
         spark.stop()

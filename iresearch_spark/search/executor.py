@@ -27,13 +27,14 @@ Restates the reference's prepare/execute/iterate lifecycle (SURVEY.md §3.2):
                 footers read once per engine) of each segment's
                 term-sorted postings parquet from the engine's decoded
                 postings cache — a byte-bounded LRU of (file, row group,
-                column) columns within `segments.LOCAL_BUILD_MAX_BYTES`,
-                filled lazily: pyarrow reads only the pairs it lacks — the
-                kernel runs in-process as one partition over the Arrow
-                table, and the result answers collect() from numpy
-                arrays — no Spark job and no JVM call, the reference's
-                in-process walk over an mmapped / caching directory
-                (PAPER.md §0, §1.1);
+                column) columns and each group's sorted term index within
+                `segments.LOCAL_BUILD_MAX_BYTES`, filled lazily: pyarrow
+                reads only the pairs it lacks, and a cached group's term
+                rows are found by `searchsorted` — the kernel runs
+                in-process as one partition over the Arrow table, and
+                the result answers collect() from numpy arrays — no Spark
+                job and no JVM call, the reference's in-process walk
+                over an mmapped / caching directory (PAPER.md §0, §1.1);
               - Spark (everything else): parquet scan with `term IN`
                 pushdown -> (for multi-leg queries, with the docmap's
                 norm rows) ONE repartition of the packed blocks by
@@ -95,6 +96,7 @@ the global sort all see the same values the comparator will.
 from __future__ import annotations
 
 import logging
+import sys
 import threading
 from collections import OrderedDict
 from functools import cached_property, partial
@@ -386,21 +388,67 @@ class _SegBase(dict):
         return (_SegBase, (dict(self), self.norms))
 
 
+class _TermRuns(NamedTuple):
+    """A postings row group's term index: its distinct terms in sorted
+    order (a numpy object array, for `searchsorted`), where each one's
+    rows start and end in that order (`bounds`, one longer), the row at
+    each sorted position (None when the group already is term-sorted, as
+    every written group is) and the bytes all of it holds."""
+
+    terms: np.ndarray
+    bounds: np.ndarray
+    rows: np.ndarray | None
+    nbytes: int
+
+    @classmethod
+    def of(cls, term: pa.Array) -> "_TermRuns":
+        rows = None
+        if len(term) > 1 and pc.any(pc.less(term[1:], term[:-1])).as_py():
+            rows = pc.sort_indices(term).to_numpy()
+            term = term.take(rows)
+        # each distinct term's first row
+        new = pc.not_equal(term[1:], term[:-1]).to_numpy(zero_copy_only=False)
+        starts = np.flatnonzero(np.append(len(term) > 0, new))
+        uniq = term.take(starts)
+        terms = uniq.to_numpy(zero_copy_only=False)
+        bounds = np.append(starts, len(term))
+        utf8 = np.frombuffer(uniq.buffers()[2] or b"", np.uint8)
+        if (utf8 < 128).all():
+            # CPython's compact ASCII str: one header, one byte a char
+            strs = terms.size * sys.getsizeof("") + utf8.size
+        else:
+            strs = sum(map(sys.getsizeof, terms))
+        held = terms.nbytes + strs + bounds.nbytes + (0 if rows is None else rows.nbytes)
+        return cls(terms, bounds, rows, held)
+
+    def find(self, want: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The sorted distinct terms `want` holds: the index in `want` of
+        each one present, its first row position in sorted order and its
+        row count."""
+        at = np.searchsorted(self.terms, want)
+        code = np.flatnonzero(at < self.terms.size)
+        code = code[self.terms[at[code]] == want[code]]
+        at = at[code]
+        first = self.bounds[at]
+        return code, first, self.bounds[at + 1] - first
+
+
 class _PostingsCache:
     """An engine's decoded postings, for the driver-local site: a
     byte-bounded LRU of (file, row group, column) -> the decoded column,
-    bounded by the driver budget `segments.LOCAL_BUILD_MAX_BYTES` (read
-    on use) over the columns' buffer sizes. Segment files never change
-    and an engine is one manifest snapshot, so nothing is ever
-    invalidated; the cache dies with its engine. Per column, so a first
-    read is no wider than the query needs (a term query never decodes
-    `pos_bin`). Lock-protected: threads may share an engine. Parquet
-    reads run outside the lock (a read racing another of the same pair
-    only costs the duplicate work)."""
+    and of (file, row group, None) -> the group's `_TermRuns`, bounded by
+    the driver budget `segments.LOCAL_BUILD_MAX_BYTES` (read on use) over
+    the entries' sizes (Arrow buffers, `_TermRuns.nbytes`). Segment files
+    never change and an engine is one manifest snapshot, so nothing is
+    ever invalidated; the cache dies with its engine. Per column, so a
+    first read is no wider than the query needs (a term query never
+    decodes `pos_bin`). Lock-protected: threads may share an engine.
+    Parquet reads run outside the lock (a read racing another of the same
+    pair only costs the duplicate work)."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._cols: OrderedDict[tuple[str, int, str], tuple[pa.Array, int]] = OrderedDict()
+        self._cols: OrderedDict[tuple[str, int, str | None], tuple[pa.Array | _TermRuns, int]] = OrderedDict()
         self.nbytes = 0
 
     def clear(self) -> None:
@@ -408,49 +456,63 @@ class _PostingsCache:
             self._cols.clear()
             self.nbytes = 0
 
-    def row_groups(self, path: str, md, rgs: list[int], cols: list[str]) -> tuple[list[pa.RecordBatch], int]:
-        """Row groups `rgs` of parquet file `path` (footer `md`) as one
-        batch each, of columns `cols`: cached columns from memory, the
-        missing (row group, column) pairs read with one reader over the
-        cached footer. Also returns how many groups needed no read."""
+    @staticmethod
+    def _nbytes(value: pa.Array | _TermRuns) -> int:
+        return value.nbytes if isinstance(value, _TermRuns) else value.get_total_buffer_size()
+
+    def row_groups(self, path: str, md, rgs: list[int], cols: list[str]) -> tuple[list[tuple], int]:
+        """Row groups `rgs` of parquet file `path` (footer `md`) as
+        (batch of columns `cols`, `_TermRuns` or None) per group, `cols`
+        holding `term`: cached entries from memory, the missing (row
+        group, column) pairs read with one reader over the cached footer.
+        A group's term index is built the first time its term column is
+        served from memory, so a first read costs no more than the read
+        (None: not built yet). Also returns how many groups needed no
+        read."""
+        keys = [*cols, None]
         with self._lock:
             got = []
             for g in rgs:
                 row = {}
-                for c in cols:
+                for c in keys:
                     hit = self._cols.get((path, g, c))
                     if hit is not None:
                         self._cols.move_to_end((path, g, c))
                         row[c] = hit[0]
                 got.append(row)
-        n_cached = sum(len(row) == len(cols) for row in got)
-        if n_cached < len(rgs):
-            import pyarrow.parquet as pq
+        n_cached = sum(all(c in row for c in cols) for row in got)
+        fresh = []
+        reader = None
+        for g, row in zip(rgs, got):
+            miss = [c for c in cols if c not in row]
+            if miss:
+                if reader is None:
+                    import pyarrow.parquet as pq
 
-            reader = pq.ParquetFile(path, metadata=md)
-            fresh = []
-            for g, row in zip(rgs, got):
-                miss = [c for c in cols if c not in row]
-                if miss:
-                    # one thread: for a few row groups a reader pool's
-                    # handoffs cost more CPU than they save
-                    t = reader.read_row_group(g, columns=miss, use_threads=False)
-                    for c, x in zip(miss, t.columns):
-                        row[c] = x.chunk(0) if x.num_chunks == 1 else x.combine_chunks()
-                        fresh.append(((path, g, c), row[c]))
+                    reader = pq.ParquetFile(path, metadata=md)
+                # one thread: for a few row groups a reader pool's
+                # handoffs cost more CPU than they save
+                t = reader.read_row_group(g, columns=miss, use_threads=False)
+                for c, x in zip(miss, t.columns):
+                    row[c] = x.chunk(0) if x.num_chunks == 1 else x.combine_chunks()
+                    fresh.append(((path, g, c), row[c]))
+            if None not in row and "term" not in miss:
+                row[None] = _TermRuns.of(row["term"])
+                fresh.append(((path, g, None), row[None]))
+        if fresh:
             self._put(fresh)
-        return [pa.RecordBatch.from_arrays([row[c] for c in cols], names=cols) for row in got], n_cached
+        return [(pa.RecordBatch.from_arrays([row[c] for c in cols], names=cols), row.get(None)) for row in got], n_cached
 
     def _put(self, entries: list) -> None:
         cap = segments.LOCAL_BUILD_MAX_BYTES
+        sized = [(key, value, self._nbytes(value)) for key, value in entries]
         with self._lock:
-            for key, a in entries:
-                size = a.get_total_buffer_size()
+            for key, value, size in sized:
                 if size > cap or key in self._cols:
                     continue
                 while self.nbytes + size > cap:
                     self.nbytes -= self._cols.popitem(last=False)[1][1]
-                self._cols[key] = (a, size)
+                self._cols[key] = (value, size)
                 self.nbytes += size
 
 
@@ -1729,55 +1791,78 @@ class SearchEngine:
         """Driver-local site input: the row groups whose footer term range
         holds one of the plan's terms, served from the engine's decoded
         postings cache (`_PostingsCache`, which reads only the (row group,
-        column) pairs it lacks, over each file's cached footer), filtered
-        to those terms and the plan's columns, in (segment, chunk, term,
-        first_doc) order — the grouping the Spark site's repartition and
-        sort provide, with a deterministic order inside each group — as
-        one Arrow table (one chunk per column), `segment`
-        dictionary-encoded and `chunkid` added. Returns the blocks (None:
-        no row matched) and [row groups picked, row groups in the files,
-        picked groups served with no parquet read]."""
+        column) pairs it lacks, over each file's cached footer), cut to
+        those terms' rows — each group's wanted terms (those within its
+        footer range) looked up in its cached `_TermRuns`, a term-sorted
+        group's one run of rows a zero-copy slice, or on a group's first
+        read hashed against its term column — and the plan's columns, in
+        (segment, chunk, term, first_doc) order — the grouping the Spark
+        site's repartition and sort provide, with a deterministic order
+        inside each group — as one Arrow table (one chunk per column),
+        `segment` dictionary-encoded and `chunkid` added. Returns the
+        blocks (None: no row matched) and [row groups picked, row groups
+        in the files, picked groups served with no parquet read]."""
         want = plan.terms
-        value_set = pa.array(want, pa.string())
         cols = [c for c in plan.cols if c != "segment"]
-        tables, sizes = [], []
+        tables, sizes, chunks = [], [], []
         counts = [0, 0, 0]
         for name, files in self._postings_footers.items():
-            parts = []
+            parts, codes = [], []
             for path, md, lo, hi, known in files:
-                at = np.searchsorted(want, lo)
-                hit = ~known | ((at < want.size) & (want[np.minimum(at, want.size - 1)] <= hi))
-                rgs = np.flatnonzero(hit).tolist()
+                # the wanted terms within each group's term range
+                start = np.where(known, np.searchsorted(want, lo), 0)
+                end = np.where(known, np.searchsorted(want, hi, "right"), want.size)
+                rgs = np.flatnonzero(start < end).tolist()
                 counts[0] += len(rgs)
-                counts[1] += hit.size
-                if rgs:
-                    got, n_cached = self._postings_cache.row_groups(path, md, rgs, cols)
-                    parts += got
-                    counts[2] += n_cached
-            t = pa.Table.from_batches(parts) if parts else None
-            if t is not None:
-                code = pc.index_in(t["term"], value_set=value_set)
-                t = t.filter(code.is_valid())
-            if t is None or not t.num_rows:
+                counts[1] += known.size
+                if not rgs:
+                    continue
+                got, n_cached = self._postings_cache.row_groups(path, md, rgs, cols)
+                counts[2] += n_cached
+                for g, (batch, runs) in zip(rgs, got):
+                    w = want[start[g] : end[g]]
+                    if runs is None:
+                        # a group's first read: one hash lookup of its
+                        # terms (its term index waits for a second use)
+                        code = pc.index_in(batch["term"], value_set=pa.array(w, pa.string()))
+                        if code.null_count < len(code):
+                            codes.append(pc.drop_null(code).to_numpy() + start[g])
+                            parts.append(batch.filter(code.is_valid()))
+                        continue
+                    code, first, n = runs.find(w)
+                    if not code.size:
+                        continue
+                    codes.append(np.repeat(code + start[g], n))
+                    if runs.rows is None and first[-1] + n[-1] - first[0] == n.sum():
+                        # one run of rows (a term, a prefix's terms): a
+                        # zero-copy slice
+                        parts.append(batch.slice(first[0], n.sum()))
+                    else:
+                        sel = np.repeat(first - np.cumsum(n) + n, n) + np.arange(n.sum())
+                        parts.append(batch.take(sel if runs.rows is None else runs.rows[sel]))
+            if not parts:
                 sizes.append(0)
                 continue
+            t = pa.Table.from_batches(parts)
             # the codes index the sorted terms: one integer sort, and no
             # reorder when the rows already are in that order (a
             # term-sorted file of one chunk)
             fd = t["first_doc"].to_numpy()
-            order = np.lexsort((fd, pc.drop_null(code).to_numpy(), fd >> self.chunk_bits))
+            chunk = fd >> self.chunk_bits
+            order = np.lexsort((fd, np.concatenate(codes), chunk))
             if (np.diff(order) < 0).any():
-                t = t.take(order)
+                t, chunk = t.take(order), chunk[order]
             tables.append(t)
             sizes.append(t.num_rows)
+            chunks.append(chunk)
         if not tables:
             return None, counts
         tbl = pa.concat_tables(tables).combine_chunks()
         seg = pa.DictionaryArray.from_arrays(
-            np.repeat(np.arange(len(sizes), dtype=np.int32), sizes), self._segment_names
+            pa.array(np.repeat(np.arange(len(sizes), dtype=np.int32), sizes)), self._segment_names
         )
         tbl = tbl.append_column("segment", seg)
-        return tbl.append_column("chunkid", pc.shift_right(tbl["first_doc"], self.chunk_bits)), counts
+        return tbl.append_column("chunkid", pa.array(np.concatenate(chunks))), counts
 
     def _site(self, plan: _ScanPlan | None, one_scan: bool = True) -> tuple[int | None, bool]:
         """Execution-site decision shared by `topk` and `topk_batch`:

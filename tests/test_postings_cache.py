@@ -8,31 +8,39 @@ single-part leg table:
 - a second identical local query reads no row group from parquet
   (counted on the reader), `last_run["row_groups_cached"]` says so, and
   a first read is no wider than the query: a term query never reads
-  `pos_bin`, a later phrase query reads only that column;
+  `pos_bin`, a later phrase query reads only that column; a group's term
+  index is built on its second use, not on its first read;
 - warm-cache rows equal cold-engine rows and Spark-site rows bit for
   bit, for single queries (wand on and off) and batches, on a store of
   term-ranged row groups and on a mixed old/new-layout store, whose old
   `dls_bin` / `last_doc` columns are never read;
 - with the budget cut to about one row group, four threads sharing one
   engine get the cold single-thread rows and the cache never holds more
-  bytes than the budget.
+  bytes than the budget;
+- a group's term index (`_TermRuns`) finds exactly the rows of the wanted
+  terms, sorted group or not, and counts the bytes it holds; a postings
+  file that is not term-sorted, and the terms at a group's footer-range
+  ends, answer as the Spark site does.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import glob
+import os
 import shutil
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import iresearch_spark.search.executor as X
 from iresearch_spark.index import segments
 from iresearch_spark.index.segments import IndexStore
-from iresearch_spark.search import And, Phrase, Prefix, Term
+from iresearch_spark.search import And, Or, Phrase, Prefix, Term
 from iresearch_spark.search.query import normalize
 from tests.oracle import LEGACY_COLS
 from tests.test_local_path import (
@@ -133,9 +141,12 @@ def test_second_local_query_reads_no_row_group(spark, ix, reads):  # noqa: F811
     assert run["path"] == "local" and run["row_groups_cached"] == 0, run
     assert len(reads) == run["row_groups"][0] > 0
     assert all("pos_bin" not in cols for _, cols in reads)
+    # a first read builds no term index; the second use of a group does
+    indexed = lambda: sum(c is None for _, _, c in eng._postings_cache._cols)  # noqa: E731
+    assert indexed() == 0
     reads.clear()
     assert _rows(eng.topk(node, K)) == first
-    assert not reads
+    assert not reads and indexed() == run["row_groups"][0]
     assert eng.last_run["row_groups"] == run["row_groups"]
     assert eng.last_run["row_groups_cached"] == run["row_groups"][0]
     # a phrase over groups the term query cached reads only positions
@@ -238,7 +249,7 @@ def test_bounded_cache_shared_by_threads(spark, ix, tmp_path, monkeypatch):  # n
     def put(self, entries):
         real_put(self, entries)
         with self._lock:
-            held = sum(a.get_total_buffer_size() for a, _ in self._cols.values())
+            held = sum(self._nbytes(value) for value, _ in self._cols.values())
             if held != self.nbytes or self.nbytes > budget:
                 over.append((held, self.nbytes))
 
@@ -255,3 +266,64 @@ def test_bounded_cache_shared_by_threads(spark, ix, tmp_path, monkeypatch):  # n
     assert got == want * 3
     assert got_batch == [want_batch] * 4
     assert not over and 0 < cache.nbytes <= budget
+
+
+def test_term_runs_find_rows_and_count_bytes():
+    rng = np.random.default_rng(7)
+    words = np.array(["a", "ab", "b", "ba", "é", "éa", "ü", "zz", "日本"], dtype=object)
+    for case in range(40):
+        n = int(rng.integers(0, 30))
+        col = words[rng.integers(0, words.size, n)]
+        if case % 2:
+            col = np.sort(col)
+        runs = X._TermRuns.of(pa.array(col.tolist(), pa.string()))
+        assert (runs.rows is None) == bool(n < 2 or (col[1:] >= col[:-1]).all())
+        rows = np.arange(n) if runs.rows is None else runs.rows
+        exact = runs.terms.nbytes + sum(map(sys.getsizeof, runs.terms)) + runs.bounds.nbytes
+        assert runs.nbytes == exact + (0 if runs.rows is None else runs.rows.nbytes)
+        want = np.unique(words[rng.integers(0, words.size, int(rng.integers(1, 5)))].astype(str)).astype(object)
+        code, first, count = runs.find(want)
+        assert code.tolist() == [i for i, w in enumerate(want) if w in set(col)]
+        for c, f, m in zip(code, first, count):
+            assert sorted(rows[f : f + m].tolist()) == np.flatnonzero(col == want[c]).tolist()
+
+
+def test_unsorted_postings_file_equals_spark(spark, ix, tmp_path):  # noqa: F811
+    """A postings file whose rows are not in term order (a footer
+    promises no order): the term index sorts each group, and every case
+    still answers as the Spark site does."""
+    store = ix[0]
+    shutil.copytree(store.root, tmp_path / "unsorted")
+    copy = IndexStore(str(tmp_path / "unsorted"))
+    path = copy.seg_path("s0", "postings")
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    tbl = pq.read_table(files)
+    for f in files:
+        os.remove(f)
+    tbl = tbl.take(np.random.default_rng(3).permutation(tbl.num_rows))
+    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"), row_group_size=256)
+    cases = {label: node for label, node, _ in _cases(ix) if label in FOOTER_LABELS}
+    _assert_warm_equals_cold_equals_spark(spark, copy, cases)
+    eng = _engine(spark, copy)
+    for _ in range(2):  # a group's term index is built on its second use
+        eng.topk_batch(cases, K)
+    runs = [v for (f, _, c), (v, _) in eng._postings_cache._cols.items() if c is None and f.startswith(path)]
+    assert runs and all(r.rows is not None for r in runs)
+
+
+def test_group_edge_terms_equal_spark(spark, ix, tmp_path):  # noqa: F811
+    """A group's first and last terms (its footer range's ends) are found
+    in it: single terms at either end and Ors of all ends answer as the
+    Spark site does, warm and cold."""
+    shutil.copytree(ix[0].root, tmp_path / "small_groups")
+    copy = IndexStore(str(tmp_path / "small_groups"))
+    assert _rewrite_postings(copy, "s0", 64) > 8
+    ((_path, _md, lo, hi, known),) = _engine(spark, copy)._postings_footers["s0"]
+    assert known.all() and (lo[1:] > hi[:-1]).all()
+    cases = {
+        "first": Term(lo[1]),
+        "last": Term(hi[1]),
+        "firsts": Or(tuple(Term(t) for t in lo)),
+        "lasts": Or(tuple(Term(t) for t in hi)),
+    }
+    _assert_warm_equals_cold_equals_spark(spark, copy, cases)
